@@ -1205,47 +1205,50 @@ def q_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WRITE-AUDIT-PUBLISH through the real engine (table.stage_wap /
-    publish_wap / reject_wap, the Iceberg wap.id staged-snapshot
-    pattern): batch 0 lands directly; batch 1 (lsn % 5 == 0, lsn % 2
-    == 0) is staged in wap_mode, AUDITED via read_wap, and PUBLISHED;
-    batch 2 (lsn % 5 == 0, odd) is staged and REJECTED. The oracle is
-    full-log LWW over everything EXCEPT the rejected slice — so the row
-    only hashes green if staging was invisible until publish, publish
-    was atomic + ledger-advancing, and the rejected batch left zero
-    rows behind. An audit assertion inside the query pins read_wap's
-    preview semantics (would-be state ⊇ published state)."""
+    """WRITE-AUDIT-PUBLISH through the real engine as an audit BRANCH
+    (the Iceberg audit-branch pattern): batch 0 lands directly; batch 1
+    (lsn % 5 == 0, lsn % 2 == 0) is staged by applying it onto branch
+    ``audit-1`` (``create_branch`` + ``ApplyConfig(branch=...)``),
+    AUDITED via ``read_final(ref="audit-1")``, and PUBLISHED with
+    ``fast_forward("main", "audit-1")``; batch 2 (lsn % 5 == 0, odd)
+    is staged on ``audit-2`` and REJECTED with
+    ``drop_branch(force=True)``. The oracle is full-log LWW over
+    everything EXCEPT the rejected slice — so the row only hashes green
+    if staging was invisible until publish, publish was atomic +
+    ledger-advancing, and the rejected batch left zero rows behind. An
+    audit assertion inside the query pins the branch read's preview
+    semantics (would-be state ⊇ published state)."""
     import atexit
+    import dataclasses
     import shutil
-    import tempfile
 
-    from audience_behavior_semantic_etl_spark.cdc.apply import (
-        ApplyConfig,
-        apply_batch,
-        wap_id_for,
-    )
+    from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-wap-")
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-wap", auto_compact=False, shuffle_partitions=8)
-    wcfg = ApplyConfig(
-        app_id="cdc-wap", auto_compact=False, shuffle_partitions=8, wap_mode=True
-    )
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     five = F.pmod(F.col("lsn"), F.lit(5)) == 0
     even = F.pmod(F.col("lsn"), F.lit(2)) == 0
     apply_batch(env.filter(~five), table, 0, cfg)
     n_before = table.read_final().count()
-    apply_batch(env.filter(five & even), table, 1, wcfg)
+    table.create_branch("audit-1")
+    apply_batch(
+        env.filter(five & even), table, 1, dataclasses.replace(cfg, branch="audit-1")
+    )
     assert table.read_final().count() == n_before, "staging must be invisible"
     assert not table.is_batch_committed("cdc-wap", 1)
-    assert table.read_wap(wap_id_for("cdc-wap", 1)).count() >= n_before - 1
-    table.publish_wap(wap_id_for("cdc-wap", 1))
+    assert table.read_final(ref="audit-1").count() >= n_before - 1
+    table.fast_forward("main", "audit-1")
+    table.drop_branch("audit-1")
     assert table.is_batch_committed("cdc-wap", 1)
-    apply_batch(env.filter(five & ~even), table, 2, wcfg)
-    table.reject_wap(wap_id_for("cdc-wap", 2))
+    table.create_branch("audit-2")
+    apply_batch(
+        env.filter(five & ~even), table, 2, dataclasses.replace(cfg, branch="audit-2")
+    )
+    table.drop_branch("audit-2", force=True)
     return table.read_final().select("conv_id", "turn_idx", "text")
 
 

@@ -109,27 +109,17 @@ class ApplyConfig:
     delta_write_options: dict[str, str] = field(
         default_factory=lambda: {"parquet.compression.codec.zstd.level": "1"}
     )
-    # apply onto a BRANCH ref instead of main (the Iceberg
-    # `spark.wap.branch` audit-branch pattern, multi-commit granularity):
-    # commits, the exactly-once ledger, watermarks and schema evolution
-    # all advance the branch chain only; `table.fast_forward("main",
-    # branch)` publishes. Mutually exclusive with wap_mode (a branch IS
-    # the multi-commit WAP). Auto-compaction is skipped on a branch —
-    # compaction is main-chain maintenance; after publish, main's next
-    # maintenance pass folds the branch's deltas normally.
+    # apply onto a BRANCH ref instead of main (the Iceberg audit-branch
+    # pattern): commits, the exactly-once ledger, watermarks and schema
+    # evolution all advance the branch chain only. Write-audit-publish
+    # is `table.create_branch(b)`, apply with `branch=b`, audit with
+    # `read_final(ref=b)`, then publish with `fast_forward("main", b)`
+    # (or `cherry_pick` of the branch head when main moved since the
+    # fork) or reject with `drop_branch(b, force=True)`.
+    # Auto-compaction is skipped on a branch — compaction is main-chain
+    # maintenance; after publish, main's next maintenance pass folds
+    # the branch's deltas normally.
     branch: str = "main"
-    # WRITE-AUDIT-PUBLISH: when True the batch is STAGED invisibly
-    # (table.stage_wap under wap id f"{app_id}:{batch_id}") instead of
-    # committed — readers see nothing, the exactly-once ledger does not
-    # advance, and an auditor publishes or rejects via
-    # table.publish_wap / reject_wap. Re-delivery of a staged batch
-    # re-stages the same id idempotently (old staged files -> GC).
-    wap_mode: bool = False
-
-
-def wap_id_for(app_id: str, batch_id: int) -> str:
-    """The wap id apply_batch stages under in wap_mode."""
-    return f"{app_id}:{batch_id}"
 
 
 def winners_schema(table: SnapshotTable, ref: str = "main") -> T.StructType:
@@ -479,8 +469,6 @@ def apply_batch(
     t0 = time.perf_counter()
     spark = table.spark
 
-    if cfg.wap_mode and cfg.branch != "main":
-        raise ValueError("wap_mode and branch are mutually exclusive (a branch IS the multi-commit WAP)")
     if table.is_batch_committed(cfg.app_id, batch_id, ref=cfg.branch):
         return BatchMetrics(batch_id, 0, 0, 0, 0, 0, 0.0, -1, -1, skipped=True)
 
@@ -892,26 +880,15 @@ def apply_batch(
             "deduped": bool(deduped),
             "malformed": n_malformed,
         }
-        if cfg.wap_mode:
-            snapshot = table.stage_wap(
-                wap_id_for(cfg.app_id, batch_id),
-                staged_dir=staged,
-                affected_buckets=affected,
-                app_id=cfg.app_id,
-                batch_id=batch_id,
-                watermarks=watermarks,
-                lineage_row=lineage_row,
-            )
-        else:
-            snapshot = table.commit_append_deltas(
-                staged_dir=staged,
-                affected_buckets=affected,
-                app_id=cfg.app_id,
-                batch_id=batch_id,
-                watermarks=watermarks,
-                lineage_row=lineage_row,
-                ref=cfg.branch,
-            )
+        snapshot = table.commit_append_deltas(
+            staged_dir=staged,
+            affected_buckets=affected,
+            app_id=cfg.app_id,
+            batch_id=batch_id,
+            watermarks=watermarks,
+            lineage_row=lineage_row,
+            ref=cfg.branch,
+        )
 
         _phase("commit")
 

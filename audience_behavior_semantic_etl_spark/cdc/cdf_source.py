@@ -20,11 +20,10 @@ Design (all driver-side logic is manifest-only — no data read):
   consumers); version numbers are globally allocated across chains,
   so the ``maxVersionsPerTrigger`` cap counts commits along the
   chosen ref's parent chain, never version arithmetic.
-- **A micro-batch (start, end] is the files its commits APPENDED,
-  diffed structurally.** For each version in the window: a commit
-  that only ADDS files is an apply — its files are new row versions,
-  delivered; a commit that also REMOVES files is maintenance
-  (compaction / tombstone purge / rebucket) — it carries no new row
+- **A micro-batch (start, end] is the files its commits APPENDED**,
+  read from each commit's stored file delta (``commit_kind``). An
+  append commit's files are new row versions, delivered; a rewrite
+  commit (compaction / tombstone purge / rebucket) carries no new row
   versions and contributes NOTHING. This is why the stream SURVIVES
   maintenance where batch ``read_changes`` must refuse the window: a
   rewritten file would re-deliver already-consumed versions, so it is
@@ -69,6 +68,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql import types as T
 
 from audience_behavior_semantic_etl_spark.cdc import schema as S
+from audience_behavior_semantic_etl_spark.cdc.commits import commit_kind
 
 
 class _FilePartition(InputPartition):
@@ -112,28 +112,10 @@ def _appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
     v = end
     while v > start:
         man = _manifest_dict(root, v)
-        parent = man.get("parent")
-        files = man.get("files")
-        if files is not None:
-            # delta-manifest format: the commit's own add/remove summary
-            # is stored — no parent read, no full-file-map diff. A
-            # commit with removals is maintenance (skipped); otherwise
-            # its additions are the new row versions.
-            if not files.get("removed"):
-                out.extend(
-                    (f, v)
-                    for fs in files.get("added", {}).values()
-                    for f in fs
-                )
-        else:  # legacy full-format manifest: structural diff vs parent
-            prev = (
-                {f for fs in _manifest_dict(root, parent)["buckets"].values() for f in fs}
-                if parent is not None
-                else set()
-            )
-            cur = {f for fs in man["buckets"].values() for f in fs}
-            if not (prev - cur):  # pure append (or metadata-only): deliver
-                out.extend((f, v) for f in cur - prev)
+        parent = man["parent"]
+        kind, added, _ = commit_kind(man["files"], parent)
+        if kind != "rewrite":
+            out.extend((f, v) for f in added)
         if parent is None:
             break
         v = parent

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from audience_behavior_semantic_etl_spark.cdc import schema as S
+from audience_behavior_semantic_etl_spark.cdc.commits import commit_kind
 
 
 def bucket_expr(conv_col, n_buckets: int):
@@ -115,7 +116,7 @@ def _safe_dirname(s: str) -> str:
 #     rebucket, whose data cost is O(live) anyway) an inline FULL
 #     snapshot (``files.full``) — the manifest-list rollup that bounds
 #     reconstruction walks to ROLLUP_EVERY hops;
-#   - schema + properties (watermarks, exactly-once ledger, tags, WAP,
+#   - schema + properties (watermarks, exactly-once ledger, tags,
 #     physical-name maps) in full — all O(apps + parts + refs), never
 #     O(files); ``file_stats`` is the one O(files) property and is
 #     delta-encoded with the file lists, re-attached on read;
@@ -154,8 +155,8 @@ def _cache_put(key: tuple[str, int], val: tuple) -> None:
         _STATE_CACHE[key] = val
 ROLLUP_EVERY = 32
 LINEAGE_CAP = 256
-# the delta contract for commits that touch no data file (DDL, tags,
-# WAP registry): parent file state carries over verbatim
+# the delta contract for commits that touch no data file (DDL, tags):
+# parent file state carries over verbatim
 _META_ONLY: dict = {"added": {}, "stats_added": {}}
 
 
@@ -169,29 +170,10 @@ class Manifest:
     buckets: dict[str, list[str]]  # bucket id (str) -> relative file paths
     properties: dict[str, Any] = field(default_factory=dict)
     lineage: list[dict[str, Any]] = field(default_factory=list)
-    # this commit's OWN file delta (populated on read from the stored
-    # delta section; None on legacy full-format manifests, where
-    # consumers fall back to a structural parent diff)
-    files_added: dict[str, list[str]] | None = None
-    files_removed: list[str] | None = None
-
-    def to_json(self) -> str:
-        """LEGACY full-format serialization (every manifest() result is
-        reconstructed-full, so this is lossless). Production writes go
-        through _write_manifest's delta format; this survives for test
-        fixtures that pin the legacy-format read fallback."""
-        return json.dumps(
-            {
-                "version": self.version,
-                "snapshot_id": self.snapshot_id,
-                "parent": self.parent,
-                "columns": self.columns,
-                "n_buckets": self.n_buckets,
-                "buckets": self.buckets,
-                "properties": self.properties,
-                "lineage": self.lineage,
-            }
-        )
+    # this commit's OWN file delta, populated on read from the stored
+    # delta section
+    files_added: dict[str, list[str]] = field(default_factory=dict)
+    files_removed: list[str] = field(default_factory=list)
 
 
 class SnapshotTable:
@@ -243,20 +225,13 @@ class SnapshotTable:
             version = self._head_version(ref)
         d = self._manifest_dict(version)
         buckets, stats, _depth = self._state(version, d)
-        files = d.get("files")
-        if files is None:  # legacy full-format manifest
-            props = dict(d["properties"])
-            added, removed = None, None
-        else:
-            props = dict(d["properties"])
-            if stats:
-                # entry values SHARED with the cache (consumers index
-                # or replace entries, never mutate one in place); the
-                # dict itself is fresh so key-level mutation stays
-                # caller-local
-                props["file_stats"] = dict(stats)
-            added = {b: list(fs) for b, fs in files.get("added", {}).items()}
-            removed = list(files.get("removed", []))
+        files = d["files"]
+        props = dict(d["properties"])
+        if stats:
+            # entry values SHARED with the cache (consumers index or
+            # replace entries, never mutate one in place); the dict
+            # itself is fresh so key-level mutation stays caller-local
+            props["file_stats"] = dict(stats)
         return Manifest(
             version=d["version"],
             snapshot_id=d["snapshot_id"],
@@ -266,8 +241,8 @@ class SnapshotTable:
             buckets={b: list(fs) for b, fs in buckets.items()},
             properties=props,
             lineage=list(d.get("lineage", [])),
-            files_added=added,
-            files_removed=removed,
+            files_added={b: list(fs) for b, fs in files.get("added", {}).items()},
+            files_removed=list(files.get("removed", [])),
         )
 
     def _manifest_dict(self, version: int) -> dict:
@@ -304,14 +279,7 @@ class SnapshotTable:
                     base = hit
                     break
                 dd = self._manifest_dict(v)
-            files = dd.get("files")
-            if files is None:  # legacy format: full buckets inline
-                base = (
-                    {b: tuple(fs) for b, fs in dd["buckets"].items()},
-                    dict(dd["properties"].get("file_stats") or {}),
-                    0,
-                )
-                break
+            files = dd["files"]
             if files.get("full") is not None:
                 full = files["full"]
                 base = (
@@ -356,9 +324,8 @@ class SnapshotTable:
     # branch commit chain carries its OWN properties (exactly-once
     # ledger, watermarks, schema) forward from its fork point, so a
     # stream applying onto a branch is isolated from main until
-    # `fast_forward` publishes it — the Iceberg `spark.wap.branch`
-    # audit-branch pattern, at multi-commit granularity (single-commit
-    # gating is `stage_wap`).
+    # `fast_forward` (or `cherry_pick`) publishes it — the Iceberg
+    # audit-branch (write-audit-publish) pattern.
 
     def _refs_file(self) -> str:
         return os.path.join(self.root, "_refs.json")
@@ -873,19 +840,9 @@ class SnapshotTable:
         callers see deletions; ``read_final`` filters them."""
         if version is None:
             version = self._head_version(ref)
-        m = self.manifest(version)
-        df = self.read_raw(buckets, version=version)
-        if m.properties.get("has_partial"):
-            resolved = self._fold_resolve(df, m)
-        else:
-            w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-                F.col(S.LSN_META_COL).desc()
-            )
-            resolved = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", S.SETMASK_META_COL)
-            )
+        resolved = self._resolve(
+            self.read_raw(buckets, version=version), self.manifest(version)
+        )
         if with_deleted:
             return resolved
         return resolved.drop(S.DELETED_META_COL)
@@ -903,10 +860,7 @@ class SnapshotTable:
             version = self.resolve_tag(tag)
         if version is None:
             version = self._head_version(ref)
-        df = self.read(with_deleted=True, version=version)
-        return df.filter(~F.coalesce(F.col(S.DELETED_META_COL), F.lit(False))).drop(
-            S.LSN_META_COL, S.DELETED_META_COL
-        )
+        return self._resolve_final(self.read_raw(version=version), self.manifest(version))
 
     def read_key(self, conv_id: str, version: int | None = None) -> DataFrame:
         """Point lookup: the live turns of ONE conversation, touching
@@ -942,22 +896,24 @@ class SnapshotTable:
         raw = self._read_rel_files(m, rels).where(F.col("conv_id") == conv_id)
         return self._resolve_final(raw, m)
 
-    def _resolve_final(self, raw: DataFrame, m: Manifest | None = None) -> DataFrame:
-        """LWW/fold + tombstone-filter + meta-drop over an already-scoped
-        raw frame (shared by read_final-style views)."""
-        m = m or self.manifest()
+    def _resolve(self, raw: DataFrame, m: Manifest) -> DataFrame:
+        """Row-LWW or column-fold (per ``m``'s ``has_partial``) over an
+        already-scoped raw frame; keeps ``_lsn`` and ``_deleted``."""
         if m.properties.get("has_partial"):
-            resolved = self._fold_resolve(raw, m)
-        else:
-            w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-                F.col(S.LSN_META_COL).desc()
-            )
-            resolved = (
-                raw.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", S.SETMASK_META_COL)
-            )
-        return resolved.filter(
+            return self._fold_resolve(raw, m)
+        w = Window.partitionBy("conv_id", "turn_idx").orderBy(
+            F.col(S.LSN_META_COL).desc()
+        )
+        return (
+            raw.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn", S.SETMASK_META_COL)
+        )
+
+    def _resolve_final(self, raw: DataFrame, m: Manifest) -> DataFrame:
+        """``_resolve`` + tombstone filter + metadata drop (read_final,
+        read_key)."""
+        return self._resolve(raw, m).filter(
             ~F.coalesce(F.col(S.DELETED_META_COL), F.lit(False))
         ).drop(S.LSN_META_COL, S.DELETED_META_COL)
 
@@ -1064,38 +1020,24 @@ class SnapshotTable:
         A commit that REWRITES files (compaction) carries no new row
         versions, and appends after it are relative to the rewritten
         base — an incremental window crossing one is ambiguous, so it
-        is refused (detected STRUCTURALLY: the commit removed files
-        from its parent) and the caller re-syncs with a full read —
-        the standard Iceberg incremental-read limitation."""
+        is refused (``commit_kind`` "rewrite") and the caller re-syncs
+        with a full read — the standard Iceberg incremental-read
+        limitation."""
         m_to = self.manifest(to_version)
         cur = m_to.version
         new_files: list[str] = []
-        v = cur
-        while v > from_version:
-            man = self.manifest(v)
-            if man.files_removed is not None:  # delta summary stored
-                added_files: set[str] = {
-                    f for fs in man.files_added.values() for f in fs
-                }
-                removed_files: set[str] = set(man.files_removed)
-            else:  # legacy full-format manifest: structural parent diff
-                parent = self.manifest(man.parent) if man.parent is not None else None
-                prev_files = (
-                    {f for fs in parent.buckets.values() for f in fs} if parent else set()
-                )
-                cur_files = {f for fs in man.buckets.values() for f in fs}
-                added_files = cur_files - prev_files
-                removed_files = prev_files - cur_files
-            if removed_files:
+        v: int | None = cur
+        while v is not None and v > from_version:
+            d = self._manifest_dict(v)
+            kind, added, _ = commit_kind(d["files"], d["parent"])
+            if kind == "rewrite":
                 raise ValueError(
                     f"incremental window ({from_version}, {cur}] crosses a "
                     f"file-rewriting commit (compaction/purge) at v{v}; "
                     "re-sync with a full read"
                 )
-            new_files.extend(added_files)
-            if man.parent is None:
-                break
-            v = man.parent
+            new_files.extend(added)
+            v = d["parent"]
         # _set rides the changelog too: a downstream incremental
         # consumer of a partial-update table needs the masks to apply
         # patches with the same column-fold semantics. _read_rel_files
@@ -1125,17 +1067,13 @@ class SnapshotTable:
         """All quarantined envelope rows across apps and batches (empty
         frame with the envelope schema when nothing was ever
         quarantined). Re-applying a fixed subset is just ``apply_batch``
-        over this. Tolerates the pre-app-scoped layout
-        (_quarantine/batch=N) for tables written by older versions."""
+        over this. Layout: ``_quarantine/app=<app>/batch=<id>``."""
         base = os.path.join(self.root, "_quarantine")
         dirs: list[str] = []
         if os.path.isdir(base):
             for d in sorted(os.listdir(base)):
                 p = os.path.join(base, d)
-                if d.startswith("app="):
-                    dirs.extend(os.path.join(p, b) for b in sorted(os.listdir(p)))
-                else:  # legacy flat batch=N layout
-                    dirs.append(p)
+                dirs.extend(os.path.join(p, b) for b in sorted(os.listdir(p)))
         if not dirs:
             return self.spark.createDataFrame([], S.ENVELOPE_SCHEMA)
         return self.spark.read.schema(S.ENVELOPE_SCHEMA).parquet(*dirs)
@@ -1513,42 +1451,39 @@ class SnapshotTable:
         there. Refuses rewrite commits (compaction/purge/rebucket) —
         their file lists are relative to a base the target may not
         share (the Iceberg limitation). Idempotent: picking a batch the
-        target ledger already holds returns None without committing."""
+        target ledger already holds returns None without committing.
+
+        Partial-update read semantics travel with the files: when the
+        source chain reads by column fold (``has_partial``), the target
+        turns it on too and unions the source's ``patched_columns`` —
+        otherwise the target would read the picked patch rows as
+        full-row bases."""
         src = self.manifest(version)
-        if src.parent is None:
+        kind, added, _ = commit_kind(
+            {"added": src.files_added, "removed": src.files_removed}, src.parent
+        )
+        if kind == "create":
             raise ValueError("cherry_pick: the create commit cannot be picked")
+        if kind == "rewrite":
+            raise ValueError(
+                f"cherry_pick: v{version} is a rewrite commit "
+                "(compaction/purge/rebucket); only append commits can be picked"
+            )
         par = self.manifest(src.parent)
-        if src.files_removed is not None:  # delta summary stored
-            if src.files_removed:
-                raise ValueError(
-                    f"cherry_pick: v{version} is a rewrite commit "
-                    "(compaction/purge/rebucket); only append commits can be picked"
-                )
-            added_by_b = {b: list(fs) for b, fs in src.files_added.items() if fs}
-        else:  # legacy full-format manifest: structural parent diff
-            par_files = {f for fs in par.buckets.values() for f in fs}
-            src_files = {f for fs in src.buckets.values() for f in fs}
-            if par_files - src_files:
-                raise ValueError(
-                    f"cherry_pick: v{version} is a rewrite commit "
-                    "(compaction/purge/rebucket); only append commits can be picked"
-                )
-            added_by_b = {
-                b: [f for f in fs if f not in par_files]
-                for b, fs in src.buckets.items()
-            }
-            added_by_b = {b: rels for b, rels in added_by_b.items() if rels}
+        added_by_b = {b: list(fs) for b, fs in src.files_added.items() if fs}
         app_id, batch_id = self._single_batch_delta("cherry_pick", version, src, par)
         if self.is_batch_committed(app_id, int(batch_id), ref=ref):
             return None  # already on the target chain — fast-path no-op
         src_wm = src.properties.get("watermarks", {})
         par_wm = par.properties.get("watermarks", {})
         wm_delta = {p: int(l) for p, l in src_wm.items() if par_wm.get(p) != l}
-        added_flat = {f for fs in added_by_b.values() for f in fs}
+        added_flat = set(added)
         stats = {
             f: v for f, v in (src.properties.get("file_stats") or {}).items()
             if f in added_flat
         }
+        src_partial = bool(src.properties.get("has_partial"))
+        src_patched = set(src.properties.get("patched_columns") or [])
         # schema-era facts of the SOURCE commit, compared against the
         # target head INSIDE the lock: a branch data commit written
         # after branch-side DDL carries columns / physical-name eras the
@@ -1591,6 +1526,11 @@ class SnapshotTable:
                 ]
             if stats:
                 m.properties.setdefault("file_stats", {}).update(stats)
+            if src_partial:
+                # physical names match: the schema-era guard above
+                m.properties["has_partial"] = True
+                prev = set(m.properties.get("patched_columns") or [])
+                m.properties["patched_columns"] = sorted(prev | src_patched)
 
         try:
             return self._commit(
@@ -1712,13 +1652,11 @@ class SnapshotTable:
 
         Like Iceberg's rollback, this COMMITS A NEW manifest whose
         data state (columns, buckets, ledger, watermarks) is the
-        target's, rather than swinging the pointer to the old file:
-        registry-style properties that must outlive any rollback — the
-        tag registry (create_tag's "protected until drop_tag"
-        contract) and staged-WAP entries (their files stay
-        GC-protected) — are carried over from the abandoned head. A
-        bare pointer swing would silently revert both registries to
-        their state at the target commit."""
+        target's, rather than swinging the pointer to the old file: the
+        tag registry must outlive any rollback (create_tag's "protected
+        until drop_tag" contract), so it is carried over from the
+        abandoned head. A bare pointer swing would silently revert it
+        to its state at the target commit."""
 
         def run() -> int:
             v = version
@@ -1739,12 +1677,11 @@ class SnapshotTable:
                 )
             head = self.manifest(cur)
             m = self.manifest(v)
-            for registry in ("tags", "wap"):
-                reg = head.properties.get(registry)
-                if reg:
-                    m.properties[registry] = reg
-                else:
-                    m.properties.pop(registry, None)
+            tags = head.properties.get("tags")
+            if tags:
+                m.properties["tags"] = tags
+            else:
+                m.properties.pop("tags", None)
             m.parent = cur
             m.version = self._alloc_version()
             m.snapshot_id = uuid.uuid4().hex
@@ -1756,130 +1693,6 @@ class SnapshotTable:
             return v
 
         return self._with_commit_lock(run)
-
-    # ------------------------------------------------------------ WAP
-
-    def stage_wap(
-        self,
-        wap_id: str,
-        staged_dir: str | None,
-        affected_buckets: list[int],
-        app_id: str,
-        batch_id: int,
-        watermarks: dict[str, int],
-        lineage_row: dict[str, Any],
-    ) -> str:
-        """WRITE-AUDIT-PUBLISH, stage phase (the Iceberg ``wap.id``
-        staged-snapshot pattern): adopt the batch's delta files into
-        data/ but record them under ``properties["wap"][wap_id]``
-        instead of the bucket lists — INVISIBLE to every reader, ledger
-        and watermarks NOT advanced. An auditor inspects the would-be
-        state with ``read_wap``; ``publish_wap`` then merges the files
-        and advances exactly-once state atomically, or ``reject_wap``
-        discards them. Batch-level quality gating, complementing the
-        row-level quarantine path.
-
-        Re-staging an existing ``wap_id`` REPLACES it (the previous
-        staged files become GC orphans): the id is derived from
-        (app, batch), so stream re-delivery of a staged-but-unpublished
-        batch is idempotent. Staged files are retention-protected
-        (gc_orphans keeps every live WAP's files) until published or
-        rejected."""
-        adoption = uuid.uuid4().hex
-        adopted = self._adopt_staged(staged_dir, affected_buckets, adoption)
-        stats = self._collect_file_stats([r for rs in adopted.values() for r in rs])
-        snapshot = uuid.uuid4().hex
-
-        def run() -> str:
-            m = self.manifest()
-            waps = m.properties.setdefault("wap", {})
-            waps[wap_id] = {
-                "buckets": {b: rels for b, rels in adopted.items() if rels},
-                "file_stats": stats,
-                "app_id": app_id,
-                "batch_id": batch_id,
-                "watermarks": {str(k): int(v) for k, v in watermarks.items()},
-                "lineage": lineage_row,
-            }
-            m.parent = m.version
-            m.version = self._alloc_version()
-            old = m.snapshot_id
-            m.snapshot_id = snapshot
-            m.lineage.append(
-                {"op": "wap_stage", "wap_id": wap_id, "batch_id": batch_id,
-                 "snapshot_id": snapshot, "parent_snapshot": old}
-            )
-            self._write_manifest(m, delta=_META_ONLY)
-            return snapshot
-
-        return self._with_commit_lock(run)
-
-    def waps(self) -> dict[str, dict]:
-        return dict(self.manifest().properties.get("wap", {}))
-
-    def _wap_entry(self, wap_id: str) -> dict:
-        w = self.manifest().properties.get("wap", {}).get(wap_id)
-        if w is None:
-            raise ValueError(f"no staged WAP {wap_id!r}")
-        return w
-
-    def read_wap(self, wap_id: str) -> DataFrame:
-        """Audit view: the final state the table WOULD have if
-        ``wap_id`` were published — current files plus the staged
-        ones, fully resolved (LWW / column-fold, tombstones filtered).
-        Reads only; publishes nothing."""
-        m = self.manifest()
-        w = self._wap_entry(wap_id)
-        rels = [f for fs in m.buckets.values() for f in fs] + [
-            f for fs in w["buckets"].values() for f in fs
-        ]
-        return self._resolve_final(self._read_rel_files(m, rels), m)
-
-    def publish_wap(self, wap_id: str) -> str:
-        """Atomically merge the staged files into the bucket lists AND
-        advance the exactly-once ledger / watermarks — from this commit
-        on, the batch is indistinguishable from a direct apply (same
-        lineage fields, op-tagged), and its re-delivery no-ops."""
-        w = self._wap_entry(wap_id)
-
-        def mutate(m: Manifest) -> None:
-            cur = m.properties.get("wap", {}).get(wap_id)
-            if cur is None:
-                raise ValueError(f"WAP {wap_id!r} vanished (already published/rejected?)")
-            for b, rels in cur["buckets"].items():
-                m.buckets[b] = list(m.buckets.get(b, [])) + rels
-            m.properties.setdefault("file_stats", {}).update(cur.get("file_stats", {}))
-            del m.properties["wap"][wap_id]
-
-        return self._commit(
-            mutate,
-            w["app_id"],
-            int(w["batch_id"]),
-            {k: int(v) for k, v in w["watermarks"].items()},
-            {**w["lineage"], "op": "wap_publish", "wap_id": wap_id},
-        )
-
-    def reject_wap(self, wap_id: str) -> None:
-        """Discard a staged batch: the entry is dropped (its files
-        become GC orphans), the ledger never advances — the auditor
-        decided the batch must not land. Re-delivery of the same batch
-        re-applies (and re-stages) it."""
-        self._wap_entry(wap_id)
-
-        def run() -> None:
-            m = self.manifest()
-            if wap_id not in m.properties.get("wap", {}):
-                raise ValueError(f"WAP {wap_id!r} vanished (already published/rejected?)")
-            del m.properties["wap"][wap_id]
-            m.parent = m.version
-            m.version = self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
-            m.lineage.append(
-                {"op": "wap_reject", "wap_id": wap_id, "snapshot_id": m.snapshot_id}
-            )
-            self._write_manifest(m, delta=_META_ONLY)
-
-        self._with_commit_lock(run)
 
     def _commit(
         self,
@@ -1918,9 +1731,9 @@ class SnapshotTable:
             wm = m.properties.setdefault("watermarks", {})
             for part, lsn in watermarks.items():
                 wm[str(part)] = max(int(lsn), int(wm.get(str(part), -1)))
-            # max, not assignment: a cherry-pick / publish racing a
-            # direct apply must never regress a ledger the apply just
-            # advanced (batch ids are per-app monotone by contract)
+            # max, not assignment: a cherry-pick racing a direct apply
+            # must never regress a ledger the apply just advanced
+            # (batch ids are per-app monotone by contract)
             cb = m.properties.setdefault("committed_batches", {})
             cb[app_id] = max(int(batch_id), int(cb.get(app_id, -1)))
             m.lineage.append(
@@ -2138,10 +1951,9 @@ class SnapshotTable:
                 app: int(b) for app, b in m.properties.get("committed_batches", {}).items()
             },
             # dangling audit state a resuming operator must decide on:
-            # branches awaiting publish/drop, staged WAPs awaiting
-            # publish/reject (both retention-protected until resolved)
+            # branches awaiting publish/drop (retention-protected until
+            # dropped)
             "branches": self._read_refs(),
-            "staged_waps": sorted(m.properties.get("wap", {})),
         }
 
     def gc_orphans(
@@ -2172,9 +1984,9 @@ class SnapshotTable:
         version main's window retains (its fork point, in the common
         case) — pruning a mid-chain branch manifest would break the
         ancestor walk ``fast_forward`` relies on and brick the publish.
-        Tagged versions stay until drop_tag; staged WAP files on any
-        ref head are live. ``max_age_seconds`` adds time-based retention
-        (the Iceberg ``expire_snapshots(olderThan, retainLast)`` pair):
+        Tagged versions stay until drop_tag. ``max_age_seconds`` adds
+        time-based retention (the Iceberg
+        ``expire_snapshots(olderThan, retainLast)`` pair):
         main's chain is ALSO kept while commits are younger than the
         cutoff — ``keep_versions`` is then the retain-last floor, the
         age bound the ceiling. The ENTIRE pass — keep-set planning AND
@@ -2222,13 +2034,10 @@ class SnapshotTable:
                         break
             tag_versions: set[int] = set()
             for hv in [self._head_version("main"), *refs.values()]:
-                head_m = self.manifest(hv)
                 tag_versions.update(
-                    int(t) for t in head_m.properties.get("tags", {}).values()
+                    int(t)
+                    for t in self._manifest_dict(hv)["properties"].get("tags", {}).values()
                 )
-                for w in head_m.properties.get("wap", {}).values():
-                    for fs in w.get("buckets", {}).values():
-                        referenced.update(fs)
             keep_set.update(tag_versions)
             # tagged versions keep not just their own manifest but the
             # PARENT-LINK PATH from each ref head down to them: rollback
@@ -2267,9 +2076,9 @@ class SnapshotTable:
                     d = self._manifest_dict(kv)
                 except FileNotFoundError:
                     continue
-                files = d.get("files")
-                if files is None or files.get("full") is not None:
-                    continue  # already full (or legacy-full)
+                files = d["files"]
+                if files.get("full") is not None:
+                    continue  # already full
                 if d.get("parent") in keep_set:
                     continue  # chain stays intact through this GC
                 buckets, stats, _ = self._state(kv, d)
@@ -2356,10 +2165,9 @@ class SnapshotTable:
         return sorted(int(f[1:-5]) for f in os.listdir(man_dir) if f.endswith(".json"))
 
     def snapshots_df(self) -> DataFrame:
-        """One row per retained committed version: commit kind derived
-        STRUCTURALLY from the file diff vs parent (append / rewrite /
-        metadata — same classification the CDF source and
-        read_changes use), plus file/row-tracking counts."""
+        """One row per retained committed version: commit kind from the
+        stored file delta (``commit_kind`` — the classification the CDF
+        source, read_changes and cherry_pick share), plus file counts."""
         schema = T.StructType([
             T.StructField("version", T.LongType()),
             T.StructField("snapshot_id", T.StringType()),
@@ -2374,38 +2182,12 @@ class SnapshotTable:
         cur = self.manifest().version
         rows = []
         for v in self._retained_versions():
-            m = self.manifest(v)
-            files = {f for fs in m.buckets.values() for f in fs}
-            if m.files_removed is not None:  # stored delta summary
-                added = sum(len(fs) for fs in m.files_added.values())
-                removed = len(m.files_removed)
-                op = (
-                    "create" if m.parent is None
-                    else "metadata" if added == 0 and removed == 0
-                    else "append" if removed == 0
-                    else "rewrite"
-                )
-            else:  # legacy full-format manifest: structural parent diff
-                parent_files: set[str] | None = None
-                if m.parent is not None:
-                    try:
-                        pm = self.manifest(m.parent)
-                        parent_files = {f for fs in pm.buckets.values() for f in fs}
-                    except FileNotFoundError:
-                        parent_files = None  # expired parent: diff unknowable
-                if parent_files is None:
-                    added, removed = (len(files), 0) if m.parent is None else (-1, -1)
-                    op = "create" if m.parent is None else "unknown"
-                else:
-                    added = len(files - parent_files)
-                    removed = len(parent_files - files)
-                    op = (
-                        "metadata" if added == 0 and removed == 0
-                        else "append" if removed == 0
-                        else "rewrite"
-                    )
-            rows.append((v, m.snapshot_id, m.parent, op, m.n_buckets,
-                         len(files), added, removed, v == cur))
+            d = self._manifest_dict(v)
+            op, added, removed = commit_kind(d["files"], d["parent"])
+            buckets = self._state(v, d)[0]
+            rows.append((v, d["snapshot_id"], d["parent"], op, d["n_buckets"],
+                         sum(len(fs) for fs in buckets.values()),
+                         len(added), len(removed), v == cur))
         return self.spark.createDataFrame(rows, schema)
 
     def files_df(self, version: int | None = None) -> DataFrame:
@@ -2437,8 +2219,8 @@ class SnapshotTable:
         return self.spark.createDataFrame(rows, schema)
 
     def history_df(self) -> DataFrame:
-        """The current head's ancestry chain (Iceberg history): refs —
-        tags and the staged WAP ids — annotated per version."""
+        """The current head's ancestry chain (Iceberg history), with the
+        tags pinning each version."""
         schema = T.StructType([
             T.StructField("version", T.LongType()),
             T.StructField("snapshot_id", T.StringType()),

@@ -1,5 +1,5 @@
-"""Branch refs + fast-forward publish (the Iceberg branch /
-`spark.wap.branch` audit-branch pattern): commit isolation, ledger
+"""Branch refs + fast-forward publish (the Iceberg audit-branch
+pattern): commit isolation, ledger
 inheritance and carry-over, strict fast-forward, global version
 allocation across chains, per-ref GC retention, and branch-scoped
 schema evolution.
@@ -180,16 +180,6 @@ def test_branch_schema_evolution_publishes_with_fast_forward(spark, tmp_path):
     table.fast_forward("main", "ddl")
     got = table.read_final().toPandas().sort_values("turn_idx")
     assert list(got["model"]) == [None, "m-1"]
-
-
-def test_wap_mode_and_branch_are_mutually_exclusive(spark, log3, tmp_path):
-    batches, _ = log3
-    table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        apply_batch(
-            _df(spark, batches[0]), table, batch_id=0,
-            cfg=ApplyConfig(branch="b", wap_mode=True),
-        )
 
 
 def test_branch_name_validation_and_duplicates(spark, tmp_path):
@@ -432,6 +422,38 @@ def test_cherry_pick_refuses_rewrite_commits(spark, log3, tmp_path):
     compaction_v = table.manifest().version
     with pytest.raises(ValueError, match="rewrite commit"):
         table.cherry_pick(compaction_v)
+
+
+def test_cherry_pick_carries_partial_update_semantics(spark, tmp_path):
+    """A picked patch commit reads on the target exactly as on its
+    branch: the pick turns on the column fold (has_partial) and unions
+    the patched columns, so untouched columns keep their base values
+    instead of reading the patch row as an all-NULL full-row base."""
+    import json as _json
+
+    def env(lsn, op, payload):
+        return _df(spark, pd.DataFrame([{
+            "lsn": lsn,
+            "ts": pd.Timestamp("2025-01-01") + pd.Timedelta(seconds=lsn),
+            "op": op, "conv_id": "conv-p", "turn_idx": 0,
+            "payload": _json.dumps(payload), "schema_ver": 1, "source_part": 0,
+        }]))
+
+    table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    cfg = ApplyConfig(auto_compact=False, shuffle_partitions=4)
+    apply_batch(env(1, "insert", {"role": "user", "text": "A",
+                                  "ts": "2025-01-01T00:00:00"}), table, 0, cfg)
+    table.create_branch("b")
+    apply_batch(env(2, "update_partial", {"text": "B"}), table, 1,
+                ApplyConfig(auto_compact=False, shuffle_partitions=4, branch="b"))
+    table.cherry_pick(table.branches()["b"])
+    cols = ["role", "text", "ts"]
+    want = table.read_final(ref="b").select(*cols).collect()
+    assert (want[0]["role"], want[0]["text"]) == ("user", "B")
+    assert table.read_final().select(*cols).collect() == want
+    props = table.manifest().properties
+    assert props.get("has_partial") is True
+    assert "text" in props["patched_columns"]
 
 
 def test_age_based_expiry_keeps_young_commits_beyond_window(spark, log3, tmp_path):

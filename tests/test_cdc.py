@@ -268,32 +268,35 @@ def test_resume_across_schema_change(spark, small_log, tmp_path):
 def test_crash_between_manifest_and_pointer_swap(spark, tmp_path):
     """Write-manifest-last protocol: a crash after writing manifest
     v(N+1) but BEFORE the _current pointer swap must leave the table
-    readable at version N, and the next apply must succeed (orphan
-    manifest is simply overwritten)."""
+    readable at version N, and the next apply must succeed. The orphan
+    manifest is never overwritten: version allocation counts it, so the
+    next commit takes v(N+2)."""
     import os
-
-    from audience_behavior_semantic_etl_spark.cdc.table import Manifest
 
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     apply_batch(_envelope_df(spark, _mk_events([(1, "insert", "A")])), table, 0)
     m = table.manifest()
     # simulate the crash window: orphan manifest exists, pointer unswapped
-    orphan = Manifest(
-        version=m.version + 1,
-        snapshot_id="deadbeef",
-        parent=m.version,
-        columns=m.columns,
-        n_buckets=m.n_buckets,
-        buckets={},  # would-be "emptied" table
-        properties=m.properties,
-    )
-    with open(os.path.join(table.root, "_manifests", f"v{orphan.version}.json"), "w") as f:
-        f.write(orphan.to_json())
+    orphan = {
+        "version": m.version + 1,
+        "snapshot_id": "deadbeef",
+        "parent": m.version,
+        "columns": [list(c) for c in m.columns],
+        "n_buckets": m.n_buckets,
+        "properties": {k: v for k, v in m.properties.items() if k != "file_stats"},
+        "lineage": [],
+        # would-be "emptied" table
+        "files": {"added": {}, "removed": [], "stats_added": {}, "stats_removed": [],
+                  "full": {"buckets": {}, "stats": {}}},
+    }
+    with open(os.path.join(table.root, "_manifests", f"v{m.version + 1}.json"), "w") as f:
+        f.write(json.dumps(orphan))
     # readers still see version N
     assert list(table.read_final().toPandas()["text"]) == ["A"]
-    # recovery: the next commit claims version N+1 and the table converges
+    # recovery: the next commit skips the orphan's number and converges
     apply_batch(_envelope_df(spark, _mk_events([(5, "update", "B")])), table, 1)
     assert list(table.read_final().toPandas()["text"]) == ["B"]
+    assert table.manifest().version == m.version + 2
     assert table.manifest().snapshot_id != "deadbeef"
 
 
@@ -585,9 +588,9 @@ def test_widen_columns_rejects_unsafe(spark, tmp_path):
 
 def test_quarantine_dead_letter_sink(spark, tmp_path):
     """Quarantine mode must not lose the poison PAYLOADS: malformed and
-    null-key envelope rows land under _quarantine/batch=<id> as
-    original, replayable envelope rows; re-delivery of the batch is a
-    no-op that leaves the dead letters intact."""
+    null-key envelope rows land under _quarantine/app=<app>/batch=<id>
+    as original, replayable envelope rows; re-delivery of the batch is
+    a no-op that leaves the dead letters intact."""
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     pdf = _mk_events([(1, "insert", "GOOD"), (2, "insert", "BAD"), (3, "insert", "ORPHAN")])
     pdf.loc[1, "payload"] = "{not json"
@@ -1395,89 +1398,106 @@ def test_tag_unknown_and_bad_version(spark, tmp_path):
 
 
 # ------------------------------------------------------------------ WAP
+#
+# Write-audit-publish is the audit-branch recipe: stage = create_branch
+# + apply onto it, audit = read_final(ref=...), publish = fast_forward
+# (or cherry_pick of the branch head when main moved), reject =
+# drop_branch(force=True).
+
+def _staged_files(t, branch):
+    """Data files an audit branch holds beyond main's head."""
+    on_main = {f for fs in t.manifest().buckets.values() for f in fs}
+    return [
+        f for fs in t.manifest(ref=branch).buckets.values() for f in fs
+        if f not in on_main
+    ]
+
 
 def test_wap_stage_audit_publish(spark, tmp_path):
-    """Write-audit-publish: a wap_mode apply is INVISIBLE (state,
-    ledger, watermarks untouched), read_wap previews the would-be
-    state, publish lands it atomically, and re-delivery then no-ops."""
-    from audience_behavior_semantic_etl_spark.cdc.apply import wap_id_for
-
+    """A batch applied onto an audit branch is INVISIBLE on main (state
+    and ledger untouched), the branch read previews the would-be state,
+    fast_forward lands it atomically with the ledger, and re-delivery
+    then no-ops on main and on the branch."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     cfg = ApplyConfig(app_id="wap", auto_compact=False, shuffle_partitions=4)
-    wcfg = ApplyConfig(app_id="wap", auto_compact=False, shuffle_partitions=4,
-                       wap_mode=True)
+    bcfg = ApplyConfig(app_id="wap", auto_compact=False, shuffle_partitions=4,
+                       branch="audit")
+    batch1 = _mk_conv_events([(2, "aaa", "A2"), (3, "bbb", "B")])
     apply_batch(_envelope_df(spark, _mk_conv_events([(1, "aaa", "A")])), t, 0, cfg)
-    apply_batch(
-        _envelope_df(spark, _mk_conv_events([(2, "aaa", "A2"), (3, "bbb", "B")])),
-        t, 1, wcfg,
-    )
+    t.create_branch("audit")
+    apply_batch(_envelope_df(spark, batch1), t, 1, bcfg)
     # invisible: reader state and exactly-once ledger unchanged
     assert [r["text"] for r in t.read_final().collect()] == ["A"]
     assert not t.is_batch_committed("wap", 1)
-    wid = wap_id_for("wap", 1)
-    audit = {r["conv_id"]: r["text"] for r in t.read_wap(wid).collect()}
+    audit = {r["conv_id"]: r["text"] for r in t.read_final(ref="audit").collect()}
     assert audit == {"aaa": "A2", "bbb": "B"}
-    t.publish_wap(wid)
+    t.fast_forward("main", "audit")
     got = {r["conv_id"]: r["text"] for r in t.read_final().collect()}
     assert got == {"aaa": "A2", "bbb": "B"}
     assert t.is_batch_committed("wap", 1)
-    assert apply_batch(
-        _envelope_df(spark, _mk_conv_events([(2, "aaa", "A2"), (3, "bbb", "B")])),
-        t, 1, wcfg,
-    ).skipped
-    assert t.waps() == {}
-    assert t.manifest().lineage[-1]["op"] == "wap_publish"
+    assert apply_batch(_envelope_df(spark, batch1), t, 1, cfg).skipped
+    assert apply_batch(_envelope_df(spark, batch1), t, 1, bcfg).skipped
+    t.drop_branch("audit")  # published: no force needed
+    assert t.branches() == {}
 
 
 def test_wap_reject_then_redelivery_applies(spark, tmp_path):
-    """Rejecting a staged batch drops it (files GC-protected while
-    staged, orphaned after) and leaves the ledger behind, so the
-    stream's re-delivery re-applies the batch for real."""
-    from audience_behavior_semantic_etl_spark.cdc.apply import wap_id_for
-
+    """Rejecting a staged batch drops its branch (files GC-protected
+    while the branch lives, reclaimed after) and leaves main's ledger
+    behind, so the stream's re-delivery re-applies the batch for real."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     cfg = ApplyConfig(app_id="wap", auto_compact=False, shuffle_partitions=4)
-    wcfg = ApplyConfig(app_id="wap", auto_compact=False, shuffle_partitions=4,
-                       wap_mode=True)
+    bcfg = ApplyConfig(app_id="wap", auto_compact=False, shuffle_partitions=4,
+                       branch="audit")
     apply_batch(_envelope_df(spark, _mk_conv_events([(1, "aaa", "A")])), t, 0, cfg)
-    apply_batch(_envelope_df(spark, _mk_conv_events([(2, "bbb", "BAD")])), t, 1, wcfg)
-    wid = wap_id_for("wap", 1)
-    staged_files = [f for fs in t.waps()[wid]["buckets"].values() for f in fs]
+    t.create_branch("audit")
+    apply_batch(_envelope_df(spark, _mk_conv_events([(2, "bbb", "BAD")])), t, 1, bcfg)
+    staged_files = _staged_files(t, "audit")
     assert staged_files
-    # staged files survive GC while the WAP is live
+    # staged files survive GC while the branch is live
     deleted = t.gc_orphans(keep_versions=1, staging_grace_seconds=0)
     assert not set(deleted) & set(staged_files)
-    t.reject_wap(wid)
+    with pytest.raises(ValueError, match="unpublished"):
+        t.drop_branch("audit")
+    t.drop_branch("audit", force=True)
     assert [r["text"] for r in t.read_final().collect()] == ["A"]
     deleted = t.gc_orphans(keep_versions=1, staging_grace_seconds=0)
     assert set(staged_files) <= set(deleted), "rejected files reclaimed"
-    # re-delivery is NOT skipped (ledger never advanced); a direct
-    # apply of the fixed batch lands
+    # re-delivery is NOT skipped (main's ledger never advanced); a
+    # direct apply of the fixed batch lands
     m = apply_batch(_envelope_df(spark, _mk_conv_events([(2, "bbb", "GOOD")])), t, 1, cfg)
     assert not m.skipped
     assert sorted(r["text"] for r in t.read_final().collect()) == ["A", "GOOD"]
 
 
 def test_wap_restage_is_idempotent(spark, tmp_path):
-    """Re-delivery of a staged-but-unpublished batch re-stages the same
-    wap id, replacing the previous staged files (no double delivery on
-    publish)."""
-    from audience_behavior_semantic_etl_spark.cdc.apply import wap_id_for
-
+    """Re-delivery of a staged-but-unpublished batch onto its audit
+    branch no-ops (the branch ledger holds it), and when main moved
+    since the fork the batch publishes exactly once by cherry-picking
+    the branch head."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    wcfg = ApplyConfig(app_id="wap", auto_compact=False, shuffle_partitions=4,
-                       wap_mode=True)
+    bcfg = ApplyConfig(app_id="wap", auto_compact=False, shuffle_partitions=4,
+                       branch="audit")
     env = _envelope_df(spark, _mk_conv_events([(1, "aaa", "A")]))
-    apply_batch(env, t, 0, wcfg)
-    first_files = [f for fs in t.waps()[wap_id_for("wap", 0)]["buckets"].values() for f in fs]
-    apply_batch(env, t, 0, wcfg)  # re-delivered before publish
-    assert len(t.waps()) == 1
-    t.publish_wap(wap_id_for("wap", 0))
-    got = t.read_final().toPandas()
-    assert list(got["text"]) == ["A"], "published exactly once"
-    # the first staging's files are orphans now
-    deleted = t.gc_orphans(keep_versions=1, staging_grace_seconds=0)
-    assert set(first_files) <= set(deleted)
+    t.create_branch("audit")
+    apply_batch(env, t, 0, bcfg)
+    head = t.branches()["audit"]
+    first_files = _staged_files(t, "audit")
+    assert apply_batch(env, t, 0, bcfg).skipped  # re-delivered before publish
+    assert t.branches()["audit"] == head and _staged_files(t, "audit") == first_files
+    # main moves on (another app) — fast_forward is refused, pick instead
+    apply_batch(
+        _envelope_df(spark, _mk_conv_events([(5, "zzz", "Z")])), t, 0,
+        ApplyConfig(app_id="other", auto_compact=False, shuffle_partitions=4),
+    )
+    with pytest.raises(ValueError, match="not an ancestor"):
+        t.fast_forward("main", "audit")
+    t.cherry_pick(head)
+    t.drop_branch("audit", force=True)
+    got = t.read_final().toPandas().sort_values("conv_id")
+    assert list(got["text"]) == ["A", "Z"], "published exactly once"
+    assert t.is_batch_committed("wap", 0)
+    assert apply_batch(env, t, 0, ApplyConfig(app_id="wap", auto_compact=False)).skipped
 
 
 def test_murmur3_parity_with_spark_hash(spark):

@@ -1,8 +1,8 @@
 """Seeded chaos interleaving: the full maintenance surface (compaction,
-tombstone purge, REBUCKET, GC, tags, WAP stage/publish) interleaved
-randomly between applies must be INVISIBLE — after every single step
-the resolved table equals the single-threaded pandas oracle over the
-log prefix applied so far.
+tombstone purge, REBUCKET, GC, tags, audit-branch stage/publish)
+interleaved randomly between applies must be INVISIBLE — after every
+single step the resolved table equals the single-threaded pandas
+oracle over the log prefix applied so far.
 
 This is the integration-level guarantee the per-feature tests imply
 but don't compose: any maintenance op commuting with any apply history.
@@ -10,16 +10,13 @@ Deterministic seeds (no flaky search, reproducible failures)."""
 
 from __future__ import annotations
 
+import dataclasses
 import random
 
 import pandas as pd
 import pytest
 
-from audience_behavior_semantic_etl_spark.cdc.apply import (
-    ApplyConfig,
-    apply_batch,
-    wap_id_for,
-)
+from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
 from audience_behavior_semantic_etl_spark.cdc.demo import check_equal, table_to_pandas
 from audience_behavior_semantic_etl_spark.cdc.gen import (
     GenConfig,
@@ -44,19 +41,20 @@ def test_maintenance_interleaving_invisible(spark, tmp_path, seed):
     cuts = [len(log) * i // n_batches for i in range(n_batches + 1)]
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     cfg = ApplyConfig(app_id="chaos", auto_compact=False, shuffle_partitions=4)
-    wcfg = ApplyConfig(
-        app_id="chaos", auto_compact=False, shuffle_partitions=4, wap_mode=True
-    )
     tagged = []
 
     for i in range(n_batches):
         env = _envelope_df(spark, log.iloc[cuts[i]:cuts[i + 1]])
         if rng.random() < 0.3:
-            # WAP route: stage (invisible!) then publish
+            # write-audit-publish route: stage on an audit branch
+            # (invisible!), publish by fast-forward, drop the branch
+            audit = f"audit-{i}"
             before = table_to_pandas(table)
-            apply_batch(env, table, i, wcfg)
+            table.create_branch(audit)
+            apply_batch(env, table, i, dataclasses.replace(cfg, branch=audit))
             check_equal(table_to_pandas(table), before)
-            table.publish_wap(wap_id_for("chaos", i))
+            table.fast_forward("main", audit)
+            table.drop_branch(audit)
         else:
             apply_batch(env, table, i, cfg)
         oracle = expected_final_state(log.iloc[: cuts[i + 1]])

@@ -48,6 +48,8 @@ def test_snapshots_files_history(spark, tmp_path):
     appends = [v for v, r in snaps.items() if r["operation"] == "append"]
     assert len(appends) == 2
     assert snaps[head]["operation"] == "rewrite"
+    # the tag commit (compaction's parent) touched no file
+    assert snaps[snaps[head]["parent"]]["operation"] == "metadata"
     assert snaps[head]["is_current"] and not snaps[0]["is_current"]
     assert snaps[head]["files_removed"] > 0
 
