@@ -2375,6 +2375,21 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_PROGRESS: dict[str, list] = {}
 
 
+def _stage_arrivals(df: DataFrame) -> str:
+    """Write ``df`` to a scratch directory as 4 parquet files stamped with
+    increasing mtimes: the file stream source orders arrivals by mtime,
+    so each file is a later arrival than the one before."""
+    import os
+
+    srcd = _scratch("stream-arrivals-")
+    df.repartition(4).write.mode("overwrite").parquet(srcd)
+    parts = sorted(p for p in os.listdir(srcd) if p.endswith(".parquet"))
+    base = max(os.path.getmtime(os.path.join(srcd, p)) for p in parts)
+    for i, p in enumerate(parts):
+        os.utime(os.path.join(srcd, p), (base + i, base + i))
+    return srcd
+
+
 def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming: event-time tumbling window + watermark
     drained with availableNow — the engine's incremental-cube op
@@ -2397,19 +2412,10 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_streaming_and_metrics.py.) Output is projected to the
     key columns: which duplicate's payload wins within one micro-batch
     is engine-arbitrary, the key set is not."""
-    import os
-    import tempfile
-
     from audience_behavior_semantic_etl_spark.streaming.dedup import streaming_dedup
 
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    srcd = _scratch("stream-dedup-src-")
-    ev.repartition(4).write.mode("overwrite").parquet(srcd)
-    # stamp increasing mtimes: the file source orders arrivals by mtime
-    parts = sorted(p for p in os.listdir(srcd) if p.endswith(".parquet"))
-    base = max(os.path.getmtime(os.path.join(srcd, p)) for p in parts)
-    for i, p in enumerate(parts):
-        os.utime(os.path.join(srcd, p), (base + i, base + i))
+    srcd = _stage_arrivals(ev)
     prog = STREAM_PROGRESS["q_stream_dedup"] = []
     out = streaming_dedup(
         spark, srcd, ["user_id", "event_type"],
@@ -2427,20 +2433,12 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_and_metrics.py). Drained over a multi-file
     out-of-event-time-order arrival, the result is bit-equal to the
     batch gap rule — which is the oracle."""
-    import os
-    import tempfile
-
     from audience_behavior_semantic_etl_spark.streaming.sessionize import (
         streaming_sessionize,
     )
 
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-    srcd = _scratch("stream-sess-q-")
-    ev.repartition(4).write.mode("overwrite").parquet(srcd)
-    parts = sorted(p for p in os.listdir(srcd) if p.endswith(".parquet"))
-    base = max(os.path.getmtime(os.path.join(srcd, p)) for p in parts)
-    for i, p in enumerate(parts):
-        os.utime(os.path.join(srcd, p), (base + i, base + i))
+    srcd = _stage_arrivals(ev)
     prog = STREAM_PROGRESS["q_stream_sessionize"] = []
     return streaming_sessionize(
         spark, srcd, key_col="user_id", ts_col="ts", gap_minutes=30,
@@ -2457,9 +2455,6 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-evicted state. The dim never enters the state store; the
     flush sentinels carry a NULL join key so the inner join drops them
     after they advance the watermark. Oracle: the batch join+GROUP BY."""
-    import os
-    import tempfile
-
     from audience_behavior_semantic_etl_spark.streaming.windowed import (
         stream_static_enrich_counts,
     )
@@ -2468,12 +2463,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("user_id"), F.lit(25)).cast("int").alias("nation_key"),
         F.col("ts"),
     )
-    srcd = _scratch("stream-enrich-q-")
-    ev.repartition(4).write.mode("overwrite").parquet(srcd)
-    parts = sorted(p for p in os.listdir(srcd) if p.endswith(".parquet"))
-    base = max(os.path.getmtime(os.path.join(srcd, p)) for p in parts)
-    for i, p in enumerate(parts):
-        os.utime(os.path.join(srcd, p), (base + i, base + i))
+    srcd = _stage_arrivals(ev)
     dim = _t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("int").alias("n_nationkey"), "n_name"
     )
@@ -2494,20 +2484,12 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch that completes the pair (the streaming form of the
     reference's goals-to-pageviews time-theta attribution join,
     AcmeGoalsETL.scala / J2). Oracle: the batch interval join."""
-    import os
-    import tempfile
-
     from audience_behavior_semantic_etl_spark.streaming.join import (
         stream_stream_interval_join,
     )
 
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    srcd = _scratch("ss-join-q-")
-    ev.repartition(4).write.mode("overwrite").parquet(srcd)
-    parts = sorted(p for p in os.listdir(srcd) if p.endswith(".parquet"))
-    base = max(os.path.getmtime(os.path.join(srcd, p)) for p in parts)
-    for i, p in enumerate(parts):
-        os.utime(os.path.join(srcd, p), (base + i, base + i))
+    srcd = _stage_arrivals(ev)
     prog = STREAM_PROGRESS["q_stream_stream_join"] = []
     return stream_stream_interval_join(
         spark, srcd,

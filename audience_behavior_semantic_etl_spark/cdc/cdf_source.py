@@ -276,3 +276,30 @@ class TranscriptsCDF(DataSource):
 
     def streamReader(self, schema: T.StructType) -> TranscriptsCDFReader:
         return TranscriptsCDFReader(self.options["path"], dict(self.options))
+
+
+def start_cdf_foreach_batch(
+    spark,
+    root: str,
+    starting_version: int,
+    on_batch,
+    checkpoint: str,
+    available_now: bool = True,
+):
+    """Register the source and start ``on_batch`` as the foreachBatch
+    sink over the change feed of the table at ``root``, from
+    ``starting_version``, checkpointed at ``checkpoint``. Returns the
+    StreamingQuery; ``available_now=True`` drains-and-stops, ``False``
+    runs continuously with the default trigger."""
+    spark.dataSource.register(TranscriptsCDF)
+    writer = (
+        spark.readStream.format("transcripts_cdf")
+        .option("path", root)
+        .option("startingVersion", starting_version)
+        .load()
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

@@ -253,10 +253,11 @@ class IncrementalView:
         StreamingQuery; ``available_now=True`` drains-and-stops (the
         batch-job-shaped deployment), ``False`` runs continuously with
         the default trigger."""
-        from audience_behavior_semantic_etl_spark.cdc.cdf_source import TranscriptsCDF
+        from audience_behavior_semantic_etl_spark.cdc.cdf_source import (
+            start_cdf_foreach_batch,
+        )
 
         spark = self.table.spark
-        spark.dataSource.register(TranscriptsCDF)
         if self._meta() is None:
             self._full(self.table.manifest().version)
 
@@ -277,17 +278,10 @@ class IncrementalView:
             finally:
                 shutil.rmtree(scratch, ignore_errors=True)
 
-        writer = (
-            spark.readStream.format("transcripts_cdf")
-            .option("path", self.table.root)
-            .option("startingVersion", self.synced_version())
-            .load()
-            .writeStream.foreachBatch(_sync)
-            .option("checkpointLocation", checkpoint)
+        return start_cdf_foreach_batch(
+            spark, self.table.root, self.synced_version(), _sync, checkpoint,
+            available_now,
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def _view_schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self._meta()["schema"]))

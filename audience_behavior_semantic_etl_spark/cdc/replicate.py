@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from audience_behavior_semantic_etl_spark.cdc import schema as S
 from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
-from audience_behavior_semantic_etl_spark.cdc.cdf_source import TranscriptsCDF
+from audience_behavior_semantic_etl_spark.cdc.cdf_source import start_cdf_foreach_batch
 from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
 _META = (S.LSN_META_COL, S.DELETED_META_COL, S.SETMASK_META_COL, "_commit_version")
@@ -256,8 +256,6 @@ def replicate_stream(
     """Start the replication stream; returns the StreamingQuery.
     ``available_now=True`` drains-and-stops (catch-up / batch-shaped
     deployment); ``False`` runs continuously."""
-    spark = source.spark
-    spark.dataSource.register(TranscriptsCDF)
     base_cfg = apply_cfg or ApplyConfig()
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -355,14 +353,7 @@ def replicate_stream(
             cdf_to_envelope(batch_df, inv, hist), target, batch_id, cfg
         )
 
-    writer = (
-        spark.readStream.format("transcripts_cdf")
-        .option("path", source.root)
-        .option("startingVersion", starting_version)
-        .load()
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
+    return start_cdf_foreach_batch(
+        source.spark, source.root, starting_version, _apply, checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

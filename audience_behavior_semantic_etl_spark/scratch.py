@@ -15,8 +15,9 @@ scratch on the fastest writable medium:
 - ``$SPARK_GRAFT_SCRATCH`` when set (a cluster deployment points this
   at instance-local NVMe — the same decision as ``spark.local.dir``;
   set it to the empty string to force the system tempdir);
-- else ``/dev/shm`` (tmpfs) when present and writable — fsync is free
-  and writeback never throttles;
+- else ``/dev/shm`` (tmpfs) when present, writable and holding at
+  least ``SHM_FLOOR_BYTES`` free — fsync is free and writeback never
+  throttles;
 - else the system default tempdir (exactly the old behavior).
 
 Directories are created under a per-PID subtree removed at interpreter
@@ -34,13 +35,21 @@ import tempfile
 
 _proc_root: str | None = None
 
+# tmpfs pages are host RAM: scratch there competes with the JVM heaps
+# and Python workers for memory, and a full tmpfs fails writes instead
+# of spilling. Below 2 GiB free (a small container's /dev/shm is 64 MiB)
+# the system tempdir is the safe default.
+SHM_FLOOR_BYTES = 2 << 30
+
 
 def _base_root() -> str | None:
     root = os.environ.get("SPARK_GRAFT_SCRATCH")
     if root is not None:
         return root or None  # empty string -> system tempdir
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        return "/dev/shm/spark-graft-scratch"
+        st = os.statvfs("/dev/shm")
+        if st.f_bavail * st.f_frsize >= SHM_FLOOR_BYTES:
+            return "/dev/shm/spark-graft-scratch"
     return None
 
 

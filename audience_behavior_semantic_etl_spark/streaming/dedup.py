@@ -21,10 +21,8 @@ rate × delay).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from audience_behavior_semantic_etl_spark.scratch import scratch_dir
+from audience_behavior_semantic_etl_spark.streaming.drain import run_sink
 
 
 def streaming_dedup(
@@ -41,8 +39,6 @@ def streaming_dedup(
     arrive within ``delay`` of its event time. Returns the finished
     result from the file sink; ``progress`` receives the query progress
     dicts so callers can assert state eviction."""
-    import json as _json
-
     static = spark.read.parquet(src_dir)
     src = (
         spark.readStream.schema(static.schema)
@@ -55,16 +51,4 @@ def streaming_dedup(
         .dropDuplicatesWithinWatermark(key_cols)
         .drop("__evt")
     )
-    out_dir = scratch_dir("stream-dedup-sink-")
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", scratch_dir("stream-dedup-ckpt-"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress is not None:
-        progress.extend(_json.loads(p.json) for p in q.recentProgress)
-    return spark.read.schema(deduped.schema).parquet(out_dir)
+    return run_sink(deduped, progress)

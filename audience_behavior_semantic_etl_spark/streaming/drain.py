@@ -1,0 +1,157 @@
+"""Bounded drains for the streaming operators: source staging, the
+flush-sentinel rule and the sink-and-progress runner, in one place.
+
+Every operator under ``streaming/`` is drained the same way: the
+stream reads a directory of parquet files with an ``availableNow``
+trigger, writes to a parquet file sink in append mode, and the caller
+gets the typed read of that sink. The operator itself states only its
+query; this module owns the rest.
+
+Why sentinels. In append mode a watermarked window (or a session)
+emits only once the event-time watermark passes its end, and the
+watermark only advances when a LATER event arrives. A drained
+directory has no later event for its final windows, so without help
+they would stay in state and the drain would return nothing for them.
+``stage_source`` therefore plants two one-row "flush" files far past
+the real data. Sentinel #1 advances the watermark past every real
+window/session end; the micro-batch that reads sentinel #2 runs with
+that advanced watermark and emits and evicts them all. Each operator
+gives its sentinels a marker value (a reserved key, or a NULL join
+key) and filters it out of the result. On a true unbounded stream no
+sentinel is needed: arriving data advances the watermark.
+
+Why later mtimes. The file source orders files by modification time,
+not by name. Data files are symlinked into the staged directory (no
+copy); the sentinels are written after them with mtimes strictly later
+than every data file, so they land in the last micro-batches.
+
+The placement rule. With watermark delay ``delay`` and horizon
+``horizon`` — the window length for windows, the gap for sessions,
+i.e. how far past its last event a group can still be open — sentinel
+``i`` sits at::
+
+    max_ts + delay + horizon + (i + 1) hours
+
+After sentinel #1 the watermark is ``max_ts + horizon + 1 h``, strictly
+past ``last_event + horizon`` for every real group, whatever the delay
+and horizon are. The sentinels are written driver-side with pyarrow:
+the work is one row, so a Spark job per sentinel would be pure
+per-drain overhead.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+from datetime import datetime, timedelta
+
+from pyspark.sql import DataFrame
+
+from audience_behavior_semantic_etl_spark.scratch import scratch_dir
+
+_TERM = r"(\d+)\s+(second|minute|hour|day|week)s?"
+_TERM_RE = re.compile(_TERM, re.IGNORECASE)
+_SPEC_RE = re.compile(rf"\s*{_TERM}(?:\s+{_TERM})*\s*", re.IGNORECASE)
+
+_UNIT_S = {"second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800}
+
+
+def parse_interval_seconds(spec: str) -> int:
+    """``"90 seconds"`` / ``"2 hours"`` / ``"1 hour 30 minutes"`` ->
+    seconds: the sum of one or more ``<n> <unit>`` terms. Raises
+    ``ValueError`` on anything else."""
+    if not _SPEC_RE.fullmatch(spec):
+        raise ValueError(f"unsupported interval spec: {spec!r}")
+    return sum(int(n) * _UNIT_S[u.lower()] for n, u in _TERM_RE.findall(spec))
+
+
+def write_sentinel(
+    src_files: str | list[str], dst: str, overrides: dict[str, object]
+) -> None:
+    """One-row parquet sentinel: first row found in ``src_files`` with
+    ``overrides`` applied ({column: value}; None stores a typed null).
+    Written with pyarrow on the driver — no Spark job. Empty part
+    files (zero row groups — Spark writes them for empty partitions)
+    are skipped; if every file is empty the sentinel is a typed-null
+    row with only the overrides set."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if isinstance(src_files, str):
+        src_files = [src_files]
+    tbl = None
+    for f in src_files:
+        pf = pq.ParquetFile(f)
+        if pf.metadata.num_rows > 0:
+            tbl = pf.read_row_group(0).slice(0, 1)
+            break
+        schema = pf.schema_arrow
+    if tbl is None:
+        tbl = pa.Table.from_arrays(
+            [pa.nulls(1, type=f.type) for f in schema], schema=schema
+        )
+    for name, val in overrides.items():
+        i = tbl.schema.get_field_index(name)
+        arr = pa.array([val], type=tbl.schema.field(i).type)
+        tbl = tbl.set_column(i, tbl.schema.field(i), arr)
+    pq.write_table(tbl, dst)
+
+
+def stage_source(
+    src: str,
+    ts_col: str,
+    max_ts: datetime,
+    delay: str,
+    horizon: str,
+    flush: dict[str, object],
+) -> tuple[str, int]:
+    """Stage ``src`` (a parquet file or a directory of them) for a
+    bounded drain: symlink its data files in name order into a scratch
+    directory, then write the two flush sentinels with strictly later
+    mtimes, ``ts_col`` placed by the rule in the module docstring and
+    ``flush`` ({column: marker}) applied. Returns the staged directory
+    and the number of data files."""
+    src = os.path.abspath(src)
+    data_files = (
+        [src]
+        if os.path.isfile(src)
+        else [
+            os.path.join(src, fn)
+            for fn in sorted(os.listdir(src))
+            if fn.endswith(".parquet")
+        ]
+    )
+    staged = scratch_dir("stream-src-")
+    for i, f in enumerate(data_files):
+        os.symlink(f, os.path.join(staged, f"data-{i}.parquet"))
+    base_mtime = max(os.path.getmtime(f) for f in data_files)
+    lag_s = parse_interval_seconds(delay) + parse_interval_seconds(horizon)
+    for i in range(2):
+        dst = os.path.join(staged, f"zz-sentinel-{i}.parquet")
+        at = max_ts + timedelta(seconds=lag_s + 3600 * (i + 1))
+        write_sentinel(data_files, dst, {ts_col: at, **flush})
+        t = base_mtime + 10 + i * 10
+        os.utime(dst, (t, t))
+    return staged, len(data_files)
+
+
+def run_sink(df: DataFrame, progress: list | None = None) -> DataFrame:
+    """Drain the streaming frame ``df`` into an append-mode parquet sink
+    on a scratch checkpoint with an ``availableNow`` trigger and wait
+    for it. ``progress``, if given, receives the query's progress dicts
+    (state-store metrics, per-trigger durations). Returns the typed
+    read of the sink — distributed, no driver collect."""
+    out_dir = scratch_dir("stream-sink-")
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", scratch_dir("stream-ckpt-"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    if progress is not None:
+        progress.extend(json.loads(p.json) for p in q.recentProgress)
+    return df.sparkSession.read.schema(df.schema).parquet(out_dir)

@@ -27,11 +27,8 @@ the real disorder bound instead, shrinking state accordingly.
 
 from __future__ import annotations
 
-import json
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from audience_behavior_semantic_etl_spark.scratch import scratch_dir
+from audience_behavior_semantic_etl_spark.streaming.drain import run_sink
 
 
 def stream_stream_interval_join(
@@ -97,7 +94,6 @@ def stream_stream_interval_join(
         *[F.col(f"l_{c}") for c in extra_cols],
         *[F.col(f"r_{c}") for c in extra_cols],
     )
-    out_dir = scratch_dir("ss-join-sink-")
     # A stream-stream join maintains FOUR state stores per shuffle
     # partition (keyToNumValues / keyWithIndexToValue x both sides),
     # and every store pays a per-batch checkpoint commit regardless of
@@ -109,17 +105,6 @@ def stream_stream_interval_join(
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_shuffle_partitions))
     try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", scratch_dir("ss-join-ckpt-"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return run_sink(joined, progress)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    if progress is not None:
-        progress.extend(json.loads(p.json) for p in q.recentProgress)
-    return spark.read.schema(joined.schema).parquet(out_dir)

@@ -31,28 +31,18 @@ every evaluation, so arrival order never changes the result — the
 drained output is bit-equal to the batch operator on the same data
 (pinned by test and by the driver-contract oracle).
 
-Bounded-drain flush: same sentinel trick as ``streaming/windowed.py``
-— two late-mtime sentinel files advance the watermark past every real
-session's ``last + gap`` so the final open sessions time out and emit.
-On an unbounded stream arriving data advances the watermark
-continuously and no sentinel is needed.
+Bounded-drain flush: two sentinels staged by ``streaming/drain.py``
+advance the watermark past every real session's ``last + gap`` so the
+final open sessions time out and emit (explained there once).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-from datetime import timedelta
 from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from audience_behavior_semantic_etl_spark.scratch import scratch_dir
-from audience_behavior_semantic_etl_spark.streaming.sentinels import (
-    parse_interval_seconds,
-    write_sentinel,
-)
+from audience_behavior_semantic_etl_spark.streaming.drain import run_sink, stage_source
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -195,53 +185,9 @@ def streaming_sessionize(
         span_s = int((hi - lo).total_seconds()) + 1
         delay = f"{span_s} seconds"
 
-    # stage source files + two flush sentinels with later mtimes (the
-    # file source orders by mtime — see streaming/windowed.py)
-    srcd = scratch_dir("stream-sess-src-")
-    data_files = [
-        os.path.join(os.path.abspath(src_dir), fn)
-        for fn in sorted(os.listdir(src_dir))
-        if fn.endswith(".parquet")
-    ]
-    for i, f in enumerate(data_files):
-        os.symlink(f, os.path.join(srcd, f"data-{i}.parquet"))
-    ts_type = static.schema[ts_col].dataType.simpleString()
-    base_mtime = max(os.path.getmtime(os.path.join(srcd, p)) for p in os.listdir(srcd))
-    # sentinel #1 pushes the watermark past every real last+gap;
-    # sentinel #2 triggers the batch whose watermark reflects #1.
-    # Written driver-side when the delay is a simple interval (the
-    # default span-derived form always is) — the former limit(1)+write
-    # Spark jobs were pure per-drain overhead (streaming/sentinels.py);
-    # arbitrary interval specs fall back to the Spark expression path.
-    delay_s = parse_interval_seconds(delay)
-    for i in range(2):
-        dst = os.path.join(srcd, f"zz-sentinel-{i}.parquet")
-        if delay_s is not None:
-            write_sentinel(
-                data_files,
-                dst,
-                {
-                    ts_col: hi
-                    + timedelta(seconds=delay_s + 2 * gap_s + 3600 * (i + 1)),
-                    key_col: -1,
-                },
-            )
-        else:
-            sent = static.limit(1).withColumn(
-                ts_col,
-                (
-                    F.lit(hi)
-                    + F.expr(f"INTERVAL {delay}")
-                    + F.expr(f"INTERVAL {2 * gap_s + 3600 * (i + 1)} SECONDS")
-                ).cast(ts_type),
-            ).withColumn(key_col, F.lit(-1).cast(static.schema[key_col].dataType))
-            sdir = scratch_dir("stream-sess-sent-")
-            sent.coalesce(1).write.mode("overwrite").parquet(sdir)
-            part = next(p for p in os.listdir(sdir) if p.endswith(".parquet"))
-            os.rename(os.path.join(sdir, part), dst)
-        t = base_mtime + 10 + i * 10
-        os.utime(dst, (t, t))
-
+    srcd, _ = stage_source(
+        src_dir, ts_col, hi, delay, f"{gap_s} seconds", {key_col: -1}
+    )
     src = (
         spark.readStream.schema(static.schema)
         .option("maxFilesPerTrigger", files_per_trigger)
@@ -253,28 +199,15 @@ def streaming_sessionize(
         .withColumn("__evt_s", F.col("__evt").cast("long"))
         .select(key_col, "__evt", "__evt_s")
     )
-    out_schema = _out_schema("k")
     sessions = events.groupBy(F.col(key_col)).applyInPandasWithState(
         _make_fn(gap_s),
-        outputStructType=out_schema,
+        outputStructType=_out_schema("k"),
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf="EventTimeTimeout",
     )
-    out_dir = scratch_dir("stream-sess-sink-")
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", scratch_dir("stream-sess-ckpt-"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress is not None:
-        progress.extend(json.loads(p.json) for p in q.recentProgress)
     return (
-        spark.read.schema(out_schema).parquet(out_dir)
+        run_sink(sessions, progress)
         .filter(F.col("k") >= 0)  # sentinel key is -1
         .withColumnRenamed("k", key_col)
     )

@@ -12,14 +12,13 @@ lives in the streaming state store, checkpointed with the query.
 
 from __future__ import annotations
 
-import tempfile
 from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
-from audience_behavior_semantic_etl_spark.scratch import scratch_dir
+from audience_behavior_semantic_etl_spark.streaming.drain import run_sink
 
 OUT_SCHEMA = T.StructType(
     [
@@ -40,9 +39,7 @@ def _count_turns(
     yield pd.DataFrame({"conv_id": [key[0]], "n_turns_total": [n]})
 
 
-def running_turn_counts(
-    spark: SparkSession, wal_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def running_turn_counts(spark: SparkSession, wal_dir: str) -> DataFrame:
     """Drain ``wal_dir`` (envelope parquet chunks) through the stateful
     counter; returns the FINAL per-conversation totals (the last emitted
     row per key across batches) as a DISTRIBUTED frame.
@@ -65,20 +62,8 @@ def running_turn_counts(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    ckpt = checkpoint_dir or scratch_dir("stateful-ckpt-")
-    out_dir = scratch_dir("stateful-sink-")
-    q = (
-        counted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.schema(OUT_SCHEMA)
-        .parquet(out_dir)
+        run_sink(counted)
         .groupBy("conv_id")
         .agg(F.max("n_turns_total").alias("n_turns_total"))
     )

@@ -15,28 +15,16 @@ availableNow trigger drains a bounded directory so results are
 deterministic and oracle-checkable (the finished result equals the
 batch GROUP BY).
 
-Bounded-drain flush: append mode only emits a window once a LATER
-event pushes the watermark past its end. A drained directory has no
-later event for its final windows, so the drain plants two sentinel
-rows far past the real data (in separate, later-mtime files => later
-micro-batches: the file source orders by mtime). Sentinel #1 advances
-the watermark past every real window; the batch that reads sentinel #2
-emits+evicts them all. The sentinels' own windows are never reached by
-the watermark, so they never appear in the output (they are also
-key-filtered, belt and braces). On a true unbounded stream no sentinel
-is needed — arriving data advances the watermark continuously.
+Bounded-drain flush: the drained directory has no event after its
+final windows, so ``streaming/drain.py`` stages two flush sentinels
+that advance the watermark past them (why, and where they go, is
+explained there once).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-from datetime import timedelta
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from audience_behavior_semantic_etl_spark.scratch import scratch_dir
-from audience_behavior_semantic_etl_spark.streaming.sentinels import write_sentinel
+from audience_behavior_semantic_etl_spark.streaming.drain import run_sink, stage_source
 
 
 def tumbling_window_counts(
@@ -58,38 +46,12 @@ def tumbling_window_counts(
     """
     static = spark.read.parquet(src_dir)
     max_ts = static.agg(F.max(F.col(ts_col).cast("timestamp"))).collect()[0][0]
-
-    # stage the source: data file(s) first, then the two flush
-    # sentinels with strictly later mtimes (the file source orders by
-    # mtime, see module docstring)
-    srcd = scratch_dir("stream-src-")
-    data_files = (
-        [os.path.abspath(src_dir)]
-        if os.path.isfile(src_dir)
-        else [
-            os.path.join(os.path.abspath(src_dir), fn)
-            for fn in sorted(os.listdir(src_dir))
-            if fn.endswith(".parquet")
-        ]
+    srcd, n_files = stage_source(
+        src_dir, ts_col, max_ts, watermark, window_len, {key_col: "__flush__"}
     )
-    for i, f in enumerate(data_files):
-        os.symlink(f, os.path.join(srcd, f"data-{i}.parquet"))
-    base_mtime = max(os.path.getmtime(os.path.join(srcd, p)) for p in os.listdir(srcd))
-    # sentinels written driver-side (streaming/sentinels.py) — the
-    # former limit(1)+write Spark jobs were pure per-drain overhead
-    for i, hours in enumerate((6, 7)):
-        dst = os.path.join(srcd, f"zz-sentinel-{i}.parquet")
-        write_sentinel(
-            data_files,
-            dst,
-            {ts_col: max_ts + timedelta(hours=hours), key_col: "__flush__"},
-        )
-        t = base_mtime + 10 + i * 10
-        os.utime(dst, (t, t))
-
     src = (
         spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max(1, len(data_files)))
+        .option("maxFilesPerTrigger", max(1, n_files))
         .parquet(srcd)
     )
     # Watermarks need an instant; testdata timestamps are NTZ (session
@@ -105,21 +67,7 @@ def tumbling_window_counts(
             F.col("n_events"),
         )
     )
-    out_dir = scratch_dir("stream-sink-")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", scratch_dir("stream-ckpt-"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress is not None:
-        progress.extend(json.loads(p.json) for p in q.recentProgress)
-    return spark.read.schema(agg.schema).parquet(out_dir).filter(
-        F.col(key_col) != "__flush__"
-    )
+    return run_sink(agg, progress).filter(F.col(key_col) != "__flush__")
 
 
 def stream_static_enrich_counts(
@@ -159,38 +107,16 @@ def stream_static_enrich_counts(
     lo, hi = static.agg(
         F.min(F.col(ts_col).cast("timestamp")), F.max(F.col(ts_col).cast("timestamp"))
     ).collect()[0]
-    max_ts = hi
-    span_s = int((hi - lo).total_seconds()) + 1
     if watermark is None:
-        watermark = f"{span_s} seconds"
-    # sentinels must sit past watermark-delay + window_len so every
-    # real window's end precedes the advanced watermark and flushes
-    flush_hours = span_s // 3600 + 3
-
-    srcd = scratch_dir("stream-enrich-src-")
-    data_files = [
-        os.path.join(os.path.abspath(src_dir), fn)
-        for fn in sorted(os.listdir(src_dir))
-        if fn.endswith(".parquet")
-    ]
-    for i, f in enumerate(data_files):
-        os.symlink(f, os.path.join(srcd, f"data-{i}.parquet"))
-    base_mtime = max(os.path.getmtime(os.path.join(srcd, p)) for p in os.listdir(srcd))
-    # driver-side sentinels (streaming/sentinels.py): NULL join key —
-    # survives to the watermark tracker, dropped by the label filter
-    for i, hours in enumerate((flush_hours, flush_hours + 1)):
-        dst = os.path.join(srcd, f"zz-sentinel-{i}.parquet")
-        write_sentinel(
-            data_files,
-            dst,
-            {ts_col: max_ts + timedelta(hours=int(hours)), key_col: None},
-        )
-        t = base_mtime + 10 + i * 10
-        os.utime(dst, (t, t))
-
+        watermark = f"{int((hi - lo).total_seconds()) + 1} seconds"
+    # NULL join key: survives to the watermark tracker, dropped by the
+    # label filter below
+    srcd, n_files = stage_source(
+        src_dir, ts_col, hi, watermark, window_len, {key_col: None}
+    )
     src = (
         spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max(1, len(data_files) // 2))
+        .option("maxFilesPerTrigger", max(1, n_files // 2))
         .parquet(srcd)
         .withColumn("__evt", F.col(ts_col).cast("timestamp"))
         .withWatermark("__evt", watermark)
@@ -207,21 +133,6 @@ def stream_static_enrich_counts(
             F.col("n_events"),
         )
     )
-    out_dir = scratch_dir("stream-enrich-sink-")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", scratch_dir("stream-enrich-ckpt-"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress is not None:
-        progress.extend(json.loads(p.json) for p in q.recentProgress)
     # label NULL = sentinel rows (and any unmatched stream key) — the
     # filter restores inner-join semantics
-    return (
-        spark.read.schema(agg.schema).parquet(out_dir)
-        .filter(F.col(label_col).isNotNull())
-    )
+    return run_sink(agg, progress).filter(F.col(label_col).isNotNull())

@@ -10,6 +10,7 @@ result-identical to their original forms.
   original-form expression.
 - driver-side flush sentinels: the pyarrow writer must produce a file
   Spark reads under the source schema with the overridden values.
+- tmpfs scratch: /dev/shm is the default only while it has room.
 """
 
 from __future__ import annotations
@@ -86,7 +87,7 @@ def test_hoisted_norm_cosine_bit_identical(spark):
 def test_write_sentinel_round_trips(spark, tmp_path):
     from datetime import datetime, timedelta
 
-    from audience_behavior_semantic_etl_spark.streaming.sentinels import (
+    from audience_behavior_semantic_etl_spark.streaming.drain import (
         parse_interval_seconds,
         write_sentinel,
     )
@@ -109,4 +110,26 @@ def test_write_sentinel_round_trips(spark, tmp_path):
     assert parse_interval_seconds("90 seconds") == 90
     assert parse_interval_seconds("2 hours") == 7200
     assert parse_interval_seconds("3650 days") == 3650 * 86400
-    assert parse_interval_seconds("1 hour 30 minutes") is None
+    assert parse_interval_seconds("1 hour 30 minutes") == 5400
+    with pytest.raises(ValueError):
+        parse_interval_seconds("INTERVAL 90 MINUTES")
+
+
+def test_tmpfs_scratch_needs_free_space(monkeypatch):
+    """/dev/shm is host RAM: below the free-space floor the scratch
+    root falls back to the system tempdir."""
+    from types import SimpleNamespace
+
+    from audience_behavior_semantic_etl_spark import scratch
+
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
+    monkeypatch.setattr(scratch.os.path, "isdir", lambda p: p == "/dev/shm")
+    monkeypatch.setattr(scratch.os, "access", lambda p, mode: p == "/dev/shm")
+
+    def free(n_bytes):
+        return lambda p: SimpleNamespace(f_bavail=n_bytes // 4096, f_frsize=4096)
+
+    monkeypatch.setattr(scratch.os, "statvfs", free(scratch.SHM_FLOOR_BYTES))
+    assert scratch._base_root() == "/dev/shm/spark-graft-scratch"
+    monkeypatch.setattr(scratch.os, "statvfs", free(64 << 20))
+    assert scratch._base_root() is None

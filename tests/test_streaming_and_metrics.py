@@ -33,7 +33,25 @@ def test_metric_layers_resolve_and_error(spark):
         resolve_metric_layers(df, {"m1": "a + b", "M1": "a - b"})
 
 
-def test_tumbling_window_counts_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "kwargs, want",
+    [
+        ({}, {("2025-01-01 00:00:00", "a"): 2, ("2025-01-01 01:00:00", "b"): 1}),
+        (
+            {"watermark": "12 hours"},
+            {("2025-01-01 00:00:00", "a"): 2, ("2025-01-01 01:00:00", "b"): 1},
+        ),
+        (
+            {"window_len": "1 day"},
+            {("2025-01-01 00:00:00", "a"): 2, ("2025-01-01 00:00:00", "b"): 1},
+        ),
+    ],
+    ids=["default", "watermark_12h", "window_1d"],
+)
+def test_tumbling_window_counts_equals_batch(spark, tmp_path, kwargs, want):
+    """The drained result equals the batch windows whatever the
+    watermark delay and window length: the flush sentinels must land
+    past both."""
     from audience_behavior_semantic_etl_spark.streaming.windowed import tumbling_window_counts
 
     src = str(tmp_path / "ev")
@@ -45,12 +63,9 @@ def test_tumbling_window_counts_equals_batch(spark, tmp_path):
 
     got = {
         (r["window_start"], r["event_type"]): r["n_events"]
-        for r in tumbling_window_counts(spark, src).collect()
+        for r in tumbling_window_counts(spark, src, **kwargs).collect()
     }
-    assert got == {
-        ("2025-01-01 00:00:00", "a"): 2,
-        ("2025-01-01 01:00:00", "b"): 1,
-    }
+    assert got == want
 
 
 def test_tumbling_window_state_is_evicted(spark, tmp_path):
