@@ -57,7 +57,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql import types as T
@@ -67,11 +67,28 @@ from audience_behavior_semantic_etl_spark.cdc.normalize import canonical_text_co
 from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable, bucket_expr
 
 
+# hot conversations spread over this many write slots within their bucket
+N_SALTS = 8
+
+# per-write parquet options for the hot-path DELTA write only;
+# compaction keeps the session default — the standard LSM trade:
+# deltas are written once per batch and live briefly (compaction
+# folds them), so cheap encode wins; compacted files are read by
+# every subsequent query, so spend more there if it buys size.
+# Measured (local[8], 6.5M-event bench batch, interleaved 3-pass
+# A/B, /dev/shm table): zstd level 1 vs explicit level 3 wrote
+# 11.5/12.2/13.6 s vs 14.1/12.6/13.8 s AND produced 3.4% SMALLER
+# deltas (263.0 vs 272.2 MB) — on this short-string transcript
+# payload the higher search depth buys nothing, so level 1 wins
+# both axes. parquet.enable.dictionary=false was erratic
+# (10.9-24.3 s) and larger; rejected. See BENCH/BASELINE.md.
+DELTA_WRITE_OPTIONS = {"parquet.compression.codec.zstd.level": "1"}
+
+
 @dataclass
 class ApplyConfig:
     app_id: str = "cdc-apply"
     hot_key_threshold: int = 1000  # events per conv_id per batch
-    n_salts: int = 8
     shuffle_partitions: int | None = None  # default: session setting
     # per-bucket delta SNAPSHOTS (≈ batches) before compaction — batch
     # count, not file count, so the policy is invariant to write
@@ -86,29 +103,6 @@ class ApplyConfig:
     # in-batch pre-collapse engages when batch events/key exceeds this
     # (read-side LWW makes it optional; it only pays off under churn)
     dedup_churn_threshold: float = 4.0
-    # run compaction on a background thread, OVERLAPPING the next
-    # micro-batch instead of stalling the stream: safe because commits
-    # are optimistic (fresh-manifest mutation under the commit lock) and
-    # the rewrite-vs-append conflict rule retains deltas appended while
-    # the compaction ran (table.commit_merged_buckets). At most one
-    # compaction is in flight per table; apply joins the previous one
-    # before scheduling the next.
-    async_compact: bool = True
-    # per-write parquet options for the hot-path DELTA write only;
-    # compaction keeps the session default — the standard LSM trade:
-    # deltas are written once per batch and live briefly (compaction
-    # folds them), so cheap encode wins; compacted files are read by
-    # every subsequent query, so spend more there if it buys size.
-    # Measured (local[8], 6.5M-event bench batch, interleaved 3-pass
-    # A/B, /dev/shm table): zstd level 1 vs explicit level 3 wrote
-    # 11.5/12.2/13.6 s vs 14.1/12.6/13.8 s AND produced 3.4% SMALLER
-    # deltas (263.0 vs 272.2 MB) — on this short-string transcript
-    # payload the higher search depth buys nothing, so level 1 wins
-    # both axes. parquet.enable.dictionary=false was erratic
-    # (10.9-24.3 s) and larger; rejected. See BENCH/BASELINE.md.
-    delta_write_options: dict[str, str] = field(
-        default_factory=lambda: {"parquet.compression.codec.zstd.level": "1"}
-    )
     # apply onto a BRANCH ref instead of main (the Iceberg audit-branch
     # pattern): commits, the exactly-once ledger, watermarks and schema
     # evolution all advance the branch chain only. Write-audit-publish
@@ -717,7 +711,7 @@ def apply_batch(
         data = data.withColumn("__bucket", bucket_expr(F.col("conv_id"), n_buckets))
         if hot:
             salt = F.when(
-                F.col("conv_id").isin(hot), F.pmod(F.col("turn_idx"), F.lit(cfg.n_salts))
+                F.col("conv_id").isin(hot), F.pmod(F.col("turn_idx"), F.lit(N_SALTS))
             ).otherwise(F.lit(0))
         else:
             salt = F.lit(0)
@@ -797,7 +791,7 @@ def apply_batch(
             .sortWithinPartitions("conv_id", "turn_idx")
             .write.mode("overwrite")
         )
-        for k, v in cfg.delta_write_options.items():
+        for k, v in DELTA_WRITE_OPTIONS.items():
             writer = writer.option(k, v)
         writer.partitionBy("__bucket").parquet(staged)
         # Metrics ride the write action via CollectMetrics — no extra job
@@ -893,17 +887,19 @@ def apply_batch(
         _phase("commit")
 
         # -- amortized compaction ------------------------------------------
-        # join the previous batch's background compaction first (at most
-        # one in flight; also surfaces its exceptions on the stream)
+        # runs on a background thread, OVERLAPPING the next micro-batch
+        # instead of stalling the stream: safe because commits are
+        # optimistic (fresh-manifest mutation under the commit lock) and
+        # the rewrite-vs-append conflict rule retains deltas appended
+        # while the compaction ran (table.commit_merged_buckets). Join
+        # the previous batch's compaction first (at most one in flight;
+        # also surfaces its exceptions on the stream).
         join_pending_compaction(table)
         compacted = 0
         if cfg.auto_compact and cfg.branch == "main":
             over = table.buckets_over_threshold(cfg.compact_max_files)
             if over:
-                if cfg.async_compact:
-                    _spawn_compaction(table, over, shuffle_n)
-                else:
-                    table.compact_buckets(over, shuffle_partitions=shuffle_n)
+                _spawn_compaction(table, over, shuffle_n)
                 compacted = len(over)
                 _phase("compact")
 

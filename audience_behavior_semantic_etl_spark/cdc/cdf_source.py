@@ -56,7 +56,6 @@ this is part of the delta the Spark build adds over it.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator
 
@@ -68,36 +67,18 @@ from pyspark.sql.datasource import (
 from pyspark.sql import types as T
 
 from audience_behavior_semantic_etl_spark.cdc import schema as S
-from audience_behavior_semantic_etl_spark.cdc.commits import commit_kind
+from audience_behavior_semantic_etl_spark.cdc.commits import (
+    commit_kind,
+    head_version,
+    read_manifest,
+    window,
+)
 
 
 class _FilePartition(InputPartition):
     def __init__(self, path: str, commit_version: int = -1):
         self.path = path
         self.commit_version = commit_version
-
-
-def _manifest_dict(root: str, version: int) -> dict:
-    with open(os.path.join(root, "_manifests", f"v{version}.json")) as f:
-        return json.loads(f.read())
-
-
-def _current_version(root: str, ref: str = "main") -> int:
-    """Head version of a ref: "main" is the `_current` pointer, any
-    other name is a branch in `_refs.json` (same resolution as
-    SnapshotTable._head_version — duplicated here because the reader
-    ships to executors pickled and must not drag the table class in)."""
-    if ref != "main":
-        try:
-            with open(os.path.join(root, "_refs.json")) as f:
-                refs = json.load(f)
-        except FileNotFoundError:
-            refs = {}
-        if ref not in refs:
-            raise ValueError(f"no such branch {ref!r}")
-        return int(refs[ref])
-    with open(os.path.join(root, "_current")) as f:
-        return int(f.read().strip())
 
 
 def _appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
@@ -109,16 +90,10 @@ def _appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
     ``_commit_version`` analog) so consumers can order and window by
     commit without re-deriving it from LSNs."""
     out: list[tuple[str, int]] = []
-    v = end
-    while v > start:
-        man = _manifest_dict(root, v)
-        parent = man["parent"]
-        kind, added, _ = commit_kind(man["files"], parent)
+    for v, man in window(root, start, end):
+        kind, added, _ = commit_kind(man["files"], man["parent"])
         if kind != "rewrite":
             out.extend((f, v) for f in added)
-        if parent is None:
-            break
-        v = parent
     seen: dict[str, int] = {}
     for f, v in out:
         seen.setdefault(f, v)
@@ -131,7 +106,7 @@ class TranscriptsCDFReader(DataSourceStreamReader):
         self.ref = options.get("ref", "main")
         sv = options.get("startingversion")
         self.start_version = (
-            int(sv) if sv is not None else _current_version(root, self.ref)
+            int(sv) if sv is not None else head_version(root, self.ref)
         )
         mv = options.get("maxversionspertrigger")
         self.max_versions = int(mv) if mv is not None else None
@@ -147,7 +122,7 @@ class TranscriptsCDFReader(DataSourceStreamReader):
         # logical -> physical stored-name map rides along so files of
         # renamed/re-added columns are read under their frozen storage
         # name and emitted under the pinned logical name
-        m = _manifest_dict(root, _current_version(root, self.ref))
+        m = read_manifest(root, head_version(root, self.ref))
         self._col_types = [(n, t) for n, t in m["columns"]]
         self._phys = (m.get("properties") or {}).get("physical_names") or {}
 
@@ -173,7 +148,7 @@ class TranscriptsCDFReader(DataSourceStreamReader):
         exactly one bounded batch per ``start()`` — callers doing
         capped catch-up drains should loop start()/awaitTermination
         until the synced version stops advancing, or run uncapped."""
-        cur = _current_version(self.root, self.ref)
+        cur = head_version(self.root, self.ref)
         if self.max_versions is None:
             return {"version": cur}
         base = self._last_end if self._last_end is not None else self.start_version
@@ -187,7 +162,7 @@ class TranscriptsCDFReader(DataSourceStreamReader):
         while v is not None and v > base:
             pending.append(v)
             if v not in self._parents:
-                self._parents[v] = _manifest_dict(self.root, v).get("parent")
+                self._parents[v] = read_manifest(self.root, v).get("parent")
             v = self._parents[v]
         pending.reverse()  # oldest pending first
         end = pending[self.max_versions - 1] if len(pending) > self.max_versions else cur
@@ -264,7 +239,7 @@ class TranscriptsCDF(DataSource):
 
     def schema(self) -> T.StructType:
         root = self.options["path"]
-        m = _manifest_dict(root, _current_version(root, self.options.get("ref", "main")))
+        m = read_manifest(root, head_version(root, self.options.get("ref", "main")))
         cols = [(n, S.type_from_name(t)) for n, t in m["columns"]]
         base = S.transcripts_schema(
             cols, with_lsn=True, with_deleted=True, with_setmask=True

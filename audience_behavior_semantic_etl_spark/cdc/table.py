@@ -48,10 +48,10 @@ and drop the single-file write (SURVEY.md §4.2).
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 import threading
+import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
@@ -59,8 +59,14 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
+from audience_behavior_semantic_etl_spark.cdc import commits
 from audience_behavior_semantic_etl_spark.cdc import schema as S
-from audience_behavior_semantic_etl_spark.cdc.commits import commit_kind
+from audience_behavior_semantic_etl_spark.cdc.commits import (
+    ancestry,
+    commit_kind,
+    head_version,
+    read_manifest,
+)
 
 
 def bucket_expr(conv_col, n_buckets: int):
@@ -85,6 +91,16 @@ def _stats_admit(stat: list | None, key: str) -> bool:
     """May ``key`` live in a file with min/max ``stat``? Missing stats
     admit (never prune what we can't bound)."""
     return stat is None or (stat[0] <= key <= stat[1])
+
+
+def _put_nonempty(props: dict[str, Any], key: str, value) -> None:
+    """Set a schema-map property, or drop it when empty: absent and
+    empty mean the same to readers, and absent keeps tables that never
+    renamed or dropped free of the keys."""
+    if value:
+        props[key] = value
+    else:
+        props.pop(key, None)
 
 
 def _safe_dirname(s: str) -> str:
@@ -131,8 +147,10 @@ def _safe_dirname(s: str) -> str:
 # gc_orphans rewrites any KEPT delta manifest whose reconstruction
 # parent is being dropped in place as FULL (same version/snapshot_id/
 # delta summary — see the boundary-materialization block there) so
-# reconstruction can never dangle. The atomic
-# write-manifest-then-swing-pointer commit protocol is unchanged.
+# reconstruction can never dangle. Every commit after the create goes
+# through ONE primitive, ``SnapshotTable._commit`` (lock, fresh head,
+# mutate, write manifest, swing pointer); the files themselves are
+# read and written only by ``cdc/commits.py``.
 _STATE_CACHE: dict[tuple[str, int], tuple] = {}
 _STATE_CACHE_LOCK = threading.Lock()
 _STATE_CACHE_MAX = 512
@@ -222,8 +240,8 @@ class SnapshotTable:
         module notes) as fresh mutable copies: callers mutate it freely
         without touching the cache."""
         if version is None:
-            version = self._head_version(ref)
-        d = self._manifest_dict(version)
+            version = head_version(self.root, ref)
+        d = read_manifest(self.root, version)
         buckets, stats, _depth = self._state(version, d)
         files = d["files"]
         props = dict(d["properties"])
@@ -244,10 +262,6 @@ class SnapshotTable:
             files_added={b: list(fs) for b, fs in files.get("added", {}).items()},
             files_removed=list(files.get("removed", [])),
         )
-
-    def _manifest_dict(self, version: int) -> dict:
-        with open(os.path.join(self.root, "_manifests", f"v{version}.json")) as f:
-            return json.loads(f.read())
 
     def _state(
         self, version: int, d: dict | None = None
@@ -278,7 +292,7 @@ class SnapshotTable:
                 if hit is not None:
                     base = hit
                     break
-                dd = self._manifest_dict(v)
+                dd = read_manifest(self.root, v)
             files = dd["files"]
             if files.get("full") is not None:
                 full = files["full"]
@@ -327,56 +341,18 @@ class SnapshotTable:
     # `fast_forward` (or `cherry_pick`) publishes it — the Iceberg
     # audit-branch (write-audit-publish) pattern.
 
-    def _refs_file(self) -> str:
-        return os.path.join(self.root, "_refs.json")
-
-    def _read_refs(self) -> dict[str, int]:
-        try:
-            with open(self._refs_file()) as f:
-                return {k: int(v) for k, v in json.load(f).items()}
-        except FileNotFoundError:
-            return {}
-
-    def _write_refs(self, refs: dict[str, int]) -> None:
-        tmp = os.path.join(self.root, f"_refs.tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(refs, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._refs_file())
-
-    def _head_version(self, ref: str = "main") -> int:
-        if ref == "main":
-            with open(os.path.join(self.root, "_current")) as f:
-                return int(f.read().strip())
-        refs = self._read_refs()
-        if ref not in refs:
-            raise ValueError(f"no such branch {ref!r}")
-        return refs[ref]
-
-    def _set_head(self, ref: str, version: int) -> None:
-        if ref == "main":
-            tmp = os.path.join(self.root, f"_current.tmp.{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                f.write(str(version))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, os.path.join(self.root, "_current"))
-            return
-        refs = self._read_refs()
-        refs[ref] = version
-        self._write_refs(refs)
-
     def _alloc_version(self) -> int:
         """Next GLOBALLY unique version number: manifests from every
         ref chain share one `_manifests/` namespace, so version numbers
         are allocated table-wide, not per-chain — two branches can
         never write the same `v{N}.json`. A persisted high-water mark
-        (`_version_seq`) keeps allocation MONOTONE even when rollback +
-        GC deletes the highest-numbered manifests: a version number,
-        once used, is never reissued — checkpointed consumers (CDF
-        streams, incremental views) key progress on version numbers
-        and silently skip a reused one. Call under the commit lock."""
+        (`_version_seq`, advanced by _write_manifest) keeps allocation
+        MONOTONE even when rollback + GC deletes the highest-numbered
+        manifests: a version number, once written, is never reissued —
+        checkpointed consumers (CDF streams, incremental views) key
+        progress on version numbers and silently skip a reused one.
+        Reads only, so a commit that declines uses no number. Call
+        under the commit lock."""
         vs = self._retained_versions()
         hwm = -1
         try:
@@ -384,19 +360,13 @@ class SnapshotTable:
                 hwm = int(f.read().strip())
         except (FileNotFoundError, ValueError):
             pass
-        nxt = max(vs[-1] if vs else -1, hwm) + 1
-        tmp = os.path.join(self.root, f"_version_seq.tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(nxt))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.root, "_version_seq"))
-        return nxt
+        return max(vs[-1] if vs else -1, hwm) + 1
 
     def _write_manifest(
         self, m: Manifest, ref: str = "main", delta: dict | None = None
     ) -> None:
         """Write-manifest-last atomic commit; advances ``ref``'s head.
+        Called by ``_commit`` only (and by ``create`` for v0).
         Stamps the commit wall-clock (``committed_at``) — manifests are
         write-once, so the stamp is the commit time, and age-based
         retention (gc_orphans ``max_age_seconds``) reads it back.
@@ -416,9 +386,7 @@ class SnapshotTable:
         metadata work is then O(batch). Callers whose change is not a
         pure append (rollback, rebucket, compaction, set_property on
         file_stats) pass None and pay the diff."""
-        import time as _time
-
-        m.properties["committed_at"] = _time.time()
+        m.properties["committed_at"] = time.time()
         if len(m.lineage) > LINEAGE_CAP:
             m.lineage = m.lineage[-LINEAGE_CAP:]
         m_stats = m.properties.get("file_stats") or {}
@@ -475,11 +443,8 @@ class SnapshotTable:
                 ),
             },
         }
-        mpath = os.path.join(self.root, "_manifests", f"v{m.version}.json")
-        with open(mpath, "w") as f:
-            f.write(json.dumps(d))
-            f.flush()
-            os.fsync(f.fileno())
+        commits.atomic_write(os.path.join(self.root, "_version_seq"), str(m.version))
+        commits.write_manifest(self.root, m.version, d)
         if delta is not None and m.parent is not None and not full:
             # hot path: derive the cached state from the parent's frozen
             # state + the delta — unchanged bucket tuples are SHARED
@@ -500,7 +465,7 @@ class SnapshotTable:
                     0 if full else pdepth + 1,
                 ),
             )
-        self._set_head(ref, m.version)
+        commits.set_head(self.root, ref, m.version)
 
     # ------------------------------------------------------------ schema
 
@@ -570,8 +535,7 @@ class SnapshotTable:
         landing in the renamed column. Key columns (conv_id, turn_idx)
         are not renamable — the engine keys on them physically
         (bucket transform, file stats, merge keys)."""
-        def run() -> None:
-            m = self.manifest(ref=ref)
+        def mutate(m: Manifest) -> None:
             names = {n for n, _ in m.columns}
             reserved = {S.LSN_META_COL, S.DELETED_META_COL, S.SETMASK_META_COL}
             if len(set(mapping.values())) != len(mapping):
@@ -613,20 +577,10 @@ class SnapshotTable:
                 if not hist[k]:
                     del hist[k]
             m.columns = cols
-            if phys_names:
-                m.properties["physical_names"] = phys_names
-            else:
-                m.properties.pop("physical_names", None)
-            if hist:
-                m.properties["rename_history"] = hist
-            else:
-                m.properties.pop("rename_history", None)
-            m.parent = m.version
-            m.version = self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
-            self._write_manifest(m, ref=ref, delta=_META_ONLY)
+            _put_nonempty(m.properties, "physical_names", phys_names)
+            _put_nonempty(m.properties, "rename_history", hist)
 
-        self._with_commit_lock(run)
+        self._commit(mutate, ref=ref, delta=_META_ONLY)
 
     def drop_columns(self, names: list[str], ref: str = "main") -> None:
         """DROP COLUMN(s) — metadata-only commit: data files are
@@ -635,8 +589,7 @@ class SnapshotTable:
         re-adding the same name creates a FRESH field whose reads can
         never resurface old file data — the Iceberg field-id
         non-resurrection rule, in name form."""
-        def run() -> None:
-            m = self.manifest(ref=ref)
+        def mutate(m: Manifest) -> None:
             have = {n for n, _ in m.columns}
             missing = set(names) - have
             if missing:
@@ -659,20 +612,10 @@ class SnapshotTable:
                 m.properties["patched_columns"] = sorted(set(patched) - dropped_phys)
             m.columns = [(n, t) for n, t in m.columns if n not in names]
             m.properties["used_physical"] = sorted(used)
-            if phys_names:
-                m.properties["physical_names"] = phys_names
-            else:
-                m.properties.pop("physical_names", None)
-            if hist:
-                m.properties["rename_history"] = hist
-            else:
-                m.properties.pop("rename_history", None)
-            m.parent = m.version
-            m.version = self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
-            self._write_manifest(m, ref=ref, delta=_META_ONLY)
+            _put_nonempty(m.properties, "physical_names", phys_names)
+            _put_nonempty(m.properties, "rename_history", hist)
 
-        self._with_commit_lock(run)
+        self._commit(mutate, ref=ref, delta=_META_ONLY)
 
     def add_columns(self, new_cols: dict[str, str], ref: str = "main") -> None:
         """ADD COLUMN(s): metadata-only commit; existing files are read
@@ -681,25 +624,22 @@ class SnapshotTable:
         used before (dropped column, or the frozen storage name of a
         since-renamed column) gets a FRESH physical name
         ``<name>__f<version>`` so old file data cannot resurface."""
-        def run() -> None:
-            m = self.manifest(ref=ref)
+        def mutate(m: Manifest) -> bool | None:
             existing = {n for n, _ in m.columns}
             added = [(n, t) for n, t in new_cols.items() if n not in existing]
             if not added:
-                return
+                return False
             pm = self._phys_map(m)
             used = set(m.properties.get("used_physical") or []) | set(pm.values())
             phys_names = dict(m.properties.get("physical_names") or {})
             hist = {k: list(v) for k, v in (m.properties.get("rename_history") or {}).items()}
-            # allocate the commit version BEFORE minting fresh physical
-            # names: versions are globally unique across ref chains, so
-            # the __f<N> suffix is table-globally unique by construction
-            # (two refs forked at the same parent re-adding the same
-            # name can never mint the same physical column), and the
-            # suffix always matches the committed version
-            newv = self._alloc_version()
+            # the suffix is this commit's own version: versions are
+            # globally unique across ref chains, so __f<N> is
+            # table-globally unique by construction (two refs forked at
+            # the same parent re-adding the same name can never mint
+            # the same physical column)
             for n, _t in added:
-                phys = n if n not in used else f"{n}__f{newv}"
+                phys = n if n not in used else f"{n}__f{m.version}"
                 if phys != n:
                     phys_names[n] = phys
                 used.add(phys)
@@ -712,18 +652,10 @@ class SnapshotTable:
                         del hist[k]
             m.columns = m.columns + added
             m.properties["used_physical"] = sorted(used)
-            if phys_names:
-                m.properties["physical_names"] = phys_names
-            if hist:
-                m.properties["rename_history"] = hist
-            else:
-                m.properties.pop("rename_history", None)
-            m.parent = m.version
-            m.version = newv
-            m.snapshot_id = uuid.uuid4().hex
-            self._write_manifest(m, ref=ref, delta=_META_ONLY)
+            _put_nonempty(m.properties, "physical_names", phys_names)
+            _put_nonempty(m.properties, "rename_history", hist)
 
-        self._with_commit_lock(run)
+        self._commit(mutate, ref=ref, delta=_META_ONLY)
 
     # physically safe type promotions: the parquet scan upcasts these
     # natively (int32 pages read under a bigint read schema, float under
@@ -738,8 +670,7 @@ class SnapshotTable:
         on an int column. Refuses anything but the safe promotions
         above — a lossy or non-upcastable change would corrupt reads of
         files already on disk."""
-        def run() -> None:
-            m = self.manifest(ref=ref)
+        def mutate(m: Manifest) -> bool | None:
             names = {n for n, _ in m.columns}
             unknown = set(changes) - names
             if unknown:
@@ -759,14 +690,10 @@ class SnapshotTable:
                 out.append((n, want))
                 changed = True
             if not changed:
-                return
+                return False
             m.columns = out
-            m.parent = m.version
-            m.version = self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
-            self._write_manifest(m, ref=ref, delta=_META_ONLY)
 
-        self._with_commit_lock(run)
+        self._commit(mutate, ref=ref, delta=_META_ONLY)
 
     # ------------------------------------------------------------ read
 
@@ -781,7 +708,7 @@ class SnapshotTable:
         time-travels to an older committed snapshot; ``ref`` reads a
         branch head instead of main."""
         if version is None:
-            version = self._head_version(ref)
+            version = head_version(self.root, ref)
         m = self.manifest(version)
         sel = (
             m.buckets
@@ -839,7 +766,7 @@ class SnapshotTable:
         Tombstones are kept (flag surfaced when ``with_deleted``) so
         callers see deletions; ``read_final`` filters them."""
         if version is None:
-            version = self._head_version(ref)
+            version = head_version(self.root, ref)
         resolved = self._resolve(
             self.read_raw(buckets, version=version), self.manifest(version)
         )
@@ -859,7 +786,7 @@ class SnapshotTable:
                 raise ValueError("pass version or tag, not both")
             version = self.resolve_tag(tag)
         if version is None:
-            version = self._head_version(ref)
+            version = head_version(self.root, ref)
         return self._resolve_final(self.read_raw(version=version), self.manifest(version))
 
     def read_key(self, conv_id: str, version: int | None = None) -> DataFrame:
@@ -1026,9 +953,7 @@ class SnapshotTable:
         m_to = self.manifest(to_version)
         cur = m_to.version
         new_files: list[str] = []
-        v: int | None = cur
-        while v is not None and v > from_version:
-            d = self._manifest_dict(v)
+        for v, d in commits.window(self.root, from_version, cur):
             kind, added, _ = commit_kind(d["files"], d["parent"])
             if kind == "rewrite":
                 raise ValueError(
@@ -1037,7 +962,6 @@ class SnapshotTable:
                     "re-sync with a full read"
                 )
             new_files.extend(added)
-            v = d["parent"]
         # _set rides the changelog too: a downstream incremental
         # consumer of a partial-update table needs the masks to apply
         # patches with the same column-fold semantics. _read_rel_files
@@ -1086,12 +1010,16 @@ class SnapshotTable:
         os.makedirs(d, exist_ok=True)
         return d
 
-    def _adopt_staged(self, staged_dir: str | None, buckets: list[int], snapshot: str) -> dict[str, list[str]]:
-        """Move ``staged_dir/__bucket=N/*.parquet`` into data/ and return
-        bucket -> new relative file paths."""
+    def _adopt(
+        self, staged_dir: str | None, buckets: list[int]
+    ) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
+        """Move ``staged_dir/__bucket=N/*.parquet`` into data/ (outside
+        the commit lock) and return (bucket -> new relative file paths,
+        their footer key-range stats)."""
         out: dict[str, list[str]] = {}
         if staged_dir is None:
-            return out
+            return out, {}
+        snapshot = uuid.uuid4().hex
         for b in buckets:
             bdir = os.path.join(staged_dir, f"__bucket={b}")
             rels: list[str] = []
@@ -1104,7 +1032,7 @@ class SnapshotTable:
                     rels.append(rel)
             out[str(b)] = rels
         shutil.rmtree(staged_dir, ignore_errors=True)
-        return out
+        return out, self._collect_file_stats([r for rs in out.values() for r in rs])
 
     def _collect_file_stats(self, rels: list[str]) -> dict[str, list[str]]:
         """Per-file [min, max] of ``conv_id`` read from the parquet
@@ -1155,18 +1083,16 @@ class SnapshotTable:
         Everything expensive (staging writes, file adoption moves) stays
         OUTSIDE the lock; only read-manifest → mutate → write-pointer is
         inside, so the lock is held for milliseconds."""
-        import time as _time
-
         lock = os.path.join(self.root, "_commit.lock")
-        t0 = _time.time()
+        t0 = time.time()
         while True:
             try:
                 fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
                 break
             except FileExistsError:
-                if _time.time() - t0 > timeout:
+                if time.time() - t0 > timeout:
                     raise TimeoutError(f"commit lock {lock} held > {timeout}s")
-                _time.sleep(0.02)
+                time.sleep(0.02)
         try:
             return fn()
         finally:
@@ -1190,9 +1116,7 @@ class SnapshotTable:
         with any concurrent commit (it only adds files), so under the
         optimistic protocol it is re-applied verbatim to the fresh
         manifest inside the lock."""
-        adoption = uuid.uuid4().hex
-        adopted = self._adopt_staged(staged_dir, affected_buckets, adoption)
-        stats = self._collect_file_stats([r for rs in adopted.values() for r in rs])
+        adopted, stats = self._adopt(staged_dir, affected_buckets)
 
         def mutate(m: Manifest) -> None:
             for b, rels in adopted.items():
@@ -1200,8 +1124,9 @@ class SnapshotTable:
             m.properties.setdefault("file_stats", {}).update(stats)
 
         return self._commit(
-            mutate, app_id, batch_id, watermarks, lineage_row, ref=ref,
+            mutate, ref=ref, lineage=lineage_row,
             delta={"added": adopted, "stats_added": stats},
+            ledger=(app_id, batch_id, watermarks),
         )
 
     def commit_merged_buckets(
@@ -1225,10 +1150,8 @@ class SnapshotTable:
         top of the staged files; a blind swap would silently drop those
         rows. Read-side LWW makes the union correct (newer deltas simply
         win the merge window again)."""
-        adoption = uuid.uuid4().hex
-        adopted = self._adopt_staged(staged_dir, affected_buckets, adoption)
+        adopted, stats = self._adopt(staged_dir, affected_buckets)
         base = base_buckets or {}
-        stats = self._collect_file_stats([r for rs in adopted.values() for r in rs])
 
         def mutate(m: Manifest) -> None:
             for b, rels in adopted.items():
@@ -1237,26 +1160,26 @@ class SnapshotTable:
                 m.buckets[b] = rels + appended_since
             m.properties.setdefault("file_stats", {}).update(stats)
 
-        return self._commit(mutate, app_id, batch_id, watermarks, lineage_row, ref=ref)
+        return self._commit(
+            mutate, ref=ref, lineage=lineage_row, ledger=(app_id, batch_id, watermarks)
+        )
 
     def set_property(self, key: str, value: Any, ref: str = "main") -> None:
         """Commit a single table-property mutation as its own manifest
         version (lock-serialized, data files untouched). Used for
         durable control-plane facts that must survive restarts — e.g.
-        the bootstrap snapshot-LSN fence (`apply.bootstrap_snapshot`)."""
+        the bootstrap snapshot-LSN fence (`apply.bootstrap_snapshot`).
+        Only ``file_stats`` touches the delta-encoded file state."""
 
-        def run() -> None:
-            m = self.manifest(ref=ref)
+        def mutate(m: Manifest) -> None:
             m.properties[key] = value
-            m.parent = m.version
-            m.version = self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
             m.lineage.append(
                 {"op": "set_property", "key": key, "snapshot_id": m.snapshot_id}
             )
-            self._write_manifest(m, ref=ref)
 
-        self._with_commit_lock(run)
+        self._commit(
+            mutate, ref=ref, delta=None if key == "file_stats" else _META_ONLY
+        )
 
     # ------------------------------------------------------------ tags
 
@@ -1270,49 +1193,41 @@ class SnapshotTable:
         until ``drop_tag``. Tag names are single-assignment (re-tagging
         raises; drop first) because downstream consumers treat a tag as
         an immutable fact. Returns the pinned version."""
+        pinned = version
 
-        def run() -> int:
-            m = self.manifest()
-            v = m.version if version is None else int(version)
+        def mutate(m: Manifest) -> None:
+            nonlocal pinned
+            pinned = m.parent if version is None else int(version)
             # the tagged manifest must actually be readable
-            self.manifest(v)
+            self.manifest(pinned)
             tags = m.properties.setdefault("tags", {})
             if name in tags:
                 raise ValueError(
                     f"tag {name!r} already pins v{tags[name]}; drop_tag first"
                 )
-            tags[name] = v
-            m.parent = m.version
-            m.version = self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
+            tags[name] = pinned
             m.lineage.append(
-                {"op": "create_tag", "tag": name, "pinned_version": v,
+                {"op": "create_tag", "tag": name, "pinned_version": pinned,
                  "snapshot_id": m.snapshot_id}
             )
-            self._write_manifest(m, delta=_META_ONLY)
-            return v
 
-        return self._with_commit_lock(run)
+        self._commit(mutate, delta=_META_ONLY)
+        return pinned
 
     def drop_tag(self, name: str) -> None:
         """Release a tag; its version re-enters normal retention and the
         next GC pass may expire it."""
 
-        def run() -> None:
-            m = self.manifest()
+        def mutate(m: Manifest) -> None:
             tags = m.properties.get("tags", {})
             if name not in tags:
                 raise ValueError(f"no such tag {name!r}")
             del tags[name]
-            m.parent = m.version
-            m.version = self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
             m.lineage.append(
                 {"op": "drop_tag", "tag": name, "snapshot_id": m.snapshot_id}
             )
-            self._write_manifest(m, delta=_META_ONLY)
 
-        self._with_commit_lock(run)
+        self._commit(mutate, delta=_META_ONLY)
 
     def tags(self) -> dict[str, int]:
         return dict(self.manifest().properties.get("tags", {}))
@@ -1337,13 +1252,13 @@ class SnapshotTable:
         def run() -> int:
             if name == "main" or not name:
                 raise ValueError(f"invalid branch name {name!r}")
-            refs = self._read_refs()
+            refs = commits.read_refs(self.root)
             if name in refs:
                 raise ValueError(f"branch {name!r} already exists at v{refs[name]}")
-            v = self._head_version("main") if version is None else int(version)
+            v = head_version(self.root) if version is None else int(version)
             self.manifest(v)  # must be readable
             refs[name] = v
-            self._write_refs(refs)
+            commits.write_refs(self.root, refs)
             return v
 
         return self._with_commit_lock(run)
@@ -1356,12 +1271,12 @@ class SnapshotTable:
         git ``-d`` vs ``-D`` distinction) unless ``force=True``."""
 
         def run() -> None:
-            refs = self._read_refs()
+            refs = commits.read_refs(self.root)
             if name not in refs:
                 raise ValueError(f"no such branch {name!r}")
             if not force:
                 head = refs[name]
-                main = self._head_version("main")
+                main = head_version(self.root)
                 if not self._is_ancestor(head, main):
                     raise ValueError(
                         f"branch {name!r} (v{head}) has unpublished commits; "
@@ -1369,27 +1284,19 @@ class SnapshotTable:
                         "force=True) to discard them"
                     )
             del refs[name]
-            self._write_refs(refs)
+            commits.write_refs(self.root, refs)
 
         self._with_commit_lock(run)
 
     def branches(self) -> dict[str, int]:
-        return self._read_refs()
+        return commits.read_refs(self.root)
 
     def _is_ancestor(self, ancestor: int, descendant: int) -> bool:
         """Walk ``descendant``'s parent chain looking for ``ancestor``.
         Metadata-only: one small JSON read per hop, bounded by the
         retention window (a pruned hop means the chain left the
         retained set — not an ancestor we can prove)."""
-        v: int | None = descendant
-        while v is not None:
-            if v == ancestor:
-                return True
-            try:
-                v = self._manifest_dict(v)["parent"]
-            except FileNotFoundError:
-                return False
-        return False
+        return any(v == ancestor for v, _ in ancestry(self.root, descendant))
 
     def fast_forward(self, ref: str, from_branch: str) -> int:
         """Fast-forward ``ref`` (usually "main") to ``from_branch``'s
@@ -1404,8 +1311,8 @@ class SnapshotTable:
         ledger/watermarks/schema become ``ref``'s atomically."""
 
         def run() -> int:
-            target = self._head_version(from_branch)
-            cur = self._head_version(ref)
+            target = head_version(self.root, from_branch)
+            cur = head_version(self.root, ref)
             if cur == target:
                 return target
             if not self._is_ancestor(cur, target):
@@ -1413,7 +1320,7 @@ class SnapshotTable:
                     f"cannot fast-forward {ref!r} (v{cur}) to {from_branch!r} "
                     f"(v{target}): v{cur} is not an ancestor of v{target}"
                 )
-            self._set_head(ref, target)
+            commits.set_head(self.root, ref, target)
             return target
 
         return self._with_commit_lock(run)
@@ -1497,17 +1404,14 @@ class SnapshotTable:
             sorted(src.properties.get("used_physical") or []),
         )
 
-        class _Done(Exception):
-            pass
-
-        def mutate(m: Manifest) -> None:
+        def mutate(m: Manifest) -> bool | None:
             # re-check idempotence UNDER the commit lock: a concurrent
             # direct apply of the same (app_id, batch_id) between the
             # fast-path check above and this commit must no-op here,
             # not double-land the batch
             committed = m.properties.get("committed_batches", {})
             if int(batch_id) <= int(committed.get(app_id, -1)):
-                raise _Done()
+                return False
             tgt_schema = (
                 list(m.columns),
                 m.properties.get("physical_names") or {},
@@ -1532,18 +1436,13 @@ class SnapshotTable:
                 prev = set(m.properties.get("patched_columns") or [])
                 m.properties["patched_columns"] = sorted(prev | src_patched)
 
-        try:
-            return self._commit(
-                mutate,
-                app_id,
-                int(batch_id),
-                wm_delta,
-                {"op": "cherry_pick", "source_version": int(version),
-                 "batch_id": int(batch_id)},
-                ref=ref,
-            )
-        except _Done:
-            return None  # concurrent apply landed it first — no-op
+        return self._commit(
+            mutate,
+            ref=ref,
+            lineage={"op": "cherry_pick", "source_version": int(version),
+                     "batch_id": int(batch_id)},
+            ledger=(app_id, int(batch_id), wm_delta),
+        )
 
     def replay_commit(self, version: int, ref: str = "main", apply_cfg=None):
         """Re-APPLY one append commit's batch onto ``ref`` through the
@@ -1657,63 +1556,71 @@ class SnapshotTable:
         until drop_tag" contract), so it is carried over from the
         abandoned head. A bare pointer swing would silently revert it
         to its state at the target commit."""
+        v = version
+        if tag is not None:
+            if v is not None:
+                raise ValueError("pass version or tag, not both")
+            v = self.resolve_tag(tag)  # tags are single-assignment
+        if v is None:
+            raise ValueError("rollback needs a version or tag")
+        v = int(v)
 
-        def run() -> int:
-            v = version
-            if tag is not None:
-                if v is not None:
-                    raise ValueError("pass version or tag, not both")
-                v = self.resolve_tag(tag)
-            if v is None:
-                raise ValueError("rollback needs a version or tag")
-            v = int(v)
-            cur = self._head_version(ref)
+        def mutate(m: Manifest) -> bool | None:
+            cur = m.parent
             if v == cur:
-                return v
+                return False
             if not self._is_ancestor(v, cur):
                 raise ValueError(
                     f"cannot roll {ref!r} back to v{v}: not an ancestor of "
                     f"the current head v{cur}"
                 )
-            head = self.manifest(cur)
-            m = self.manifest(v)
-            tags = head.properties.get("tags")
+            tgt = self.manifest(v)
+            tags = m.properties.get("tags")
+            m.columns, m.n_buckets, m.buckets = tgt.columns, tgt.n_buckets, tgt.buckets
+            m.properties, m.lineage = tgt.properties, tgt.lineage
             if tags:
                 m.properties["tags"] = tags
             else:
                 m.properties.pop("tags", None)
-            m.parent = cur
-            m.version = self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
-            m.lineage.append(
-                {"op": "rollback", "restored_version": v,
-                 "snapshot_id": m.snapshot_id, "parent_snapshot": head.snapshot_id}
-            )
-            self._write_manifest(m, ref=ref)
-            return v
 
-        return self._with_commit_lock(run)
+        self._commit(
+            mutate, ref=ref, lineage={"op": "rollback", "restored_version": v}
+        )
+        return v
 
     def _commit(
         self,
         mutate,
-        app_id: str,
-        batch_id: int,
-        watermarks: dict[str, int],
-        lineage_row: dict[str, Any],
         ref: str = "main",
+        lineage: dict[str, Any] | None = None,
         delta: dict | None = None,
-    ) -> str:
-        """Optimistic snapshot commit: the manifest is re-read FRESH
-        inside the commit lock and the caller's mutation re-applied to
-        it, so concurrent committers (apply vs async compaction) never
-        clobber each other's versions. ``delta`` is the append-only
-        fast-path contract forwarded to _write_manifest (see there)."""
-        snapshot = uuid.uuid4().hex
+        ledger: tuple[str, int, dict[str, int]] | None = None,
+    ) -> str | None:
+        """THE commit protocol — every commit after the create goes
+        through here: under the commit lock, re-read ``ref``'s head
+        FRESH, stamp it with the new version / parent / snapshot id,
+        let ``mutate(m)`` edit it in place, then write the manifest and
+        swing the head (``_write_manifest``). Concurrent committers
+        (apply vs async compaction) therefore never clobber each
+        other's versions. Returns the new snapshot id.
 
-        def run() -> str:
+        - ``mutate`` returning False DECLINES (no-op DDL, a batch the
+          ledger already holds): nothing is written, no version number
+          is used, and None is returned.
+        - ``lineage``: a row appended with the new and parent snapshot
+          ids.
+        - ``delta``: the append-only fast-path contract forwarded to
+          _write_manifest (``_META_ONLY`` for commits touching no file).
+        - ``ledger``: ``(app_id, batch_id, watermarks)`` of a data
+          commit, folded into the exactly-once ledger."""
+
+        def run() -> str | None:
             m = self.manifest(ref=ref)
-            mutate(m)
+            parent_snapshot = m.snapshot_id
+            m.parent, m.version = m.version, self._alloc_version()
+            m.snapshot_id = uuid.uuid4().hex
+            if mutate(m) is False:
+                return None
             fs = m.properties.get("file_stats")
             if fs and delta is None:
                 # stats live and die with the files they describe; a
@@ -1724,23 +1631,23 @@ class SnapshotTable:
                 # O(live-files) prune is skipped on the hot path.
                 live = {f for fls in m.buckets.values() for f in fls}
                 m.properties["file_stats"] = {k: v for k, v in fs.items() if k in live}
-            m.parent = m.version
-            m.version = self._alloc_version()
-            old_snapshot = m.snapshot_id
-            m.snapshot_id = snapshot
-            wm = m.properties.setdefault("watermarks", {})
-            for part, lsn in watermarks.items():
-                wm[str(part)] = max(int(lsn), int(wm.get(str(part), -1)))
-            # max, not assignment: a cherry-pick racing a direct apply
-            # must never regress a ledger the apply just advanced
-            # (batch ids are per-app monotone by contract)
-            cb = m.properties.setdefault("committed_batches", {})
-            cb[app_id] = max(int(batch_id), int(cb.get(app_id, -1)))
-            m.lineage.append(
-                {**lineage_row, "snapshot_id": snapshot, "parent_snapshot": old_snapshot}
-            )
+            if ledger is not None:
+                app_id, batch_id, watermarks = ledger
+                wm = m.properties.setdefault("watermarks", {})
+                for part, lsn in watermarks.items():
+                    wm[str(part)] = max(int(lsn), int(wm.get(str(part), -1)))
+                # max, not assignment: a cherry-pick racing a direct
+                # apply must never regress a ledger the apply just
+                # advanced (batch ids are per-app monotone by contract)
+                cb = m.properties.setdefault("committed_batches", {})
+                cb[app_id] = max(int(batch_id), int(cb.get(app_id, -1)))
+            if lineage is not None:
+                m.lineage.append(
+                    {**lineage, "snapshot_id": m.snapshot_id,
+                     "parent_snapshot": parent_snapshot}
+                )
             self._write_manifest(m, ref=ref, delta=delta)
-            return snapshot
+            return m.snapshot_id
 
         return self._with_commit_lock(run)
 
@@ -1801,20 +1708,8 @@ class SnapshotTable:
                     & (F.col(S.LSN_META_COL) < F.lit(purge_tombstones_below_lsn))
                 )
             )
-        n = shuffle_partitions or int(
-            self.spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        staged = self.new_staging_dir()
-        (
-            self.to_physical(resolved, m)
-            .withColumn("__bucket", bucket_expr(F.col("conv_id"), m.n_buckets))
-            # range, not hash: few distinct bucket values hash-collide
-            # into unbalanced tasks (see apply.py write path)
-            .repartitionByRange(min(n, len(buckets)), "__bucket", "conv_id")
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(staged)
+        staged = self._stage_rewrite(
+            resolved, m, m.n_buckets, len(buckets), shuffle_partitions
         )
         return self.commit_merged_buckets(
             staged_dir=staged,
@@ -1829,6 +1724,35 @@ class SnapshotTable:
             },
             base_buckets=base,
         )
+
+    def _stage_rewrite(
+        self,
+        resolved: DataFrame,
+        m: Manifest,
+        n_buckets: int,
+        n_tasks: int,
+        shuffle_partitions: int | None,
+    ) -> str:
+        """Write a resolved frame under ``m``'s stored column names into
+        a fresh staging dir, one ``__bucket=N`` directory per bucket of
+        an ``n_buckets`` layout, conv_id-sorted (compaction and
+        rebucket). Returns the dir."""
+        n = shuffle_partitions or int(
+            self.spark.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+        staged = self.new_staging_dir()
+        (
+            self.to_physical(resolved, m)
+            .withColumn("__bucket", bucket_expr(F.col("conv_id"), n_buckets))
+            # range, not hash: few distinct bucket values hash-collide
+            # into unbalanced tasks (see apply.py write path)
+            .repartitionByRange(min(n, n_tasks), "__bucket", "conv_id")
+            .sortWithinPartitions("conv_id", "turn_idx")
+            .write.mode("overwrite")
+            .partitionBy("__bucket")
+            .parquet(staged)
+        )
+        return staged
 
     def purge_tombstones(self, below_lsn: int, shuffle_partitions: int | None = None) -> str | None:
         """Compact ALL buckets, dropping tombstones below the supplied
@@ -1874,53 +1798,28 @@ class SnapshotTable:
         if new_n_buckets == m0.n_buckets:
             raise ValueError(f"rebucket: table already has {new_n_buckets} buckets")
         resolved = self.read(with_deleted=True, version=m0.version)
-        n = shuffle_partitions or int(
-            self.spark.conf.get("spark.sql.shuffle.partitions", "32")
+        staged = self._stage_rewrite(
+            resolved, m0, new_n_buckets, new_n_buckets, shuffle_partitions
         )
-        staged = self.new_staging_dir()
-        (
-            self.to_physical(resolved, m0)
-            .withColumn("__bucket", bucket_expr(F.col("conv_id"), new_n_buckets))
-            .repartitionByRange(min(n, new_n_buckets), "__bucket", "conv_id")
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(staged)
-        )
-        adoption = uuid.uuid4().hex
-        adopted = self._adopt_staged(staged, list(range(new_n_buckets)), adoption)
-        stats = self._collect_file_stats([r for rs in adopted.values() for r in rs])
-        snapshot = uuid.uuid4().hex
+        adopted, stats = self._adopt(staged, list(range(new_n_buckets)))
 
-        def run() -> str:
-            m = self.manifest()
-            if m.version != m0.version:
+        def mutate(m: Manifest) -> None:
+            if m.parent != m0.version:
                 # adopted files become unreferenced -> gc_orphans fodder
                 raise ValueError(
                     "rebucket: concurrent commit landed "
-                    f"(v{m0.version} -> v{m.version}); retry in a quiet window"
+                    f"(v{m0.version} -> v{m.parent}); retry in a quiet window"
                 )
-            old_snapshot = m.snapshot_id
             m.n_buckets = new_n_buckets
             m.buckets = {b: rels for b, rels in adopted.items() if rels}
             # full rewrite: the stats map is exactly the new files'
             m.properties["file_stats"] = stats
-            m.parent = m.version
-            m.version = self._alloc_version()
-            m.snapshot_id = snapshot
-            m.lineage.append(
-                {
-                    "op": "rebucket",
-                    "from_buckets": m0.n_buckets,
-                    "to_buckets": new_n_buckets,
-                    "snapshot_id": snapshot,
-                    "parent_snapshot": old_snapshot,
-                }
-            )
-            self._write_manifest(m)
-            return snapshot
 
-        return self._with_commit_lock(run)
+        return self._commit(
+            mutate,
+            lineage={"op": "rebucket", "from_buckets": m0.n_buckets,
+                     "to_buckets": new_n_buckets},
+        )
 
     def startup_maintenance(
         self,
@@ -1953,7 +1852,7 @@ class SnapshotTable:
             # dangling audit state a resuming operator must decide on:
             # branches awaiting publish/drop (retention-protected until
             # dropped)
-            "branches": self._read_refs(),
+            "branches": commits.read_refs(self.root),
         }
 
     def gc_orphans(
@@ -1993,12 +1892,10 @@ class SnapshotTable:
         deletion — runs under the commit lock, so a commit can never
         land between the plan and the delete and lose its just-written
         manifest (deletion is metadata-scale: a few listdir + unlink)."""
-        import time as _time
-
-        cutoff = None if max_age_seconds is None else _time.time() - max_age_seconds
+        cutoff = None if max_age_seconds is None else time.time() - max_age_seconds
 
         def run() -> list[str]:
-            refs = self._read_refs()
+            refs = commits.read_refs(self.root)
             keep_set: set[int] = set()
             referenced: set[str] = set()
             # main's window first: branch walks stop when they reach
@@ -2007,37 +1904,24 @@ class SnapshotTable:
             # the delta chain into full O(live-files) state per call
             # (and would evict hot heads from the state cache) just to
             # follow a parent pointer.
-            v: int | None = self._head_version("main")
-            hops = 0
-            while v is not None:
-                try:
-                    d = self._manifest_dict(v)
-                except FileNotFoundError:
-                    break
+            heads = [head_version(self.root), *refs.values()]
+            for hops, (v, d) in enumerate(ancestry(self.root, heads[0])):
                 if hops >= keep_versions:
-                    if cutoff is None:
-                        break
                     ts = d["properties"].get("committed_at")
                     # pre-stamp manifests (no committed_at) count as old
-                    if ts is None or float(ts) < cutoff:
+                    if cutoff is None or ts is None or float(ts) < cutoff:
                         break
                 keep_set.add(v)
-                hops += 1
-                v = d["parent"]
             for hv in refs.values():
-                v = hv
-                while v is not None and v not in keep_set:
-                    keep_set.add(v)
-                    try:
-                        v = self._manifest_dict(v)["parent"]
-                    except FileNotFoundError:
+                for v, _ in ancestry(self.root, hv):
+                    if v in keep_set:
                         break
-            tag_versions: set[int] = set()
-            for hv in [self._head_version("main"), *refs.values()]:
-                tag_versions.update(
-                    int(t)
-                    for t in self._manifest_dict(hv)["properties"].get("tags", {}).values()
-                )
+                    keep_set.add(v)
+            tag_versions = {
+                int(t)
+                for hv in heads
+                for t in read_manifest(self.root, hv)["properties"].get("tags", {}).values()
+            }
             keep_set.update(tag_versions)
             # tagged versions keep not just their own manifest but the
             # PARENT-LINK PATH from each ref head down to them: rollback
@@ -2046,15 +1930,8 @@ class SnapshotTable:
             # must mean reachable, not merely readable (same walk as
             # branch heads)
             if tag_versions:
-                for hv in [self._head_version("main"), *refs.values()]:
-                    path: list[int] = []
-                    v = hv
-                    while v is not None:
-                        path.append(v)
-                        try:
-                            v = self._manifest_dict(v)["parent"]
-                        except FileNotFoundError:
-                            break
+                for hv in heads:
+                    path = [v for v, _ in ancestry(self.root, hv)]
                     deepest = max(
                         (i for i, pv in enumerate(path) if pv in tag_versions),
                         default=-1,
@@ -2069,45 +1946,22 @@ class SnapshotTable:
             # granularity at single versions instead of forcing whole
             # delta chains to survive until their rollup ages out.
             # Parents are still on disk here (deletion happens below),
-            # so reconstruction cannot dangle; os.replace keeps the
-            # rewrite atomic for concurrent readers.
+            # so reconstruction cannot dangle; the atomic writer keeps
+            # the rewrite atomic for concurrent readers. The same pass
+            # collects every kept version's live files.
             for kv in sorted(keep_set):
                 try:
-                    d = self._manifest_dict(kv)
+                    d = read_manifest(self.root, kv)
                 except FileNotFoundError:
                     continue
-                files = d["files"]
-                if files.get("full") is not None:
-                    continue  # already full
-                if d.get("parent") in keep_set:
-                    continue  # chain stays intact through this GC
                 buckets, stats, _ = self._state(kv, d)
-                files["full"] = {
-                    "buckets": {b: list(fs) for b, fs in buckets.items()},
-                    "stats": {k: list(v) for k, v in stats.items()},
-                }
-                mpath = os.path.join(self.root, "_manifests", f"v{kv}.json")
-                tmp = mpath + f".tmp.{uuid.uuid4().hex}"
-                with open(tmp, "w") as f:
-                    f.write(json.dumps(d))
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, mpath)
-                _cache_put(
-                    (self.root, kv),
-                    (
-                        {b: tuple(fs) for b, fs in buckets.items()},
-                        {k: list(v) for k, v in stats.items()},
-                        0,
-                    ),
-                )
-            for kv in sorted(keep_set):
-                try:
-                    m = self.manifest(kv)
-                except FileNotFoundError:
-                    continue
-                for fs in m.buckets.values():
-                    referenced.update(fs)
+                referenced.update(f for fs in buckets.values() for f in fs)
+                files = d["files"]
+                # already full, or its chain stays intact through this GC
+                if files.get("full") is None and d["parent"] not in keep_set:
+                    files["full"] = {"buckets": buckets, "stats": stats}
+                    commits.write_manifest(self.root, kv, d)
+                    _cache_put((self.root, kv), (buckets, stats, 0))
             deleted: list[str] = []
             data_dir = os.path.join(self.root, "data")
             for fn in os.listdir(data_dir):
@@ -2115,21 +1969,15 @@ class SnapshotTable:
                 if rel not in referenced:
                     os.remove(os.path.join(data_dir, fn))
                     deleted.append(rel)
-            man_dir = os.path.join(self.root, "_manifests")
-            for fn in os.listdir(man_dir):
-                mv = int(fn[1:-5])  # v{N}.json
-                if mv not in keep_set:
-                    os.remove(os.path.join(man_dir, fn))
+            commits.drop_manifests(self.root, keep_set)
             return deleted
 
         deleted = self._with_commit_lock(run)
         # clear abandoned staging dirs (crashed writes) — but only past
         # the grace window, never an in-flight writer's dir (see docstring)
-        import time as _time
-
         staging = os.path.join(self.root, "_staging")
         if os.path.isdir(staging):
-            cutoff = _time.time() - staging_grace_seconds
+            cutoff = time.time() - staging_grace_seconds
             for d in os.listdir(staging):
                 p = os.path.join(staging, d)
                 try:
@@ -2161,8 +2009,7 @@ class SnapshotTable:
     # needed or wanted.
 
     def _retained_versions(self) -> list[int]:
-        man_dir = os.path.join(self.root, "_manifests")
-        return sorted(int(f[1:-5]) for f in os.listdir(man_dir) if f.endswith(".json"))
+        return commits.retained_versions(self.root)
 
     def snapshots_df(self) -> DataFrame:
         """One row per retained committed version: commit kind from the
@@ -2182,7 +2029,7 @@ class SnapshotTable:
         cur = self.manifest().version
         rows = []
         for v in self._retained_versions():
-            d = self._manifest_dict(v)
+            d = read_manifest(self.root, v)
             op, added, removed = commit_kind(d["files"], d["parent"])
             buckets = self._state(v, d)[0]
             rows.append((v, d["snapshot_id"], d["parent"], op, d["n_buckets"],
@@ -2231,16 +2078,9 @@ class SnapshotTable:
         tags_by_v: dict[int, list[str]] = {}
         for name, v in (head.properties.get("tags") or {}).items():
             tags_by_v.setdefault(int(v), []).append(name)
-        ancestry = set()
-        v: int | None = head.version
-        while v is not None:
-            ancestry.add(v)
-            try:
-                v = self._manifest_dict(v)["parent"]
-            except FileNotFoundError:
-                break
+        chain = {v for v, _ in ancestry(self.root, head.version)}
         rows = [
-            (v, self._manifest_dict(v)["snapshot_id"], v in ancestry,
+            (v, read_manifest(self.root, v)["snapshot_id"], v in chain,
              sorted(tags_by_v.get(v, [])))
             for v in self._retained_versions()
         ]
@@ -2256,9 +2096,9 @@ class SnapshotTable:
             T.StructField("version", T.LongType()),
             T.StructField("snapshot_id", T.StringType()),
         ])
-        rows = [("main", "branch", self._head_version("main"),
+        rows = [("main", "branch", head_version(self.root),
                  self.manifest().snapshot_id)]
-        for name, v in sorted(self._read_refs().items()):
+        for name, v in sorted(commits.read_refs(self.root).items()):
             rows.append((name, "branch", v, self.manifest(v).snapshot_id))
         for name, v in sorted(self.manifest().properties.get("tags", {}).items()):
             rows.append((name, "tag", int(v), self.manifest(int(v)).snapshot_id))

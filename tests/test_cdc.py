@@ -443,7 +443,7 @@ def test_async_compaction_overlaps_and_converges(spark, small_log, tmp_path):
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     run = run_wal_stream(
         spark, wal, table, str(tmp_path / "ckpt"),
-        ApplyConfig(compact_max_files=1, async_compact=True),
+        ApplyConfig(compact_max_files=1),
         max_files_per_trigger=2,
     )
     assert run.error is None
@@ -1504,15 +1504,26 @@ def test_murmur3_parity_with_spark_hash(spark):
     """The driver-side Murmur3 mirror must equal F.hash (seed 42) on
     IntegerType — the exactness of the census-driven write placement
     (apply's slot tokens) rests on this."""
+    import random
+
     from pyspark.sql import functions as F
 
-    from audience_behavior_semantic_etl_spark.cdc.apply import _murmur3_hash_int
+    from audience_behavior_semantic_etl_spark.cdc.apply import (
+        _murmur3_hash_int,
+        _slot_tokens,
+    )
 
+    # every token a 256-slot placement can use, plus a seeded sample
+    # across the whole int range, negatives included
+    rng = random.Random(7)
+    ints = list(range(max(_slot_tokens(256)) + 1))
+    ints += [rng.randint(-(2**31), 2**31 - 1) for _ in range(2000)]
     rows = (
-        spark.range(0, 256)
-        .select(F.col("id").cast("int").alias("t"), F.hash(F.col("id").cast("int")).alias("h"))
+        spark.createDataFrame([(x,) for x in ints], "t int")
+        .select("t", F.hash("t").alias("h"))
         .collect()
     )
+    assert len(rows) == len(ints)
     assert all(r["h"] == _murmur3_hash_int(r["t"]) for r in rows)
 
 
@@ -1521,14 +1532,21 @@ def test_slot_tokens_exact_placement(spark):
     DataFrame hash partitioner — zero collisions, zero empty slots —
     so apply's write placement is deterministic without a sampling
     pass (the repartitionByRange double-fire this replaced)."""
+    import functools
+
     from pyspark.sql import functions as F
 
     from audience_behavior_semantic_etl_spark.cdc.apply import _slot_tokens
 
-    for n in (3, 8, 32):
+    ns = (3, 8, 32, 128)
+    frames = []
+    for n in ns:
         toks = _slot_tokens(n)
-        df = spark.createDataFrame([(s, toks[s]) for s in range(n)], "slot int, tok int")
-        got = df.repartition(n, F.col("tok")).select(
-            "slot", F.spark_partition_id().alias("pid")
-        ).collect()
-        assert all(r["slot"] == r["pid"] for r in got)
+        df = spark.createDataFrame([(n, s, toks[s]) for s in range(n)], "n int, slot int, tok int")
+        frames.append(df.repartition(n, F.col("tok")).select(
+            "n", "slot", F.spark_partition_id().alias("pid")
+        ))
+    # one collect over the union: each branch keeps its own partitioner
+    got = functools.reduce(lambda a, b: a.unionByName(b), frames).collect()
+    assert len(got) == sum(ns)
+    assert all(r["slot"] == r["pid"] for r in got)

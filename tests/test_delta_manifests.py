@@ -148,6 +148,27 @@ def test_gc_materializes_boundary_manifest(spark, tmp_path):
     assert t.read_final().count() == 5
 
 
+def test_stale_manifest_tmp_file_is_swept_not_parsed(spark, tmp_path):
+    """A manifest write cut short leaves ``v{N}.json.tmp.<hex>`` behind.
+    Listing readers must skip it (it is not a committed version) and
+    the next GC pass must remove it."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    t.set_property("a", 1)
+    t.set_property("b", 2)
+    n_snaps = t.snapshots_df().count()
+    man_dir = os.path.join(t.root, "_manifests")
+    stale = os.path.join(man_dir, f"v{t.manifest().version + 1}.json.tmp.0123abcd")
+    with open(stale, "w") as f:
+        f.write('{"version": ')  # the truncated prefix a crash leaves
+    t.gc_orphans()
+    assert not os.path.exists(stale)
+    with open(stale, "w") as f:
+        f.write('{"version": ')
+    assert t.startup_maintenance()["version"] == t.manifest().version
+    assert not os.path.exists(stale)
+    assert t.snapshots_df().count() == n_snaps
+
+
 def test_gc_retains_chain_down_to_tagged_version(spark, tmp_path):
     """ADVICE r4 #2: a tag must stay REACHABLE, not merely readable —
     the parent-link path from main's head down to the tagged version
