@@ -6,7 +6,7 @@ commit metadata cost grew O(live-files). Round 5 stores per-commit
 deltas + periodic full rollups; this probe measures the pure metadata
 path (no Spark, no data writes — exactly the part that used to scale
 with the table) by committing synthetic file batches through
-``commit_append_deltas``'s manifest machinery at growing live-file
+the apply commit's manifest machinery at growing live-file
 counts and timing ``_commit`` + a cold ``manifest()`` read.
 
 Pass criterion (VERDICT): 10x more live files -> ~same commit seconds.

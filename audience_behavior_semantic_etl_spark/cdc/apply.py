@@ -33,8 +33,11 @@ operator chain (SURVEY.md §7.1):
 - salted repartition ≈ the reference's explicit RepartitionByExpression
   before its stateful op (Sessionize.scala:103), plus the hot-key
   splitting the north_rule demands (SURVEY.md §4.2).
-- exactly-once     : batch id + per-source-part LSN watermarks ride the
-  snapshot commit; re-delivered batches no-op.
+- exactly-once     : ONE snapshot per micro-batch. The batch's DDL is
+  planned in memory and commits WITH its files, its partial-update
+  flips, its batch id + per-source-part LSN watermarks and its lineage
+  row; re-delivered batches no-op, and a crash anywhere before that
+  commit leaves nothing to wedge a re-delivery.
 
 Per-batch Spark-job budget (scale discipline — each job is a full
 batch scan at 10^10 events):
@@ -47,8 +50,10 @@ batch scan at 10^10 events):
      non-scaling term, so none is spent twice.
   2. (rare) schema_change payload collect                  [tiny]
   3. the append write itself (scan -> [optional dedup shuffle] ->
-     bucket shuffle -> normalize -> append), with row metrics attached
-     via the Observation API — no post-hoc count() jobs.
+     bucket shuffle -> normalize -> append), with row metrics, the
+     malformed count and the patched-column set attached via the
+     Observation API — no post-hoc count() or read-back jobs. A batch
+     without data rows skips it.
   4. (amortized) compaction of over-threshold buckets.
 """
 
@@ -64,7 +69,7 @@ from pyspark.sql import types as T
 
 from audience_behavior_semantic_etl_spark.cdc import schema as S
 from audience_behavior_semantic_etl_spark.cdc.normalize import canonical_text_col
-from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable, bucket_expr
+from audience_behavior_semantic_etl_spark.cdc.table import Manifest, SnapshotTable, bucket_expr
 
 
 # hot conversations spread over this many write slots within their bucket
@@ -116,11 +121,11 @@ class ApplyConfig:
     branch: str = "main"
 
 
-def winners_schema(table: SnapshotTable, ref: str = "main") -> T.StructType:
-    """Output schema of the normalizer: full (evolving) table row +
-    merge metadata (_lsn for read-side LWW, _deleted tombstones, _set
-    patch masks — null on full-row versions)."""
-    cols = [(n, S.type_from_name(t)) for n, t in table.manifest(ref=ref).columns]
+def winners_schema(m: Manifest) -> T.StructType:
+    """Output schema of the normalizer under manifest ``m``: full table
+    row + merge metadata (_lsn for read-side LWW, _deleted tombstones,
+    _set patch masks — null on full-row versions)."""
+    cols = [(n, S.type_from_name(t)) for n, t in m.columns]
     return S.transcripts_schema(cols, with_lsn=True, with_deleted=True, with_setmask=True)
 
 
@@ -458,12 +463,27 @@ def apply_batch(
     batch_id: int,
     cfg: ApplyConfig | None = None,
 ) -> BatchMetrics:
-    """Apply one micro-batch of envelope rows to the table, exactly once."""
-    cfg = cfg or ApplyConfig()
+    """Apply one micro-batch of envelope rows to the table, exactly once,
+    as ONE snapshot (a batch already in the ledger adds none)."""
+    return _apply_batch(events_raw, table, batch_id, cfg or ApplyConfig(), {})
+
+
+def _apply_batch(
+    events_raw: DataFrame,
+    table: SnapshotTable,
+    batch_id: int,
+    cfg: ApplyConfig,
+    properties: dict,
+) -> BatchMetrics:
+    """``apply_batch``, with table ``properties`` set in the batch's
+    commit (the bootstrap load's snapshot-LSN fence)."""
     t0 = time.perf_counter()
     spark = table.spark
 
-    if table.is_batch_committed(cfg.app_id, batch_id, ref=cfg.branch):
+    # the ref head, read ONCE: the exactly-once check, the LSN fence,
+    # the bucket count and the DDL plan all come from this copy
+    plan = table.manifest(ref=cfg.branch)
+    if batch_id <= plan.properties.get("committed_batches", {}).get(cfg.app_id, -1):
         return BatchMetrics(batch_id, 0, 0, 0, 0, 0, 0.0, -1, -1, skipped=True)
 
     # Snapshot-LSN fence (bootstrap_snapshot): events at or below the
@@ -474,7 +494,7 @@ def apply_batch(
     # re-delivered with it (see bootstrap_snapshot's docstring for the
     # exact hazard taxonomy). A plain pushed-down scan filter; the
     # overlapping part of an at-least-once tail costs one predicate.
-    fence = table.manifest(ref=cfg.branch).properties.get("snapshot_lsn")
+    fence = plan.properties.get("snapshot_lsn")
     if fence is not None:
         events_raw = events_raw.filter(F.col("lsn") > int(fence))
 
@@ -543,9 +563,9 @@ def apply_batch(
         # hot keys + affected buckets, derived from the SAME cached
         # stats: per-bucket row with the bucket's hot conv_ids embedded
         # (output bounded by n_buckets + #hot keys, never batch size).
-        # n_buckets is immutable after create, so this is safe to plan
-        # before any schema_change lands.
-        n_buckets = table.manifest(ref=cfg.branch).n_buckets
+        # n_buckets is immutable after create (rebucket re-creates the
+        # table), so the plan's count holds at commit.
+        n_buckets = plan.n_buckets
         census_agg = (
             stats.filter(F.col("conv_id").isNotNull())
             .groupBy("conv_id")
@@ -598,22 +618,9 @@ def apply_batch(
         n_events = sum(r["n"] for r in part_stats)
         n_sc = sum(r["n_sc"] for r in part_stats)
         n_partial = sum(r["n_up"] for r in part_stats)
-        if n_events == 0:
-            snapshot = table.commit_append_deltas(
-                staged_dir=None,
-                affected_buckets=[],
-                app_id=cfg.app_id,
-                batch_id=batch_id,
-                watermarks={},
-                lineage_row={"batch_id": batch_id, "rows": 0},
-                ref=cfg.branch,
-            )
-            return BatchMetrics(
-                batch_id, 0, 0, 0, 0, 0, time.perf_counter() - t0, -1, -1, snapshot
-            )
         watermarks = {str(r["source_part"]): int(r["lsn_max"]) for r in part_stats}
-        lsn_min = min(r["lsn_min"] for r in part_stats)
-        lsn_max = max(r["lsn_max"] for r in part_stats)
+        lsn_min = min((r["lsn_min"] for r in part_stats), default=-1)
+        lsn_max = max((r["lsn_max"] for r in part_stats), default=-1)
         n_data = n_events - n_sc
         # -- poison-message policy for null-key data events ----------------
         n_nullkey = sum(r["n_nullkey"] for r in part_stats)
@@ -629,66 +636,38 @@ def apply_batch(
         # exactly one source_part, so per-conv approx counts sum cleanly)
         n_keys = max(1, sum(r["n_keys"] for r in part_stats))
 
-        # -- job 2 (rare): schema_change DDL ------------------------------
+        # -- job 2 (rare): schema_change DDL, PLANNED in memory -----------
+        # Run over the head copy (no lock, no version) in LSN order, it
+        # plans the schema, aliases and physical map the write needs; it
+        # commits with the data (table._commit_batch re-runs it on the
+        # fresh head under the plan's snapshot id, so fresh physical
+        # names agree). ALL DDL applies before any data row of the same
+        # batch: era separation (drop/re-add non-resurrection, rename
+        # aliasing) is a CROSS-batch property.
+        plan.snapshot_id = uuid.uuid4().hex
+        ddl: list[dict] = []
         if n_sc > 0:
-            for r in (
-                events_raw.filter(F.col("op") == "schema_change").select("payload").collect()
-            ):
-                ddl = json.loads(r["payload"])
-                add = ddl.get("add_columns", {})
-                if add:
-                    table.add_columns(add, ref=cfg.branch)
-                widen = ddl.get("widen_columns", {})
-                if widen:
-                    table.widen_columns(widen, ref=cfg.branch)
-                # rename/drop after add/widen so one DDL payload can
-                # compose (add a column, then rename another into it
-                # is NOT allowed — renames see the post-add schema).
-                # Batch semantics: ALL DDL applies before any data row
-                # of the same micro-batch, so a data event ordered
-                # before the DDL in the WAL but delivered in the same
-                # batch normalizes under the post-DDL schema — the
-                # era separation that the physical-name mapping
-                # guarantees (drop/re-add non-resurrection, rename
-                # aliasing) is a CROSS-batch property, same as the
-                # existing add/widen behavior.
-                ren = ddl.get("rename_columns", {})
-                if ren:
-                    table.rename_columns(ren, ref=cfg.branch)
-                dropc = ddl.get("drop_columns", [])
-                if dropc:
-                    table.drop_columns(dropc, ref=cfg.branch)
+            sc = events_raw.filter(F.col("op") == "schema_change").select("lsn", "payload")
+            rows = sorted(sc.collect(), key=lambda r: r["lsn"])
+            ddl = [json.loads(r["payload"]) for r in rows]
+            for d in ddl:
+                table._evolve(plan, d)
+        out_schema = winners_schema(plan)
+        aliases = table.rename_history(plan)
 
         affected = [int(r["__b"]) for r in census]
         hot = [c for r in census for c in r["hot"]]
         bucket_rows = {int(r["__b"]): int(r["n"]) for r in census}
         _phase("census")
 
-        data = events_raw.filter(F.col("op") != "schema_change").select(
-            "conv_id", "turn_idx", "lsn", "op", "payload"
+        shuffle_n = cfg.shuffle_partitions or int(
+            spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
-        if n_nullkey > 0:  # quarantine mode (fail already raised above)
-            data = data.filter(F.col("conv_id").isNotNull())
-
-        # Patches flip the table into column-resolution mode, durably:
-        # every read from now on must fold set-masks, even after this
-        # batch's versions are compacted away (collapse keeps the mode
-        # correct but cheaper). Sticky one-time property, not per-batch.
-        if n_partial > 0 and not table.manifest(ref=cfg.branch).properties.get("has_partial"):
-            table.set_property("has_partial", True, ref=cfg.branch)
-
         # -- adaptive in-batch pre-collapse (high churn only) -------------
         # Row-level max_by would DISCARD patch content (a patch above a
         # base must overlay, not replace wholesale), so the pre-collapse
         # is disabled for any batch carrying partial updates.
         deduped = n_data / n_keys > cfg.dedup_churn_threshold and n_partial == 0
-        if deduped:
-            data = (
-                data.groupBy("conv_id", "turn_idx")
-                .agg(F.max_by(F.struct("lsn", "op", "payload"), "lsn").alias("__w"))
-                .select("conv_id", "turn_idx", "__w.lsn", "__w.op", "__w.payload")
-            )
-
         metric_exprs = [
             F.coalesce(
                 F.sum(
@@ -701,112 +680,134 @@ def apply_batch(
             ),
             F.count(F.lit(1)).alias("written"),
         ]
-        # -- ONE salted bucket shuffle, THEN Arrow normalize ---------------
-        # (normalize placed post-shuffle: parallelism = shuffle_n
-        # regardless of source layout; its output stays in-partition for
-        # the partitionBy write)
-        shuffle_n = cfg.shuffle_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        data = data.withColumn("__bucket", bucket_expr(F.col("conv_id"), n_buckets))
-        if hot:
-            salt = F.when(
-                F.col("conv_id").isin(hot), F.pmod(F.col("turn_idx"), F.lit(N_SALTS))
-            ).otherwise(F.lit(0))
-        else:
-            salt = F.lit(0)
-        data = data.withColumn("__salt", salt)
-        # DETERMINISTIC census-driven placement, ONE exchange, ZERO
-        # sampling. History: plain hash(bucket, salt) over only n_buckets
-        # distinct values collides balls-in-bins style (slowest write
-        # task ~3x the average); repartitionByRange balanced by rows but
-        # its sampling pass RE-EXECUTES the whole plan below the
-        # exchange — a full extra pass over every batch (the double-fire
-        # gotcha). The census already holds per-bucket row counts from
-        # the stats job, so the balance ranges buy is computed
-        # driver-side for free: each bucket gets slots proportional to
-        # its share of the batch (>=1), rows spread within a bucket by
-        # hash(conv_id, salt) — a hot bucket/conversation still splits
-        # across tasks, and each task holds exactly one bucket, so the
-        # partitionBy write's file granularity matches the range layout.
-        # Exact slot->partition placement with the DataFrame-level hash
-        # partitioner via precomputed hash-inverse tokens (no RDD
-        # round-trip, no sampling job).
-        # A batch whose census is EMPTY (DDL-only, or every data row
-        # null-key-quarantined) still runs the write job on the empty
-        # `data` frame — give it one slot instead of a zero-partition
-        # repartition (caught by test_canonicalization_follows_renamed_text).
-        if not bucket_rows:
-            bucket_rows = {0: 1}
-        total_rows = sum(bucket_rows.values()) or 1
-        bs = sorted(bucket_rows)
-        k_slots: dict[int, int] = {}
-        offs: dict[int, int] = {}
-        acc = 0
-        for b in bs:
-            k_slots[b] = max(1, round(shuffle_n * bucket_rows[b] / total_rows))
-            offs[b] = acc
-            acc += k_slots[b]
-        total_slots = acc
-        tokens = _slot_tokens(total_slots)
-        k_map = F.create_map(*[F.lit(x) for b in bs for x in (b, k_slots[b])])
-        off_map = F.create_map(*[F.lit(x) for b in bs for x in (b, offs[b])])
-        slot = F.element_at(off_map, F.col("__bucket")) + F.pmod(
-            F.hash(F.col("conv_id"), F.col("__salt")),
-            F.element_at(k_map, F.col("__bucket")),
-        )
-        # defensive: a bucket somehow absent from the census (cannot
-        # happen for non-null-key data rows) still lands in-range
-        slot = F.coalesce(slot, F.pmod(F.hash(F.col("conv_id")), F.lit(total_slots)))
-        tok = F.element_at(F.array(*[F.lit(t) for t in tokens]), slot + F.lit(1))
-        data = (
-            data.withColumn("__tok", tok)
-            .repartition(total_slots, F.col("__tok"))
-            .drop("__salt", "__tok")
-        )
-        obs = Observation(f"apply-{batch_id}-{uuid.uuid4().hex[:8]}")
-        data = data.observe(obs, *metric_exprs)
+        # A batch with no data rows (DDL only, or every row null-key
+        # quarantined) runs no write job: it commits DDL + ledger +
+        # lineage only.
+        staged = None
+        row_metrics = {"upserts": 0, "deletes": 0, "written": 0}
+        n_malformed = 0
+        patched: list[str] = []
+        if n_data > 0:
+            data = events_raw.filter(F.col("op") != "schema_change").select(
+                "conv_id", "turn_idx", "lsn", "op", "payload"
+            )
+            if n_nullkey > 0:  # quarantine mode (fail already raised above)
+                data = data.filter(F.col("conv_id").isNotNull())
+            if deduped:
+                data = (
+                    data.groupBy("conv_id", "turn_idx")
+                    .agg(F.max_by(F.struct("lsn", "op", "payload"), "lsn").alias("__w"))
+                    .select("conv_id", "turn_idx", "__w.lsn", "__w.op", "__w.payload")
+                )
 
-        out_schema = winners_schema(table, ref=cfg.branch)
-        post_ddl_manifest = table.manifest(ref=cfg.branch)
-        aliases = table.rename_history(post_ddl_manifest)
-        physical = table._phys_map(post_ddl_manifest)
-        final_rows = normalize_envelope(
-            data,
-            out_schema,
-            on_malformed=cfg.on_malformed,
-            passthrough=("__bucket",),
-            aliases=aliases,
-            physical=physical,
-        )
-        obs_mf = Observation(f"malformed-{batch_id}-{uuid.uuid4().hex[:8]}")
-        final_rows = final_rows.observe(
-            obs_mf, F.coalesce(F.sum("__malformed"), F.lit(0)).alias("malformed")
-        )
-        final_rows = final_rows.filter(F.col("__malformed") == 0).drop("__malformed")
+            # -- ONE salted bucket shuffle, THEN Arrow normalize -----------
+            # (normalize placed post-shuffle: parallelism = shuffle_n
+            # regardless of source layout; its output stays in-partition
+            # for the partitionBy write)
+            data = data.withColumn("__bucket", bucket_expr(F.col("conv_id"), n_buckets))
+            if hot:
+                salt = F.when(
+                    F.col("conv_id").isin(hot), F.pmod(F.col("turn_idx"), F.lit(N_SALTS))
+                ).otherwise(F.lit(0))
+            else:
+                salt = F.lit(0)
+            data = data.withColumn("__salt", salt)
+            # DETERMINISTIC census-driven placement, ONE exchange, ZERO
+            # sampling. History: plain hash(bucket, salt) over only
+            # n_buckets distinct values collides balls-in-bins style
+            # (slowest write task ~3x the average); repartitionByRange
+            # balanced by rows but its sampling pass RE-EXECUTES the
+            # whole plan below the exchange — a full extra pass over
+            # every batch (the double-fire gotcha). The census already
+            # holds per-bucket row counts from the stats job, so the
+            # balance ranges buy is computed driver-side for free: each
+            # bucket gets slots proportional to its share of the batch
+            # (>=1), rows spread within a bucket by hash(conv_id, salt) —
+            # a hot bucket/conversation still splits across tasks, and
+            # each task holds exactly one bucket, so the partitionBy
+            # write's file granularity matches the range layout. Exact
+            # slot->partition placement with the DataFrame-level hash
+            # partitioner via precomputed hash-inverse tokens (no RDD
+            # round-trip, no sampling job). A data row has a non-null
+            # key, so the census here is never empty.
+            total_rows = sum(bucket_rows.values()) or 1
+            bs = sorted(bucket_rows)
+            k_slots: dict[int, int] = {}
+            offs: dict[int, int] = {}
+            acc = 0
+            for b in bs:
+                k_slots[b] = max(1, round(shuffle_n * bucket_rows[b] / total_rows))
+                offs[b] = acc
+                acc += k_slots[b]
+            total_slots = acc
+            tokens = _slot_tokens(total_slots)
+            k_map = F.create_map(*[F.lit(x) for b in bs for x in (b, k_slots[b])])
+            off_map = F.create_map(*[F.lit(x) for b in bs for x in (b, offs[b])])
+            slot = F.element_at(off_map, F.col("__bucket")) + F.pmod(
+                F.hash(F.col("conv_id"), F.col("__salt")),
+                F.element_at(k_map, F.col("__bucket")),
+            )
+            # defensive: a bucket somehow absent from the census (cannot
+            # happen for non-null-key data rows) still lands in-range
+            slot = F.coalesce(slot, F.pmod(F.hash(F.col("conv_id")), F.lit(total_slots)))
+            tok = F.element_at(F.array(*[F.lit(t) for t in tokens]), slot + F.lit(1))
+            data = (
+                data.withColumn("__tok", tok)
+                .repartition(total_slots, F.col("__tok"))
+                .drop("__salt", "__tok")
+            )
+            obs = Observation(f"apply-{batch_id}-{uuid.uuid4().hex[:8]}")
+            data = data.observe(obs, *metric_exprs)
 
-        staged = table.new_staging_dir()
-        writer = (
-            table.to_physical(final_rows, post_ddl_manifest)
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-        )
-        for k, v in DELTA_WRITE_OPTIONS.items():
-            writer = writer.option(k, v)
-        writer.partitionBy("__bucket").parquet(staged)
-        # Metrics ride the write action via CollectMetrics — no extra job
-        # in the common case. When AQE's empty-relation propagation
-        # eliminates the whole subtree (empty batch data), the metrics
-        # row is lost and .get raises — recompute with one tiny job (the
-        # plan is deterministic; this only fires on near-empty outputs).
-        try:
-            row_metrics = obs.get
-        except Exception:
-            row_metrics = data.agg(*metric_exprs).collect()[0].asDict()
-        try:
-            n_malformed = int(obs_mf.get["malformed"] or 0)
-        except Exception:
-            n_malformed = 0
+            physical = table._phys_map(plan)
+            final_rows = normalize_envelope(
+                data,
+                out_schema,
+                on_malformed=cfg.on_malformed,
+                passthrough=("__bucket",),
+                aliases=aliases,
+                physical=physical,
+            )
+            # the malformed count and the patched-column set ride the
+            # write (no read-back job): the distinct PHYSICAL names the
+            # written set-masks carry, unioned into the manifest's
+            # patched_columns by the commit — fold reads per-column
+            # aggregate ONLY columns a patch has ever touched
+            # (table._fold_resolve); the rest ride the winning-base struct
+            obs_mf = Observation(f"malformed-{batch_id}-{uuid.uuid4().hex[:8]}")
+            final_rows = final_rows.observe(
+                obs_mf,
+                F.coalesce(F.sum("__malformed"), F.lit(0)).alias("malformed"),
+                F.array_distinct(F.flatten(F.collect_set(
+                    F.when(F.col("__malformed") == 0, F.col(S.SETMASK_META_COL))
+                ))).alias("patched"),
+            )
+            final_rows = final_rows.filter(F.col("__malformed") == 0).drop("__malformed")
+
+            staged = table.new_staging_dir()
+            writer = (
+                table.to_physical(final_rows, plan)
+                .sortWithinPartitions("conv_id", "turn_idx")
+                .write.mode("overwrite")
+            )
+            for k, v in DELTA_WRITE_OPTIONS.items():
+                writer = writer.option(k, v)
+            writer.partitionBy("__bucket").parquet(staged)
+            # Metrics ride the write action via CollectMetrics — no
+            # extra job in the common case. When AQE's empty-relation
+            # propagation eliminates the whole subtree, the metrics row
+            # is lost and .get raises — recompute with one tiny job (the
+            # plan is deterministic; this only fires on near-empty
+            # outputs, which wrote no set-mask either).
+            try:
+                row_metrics = obs.get
+            except Exception:
+                row_metrics = data.agg(*metric_exprs).collect()[0].asDict()
+            try:
+                mf = obs_mf.get
+                n_malformed, patched = int(mf["malformed"] or 0), list(mf["patched"] or [])
+            except Exception:  # metrics lost: any column may be patched
+                patched = list(physical.values())
         n_malformed += int(n_nullkey)  # quarantined null-key events
         # -- dead-letter quarantine (rare path) ---------------------------
         # "quarantine" without a sink would still be silent loss of the
@@ -843,45 +844,31 @@ def apply_batch(
             quar.write.mode("overwrite").parquet(table.quarantine_dir(batch_id, cfg.app_id))
         _phase("write")
 
-        if n_partial > 0:
-            # Union this batch's patch masks into the manifest's
-            # patched-column set: fold reads per-column-aggregate ONLY
-            # columns a patch has ever touched (table._fold_resolve);
-            # the rest ride the winning-base struct. Read back from the
-            # just-staged files — the _set column is tiny and
-            # column-pruned, far cheaper than a payload re-parse.
-            # Durable BEFORE the commit: a crash in between leaves a
-            # conservative superset, never a miss.
-            seen = {
-                r["c"]
-                for r in spark.read.parquet(staged)
-                .select(F.explode(F.col(S.SETMASK_META_COL)).alias("c"))
-                .distinct()
-                .collect()
-            }
-            prev = set(table.manifest(ref=cfg.branch).properties.get("patched_columns") or [])
-            if not (seen <= prev):
-                table.set_property("patched_columns", sorted(prev | seen), ref=cfg.branch)
-
-        lineage_row = {
-            "batch_id": batch_id,
-            "rows": int(n_data),
-            "upserts": int(row_metrics["upserts"] or 0),
-            "deletes": int(row_metrics["deletes"] or 0),
-            "lsn_min": int(lsn_min),
-            "lsn_max": int(lsn_max),
-            "hot_keys": len(hot),
-            "deduped": bool(deduped),
-            "malformed": n_malformed,
-        }
-        snapshot = table.commit_append_deltas(
-            staged_dir=staged,
-            affected_buckets=affected,
-            app_id=cfg.app_id,
-            batch_id=batch_id,
-            watermarks=watermarks,
-            lineage_row=lineage_row,
+        # an empty batch keeps its short lineage row
+        lineage_row = {"batch_id": batch_id, "rows": int(n_data)}
+        if n_events:
+            lineage_row.update(
+                upserts=int(row_metrics["upserts"] or 0),
+                deletes=int(row_metrics["deletes"] or 0),
+                lsn_min=int(lsn_min),
+                lsn_max=int(lsn_max),
+                hot_keys=len(hot),
+                deduped=bool(deduped),
+                malformed=n_malformed,
+            )
+        # ONE snapshot for the whole batch: DDL, the has_partial /
+        # patched_columns flips (patches switch the table into
+        # column-resolution mode, durably), files, ledger and lineage
+        snapshot = table._commit_batch(
+            staged,
+            affected,
+            (cfg.app_id, batch_id, watermarks),
+            lineage_row,
             ref=cfg.branch,
+            plan=plan,
+            ddl=ddl,
+            patched=patched if n_partial > 0 else None,
+            properties=properties,
         )
 
         _phase("commit")
@@ -972,11 +959,12 @@ def bootstrap_snapshot(
     LSN 0 without a fence makes the first batch O(history) instead of
     O(new). The fence closes all three for one pushed-down predicate.
 
-    Idempotent / crash-safe: re-running after a crash skips the
-    committed load (batch-0 dedup under the ``{app_id}#bootstrap``
-    ledger channel) and re-records the fence property, so the bootstrap
-    is complete exactly when this function returns — resume logic can
-    call it unconditionally.
+    Idempotent / crash-safe: the fence property lands in the load's own
+    commit, so the load and its fence are durable together; re-running
+    after a crash skips the committed load (batch-0 dedup under the
+    ``{app_id}#bootstrap`` ledger channel), so the bootstrap is complete
+    exactly when this function returns — resume logic can call it
+    unconditionally.
     """
     cfg = cfg or ApplyConfig()
     cols = [n for n, _ in table.manifest().columns]
@@ -999,6 +987,4 @@ def bootstrap_snapshot(
     import dataclasses
 
     boot_cfg = dataclasses.replace(cfg, app_id=cfg.app_id + BOOTSTRAP_APP_SUFFIX)
-    metrics = apply_batch(env, table, 0, boot_cfg)
-    table.set_property("snapshot_lsn", int(snapshot_lsn))
-    return metrics
+    return _apply_batch(env, table, 0, boot_cfg, {"snapshot_lsn": int(snapshot_lsn)})

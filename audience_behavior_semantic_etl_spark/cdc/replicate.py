@@ -29,13 +29,13 @@ LSN, and the apply path's cross-batch LWW guard + read-side fold make
 replay order-insensitive within the at-least-once window.
 
 Schema evolution: before each micro-batch the target's column set is
-synced to the source manifest — ADDs replicate via ``add_columns``,
-RENAMEs are followed via the source's rename history (the replica
-renames its own column rather than minting a fresh one, so replica
-data stays under the field and either payload key keeps landing —
-see ``_apply``), and safe type WIDENINGS (int->long, float->double)
-replicate via ``widen_columns`` so post-widen values can't overflow
-the replica's narrower type into null; all are metadata-only commits.
+synced to the source manifest in ONE metadata-only commit — ADDs
+replicate, RENAMEs are followed via the source's rename history (the
+replica renames its own column rather than minting a fresh one, so
+replica data stays under the field and either payload key keeps
+landing), and safe type WIDENINGS (int->long, float->double) replicate
+so post-widen values can't overflow the replica's narrower type into
+null.
 DROPs are NOT propagated (the replica keeps the column; payloads
 simply stop setting it — the conservative replication default), with
 ONE exception: when the source drops a column and later RE-ADDS the
@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, functions as F
 from audience_behavior_semantic_etl_spark.cdc import schema as S
 from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
 from audience_behavior_semantic_etl_spark.cdc.cdf_source import start_cdf_foreach_batch
-from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
+from audience_behavior_semantic_etl_spark.cdc.table import _META_ONLY, Manifest, SnapshotTable
 
 _META = (S.LSN_META_COL, S.DELETED_META_COL, S.SETMASK_META_COL, "_commit_version")
 
@@ -263,88 +263,78 @@ def replicate_stream(
         src_cols = src_m.columns
         src_names = {n for n, _ in src_cols}
         src_pm = source._phys_map(src_m)
-        tgt_m = target.manifest()
-        have = {n for n, _ in tgt_m.columns}
         hist = source.rename_history(src_m)
-        # FIELD-GENERATION tracking: the replica records, per column,
-        # the SOURCE physical name it is following
-        # (``replica_src_physical``). Physical names are era-unique on
-        # the source, so a change in a shared column's source physical
-        # means the source RETIRED the field behind the name and minted
-        # a fresh one (drop + re-add, possibly with a different type) —
-        # keeping the replica's old column would poison every
-        # subsequent payload (values of the NEW field parsed against
-        # the OLD field's type) or resurrect dead data. This is the one
-        # case where a source DROP propagates: the replica drops its
-        # retired column, and the re-add below re-creates the name as a
-        # fresh field (the replica's own suffix rule keeps its old file
-        # data unreadable — non-resurrection holds on both sides).
-        marker = dict(
-            tgt_m.properties.get("replica_src_physical") or {}
-        )
-        marker0 = dict(marker)
-        recycled = [
-            n
-            for n, _t in src_cols
-            if n in have
-            and marker.get(n) is not None
-            and marker[n] != src_pm[n]
-        ]
-        if recycled:
-            target.drop_columns(recycled)
+
+        def follow(m: Manifest) -> bool:
+            """The schema follow, on the fresh target head, as ONE commit:
+            drop recycled, rename-follow, add missing, widen, in that
+            order, then the generation marker."""
+            have = {n for n, _ in m.columns}
+            # FIELD-GENERATION tracking (``replica_src_physical``: the
+            # SOURCE physical name each column follows). Source physical
+            # names are era-unique, so a changed one means the source
+            # retired the field behind the name (drop + re-add, maybe
+            # retyped): the replica drops its retired column and the add
+            # below re-creates the name as a fresh field — keeping it
+            # would parse NEW values against the OLD type or resurrect
+            # dead data.
+            marker = dict(m.properties.get("replica_src_physical") or {})
+            marker0 = dict(marker)
+            changed = False
+            recycled = [
+                n
+                for n, _t in src_cols
+                if n in have
+                and marker.get(n) is not None
+                and marker[n] != src_pm[n]
+            ]
+            changed |= target._evolve(m, {"drop_columns": recycled})
             have -= set(recycled)
             for n in recycled:
                 marker.pop(n, None)
-        # RENAME-FOLLOW: a source column the replica lacks whose rename
-        # history names a column the replica HAS (and the source no
-        # longer does) is the same field renamed — rename the replica's
-        # column instead of minting a fresh one, so existing replica
-        # data stays under the field and the replica's own rename
-        # history keeps coalescing in-flight payloads still carrying
-        # the former name (a CDF stream pins its column set at start,
-        # so post-rename row versions arrive under the OLD logical name
-        # until the stream restarts — either name lands identically).
-        renames: dict[str, str] = {}
-        taken: set[str] = set()
-        for n, _t in src_cols:
-            if n in have:
-                continue
-            for alias in hist.get(n, []):
-                if alias in have and alias not in src_names and alias not in taken:
-                    renames[alias] = n
-                    taken.add(alias)
-                    break
-        if renames:
-            target.rename_columns(renames)
+            # RENAME-FOLLOW: a source column the replica lacks whose
+            # rename history names a column the replica HAS (and the
+            # source no longer does) is the same field renamed. The
+            # replica's own rename history then coalesces row versions
+            # a running CDF stream still emits under the OLD name.
+            renames: dict[str, str] = {}
+            taken: set[str] = set()
+            for n, _t in src_cols:
+                if n in have:
+                    continue
+                for alias in hist.get(n, []):
+                    if alias in have and alias not in src_names and alias not in taken:
+                        renames[alias] = n
+                        taken.add(alias)
+                        break
+            changed |= target._evolve(m, {"rename_columns": renames})
             have = (have - set(renames)) | set(renames.values())
             for old, new in renames.items():
                 moved = marker.pop(old, None)
                 marker[new] = moved if moved is not None else src_pm[new]
-        missing = {n: t for n, t in src_cols if n not in have}
-        if missing:
-            target.add_columns(missing)
-        # adopt/refresh the generation marker for every shared column
-        for n, _t in src_cols:
-            marker.setdefault(n, src_pm[n])
-        # TYPE-WIDENING follow: a source column promoted int->long /
-        # float->double must widen on the replica BEFORE the batch
-        # lands — the normalizer casts payloads to the replica's column
-        # type, and a post-widen value outside the narrower range would
-        # otherwise cast to null (silent loss). Only the safe
-        # metadata-only promotions replicate (a non-widening source
-        # type change can only come from drop + re-add, which the
-        # generation tracking above converts to a replica-side drop +
-        # re-add with the source's current type).
-        tgt_types = dict(target.manifest().columns)
-        widen = {
-            n: t_src
-            for n, t_src in src_cols
-            if (tgt_types.get(n), t_src) in SnapshotTable.SAFE_WIDENINGS
-        }
-        if widen:
-            target.widen_columns(widen)
-        if marker != marker0:
-            target.set_property("replica_src_physical", marker)
+            missing = {n: t for n, t in src_cols if n not in have}
+            changed |= target._evolve(m, {"add_columns": missing})
+            # adopt/refresh the generation marker for every shared column
+            for n, _t in src_cols:
+                marker.setdefault(n, src_pm[n])
+            # TYPE-WIDENING follow, BEFORE the batch lands: the
+            # normalizer casts payloads to the replica's type, so a
+            # post-widen value would cast to null. Only safe promotions
+            # arrive here (any other type change is a drop + re-add,
+            # handled by the generation tracking).
+            tgt_types = dict(m.columns)
+            widen = {
+                n: t_src
+                for n, t_src in src_cols
+                if (tgt_types.get(n), t_src) in SnapshotTable.SAFE_WIDENINGS
+            }
+            changed |= target._evolve(m, {"widen_columns": widen})
+            if marker != marker0:
+                m.properties["replica_src_physical"] = marker
+                changed = True
+            return changed
+
+        target._commit(follow, delta=_META_ONLY)
         import dataclasses
 
         cfg = dataclasses.replace(base_cfg, app_id=app_id)

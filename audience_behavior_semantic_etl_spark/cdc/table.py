@@ -103,6 +103,25 @@ def _put_nonempty(props: dict[str, Any], key: str, value) -> None:
         props.pop(key, None)
 
 
+def _mark_partial(m: "Manifest", patched) -> None:
+    """Sticky column-fold mode for ``m``, plus the PHYSICAL columns some
+    patch set unioned into ``patched_columns`` (written only when it
+    grows, so a table without the property keeps the all-columns fold)."""
+    m.properties["has_partial"] = True
+    prev = set(m.properties.get("patched_columns") or [])
+    if not set(patched) <= prev:
+        m.properties["patched_columns"] = sorted(prev | set(patched))
+
+
+def _era(m: "Manifest") -> tuple:
+    """A manifest's schema era: what a data file's layout depends on."""
+    p = m.properties
+    return (
+        list(m.columns), p.get("physical_names") or {},
+        p.get("rename_history") or {}, sorted(p.get("used_physical") or []),
+    )
+
+
 def _safe_dirname(s: str) -> str:
     """App ids become directory components (quarantine layout); replace
     anything path-hostile so an id like 'etl/prod' can't escape the
@@ -483,7 +502,9 @@ class SnapshotTable:
     # never rename/drop — fully backward compatible):
     #   physical_names: {logical -> physical} for columns whose stored
     #     name differs from the current logical name (rename keeps the
-    #     physical name; re-add after drop assigns "<name>__f<version>")
+    #     physical name; re-add after drop assigns "<name>__f<snapshot_id>",
+    #     the full 32-hex id of the adding commit; tables written before
+    #     that rule keep their stored "<name>__f<version>" names)
     #   used_physical:  every physical name ever assigned — consulted
     #     at add time so a re-added name gets a fresh physical column
     #     and old file data can never resurface
@@ -526,16 +547,66 @@ class SnapshotTable:
             ]
         )
 
-    def rename_columns(self, mapping: dict[str, str], ref: str = "main") -> None:
-        """RENAME COLUMN(s) ``{old: new}`` — metadata-only commit,
-        Iceberg-style: no data file is touched; the stored name stays
-        frozen and the manifest re-maps logical -> physical. Old
-        snapshots time-travel under their own names. The former name
-        joins ``rename_history`` so payloads still carrying it keep
-        landing in the renamed column. Key columns (conv_id, turn_idx)
-        are not renamable — the engine keys on them physically
-        (bucket transform, file stats, merge keys)."""
-        def mutate(m: Manifest) -> None:
+    def _evolve(self, m: Manifest, ddl: dict[str, Any]) -> bool:
+        """Apply ONE ``schema_change`` payload to ``m`` in place, in the
+        order add, widen, rename, drop (renames see the post-add
+        schema). A pure function of the manifest: apply_batch plans a
+        batch's DDL on a copy of the head and re-runs it inside the
+        batch's one commit. Raises ValueError on an invalid change;
+        returns False when nothing changed, so a DDL commit declines.
+        An added name whose physical column was ever used (dropped, or
+        the frozen storage name of a renamed column) gets the FRESH
+        physical name ``<name>__f<snapshot_id>`` of the adding commit,
+        so old file data cannot resurface; a dropped physical name is
+        retired forever (``used_physical``) — Iceberg's field-id
+        non-resurrection rule, in name form."""
+        props = m.properties
+        # working copies of the name maps, written back once at the end
+        phys = dict(props.get("physical_names") or {})
+        hist = {k: list(v) for k, v in (props.get("rename_history") or {}).items()}
+
+        def pmap() -> dict[str, str]:
+            return {n: phys.get(n, n) for n, _ in m.columns}
+
+        used = set(props.get("used_physical") or []) | set(pmap().values())
+        existing = {n for n, _ in m.columns}
+        added = [(n, t) for n, t in (ddl.get("add_columns") or {}).items() if n not in existing]
+        # snapshot ids are unique across ref chains: two refs forked at
+        # one parent never mint the same physical column
+        for n, _t in added:
+            p = n if n not in used else f"{n}__f{m.snapshot_id}"
+            if p != n:
+                phys[n] = p
+            used.add(p)
+            # a re-added name is a FRESH field: it owns its payload key
+            # and inherits no alias history
+            hist.pop(n, None)
+            for k in list(hist):
+                hist[k] = [x for x in hist[k] if x != n]
+                if not hist[k]:
+                    del hist[k]
+        m.columns = m.columns + added
+        changed = bool(added)
+
+        widen = ddl.get("widen_columns") or {}
+        unknown = set(widen) - {n for n, _ in m.columns}
+        if unknown:
+            raise ValueError(f"widen_columns: no such column(s) {sorted(unknown)}")
+        out: list[tuple[str, str]] = []
+        for n, t in m.columns:
+            want = widen.get(n)
+            if want is not None and want != t:
+                if (t, want) not in self.SAFE_WIDENINGS:
+                    raise ValueError(
+                        f"widen_columns: unsafe promotion {n}: {t} -> {want}; "
+                        f"allowed: {sorted(self.SAFE_WIDENINGS)}"
+                    )
+                t, changed = want, True
+            out.append((n, t))
+        m.columns = out
+
+        mapping = ddl.get("rename_columns") or {}
+        if mapping:
             names = {n for n, _ in m.columns}
             reserved = {S.LSN_META_COL, S.DELETED_META_COL, S.SETMASK_META_COL}
             if len(set(mapping.values())) != len(mapping):
@@ -549,13 +620,11 @@ class SnapshotTable:
                 # (swap semantics); anything else that exists collides
                 if new in (names - set(mapping)) or new in reserved:
                     raise ValueError(f"rename_columns: target name {new!r} collides")
-            pm = self._phys_map(m)
-            phys_names = dict(m.properties.get("physical_names") or {})
-            hist = {k: list(v) for k, v in (m.properties.get("rename_history") or {}).items()}
+            pm = pmap()
             # two passes so a simultaneous swap can't pop an entry the
             # other rename just wrote
             for n in mapping:
-                phys_names.pop(n, None)
+                phys.pop(n, None)
             old_hist = {n: hist.pop(n, []) for n in mapping}
             cols: list[tuple[str, str]] = []
             for n, t in m.columns:
@@ -564,7 +633,7 @@ class SnapshotTable:
                     continue
                 new = mapping[n]
                 if pm[n] != new:
-                    phys_names[new] = pm[n]
+                    phys[new] = pm[n]
                 hist[new] = [x for x in (old_hist[n] + [n]) if x != new]
                 cols.append((new, t))
             # a rename target claims its name exclusively: strip it from
@@ -577,85 +646,54 @@ class SnapshotTable:
                 if not hist[k]:
                     del hist[k]
             m.columns = cols
-            _put_nonempty(m.properties, "physical_names", phys_names)
-            _put_nonempty(m.properties, "rename_history", hist)
+            changed = True
 
-        self._commit(mutate, ref=ref, delta=_META_ONLY)
-
-    def drop_columns(self, names: list[str], ref: str = "main") -> None:
-        """DROP COLUMN(s) — metadata-only commit: data files are
-        untouched, old snapshots still read the column (time travel),
-        and the physical name is retired forever (``used_physical``) so
-        re-adding the same name creates a FRESH field whose reads can
-        never resurface old file data — the Iceberg field-id
-        non-resurrection rule, in name form."""
-        def mutate(m: Manifest) -> None:
-            have = {n for n, _ in m.columns}
-            missing = set(names) - have
+        names = ddl.get("drop_columns") or []
+        if names:
+            missing = set(names) - {n for n, _ in m.columns}
             if missing:
                 raise ValueError(f"drop_columns: no such column(s) {sorted(missing)}")
             if {"conv_id", "turn_idx"} & set(names):
                 raise ValueError("drop_columns: cannot drop key columns conv_id/turn_idx")
-            pm = self._phys_map(m)
-            used = set(m.properties.get("used_physical") or []) | set(pm.values())
-            dropped_phys = {pm[n] for n in names}
-            phys_names = {
-                k: v for k, v in (m.properties.get("physical_names") or {}).items()
-                if k not in names
-            }
-            hist = {
-                k: list(v) for k, v in (m.properties.get("rename_history") or {}).items()
-                if k not in names
-            }
-            patched = m.properties.get("patched_columns")
+            dropped_phys = {pmap()[n] for n in names}
+            phys = {k: v for k, v in phys.items() if k not in names}
+            hist = {k: v for k, v in hist.items() if k not in names}
+            patched = props.get("patched_columns")
             if patched is not None:
-                m.properties["patched_columns"] = sorted(set(patched) - dropped_phys)
+                props["patched_columns"] = sorted(set(patched) - dropped_phys)
             m.columns = [(n, t) for n, t in m.columns if n not in names]
-            m.properties["used_physical"] = sorted(used)
-            _put_nonempty(m.properties, "physical_names", phys_names)
-            _put_nonempty(m.properties, "rename_history", hist)
+            changed = True
 
-        self._commit(mutate, ref=ref, delta=_META_ONLY)
+        if added or names:
+            props["used_physical"] = sorted(used)
+        _put_nonempty(props, "physical_names", phys)
+        _put_nonempty(props, "rename_history", hist)
+        return changed
+
+    # Each public DDL method is one metadata-only commit of ``_evolve``;
+    # data files are never touched, and old snapshots time-travel under
+    # their own names.
+
+    def _ddl(self, ddl: dict[str, Any], ref: str) -> None:
+        self._commit(lambda m: self._evolve(m, ddl), ref=ref, delta=_META_ONLY)
 
     def add_columns(self, new_cols: dict[str, str], ref: str = "main") -> None:
-        """ADD COLUMN(s): metadata-only commit; existing files are read
-        with the widened schema (missing columns -> null), same as
-        Iceberg schema evolution. A name whose physical column was ever
-        used before (dropped column, or the frozen storage name of a
-        since-renamed column) gets a FRESH physical name
-        ``<name>__f<version>`` so old file data cannot resurface."""
-        def mutate(m: Manifest) -> bool | None:
-            existing = {n for n, _ in m.columns}
-            added = [(n, t) for n, t in new_cols.items() if n not in existing]
-            if not added:
-                return False
-            pm = self._phys_map(m)
-            used = set(m.properties.get("used_physical") or []) | set(pm.values())
-            phys_names = dict(m.properties.get("physical_names") or {})
-            hist = {k: list(v) for k, v in (m.properties.get("rename_history") or {}).items()}
-            # the suffix is this commit's own version: versions are
-            # globally unique across ref chains, so __f<N> is
-            # table-globally unique by construction (two refs forked at
-            # the same parent re-adding the same name can never mint
-            # the same physical column)
-            for n, _t in added:
-                phys = n if n not in used else f"{n}__f{m.version}"
-                if phys != n:
-                    phys_names[n] = phys
-                used.add(phys)
-                # a re-added name is a FRESH field: it owns its payload key
-                # and inherits no alias history
-                hist.pop(n, None)
-                for k in list(hist):
-                    hist[k] = [x for x in hist[k] if x != n]
-                    if not hist[k]:
-                        del hist[k]
-            m.columns = m.columns + added
-            m.properties["used_physical"] = sorted(used)
-            _put_nonempty(m.properties, "physical_names", phys_names)
-            _put_nonempty(m.properties, "rename_history", hist)
+        """ADD COLUMN(s); a previously used name gets a fresh physical
+        column ``<name>__f<snapshot_id>`` (see ``_evolve``)."""
+        self._ddl({"add_columns": new_cols}, ref)
 
-        self._commit(mutate, ref=ref, delta=_META_ONLY)
+    def widen_columns(self, changes: dict[str, str], ref: str = "main") -> None:
+        """WIDEN COLUMN type(s), e.g. ``{"tool_latency_ms": "long"}`` on
+        an int column; only SAFE_WIDENINGS."""
+        self._ddl({"widen_columns": changes}, ref)
+
+    def rename_columns(self, mapping: dict[str, str], ref: str = "main") -> None:
+        """RENAME COLUMN(s) ``{old: new}``; the stored name stays frozen."""
+        self._ddl({"rename_columns": mapping}, ref)
+
+    def drop_columns(self, names: list[str], ref: str = "main") -> None:
+        """DROP COLUMN(s); the physical name is retired forever."""
+        self._ddl({"drop_columns": names}, ref)
 
     # physically safe type promotions: the parquet scan upcasts these
     # natively (int32 pages read under a bigint read schema, float under
@@ -664,36 +702,6 @@ class SnapshotTable:
     # METADATA-ONLY commit and existing delta files never rewrite —
     # Iceberg's type-promotion evolution rule.
     SAFE_WIDENINGS = {("int", "long"), ("float", "double")}
-
-    def widen_columns(self, changes: dict[str, str], ref: str = "main") -> None:
-        """WIDEN COLUMN type(s), e.g. ``{"tool_latency_ms": "long"}``
-        on an int column. Refuses anything but the safe promotions
-        above — a lossy or non-upcastable change would corrupt reads of
-        files already on disk."""
-        def mutate(m: Manifest) -> bool | None:
-            names = {n for n, _ in m.columns}
-            unknown = set(changes) - names
-            if unknown:
-                raise ValueError(f"widen_columns: no such column(s) {sorted(unknown)}")
-            out: list[tuple[str, str]] = []
-            changed = False
-            for n, t in m.columns:
-                want = changes.get(n)
-                if want is None or want == t:
-                    out.append((n, t))
-                    continue
-                if (t, want) not in self.SAFE_WIDENINGS:
-                    raise ValueError(
-                        f"widen_columns: unsafe promotion {n}: {t} -> {want}; "
-                        f"allowed: {sorted(self.SAFE_WIDENINGS)}"
-                    )
-                out.append((n, want))
-                changed = True
-            if not changed:
-                return False
-            m.columns = out
-
-        self._commit(mutate, ref=ref, delta=_META_ONLY)
 
     # ------------------------------------------------------------ read
 
@@ -1099,26 +1107,46 @@ class SnapshotTable:
             os.close(fd)
             os.remove(lock)
 
-    def commit_append_deltas(
+    def _commit_batch(
         self,
         staged_dir: str | None,
         affected_buckets: list[int],
-        app_id: str,
-        batch_id: int,
-        watermarks: dict[str, int],
+        ledger: tuple[str, int, dict[str, int]],
         lineage_row: dict[str, Any],
-        ref: str = "main",
+        ref: str,
+        plan: Manifest,
+        ddl: list[dict[str, Any]],
+        patched: list[str] | None,
+        properties: dict[str, Any],
     ) -> str:
-        """Merge-on-read apply commit: APPEND the staged files to each
-        affected bucket's file list (no rewrite of existing data), then
-        commit one new snapshot carrying the batch id + offset
-        watermarks. Returns the new snapshot id. An append commutes
-        with any concurrent commit (it only adds files), so under the
-        optimistic protocol it is re-applied verbatim to the fresh
-        manifest inside the lock."""
+        """ONE snapshot per micro-batch (``apply_batch``): its DDL, its
+        partial-update flips, its files, ledger and lineage row. The
+        staged files are APPENDED (no rewrite): an append commutes with
+        any concurrent commit, so it re-applies to the fresh head.
+
+        ``plan`` is the head the batch was written against, with ``ddl``
+        (its ``schema_change`` payloads, in LSN order) already run over
+        it; its ``snapshot_id`` becomes this commit's, so fresh physical
+        names agree. The DDL re-runs on the fresh head; a schema era
+        differing from the plan's means a concurrent schema change
+        landed, and the commit raises ValueError (the adopted files are
+        left for ``gc_orphans``; re-delivery plans again). Compaction
+        never touches columns. ``patched`` (not None: the batch carried
+        partial updates) goes through ``_mark_partial``; ``properties``
+        are set verbatim (the bootstrap's ``snapshot_lsn`` fence)."""
         adopted, stats = self._adopt(staged_dir, affected_buckets)
 
         def mutate(m: Manifest) -> None:
+            for d in ddl:
+                self._evolve(m, d)
+            if _era(m) != _era(plan):
+                raise ValueError(
+                    f"batch {ledger[1]}: a concurrent schema change landed on "
+                    f"{ref!r} after the batch was planned; re-deliver it"
+                )
+            if patched is not None:
+                _mark_partial(m, patched)
+            m.properties.update(properties)
             for b, rels in adopted.items():
                 m.buckets[b] = list(m.buckets.get(b, [])) + rels
             m.properties.setdefault("file_stats", {}).update(stats)
@@ -1126,7 +1154,7 @@ class SnapshotTable:
         return self._commit(
             mutate, ref=ref, lineage=lineage_row,
             delta={"added": adopted, "stats_added": stats},
-            ledger=(app_id, batch_id, watermarks),
+            ledger=ledger, snapshot_id=plan.snapshot_id,
         )
 
     def commit_merged_buckets(
@@ -1166,10 +1194,9 @@ class SnapshotTable:
 
     def set_property(self, key: str, value: Any, ref: str = "main") -> None:
         """Commit a single table-property mutation as its own manifest
-        version (lock-serialized, data files untouched). Used for
-        durable control-plane facts that must survive restarts — e.g.
-        the bootstrap snapshot-LSN fence (`apply.bootstrap_snapshot`).
-        Only ``file_stats`` touches the delta-encoded file state."""
+        version (lock-serialized, data files untouched), for durable
+        control-plane facts that must survive restarts. Only
+        ``file_stats`` touches the delta-encoded file state."""
 
         def mutate(m: Manifest) -> None:
             m.properties[key] = value
@@ -1398,11 +1425,7 @@ class SnapshotTable:
         # or post-drop rows folding as all-NULL bases) — and the commit
         # would mark the batch committed, so replay could never repair
         # it. Schema-diverged chains need replay-from-source, not a pick.
-        src_schema = (
-            list(src.columns),
-            src.properties.get("physical_names") or {},
-            sorted(src.properties.get("used_physical") or []),
-        )
+        src_era = _era(src)
 
         def mutate(m: Manifest) -> bool | None:
             # re-check idempotence UNDER the commit lock: a concurrent
@@ -1412,12 +1435,7 @@ class SnapshotTable:
             committed = m.properties.get("committed_batches", {})
             if int(batch_id) <= int(committed.get(app_id, -1)):
                 return False
-            tgt_schema = (
-                list(m.columns),
-                m.properties.get("physical_names") or {},
-                sorted(m.properties.get("used_physical") or []),
-            )
-            if tgt_schema != src_schema:
+            if _era(m) != src_era:
                 raise ValueError(
                     f"cherry_pick: v{version} was written under a different "
                     f"schema era than {ref!r}'s head (columns/physical-name "
@@ -1432,9 +1450,7 @@ class SnapshotTable:
                 m.properties.setdefault("file_stats", {}).update(stats)
             if src_partial:
                 # physical names match: the schema-era guard above
-                m.properties["has_partial"] = True
-                prev = set(m.properties.get("patched_columns") or [])
-                m.properties["patched_columns"] = sorted(prev | src_patched)
+                _mark_partial(m, src_patched)
 
         return self._commit(
             mutate,
@@ -1595,6 +1611,7 @@ class SnapshotTable:
         lineage: dict[str, Any] | None = None,
         delta: dict | None = None,
         ledger: tuple[str, int, dict[str, int]] | None = None,
+        snapshot_id: str | None = None,
     ) -> str | None:
         """THE commit protocol — every commit after the create goes
         through here: under the commit lock, re-read ``ref``'s head
@@ -1612,13 +1629,16 @@ class SnapshotTable:
         - ``delta``: the append-only fast-path contract forwarded to
           _write_manifest (``_META_ONLY`` for commits touching no file).
         - ``ledger``: ``(app_id, batch_id, watermarks)`` of a data
-          commit, folded into the exactly-once ledger."""
+          commit, folded into the exactly-once ledger.
+        - ``snapshot_id``: the id to stamp, when the caller chose it
+          before the commit (``_commit_batch``: names minted at plan
+          time); a fresh one otherwise."""
 
         def run() -> str | None:
             m = self.manifest(ref=ref)
             parent_snapshot = m.snapshot_id
             m.parent, m.version = m.version, self._alloc_version()
-            m.snapshot_id = uuid.uuid4().hex
+            m.snapshot_id = snapshot_id or uuid.uuid4().hex
             if mutate(m) is False:
                 return None
             fs = m.properties.get("file_stats")

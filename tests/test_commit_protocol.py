@@ -72,7 +72,7 @@ def test_random_metadata_commits_keep_the_dag_well_formed(tmp_path, seed):
             t.add_columns({name: "int"}, ref=ref)
             phys = t.manifest(ref=ref).properties.get("physical_names", {})
             # a re-added name is a fresh field named after its OWN commit
-            want = f"{name}__f{head_version(t.root, ref)}" if was_used else name
+            want = f"{name}__f{t.manifest(ref=ref).snapshot_id}" if was_used else name
             assert phys.get(name, name) == want
         elif op == "add_noop":
             name = rng.choice(list(cols))

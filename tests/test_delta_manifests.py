@@ -214,18 +214,17 @@ def test_cherry_pick_refuses_schema_diverged_commit(spark, tmp_path):
     assert t.read_final().count() == 2
 
 
-def test_add_columns_fresh_physical_suffix_matches_committed_version(spark, tmp_path):
-    """ADVICE r4 #3: the __f<N> suffix of a re-added column is minted
-    from the version _alloc_version actually assigns, so it always
-    matches the committed manifest version (and is table-globally
-    unique across ref chains by construction)."""
+def test_add_columns_fresh_physical_suffix_matches_committed_snapshot_id(spark, tmp_path):
+    """The __f suffix of a re-added column is the full snapshot id of
+    the commit that adds it — known before the commit, so a batch can
+    plan the name, and table-globally unique across ref chains."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     t.add_columns({"model": "string"})
     t.drop_columns(["model"])
     t.add_columns({"model": "string"})
     m = t.manifest()
     phys = m.properties["physical_names"]["model"]
-    assert phys == f"model__f{m.version}", (phys, m.version)
+    assert phys == f"model__f{m.snapshot_id}" and len(m.snapshot_id) == 32, phys
 
 
 def test_state_cache_eviction_thread_safe(spark, tmp_path, monkeypatch):

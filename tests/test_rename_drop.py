@@ -246,3 +246,114 @@ def test_rename_drop_validation(spark, tmp_path):
     t.rename_columns({"text": "tool", "tool": "text"})
     pm = t._phys_map()
     assert pm["tool"] == "text" and pm["text"] == "tool"
+
+
+# -- one snapshot per micro-batch --------------------------------------
+
+
+def _versions(t):
+    return t._retained_versions()
+
+
+def test_batch_with_ddl_and_patches_is_one_snapshot(spark, tmp_path):
+    """A batch carrying a schema_change (add + rename) and partial
+    updates adds exactly ONE version, holding the new columns, the
+    has_partial / patched_columns flips and the batch's files."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    apply_batch(_env(spark, [(1, "insert", {"role": "user", "text": "a"})]), t, 0)
+    before = _versions(t)
+    apply_batch(
+        _env(spark, [
+            (2, "schema_change", {"add_columns": {"model": "string"},
+                                  "rename_columns": {"text": "content"}}),
+            (3, "update_partial", {"content": "b", "model": "m1"}),
+        ]),
+        t, 1,
+    )
+    after = _versions(t)
+    assert len(after) == len(before) + 1, (before, after)
+    m = t.manifest()
+    assert m.version == after[-1]
+    cols = [n for n, _ in m.columns]
+    assert "model" in cols and "content" in cols and "text" not in cols
+    assert m.properties["has_partial"] is True
+    # masks and patched_columns hold PHYSICAL names: content is stored as text
+    assert m.properties["patched_columns"] == ["model", "text"]
+    assert any(m.files_added.values())
+    assert not [r for r in m.lineage if r.get("op") == "set_property"]
+    got = _row(t)
+    assert (got["role"], got["content"], got["model"]) == ("user", "b", "m1")
+
+
+def test_crash_between_ddl_and_data_does_not_wedge_the_stream(spark, tmp_path, monkeypatch):
+    """The batch's DDL commits with its data: a crash before the data
+    lands leaves no half-applied rename, so re-delivery lands the batch."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    apply_batch(_env(spark, [(1, "insert", {"role": "user", "text": "a"})]), t, 0)
+    before = _versions(t)
+    batch = _env(spark, [
+        (2, "schema_change", {"rename_columns": {"text": "content"}}),
+        (3, "insert", {"role": "user", "content": "b"}),
+    ])
+    adopt = SnapshotTable._adopt
+    calls = []
+
+    def crash_once(self, staged_dir, buckets):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("simulated crash before the data commit")
+        return adopt(self, staged_dir, buckets)
+
+    monkeypatch.setattr(SnapshotTable, "_adopt", crash_once)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        apply_batch(batch, t, 1)
+    apply_batch(batch, t, 1)  # re-delivery
+    assert _row(t)["content"] == "b"
+    assert len(_versions(t)) == len(before) + 1
+
+
+def test_schema_changes_in_one_batch_apply_in_lsn_order(spark, tmp_path):
+    """Two schema_change rows of one batch apply by LSN, not by the
+    order the batch delivers them: the add at lsn 2 precedes the
+    rename of the added column at lsn 3."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    apply_batch(
+        _env(spark, [
+            (3, "schema_change", {"rename_columns": {"model": "engine"}}),
+            (2, "schema_change", {"add_columns": {"model": "string"}}),
+            (4, "insert", {"role": "user", "text": "a", "engine": "e1"}),
+        ]),
+        t, 0,
+    )
+    cols = [n for n, _ in t.manifest().columns]
+    assert "engine" in cols and "model" not in cols
+    assert _row(t)["engine"] == "e1"
+
+
+def test_concurrent_schema_change_aborts_the_planned_batch(spark, tmp_path, monkeypatch):
+    """A schema change landing on the ref between a batch's plan and its
+    commit aborts the batch: nothing of it is committed, and a
+    re-delivery applies under the new head."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    apply_batch(_env(spark, [(1, "insert", {"role": "user", "text": "a"})]), t, 0)
+    ledger = dict(t.manifest().properties["committed_batches"])
+    batch = _env(spark, [(2, "update", {"role": "user", "text": "b", "model": "m1"})])
+    adopt = SnapshotTable._adopt
+    adopted: list[str] = []
+
+    def adopt_then_race(self, staged_dir, buckets):
+        out, stats = adopt(self, staged_dir, buckets)
+        adopted.extend(f for fs in out.values() for f in fs)
+        self.add_columns({"model": "string"})  # the competing writer
+        return out, stats
+
+    monkeypatch.setattr(SnapshotTable, "_adopt", adopt_then_race)
+    with pytest.raises(ValueError, match="concurrent schema change"):
+        apply_batch(batch, t, 1)
+    monkeypatch.undo()
+    m = t.manifest()
+    assert m.properties["committed_batches"] == ledger
+    live = {f for fs in m.buckets.values() for f in fs}
+    assert adopted and not live & set(adopted)
+    apply_batch(batch, t, 1)  # re-delivery plans against the new head
+    assert (_row(t)["text"], _row(t)["model"]) == ("b", "m1")

@@ -311,7 +311,14 @@ def test_replica_follows_recycled_column_name(spark, tmp_path):
         _env2([(3, "update_partial", "cA", {"tool": "new-a"})]),
         a, 1, _cfg("src"),
     )
+    seen = set(b._retained_versions())
+    done = b.manifest().properties["committed_batches"]["replica"]
     replicate_stream(a, b, ckpt, apply_cfg=_cfg("replica")).awaitTermination(300)
+    # per drained batch: at most one metadata version (the drop, the
+    # re-add and the generation marker together) plus one data version
+    drained = b.manifest().properties["committed_batches"]["replica"] - done
+    added = [v for v in b._retained_versions() if v not in seen]
+    assert drained >= 1 and len(added) <= 2 * drained, (drained, added)
     src = {r["conv_id"]: r["tool"] for r in a.read_final().collect()}
     got = {r["conv_id"]: r["tool"] for r in b.read_final().collect()}
     # cB's old value is retired WITH the field on both sides
