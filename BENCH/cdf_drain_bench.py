@@ -25,6 +25,48 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def build_table(spark, root: str, n_batches: int, convs_per_batch: int, turns: int):
+    """An insert-only table of ``n_batches`` applies of
+    ``convs_per_batch`` new conversations x ``turns`` turns."""
+    from pyspark.sql import functions as F
+
+    from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
+    from audience_behavior_semantic_etl_spark.cdc.schema import ENVELOPE_SCHEMA
+    from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
+
+    table = SnapshotTable.create(spark, root, n_buckets=16)
+    cfg = ApplyConfig(app_id="cdfb", auto_compact=False, shuffle_partitions=16)
+    for b in range(n_batches):
+        lo = b * convs_per_batch
+        env = (
+            spark.range(lo * turns, (lo + convs_per_batch) * turns)
+            .select(
+                F.col("id").alias("lsn"),
+                F.timestamp_seconds(F.lit(1735689600) + F.col("id"))
+                .cast("timestamp_ntz")
+                .alias("ts"),
+                F.lit("insert").alias("op"),
+                F.format_string("c%010d", (F.col("id") / turns).cast("long")).alias(
+                    "conv_id"
+                ),
+                F.pmod(F.col("id"), F.lit(turns)).cast("int").alias("turn_idx"),
+                F.to_json(
+                    F.struct(
+                        F.lit("user").alias("role"),
+                        F.format_string("t%d", F.col("id")).alias("text"),
+                        F.lit(None).cast("string").alias("tool"),
+                        F.lit("2025-01-01T00:00:00").alias("ts"),
+                    )
+                ).alias("payload"),
+                F.lit(1).alias("schema_ver"),
+                F.lit(0).alias("source_part"),
+            )
+        )
+        assert [f.name for f in ENVELOPE_SCHEMA.fields] == env.columns
+        apply_batch(env, table, b, cfg)
+    return table
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--batches", type=int, default=8)
@@ -35,7 +77,6 @@ def main() -> int:
 
     from audience_behavior_semantic_etl_spark.session import get_spark
     from audience_behavior_semantic_etl_spark.cdc.cdf_source import TranscriptsCDF
-    from BENCH.point_lookup_bench import build_table
 
     spark = get_spark(cpus=args.cpus, shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")

@@ -46,13 +46,11 @@ def _commit_synthetic(t: SnapshotTable, n_files: int, batch_id: int) -> float:
     def mutate(m: Manifest) -> None:
         for b, fs in rels.items():
             m.buckets[b] = list(m.buckets.get(b, [])) + fs
-        m.properties.setdefault("file_stats", {}).update(stats)
+        m.file_stats.update(stats)
 
     t0 = time.perf_counter()
     t._commit(
-        mutate, lineage={"op": "probe"},
-        delta={"added": rels, "stats_added": stats},
-        ledger=("probe", batch_id, {"0": batch_id}),
+        mutate, lineage={"op": "probe"}, ledger=("probe", batch_id, {"0": batch_id})
     )
     return time.perf_counter() - t0
 

@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, functions as F
 from audience_behavior_semantic_etl_spark.cdc import schema as S
 from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
 from audience_behavior_semantic_etl_spark.cdc.cdf_source import start_cdf_foreach_batch
-from audience_behavior_semantic_etl_spark.cdc.table import _META_ONLY, Manifest, SnapshotTable
+from audience_behavior_semantic_etl_spark.cdc.table import Manifest, SnapshotTable
 
 _META = (S.LSN_META_COL, S.DELETED_META_COL, S.SETMASK_META_COL, "_commit_version")
 
@@ -334,7 +334,7 @@ def replicate_stream(
                 changed = True
             return changed
 
-        target._commit(follow, delta=_META_ONLY)
+        target._commit(follow)
         import dataclasses
 
         cfg = dataclasses.replace(base_cfg, app_id=app_id)

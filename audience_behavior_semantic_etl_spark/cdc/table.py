@@ -53,6 +53,7 @@ import shutil
 import threading
 import time
 import uuid
+from collections import ChainMap
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -146,15 +147,19 @@ def _safe_dirname(s: str) -> str:
 #
 #   - the commit's own file DELTA vs its parent (``files.added`` /
 #     ``files.removed`` / ``files.stats_added`` / ``files.stats_removed``)
-#     — O(batch), which is what an append costs in data too;
+#     — O(batch), which is what an append costs in data too. No caller
+#     states it: ``_write_manifest`` derives it from the mutated
+#     manifest and the parent state, the way Iceberg derives a
+#     snapshot's added/removed files from its operation;
 #   - every ROLLUP_EVERY commits (and on every create / rewrite /
 #     rebucket, whose data cost is O(live) anyway) an inline FULL
 #     snapshot (``files.full``) — the manifest-list rollup that bounds
 #     reconstruction walks to ROLLUP_EVERY hops;
 #   - schema + properties (watermarks, exactly-once ledger, tags,
 #     physical-name maps) in full — all O(apps + parts + refs), never
-#     O(files); ``file_stats`` is the one O(files) property and is
-#     delta-encoded with the file lists, re-attached on read;
+#     O(files). Per-file key ranges are FILE state (``Manifest.file_stats``,
+#     the DataFile lower/upper-bounds analog), not a property: a range
+#     is written by the commit that adds its file and leaves with it;
 #   - the lineage audit log, capped at LINEAGE_CAP most-recent rows
 #     (older rows age out of the carried log; the retained commit chain
 #     itself — snapshots_df/history_df — is the full history surface).
@@ -192,9 +197,6 @@ def _cache_put(key: tuple[str, int], val: tuple) -> None:
         _STATE_CACHE[key] = val
 ROLLUP_EVERY = 32
 LINEAGE_CAP = 256
-# the delta contract for commits that touch no data file (DDL, tags):
-# parent file state carries over verbatim
-_META_ONLY: dict = {"added": {}, "stats_added": {}}
 
 
 @dataclass
@@ -205,6 +207,9 @@ class Manifest:
     columns: list[tuple[str, str]]  # (name, type_name)
     n_buckets: int
     buckets: dict[str, list[str]]  # bucket id (str) -> relative file paths
+    # relative file path -> [min, max] conv_id of that live file; files
+    # without an entry have no usable footer stats and are always read
+    file_stats: dict[str, list[str]] = field(default_factory=dict)
     properties: dict[str, Any] = field(default_factory=dict)
     lineage: list[dict[str, Any]] = field(default_factory=list)
     # this commit's OWN file delta, populated on read from the stored
@@ -258,25 +263,32 @@ class SnapshotTable:
         (delta chain folded onto the nearest full base — cached, see
         module notes) as fresh mutable copies: callers mutate it freely
         without touching the cache."""
+        m = self._frozen_manifest(version, ref)
+        m.buckets = {b: list(fs) for b, fs in m.buckets.items()}
+        m.file_stats = dict(m.file_stats.maps[-1])
+        return m
+
+    def _frozen_manifest(self, version: int | None, ref: str) -> Manifest:
+        """``manifest()`` over the cached state without copying it — what
+        ``_commit`` hands ``mutate``: each bucket entry is the state's
+        frozen tuple, so an untouched bucket is recognized by identity,
+        and ``file_stats`` is a write overlay on the state's map (reads
+        fall through; writes stay in the overlay), so a commit copies no
+        O(live-files) map."""
         if version is None:
             version = head_version(self.root, ref)
         d = read_manifest(self.root, version)
         buckets, stats, _depth = self._state(version, d)
         files = d["files"]
-        props = dict(d["properties"])
-        if stats:
-            # entry values SHARED with the cache (consumers index or
-            # replace entries, never mutate one in place); the dict
-            # itself is fresh so key-level mutation stays caller-local
-            props["file_stats"] = dict(stats)
         return Manifest(
             version=d["version"],
             snapshot_id=d["snapshot_id"],
             parent=d["parent"],
             columns=[tuple(c) for c in d["columns"]],
             n_buckets=d["n_buckets"],
-            buckets={b: list(fs) for b, fs in buckets.items()},
-            properties=props,
+            buckets=dict(buckets),
+            file_stats=ChainMap({}, stats),
+            properties=dict(d["properties"]),
             lineage=list(d.get("lineage", [])),
             files_added={b: list(fs) for b, fs in files.get("added", {}).items()},
             files_removed=list(files.get("removed", [])),
@@ -381,66 +393,63 @@ class SnapshotTable:
             pass
         return max(vs[-1] if vs else -1, hwm) + 1
 
-    def _write_manifest(
-        self, m: Manifest, ref: str = "main", delta: dict | None = None
-    ) -> None:
+    def _write_manifest(self, m: Manifest, ref: str = "main") -> None:
         """Write-manifest-last atomic commit; advances ``ref``'s head.
         Called by ``_commit`` only (and by ``create`` for v0).
         Stamps the commit wall-clock (``committed_at``) — manifests are
         write-once, so the stamp is the commit time, and age-based
         retention (gc_orphans ``max_age_seconds``) reads it back.
 
-        Serializes the commit as a DELTA vs its parent's reconstructed
-        state (O(batch) metadata per append) unless the commit removes
-        files (compaction / purge / rebucket — their data cost is
-        O(live) anyway), is the create commit, or the delta chain hit
-        ROLLUP_EVERY — those write an inline full snapshot that resets
-        the reconstruction walk.
-
-        ``delta`` is the HOT-PATH contract: an append-only caller that
-        knows exactly what it changed passes
-        ``{"added": {bucket: [paths]}, "stats_added": {path: [lo,hi]}}``
-        (both may be empty for metadata-only commits) and the
-        O(live-files) full-state diff is skipped entirely — per-commit
-        metadata work is then O(batch). Callers whose change is not a
-        pure append (rollback, rebucket, compaction, set_property on
-        file_stats) pass None and pay the diff."""
+        Stores the commit's FILE DELTA, derived here from ``m`` and its
+        parent's state: per bucket the files added and removed, plus the
+        key ranges of exactly those files — an added file's range comes
+        from ``m.file_stats``, a removed file's leaves with it. A bucket
+        whose entry is still the parent state's own tuple (what
+        ``_commit`` handed ``mutate``) is skipped by identity, and an
+        appended bucket is a prefix compare, so the work per commit is
+        O(n_buckets + changed files) on top of C-level copies. A commit
+        that removes files (compaction / purge / rebucket — their data
+        cost is O(live) anyway), the create commit, and every
+        ROLLUP_EVERY-th chain hop also write an inline full snapshot
+        that resets the reconstruction walk."""
         m.properties["committed_at"] = time.time()
         if len(m.lineage) > LINEAGE_CAP:
             m.lineage = m.lineage[-LINEAGE_CAP:]
-        m_stats = m.properties.get("file_stats") or {}
-        if m.parent is None:
-            pdepth = -1
-        else:
-            pdepth = self._state(m.parent)[2]
-        if delta is not None and m.parent is not None:
-            added = {b: list(fs) for b, fs in delta.get("added", {}).items()}
-            removed: list[str] = []
-            stats_added = {k: list(v) for k, v in delta.get("stats_added", {}).items()}
-            stats_removed: list[str] = []
-        else:
-            pbuckets, pstats, _ = (
-                self._state(m.parent) if m.parent is not None else ({}, {}, -1)
-            )
-            added = {}
-            removed = []
-            for b, fs in m.buckets.items():
-                pf = pbuckets.get(b, ())
-                pfset = set(pf)
-                add = [f for f in fs if f not in pfset]
-                if add or b not in pbuckets:
-                    added[b] = add
-                fsset = set(fs)
-                removed.extend(f for f in pf if f not in fsset)
-            removed.extend(
-                f for b, pf in pbuckets.items() if b not in m.buckets for f in pf
-            )
-            stats_added = {}
-            for k, v in m_stats.items():
-                pv = pstats.get(k)
-                if pv is None or pv[0] != v[0] or pv[1] != v[1]:
-                    stats_added[k] = list(v)
-            stats_removed = [k for k in pstats if k not in m_stats]
+        pbuckets, pstats, pdepth = (
+            self._state(m.parent) if m.parent is not None else ({}, {}, -1)
+        )
+        buckets: dict[str, tuple] = {}
+        added: dict[str, list[str]] = {}
+        removed: list[str] = []
+        for b, fs in m.buckets.items():
+            pf = pbuckets.get(b)
+            if fs is pf:
+                buckets[b] = pf
+                continue
+            pf, fs = pf or (), tuple(fs)
+            buckets[b] = fs
+            if fs[: len(pf)] == pf:  # an append: the common case
+                add = list(fs[len(pf):])
+            else:
+                old, new = set(pf), set(fs)
+                add = [f for f in fs if f not in old]
+                removed.extend(f for f in pf if f not in new)
+            if add or b not in pbuckets:
+                added[b] = add
+        removed.extend(
+            f for b, pf in pbuckets.items() if b not in m.buckets for f in pf
+        )
+        stats_added = {
+            f: list(m.file_stats[f])
+            for fs in added.values() for f in fs if f in m.file_stats
+        }
+        stats_removed = [f for f in removed if f in pstats]
+        stats = pstats
+        if stats_added or stats_removed:
+            stats = dict(pstats)
+            for f in stats_removed:
+                stats.pop(f, None)
+            stats.update(stats_added)
         full = m.parent is None or bool(removed) or pdepth + 1 >= ROLLUP_EVERY
         d = {
             "version": m.version,
@@ -448,42 +457,19 @@ class SnapshotTable:
             "parent": m.parent,
             "columns": [list(c) for c in m.columns],
             "n_buckets": m.n_buckets,
-            "properties": {
-                k: v for k, v in m.properties.items() if k != "file_stats"
-            },
+            "properties": m.properties,
             "lineage": m.lineage,
             "files": {
                 "added": added,
                 "removed": removed,
                 "stats_added": stats_added,
                 "stats_removed": stats_removed,
-                "full": (
-                    {"buckets": m.buckets, "stats": m_stats} if full else None
-                ),
+                "full": {"buckets": buckets, "stats": stats} if full else None,
             },
         }
         commits.atomic_write(os.path.join(self.root, "_version_seq"), str(m.version))
         commits.write_manifest(self.root, m.version, d)
-        if delta is not None and m.parent is not None and not full:
-            # hot path: derive the cached state from the parent's frozen
-            # state + the delta — unchanged bucket tuples are SHARED
-            # across versions, so caching a commit is O(batch), too
-            pb, ps, _ = self._state(m.parent)
-            nb = dict(pb)
-            for b, fs in added.items():
-                nb[b] = nb.get(b, ()) + tuple(fs)
-            ns = dict(ps)
-            ns.update(stats_added)
-            _cache_put((self.root, m.version), (nb, ns, pdepth + 1))
-        else:
-            _cache_put(
-                (self.root, m.version),
-                (
-                    {b: tuple(fs) for b, fs in m.buckets.items()},
-                    {k: list(v) for k, v in m_stats.items()},
-                    0 if full else pdepth + 1,
-                ),
-            )
+        _cache_put((self.root, m.version), (buckets, stats, 0 if full else pdepth + 1))
         commits.set_head(self.root, ref, m.version)
 
     # ------------------------------------------------------------ schema
@@ -675,7 +661,7 @@ class SnapshotTable:
     # their own names.
 
     def _ddl(self, ddl: dict[str, Any], ref: str) -> None:
-        self._commit(lambda m: self._evolve(m, ddl), ref=ref, delta=_META_ONLY)
+        self._commit(lambda m: self._evolve(m, ddl), ref=ref)
 
     def add_columns(self, new_cols: dict[str, str], ref: str = "main") -> None:
         """ADD COLUMN(s); a previously used name gets a fresh physical
@@ -804,7 +790,7 @@ class SnapshotTable:
 
         1. bucket transform — the Iceberg bucket-partition-pruning
            story: the scan is O(one bucket), not O(table);
-        2. per-file conv_id min/max ranges (``file_stats`` property,
+        2. per-file conv_id min/max ranges (``Manifest.file_stats``,
            the Iceberg DataFile lower/upper-bounds analog) — delta
            files are written sorted by conv_id, and the transcript
            workload creates conversations over time, so a bucket's
@@ -822,7 +808,7 @@ class SnapshotTable:
             .select(bucket_expr(F.lit(conv_id), m.n_buckets).alias("b"))
             .collect()[0]["b"]
         )
-        stats = m.properties.get("file_stats") or {}
+        stats = m.file_stats
         rels = [
             r
             for r in m.buckets.get(str(int(b)), [])
@@ -1149,27 +1135,25 @@ class SnapshotTable:
             m.properties.update(properties)
             for b, rels in adopted.items():
                 m.buckets[b] = list(m.buckets.get(b, [])) + rels
-            m.properties.setdefault("file_stats", {}).update(stats)
+            m.file_stats.update(stats)
 
         return self._commit(
-            mutate, ref=ref, lineage=lineage_row,
-            delta={"added": adopted, "stats_added": stats},
-            ledger=ledger, snapshot_id=plan.snapshot_id,
+            mutate, ref=ref, lineage=lineage_row, ledger=ledger,
+            snapshot_id=plan.snapshot_id,
         )
 
     def commit_merged_buckets(
         self,
         staged_dir: str | None,
         affected_buckets: list[int],
-        app_id: str,
-        batch_id: int,
-        watermarks: dict[str, int],
         lineage_row: dict[str, Any],
         base_buckets: dict[str, list[str]] | None = None,
         ref: str = "main",
     ) -> str:
         """Compaction-style commit: REPLACE each affected bucket's file
         list with the staged (resolved) files. Returns the snapshot id.
+        A rewrite lands no batch, so the exactly-once ledger and the
+        watermarks are left alone.
 
         Concurrency (the Iceberg rewrite-vs-append conflict rule):
         ``base_buckets`` is the file set the compaction READ. Inside the
@@ -1186,17 +1170,14 @@ class SnapshotTable:
                 known = set(base.get(b, m.buckets.get(b, [])))
                 appended_since = [f for f in m.buckets.get(b, []) if f not in known]
                 m.buckets[b] = rels + appended_since
-            m.properties.setdefault("file_stats", {}).update(stats)
+            m.file_stats.update(stats)
 
-        return self._commit(
-            mutate, ref=ref, lineage=lineage_row, ledger=(app_id, batch_id, watermarks)
-        )
+        return self._commit(mutate, ref=ref, lineage=lineage_row)
 
     def set_property(self, key: str, value: Any, ref: str = "main") -> None:
         """Commit a single table-property mutation as its own manifest
         version (lock-serialized, data files untouched), for durable
-        control-plane facts that must survive restarts. Only
-        ``file_stats`` touches the delta-encoded file state."""
+        control-plane facts that must survive restarts."""
 
         def mutate(m: Manifest) -> None:
             m.properties[key] = value
@@ -1204,9 +1185,7 @@ class SnapshotTable:
                 {"op": "set_property", "key": key, "snapshot_id": m.snapshot_id}
             )
 
-        self._commit(
-            mutate, ref=ref, delta=None if key == "file_stats" else _META_ONLY
-        )
+        self._commit(mutate, ref=ref)
 
     # ------------------------------------------------------------ tags
 
@@ -1238,7 +1217,7 @@ class SnapshotTable:
                  "snapshot_id": m.snapshot_id}
             )
 
-        self._commit(mutate, delta=_META_ONLY)
+        self._commit(mutate)
         return pinned
 
     def drop_tag(self, name: str) -> None:
@@ -1254,7 +1233,7 @@ class SnapshotTable:
                 {"op": "drop_tag", "tag": name, "snapshot_id": m.snapshot_id}
             )
 
-        self._commit(mutate, delta=_META_ONLY)
+        self._commit(mutate)
 
     def tags(self) -> dict[str, int]:
         return dict(self.manifest().properties.get("tags", {}))
@@ -1411,11 +1390,7 @@ class SnapshotTable:
         src_wm = src.properties.get("watermarks", {})
         par_wm = par.properties.get("watermarks", {})
         wm_delta = {p: int(l) for p, l in src_wm.items() if par_wm.get(p) != l}
-        added_flat = set(added)
-        stats = {
-            f: v for f, v in (src.properties.get("file_stats") or {}).items()
-            if f in added_flat
-        }
+        stats = {f: src.file_stats[f] for f in added if f in src.file_stats}
         src_partial = bool(src.properties.get("has_partial"))
         src_patched = set(src.properties.get("patched_columns") or [])
         # schema-era facts of the SOURCE commit, compared against the
@@ -1446,8 +1421,7 @@ class SnapshotTable:
                 m.buckets[b] = list(m.buckets.get(b, [])) + [
                     r for r in rels if r not in have
                 ]
-            if stats:
-                m.properties.setdefault("file_stats", {}).update(stats)
+            m.file_stats.update(stats)
             if src_partial:
                 # physical names match: the schema-era guard above
                 _mark_partial(m, src_patched)
@@ -1592,7 +1566,8 @@ class SnapshotTable:
                 )
             tgt = self.manifest(v)
             tags = m.properties.get("tags")
-            m.columns, m.n_buckets, m.buckets = tgt.columns, tgt.n_buckets, tgt.buckets
+            m.columns, m.n_buckets = tgt.columns, tgt.n_buckets
+            m.buckets, m.file_stats = tgt.buckets, tgt.file_stats
             m.properties, m.lineage = tgt.properties, tgt.lineage
             if tags:
                 m.properties["tags"] = tags
@@ -1609,7 +1584,6 @@ class SnapshotTable:
         mutate,
         ref: str = "main",
         lineage: dict[str, Any] | None = None,
-        delta: dict | None = None,
         ledger: tuple[str, int, dict[str, int]] | None = None,
         snapshot_id: str | None = None,
     ) -> str | None:
@@ -1621,13 +1595,18 @@ class SnapshotTable:
         (apply vs async compaction) therefore never clobber each
         other's versions. Returns the new snapshot id.
 
+        A commit states only its mutation: ``_write_manifest`` derives
+        the stored file delta from ``m`` and the head. ``m.buckets``
+        arrives holding the head state's frozen tuples; ``mutate``
+        REPLACES an entry to change a bucket (never edits one in place),
+        and records the key ranges of the files it adds in
+        ``m.file_stats``.
+
         - ``mutate`` returning False DECLINES (no-op DDL, a batch the
           ledger already holds): nothing is written, no version number
           is used, and None is returned.
         - ``lineage``: a row appended with the new and parent snapshot
           ids.
-        - ``delta``: the append-only fast-path contract forwarded to
-          _write_manifest (``_META_ONLY`` for commits touching no file).
         - ``ledger``: ``(app_id, batch_id, watermarks)`` of a data
           commit, folded into the exactly-once ledger.
         - ``snapshot_id``: the id to stamp, when the caller chose it
@@ -1635,22 +1614,12 @@ class SnapshotTable:
           time); a fresh one otherwise."""
 
         def run() -> str | None:
-            m = self.manifest(ref=ref)
+            m = self._frozen_manifest(None, ref)
             parent_snapshot = m.snapshot_id
             m.parent, m.version = m.version, self._alloc_version()
             m.snapshot_id = snapshot_id or uuid.uuid4().hex
             if mutate(m) is False:
                 return None
-            fs = m.properties.get("file_stats")
-            if fs and delta is None:
-                # stats live and die with the files they describe; a
-                # rewriting commit (compaction/purge) drops the entries
-                # of the files it removed. Old versions keep their own
-                # copies — time travel prunes with era-correct stats.
-                # Append-only (delta) commits remove nothing, so the
-                # O(live-files) prune is skipped on the hot path.
-                live = {f for fls in m.buckets.values() for f in fls}
-                m.properties["file_stats"] = {k: v for k, v in fs.items() if k in live}
             if ledger is not None:
                 app_id, batch_id, watermarks = ledger
                 wm = m.properties.setdefault("watermarks", {})
@@ -1666,7 +1635,7 @@ class SnapshotTable:
                     {**lineage, "snapshot_id": m.snapshot_id,
                      "parent_snapshot": parent_snapshot}
                 )
-            self._write_manifest(m, ref=ref, delta=delta)
+            self._write_manifest(m, ref=ref)
             return m.snapshot_id
 
         return self._with_commit_lock(run)
@@ -1734,9 +1703,6 @@ class SnapshotTable:
         return self.commit_merged_buckets(
             staged_dir=staged,
             affected_buckets=buckets,
-            app_id="__maintenance__",
-            batch_id=int(m.properties.get("committed_batches", {}).get("__maintenance__", -1)) + 1,
-            watermarks={},
             lineage_row={
                 "op": "compact",
                 "buckets": len(buckets),
@@ -1832,8 +1798,7 @@ class SnapshotTable:
                 )
             m.n_buckets = new_n_buckets
             m.buckets = {b: rels for b, rels in adopted.items() if rels}
-            # full rewrite: the stats map is exactly the new files'
-            m.properties["file_stats"] = stats
+            m.file_stats.update(stats)
 
         return self._commit(
             mutate,
@@ -2060,8 +2025,8 @@ class SnapshotTable:
     def files_df(self, version: int | None = None) -> DataFrame:
         """Live data-file inventory of a version (default current):
         bucket, path, on-disk size, and the per-file key range when
-        commit-time footer stats were recorded (file_stats — the
-        DataFile lower/upper-bounds analog; NULL for stat-less files,
+        commit-time footer stats were recorded (``Manifest.file_stats`` —
+        the DataFile lower/upper-bounds analog; NULL for stat-less files,
         which readers always scan)."""
         schema = T.StructType([
             T.StructField("bucket", T.LongType()),
@@ -2071,7 +2036,7 @@ class SnapshotTable:
             T.StructField("key_max", T.StringType()),
         ])
         m = self.manifest(version)
-        stats = m.properties.get("file_stats") or {}
+        stats = m.file_stats
         rows = []
         for b, fs in m.buckets.items():
             for rel in fs:

@@ -283,7 +283,7 @@ def test_crash_between_manifest_and_pointer_swap(spark, tmp_path):
         "parent": m.version,
         "columns": [list(c) for c in m.columns],
         "n_buckets": m.n_buckets,
-        "properties": {k: v for k, v in m.properties.items() if k != "file_stats"},
+        "properties": m.properties,
         "lineage": [],
         # would-be "emptied" table
         "files": {"added": {}, "removed": [], "stats_added": {}, "stats_removed": [],
@@ -424,8 +424,8 @@ def test_compaction_append_conflict_keeps_concurrent_rows(spark, tmp_path):
     apply_batch(_envelope_df(spark, _mk_events([(3, "update", "C")])), table, 2)
 
     table.commit_merged_buckets(
-        staged_dir=staged, affected_buckets=[0], app_id="__maintenance__",
-        batch_id=0, watermarks={}, lineage_row={"op": "compact"}, base_buckets=base,
+        staged_dir=staged, affected_buckets=[0], lineage_row={"op": "compact"},
+        base_buckets=base,
     )
     got = table.read_final().toPandas()
     assert list(got["text"]) == ["C"], "concurrent append lost by compaction swap"
@@ -1286,7 +1286,7 @@ def test_file_stats_prune_point_lookup(spark, tmp_path):
     )
     m = t.manifest()
     all_files = [f for fs in m.buckets.values() for f in fs]
-    stats = m.properties.get("file_stats", {})
+    stats = m.file_stats
     assert set(stats) == set(all_files), "every adopted file gets stats"
     for lo, hi in stats.values():
         assert lo <= hi
@@ -1312,22 +1312,29 @@ def open_stats_range(stats, rel):
     return lo + hi
 
 
-def test_file_stats_missing_admits_and_compaction_prunes_stale(spark, tmp_path):
+def test_file_stats_missing_admits_and_compaction_prunes_stale(
+    spark, tmp_path, monkeypatch
+):
     """A file with no stats entry is always read (pruning is
-    correctness-safe), and a rewriting commit drops the removed files'
-    stale entries while recording the rewritten file's own."""
+    correctness-safe), and a rewriting commit records exactly the live
+    files' ranges. Compaction lands no batch: the ledger is unchanged."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=1)
-    apply_batch(
-        _envelope_df(spark, _mk_conv_events([(1, "aaa", "A")])), t, 0)
-    apply_batch(
-        _envelope_df(spark, _mk_conv_events([(2, "zzz", "Z")])), t, 1)
-    # wipe the stats map -> lookups must still see everything
-    t.set_property("file_stats", {})
+    # stat-less files (a writer whose footers carry no usable stats)
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotTable, "_collect_file_stats", lambda self, rels: {})
+        apply_batch(
+            _envelope_df(spark, _mk_conv_events([(1, "aaa", "A")])), t, 0)
+        apply_batch(
+            _envelope_df(spark, _mk_conv_events([(2, "zzz", "Z")])), t, 1)
+    assert t.manifest().file_stats == {}
+    # no stats -> lookups must still see everything
     assert [r["text"] for r in t.read_key("zzz").collect()] == ["Z"]
+    ledger = dict(t.manifest().properties["committed_batches"])
     t.compact_buckets([0])
     m = t.manifest()
+    assert m.properties["committed_batches"] == ledger
     ref = {f for fs in m.buckets.values() for f in fs}
-    stats = m.properties.get("file_stats", {})
+    stats = m.file_stats
     assert set(stats) == ref, "post-compaction stats == exactly the live files"
     assert stats[next(iter(ref))] == ["aaa", "zzz"]
     assert [r["text"] for r in t.read_key("aaa").collect()] == ["A"]
@@ -1345,13 +1352,13 @@ def test_file_stats_time_travel_era_correct(spark, tmp_path):
     )
     v_old = t.manifest().version
     t.rebucket(4)
-    assert set(t.manifest(v_old).properties.get("file_stats", {})) == {
+    assert set(t.manifest(v_old).file_stats) == {
         f for fs in t.manifest(v_old).buckets.values() for f in fs
     }
     assert [r["text"] for r in t.read_key("c-003", version=v_old).collect()] == ["t3"]
     assert [r["text"] for r in t.read_key("c-003").collect()] == ["t3"]
     m = t.manifest()
-    assert set(m.properties["file_stats"]) == {
+    assert set(m.file_stats) == {
         f for fs in m.buckets.values() for f in fs
     }
 

@@ -134,3 +134,110 @@ def test_random_metadata_commits_keep_the_dag_well_formed(tmp_path, seed):
         assert all(
             f.endswith(".json") for f in os.listdir(os.path.join(t.root, "_manifests"))
         )
+
+
+def test_data_commits_store_exactly_their_file_delta(tmp_path):
+    """Data commits state only their mutation: the stored ``files``
+    section (added / removed files and their key ranges) is derived by
+    the commit itself. Appends with stats, a bucket rewrite that removes
+    files, a metadata commit and a rollback across them must each store
+    exactly the in-test model's delta, and every version must
+    reconstruct to the model's ``buckets`` and ``file_stats`` — from the
+    state cache and again from disk alone."""
+    from audience_behavior_semantic_etl_spark.cdc import table as table_mod
+
+    t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=4)
+    model: dict[int, tuple[dict, dict]] = {0: ({}, {})}
+    names = itertools.count()
+
+    def files(n: int) -> list[str]:
+        return [f"data/f-{next(names):04d}.parquet" for _ in range(n)]
+
+    def check_all() -> None:
+        for v, (buckets, stats) in model.items():
+            m = t.manifest(v)
+            assert m.buckets == buckets, v
+            assert m.file_stats == stats, v
+
+    def step(kind: str, commit, added: list[str], removed: list[str],
+             shares: bool = True) -> int:
+        """Run ``commit`` (returns the model's new state) and check it."""
+        pv = head_version(t.root)
+        pbuckets, pstats = model[pv]
+        buckets, stats = commit({b: list(fs) for b, fs in pbuckets.items()}, dict(pstats))
+        v = head_version(t.root)
+        assert v > pv
+        model[v] = (buckets, stats)
+        d = read_manifest(t.root, v)
+        got_kind, got_added, got_removed = commit_kind(d["files"], d["parent"])
+        assert (got_kind, sorted(got_added), sorted(got_removed)) == (
+            kind, sorted(added), sorted(removed)
+        )
+        assert d["files"]["stats_added"] == {f: stats[f] for f in added if f in stats}
+        assert sorted(d["files"]["stats_removed"]) == sorted(
+            f for f in removed if f in pstats
+        )
+        # a bucket the commit did not touch stays SHARED with the
+        # parent's cached state: the commit diffed only what changed
+        for b in pbuckets.keys() & buckets.keys() if shares else ():
+            if pbuckets[b] == buckets[b]:
+                assert t._state(v)[0][b] is t._state(pv)[0][b], (v, b)
+        check_all()
+        table_mod._STATE_CACHE.clear()
+        check_all()
+        return v
+
+    def append(adds: dict[str, list[str]], ranges: dict[str, list[str]], batch: int):
+        def commit(buckets, stats):
+            def mutate(m):
+                for b, rels in adds.items():
+                    m.buckets[b] = list(m.buckets.get(b, [])) + rels
+                m.file_stats.update(ranges)
+
+            t._commit(mutate, lineage={"op": "append"}, ledger=("app", batch, {"0": batch}))
+            for b, rels in adds.items():
+                buckets[b] = buckets.get(b, []) + rels
+            stats.update(ranges)
+            return buckets, stats
+
+        return step("append", commit, [f for rels in adds.values() for f in rels], [])
+
+    a0, a1, a2 = files(2), files(1), files(1)  # a2[0] carries no range
+    v1 = append(
+        {"0": a0, "1": a1, "2": a2},
+        {a0[0]: ["a", "c"], a0[1]: ["d", "f"], a1[0]: ["b", "b"]},
+        0,
+    )
+    b0 = files(1)
+    append({"0": b0}, {b0[0]: ["g", "k"]}, 1)
+
+    # bucket rewrite: bucket 0's three files fold into one
+    c0 = files(1)
+
+    def rewrite(buckets, stats):
+        def mutate(m):
+            m.buckets["0"] = list(c0)
+            m.file_stats.update({c0[0]: ["a", "k"]})
+
+        t._commit(mutate, lineage={"op": "compact"})
+        for f in buckets["0"]:
+            stats.pop(f, None)
+        buckets["0"] = list(c0)
+        stats[c0[0]] = ["a", "k"]
+        return buckets, stats
+
+    step("rewrite", rewrite, c0, a0 + b0)
+
+    def prop(buckets, stats):
+        t.set_property("owner", "x")
+        return buckets, stats
+
+    step("metadata", prop, [], [])
+
+    def rollback(buckets, stats):
+        t.rollback(v1)
+        return {b: list(fs) for b, fs in model[v1][0].items()}, dict(model[v1][1])
+
+    # a rollback restates every bucket from its target
+    step("rewrite", rollback, a0, c0, shares=False)
+    assert t.manifest().properties["committed_batches"] == {"app": 0}

@@ -98,7 +98,7 @@ def test_appends_store_deltas_with_periodic_rollup(spark, tmp_path):
     # every live file (footer stats recorded at adoption)
     m = t.manifest()
     live = {f for fs in m.buckets.values() for f in fs}
-    assert set(m.properties.get("file_stats", {})) == live
+    assert set(m.file_stats) == live
 
 
 def test_reconstruction_survives_cache_eviction(spark, tmp_path):
