@@ -1087,7 +1087,7 @@ def q_cdc_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert apply_batch(  # whole-batch re-delivery no-ops
         tail.filter(F.pmod(F.col("lsn"), F.lit(2)) == 0), table, 0, cfg
     ).skipped
-    final = table.read(with_deleted=True)
+    final = table.read()
     return final.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).select(
         "conv_id", "turn_idx", "text", F.col("_lsn").cast("long").alias("lsn")
     )

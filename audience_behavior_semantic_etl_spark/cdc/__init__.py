@@ -1,26 +1,26 @@
 """CDC / incremental-ingest engine (BASELINE.json north_star).
 
-WAL-style change events (insert/update/delete/schema_change envelopes
-keyed by ``(conv_id, turn_idx)``) are applied to a snapshot-committed
-transcripts table via Structured Streaming ``foreachBatch``:
+WAL-style change events (insert/update/update_partial/delete/
+schema_change envelopes keyed by ``(conv_id, turn_idx)``) reach
+``apply.apply_batch`` through Structured Streaming ``foreachBatch``
+(``stream.run_wal_stream``). A batch is stats-scanned, pre-collapsed
+per key only when churn is high, shuffled by bucket (hot keys salted),
+normalized JVM-side and APPENDED as per-bucket delta files of the
+snapshot table (``table.SnapshotTable``, merge-on-read); ONE snapshot
+commit carries its DDL, files, exactly-once ledger, LSN watermarks
+and lineage row, so a re-delivered batch no-ops and a full replay
+converges to the identical table.
 
-    normalize (Arrow pandas-UDF payload canonicalizers)
-      -> LWW dedup by (lsn desc, ts desc) via row_number window
-      -> hot-key salted repartition
-      -> MERGE into bucketed table (anti-join + rewrite touched buckets)
-      -> atomic snapshot commit carrying the batch id + offset range
+Last-writer-wins is resolved at READ time: each reader resolves one
+manifest and keeps the max-``_lsn`` version per key, or folds
+partial-update set-masks per column once the table has seen one.
+``compact_buckets`` folds delta files back; ``rebucket`` changes the
+bucket count. ``read_changes``, the ``cdf_source`` stream,
+``incremental.IncrementalView`` and ``replicate`` consume the table's
+changes downstream.
 
-Exactly-once: the committed stream batch id and per-source-partition
-LSN watermarks live inside the table snapshot, so a killed-and-resumed
-job re-delivers a batch and the engine no-ops it; replaying the whole
-log converges to the identical final table.
-
-The table layer is an Iceberg-shaped fallback (parquet + JSON manifest
-with atomic pointer swap) because no Iceberg runtime jar ships in this
-environment; the public API (`Table.merge_batch`, snapshot properties,
-ADD COLUMN) mirrors what an Iceberg-backed implementation would expose,
-so swapping in `MERGE INTO` on a real cluster is a sink change, not an
-engine change. This mirrors how the reference persists cubes as
-Hive-partitioned parquet steps (reference ETLProcess.scala:111-128) —
-minus its coalesce(1) single-file anti-pattern.
+The table is an Iceberg-shaped stand-in (parquet files plus one JSON
+manifest per commit and an atomic pointer swap, ``commits``) because
+no Iceberg runtime jar ships in this environment; swapping in Iceberg
+merge-on-read on a real cluster is a sink change, not an engine change.
 """

@@ -20,7 +20,7 @@ operator chain (SURVEY.md §7.1):
   ``groupBy(key).agg(max_by(struct, lsn))`` pre-collapse pays for
   itself by shrinking the normalize+write volume (a key with 10^6
   in-batch updates ships one row per map partition thanks to partial
-  aggregation). The window form stays available as ``lww_dedup``.
+  aggregation).
 - normalize        ≈ reference flatten/rename/case/enrich (§2.2/2.8/2.9)
   as a JVM-side projection placed AFTER the bucket shuffle: ONE
   ``from_json`` per row -> coalesce over the dotted flatten paths ->
@@ -64,7 +64,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql import types as T
 
 from audience_behavior_semantic_etl_spark.cdc import schema as S
@@ -337,15 +337,6 @@ def normalize_envelope(
     return data.select(parsed, "*").select(
         *out_cols, malformed.alias("__malformed"), *[F.col(c) for c in passthrough]
     )
-
-
-def lww_dedup(events: DataFrame) -> DataFrame:
-    """Deterministic last-writer-wins within a DataFrame: one survivor
-    per (conv_id, turn_idx) by (lsn desc). Window form, exposed for
-    direct use; the batch apply uses the equivalent max_by aggregate
-    (partial-aggregation-friendly) when churn warrants it."""
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(F.col("lsn").desc())
-    return events.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 @dataclass

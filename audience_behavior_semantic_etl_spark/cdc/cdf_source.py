@@ -30,6 +30,11 @@ Design (all driver-side logic is manifest-only — no data read):
   skipped, while genuine appends before/after the rewrite flow
   through. Metadata-only commits (schema evolution, set_property)
   naturally contribute no files.
+- **A rollback fails the stream**, as batch ``read_changes`` refuses
+  it: it drops row versions a consumer (replica, incremental view) may
+  already hold, so skipping it like a compaction would keep them
+  silently. The consumer re-syncs from a full read — Delta's streaming
+  source fails on data-changing removes the same way.
 - **One InputPartition per file**, read EXECUTOR-side with pyarrow
   and yielded as Arrow RecordBatches (the vectorized fast path — no
   per-row Python). Parallelism = files in the window, which at a
@@ -85,13 +90,23 @@ def _appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
     """(file, commit version) pairs appended by append-only commits in
     versions (start, end], newest-first walk over the manifest chain
     (same traversal as table.read_changes, but maintenance windows are
-    SKIPPED, not refused — see module docstring). The commit version
-    rides into the stream as ``_commit_version`` (the Delta CDF
-    ``_commit_version`` analog) so consumers can order and window by
-    commit without re-deriving it from LSNs."""
+    SKIPPED, not refused; a rollback is refused, as read_changes does —
+    see module docstring). The commit version rides into the stream as
+    ``_commit_version`` (the Delta CDF ``_commit_version`` analog) so
+    consumers can order and window by commit without re-deriving it
+    from LSNs."""
     out: list[tuple[str, int]] = []
     for v, man in window(root, start, end):
         kind, added, _ = commit_kind(man["files"], man["parent"])
+        # the last lineage row is this commit's own when the ids match
+        own = (man.get("lineage") or [{}])[-1]
+        if kind in ("append", "rewrite") and own.get("op") == "rollback" and (
+            own.get("snapshot_id") == man["snapshot_id"]
+        ):
+            raise ValueError(
+                f"change feed window ({start}, {end}] crosses a rollback at "
+                f"v{v}; re-sync the consumer with a full read"
+            )
         if kind != "rewrite":
             out.extend((f, v) for f in added)
     seen: dict[str, int] = {}

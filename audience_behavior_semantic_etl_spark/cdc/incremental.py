@@ -21,6 +21,11 @@ Design: RECOMPUTE-BASED IVM (partition-scoped), not delta algebra.
 - The materialized view is itself parquet partitioned by the same
   bucket transform, so the refresh rewrites ONLY affected bucket
   partitions: unchanged-bucket files are untouched bytes.
+- A refresh (and each streaming micro-batch) resolves the table's
+  manifest ONCE: the window, bucket ids, recompute scan and partition
+  swap all follow that snapshot. ``_view.json`` records the bucket
+  count the view is laid out under; a snapshot with another count (a
+  rebucket) rebuilds the view in full.
 
 Why recompute instead of +delta/-retraction algebra: the changelog
 carries new row VERSIONS only (no pre-images), so true delta
@@ -39,7 +44,8 @@ With n_buckets sized so a bucket fits a task (the table's own sizing
 rule), a batch touching k conversations costs ~k/(table keys) of a
 full refresh. Single-refresher assumption (same as the table's
 single-writer commit rule); crossing a compaction in the incremental
-window falls back to a full refresh, per read_changes' contract.
+window falls back to a full refresh, per read_changes' contract, and
+so does a rebucket, by the layout check above.
 """
 
 from __future__ import annotations
@@ -53,8 +59,12 @@ from typing import Callable
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from audience_behavior_semantic_etl_spark.cdc import schema as S
-from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable, bucket_expr
+from audience_behavior_semantic_etl_spark.cdc import commits
+from audience_behavior_semantic_etl_spark.cdc.table import (
+    Manifest,
+    SnapshotTable,
+    bucket_expr,
+)
 
 
 class IncrementalView:
@@ -92,11 +102,12 @@ class IncrementalView:
         except FileNotFoundError:
             return None
 
-    def _write_meta(self, synced_version: int, schema: T.StructType) -> None:
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"synced_version": int(synced_version), "schema": schema.json()}, f)
-        os.replace(tmp, self._meta_path())
+    def _write_meta(self, m: Manifest, schema: T.StructType) -> None:
+        commits.atomic_write(self._meta_path(), json.dumps({
+            "synced_version": m.version,
+            "n_buckets": m.n_buckets,
+            "schema": schema.json(),
+        }))
 
     # ------------------------------------------------------------ read
     def read(self) -> DataFrame:
@@ -104,25 +115,7 @@ class IncrementalView:
         meta = self._meta()
         if meta is None:
             raise FileNotFoundError(f"view at {self.root} never refreshed")
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        data = os.path.join(self.root, "data")
-        part_dirs = (
-            [d for d in os.listdir(data) if d.startswith("__bucket=")]
-            if os.path.isdir(data)
-            else []
-        )
-        if not part_dirs:
-            return self.table.spark.createDataFrame([], schema)
-        # explicit schema: no inference job, and an all-null column in a
-        # partition keeps its declared type
-        return (
-            self.table.spark.read.schema(
-                T.StructType(list(schema.fields) + [T.StructField("__bucket", T.IntegerType())])
-            )
-            .option("basePath", data)
-            .parquet(*[os.path.join(data, d) for d in part_dirs])
-            .drop("__bucket")
-        )
+        return self._read_parts(self._view_schema(meta)).drop("__bucket")
 
     def synced_version(self) -> int | None:
         m = self._meta()
@@ -130,107 +123,105 @@ class IncrementalView:
 
     # --------------------------------------------------------- refresh
     def refresh(self) -> dict:
-        """Bring the view up to the table's current snapshot. Returns
-        ``{"mode": "full"|"incremental"|"noop", "synced_version": v,
+        """Bring the view up to the table's current snapshot, resolved
+        ONCE: the changelog window, the recompute and the partition
+        swap all read that one manifest. Returns ``{"mode":
+        "full"|"incremental"|"noop", "synced_version": v,
         "affected_buckets": n}``."""
-        cur = self.table.manifest().version
+        m = self.table.manifest()
         meta = self._meta()
         if meta is None:
-            return self._full(cur)
+            return self._full(m)
         synced = int(meta["synced_version"])
-        if cur == synced:
-            return {"mode": "noop", "synced_version": cur, "affected_buckets": 0}
+        if m.version == synced:
+            return {"mode": "noop", "synced_version": synced, "affected_buckets": 0}
         try:
-            changes = self.table.read_changes(synced, cur)
+            changes = self.table.read_changes(synced, m.version)
         except ValueError:
             # incremental window crosses a compaction/purge — re-sync
-            return self._full(cur)
-        return self._incremental(cur, changes)
-
-    def _final_rows(self, buckets: list[int] | None, version: int) -> DataFrame:
-        raw = self.table.read(buckets=buckets, with_deleted=True, version=version)
-        return raw.filter(~F.coalesce(F.col(S.DELETED_META_COL), F.lit(False))).drop(
-            S.LSN_META_COL, S.DELETED_META_COL
-        )
-
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        n = self.table.manifest().n_buckets
-        return df.withColumn("__bucket", bucket_expr(F.col(self.key), n))
-
-    def _full(self, cur: int) -> dict:
-        out = self._with_bucket(self.agg(self._final_rows(None, cur)))
-        staged = os.path.join(self.root, f"_staging-{uuid.uuid4().hex[:8]}")
-        out.write.mode("overwrite").partitionBy("__bucket").parquet(staged)
-        data = os.path.join(self.root, "data")
-        if os.path.isdir(data):
-            shutil.rmtree(data)
-        os.makedirs(data, exist_ok=True)
-        for d in os.listdir(staged):
-            if d.startswith("__bucket="):
-                os.rename(os.path.join(staged, d), os.path.join(data, d))
-        shutil.rmtree(staged, ignore_errors=True)
-        self._write_meta(cur, T.StructType([f for f in out.schema.fields if f.name != "__bucket"]))
-        return {"mode": "full", "synced_version": cur, "affected_buckets": -1}
-
-    def _incremental(self, cur: int, changes: DataFrame) -> dict:
+            return self._full(m)
         # changed group keys: bounded by conversations touched since the
         # last sync — the only driver-side list is their BUCKET ids
         # (≤ n_buckets), never the keys themselves
-        return self._apply_changed_keys(changes.select(self.key).distinct(), cur)
+        return self._apply_changed_keys(changes.select(self.key).distinct(), m)
 
-    def _apply_changed_keys(self, changed: DataFrame, cur: int) -> dict:
-        """Recompute exactly the groups in ``changed`` from the table
-        at version ``cur`` and swap their bucket partitions — the
-        shared tail of version-window refresh and streaming refresh."""
-        n_buckets = self.table.manifest().n_buckets
+    def _with_bucket(self, df: DataFrame, m: Manifest) -> DataFrame:
+        return df.withColumn("__bucket", bucket_expr(F.col(self.key), m.n_buckets))
+
+    def _full(self, m: Manifest) -> dict:
+        out = self._with_bucket(self.agg(self.table.read_final(version=m.version)), m)
+        self._swap(out, None)
+        self._write_meta(m, T.StructType([f for f in out.schema.fields if f.name != "__bucket"]))
+        return {"mode": "full", "synced_version": m.version, "affected_buckets": -1}
+
+    def _apply_changed_keys(self, changed: DataFrame, m: Manifest) -> dict:
+        """Recompute exactly the groups in ``changed`` from snapshot
+        ``m`` and swap their bucket partitions — the shared tail of
+        version-window refresh and streaming refresh. A view laid out
+        under another bucket count (the table was rebucketed, or the
+        meta predates the recorded count) is rebuilt in full: its
+        partitions do not line up with ``m``'s transform."""
+        meta = self._meta()
+        if meta.get("n_buckets") != m.n_buckets:
+            return self._full(m)
+        stored = self._view_schema(meta)
         affected = sorted(
             r["__b"]
-            for r in changed.select(bucket_expr(F.col(self.key), n_buckets).alias("__b"))
+            for r in changed.select(bucket_expr(F.col(self.key), m.n_buckets).alias("__b"))
             .distinct()
             .collect()
         )
         if not affected:
-            self._write_meta(cur, self._view_schema())
-            return {"mode": "incremental", "synced_version": cur, "affected_buckets": 0}
+            self._write_meta(m, stored)
+            return {"mode": "incremental", "synced_version": m.version, "affected_buckets": 0}
         # recompute ONLY the changed groups, scanning ONLY their buckets
-        live = self._final_rows(affected, cur).join(
+        live = self.table.read_final(version=m.version, buckets=affected).join(
             F.broadcast(changed), on=self.key, how="semi"
         )
-        new_rows = self._with_bucket(self.agg(live))
+        new_rows = self._with_bucket(self.agg(live), m)
         # table schema evolution can change the agg's output shape
         # (e.g. a new tool_latency_ms column feeding a new measure); the
         # stored rows then can't be unioned with recomputed ones —
         # re-materialize instead of guessing at nulls
-        stored = self._view_schema()
         if [f.name for f in new_rows.schema.fields if f.name != "__bucket"] != [
             f.name for f in stored.fields
         ]:
-            return self._full(cur)
+            return self._full(m)
         # untouched groups in the affected buckets are carried over;
         # groups whose keys vanished from the table (fully deleted) are
         # in `changed` and produce no recompute row -> dropped
         keep = (
-            self._read_buckets(affected)
+            self._read_parts(stored, affected)
             .join(F.broadcast(changed), on=self.key, how="anti")
         )
-        out = keep.unionByName(new_rows)
+        self._swap(keep.unionByName(new_rows), affected)
+        self._write_meta(m, stored)
+        return {
+            "mode": "incremental",
+            "synced_version": m.version,
+            "affected_buckets": len(affected),
+        }
+
+    def _swap(self, out: DataFrame, affected: list[int] | None) -> None:
+        """Stage ``out`` partitioned by ``__bucket`` and swap it in:
+        every partition (``affected`` None, a full build) or exactly the
+        ``affected`` ones."""
         staged = os.path.join(self.root, f"_staging-{uuid.uuid4().hex[:8]}")
         out.write.mode("overwrite").partitionBy("__bucket").parquet(staged)
         data = os.path.join(self.root, "data")
-        for b in affected:
-            dst = os.path.join(data, f"__bucket={b}")
-            src = os.path.join(staged, f"__bucket={b}")
+        if affected is None:
+            shutil.rmtree(data, ignore_errors=True)
+            os.makedirs(data)
+            names = [d for d in os.listdir(staged) if d.startswith("__bucket=")]
+        else:
+            names = [f"__bucket={b}" for b in affected]
+        for d in names:
+            dst, src = os.path.join(data, d), os.path.join(staged, d)
             if os.path.isdir(dst):
                 shutil.rmtree(dst)
             if os.path.isdir(src):
                 os.rename(src, dst)
         shutil.rmtree(staged, ignore_errors=True)
-        self._write_meta(cur, self._view_schema())
-        return {
-            "mode": "incremental",
-            "synced_version": cur,
-            "affected_buckets": len(affected),
-        }
 
     # ------------------------------------------------- streaming refresh
     def stream_refresh(self, checkpoint: str, available_now: bool = True):
@@ -259,7 +250,7 @@ class IncrementalView:
 
         spark = self.table.spark
         if self._meta() is None:
-            self._full(self.table.manifest().version)
+            self._full(self.table.manifest())
 
         def _sync(batch_df: DataFrame, batch_id: int) -> None:
             # foreachBatch hands a ROW-BASED recomputed plan; spool the
@@ -274,7 +265,7 @@ class IncrementalView:
                 changed = spark.read.parquet(scratch)
                 if changed.isEmpty():
                     return
-                self._apply_changed_keys(changed, self.table.manifest().version)
+                self._apply_changed_keys(changed, self.table.manifest())
             finally:
                 shutil.rmtree(scratch, ignore_errors=True)
 
@@ -283,25 +274,27 @@ class IncrementalView:
             available_now,
         )
 
-    def _view_schema(self) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self._meta()["schema"]))
+    @staticmethod
+    def _view_schema(meta: dict) -> T.StructType:
+        return T.StructType.fromJson(json.loads(meta["schema"]))
 
-    def _read_buckets(self, buckets: list[int]) -> DataFrame:
-        schema = self._view_schema()
+    def _read_parts(
+        self, schema: T.StructType, buckets: list[int] | None = None
+    ) -> DataFrame:
+        """Stored view rows of ``buckets`` (all when None), with their
+        ``__bucket`` column. Explicit schema: no inference job, and an
+        all-null column in a partition keeps its declared type."""
+        schema = T.StructType(
+            list(schema.fields) + [T.StructField("__bucket", T.IntegerType())]
+        )
         data = os.path.join(self.root, "data")
+        names = os.listdir(data) if os.path.isdir(data) else []
+        want = None if buckets is None else {f"__bucket={b}" for b in buckets}
         dirs = [
-            os.path.join(data, f"__bucket={b}")
-            for b in buckets
-            if os.path.isdir(os.path.join(data, f"__bucket={b}"))
+            os.path.join(data, d)
+            for d in sorted(names)
+            if d.startswith("__bucket=") and (want is None or d in want)
         ]
         if not dirs:
-            return self.table.spark.createDataFrame(
-                [], T.StructType(list(schema.fields) + [T.StructField("__bucket", T.IntegerType())])
-            )
-        return (
-            self.table.spark.read.schema(
-                T.StructType(list(schema.fields) + [T.StructField("__bucket", T.IntegerType())])
-            )
-            .option("basePath", data)
-            .parquet(*dirs)
-        )
+            return self.table.spark.createDataFrame([], schema)
+        return self.table.spark.read.schema(schema).option("basePath", data).parquet(*dirs)

@@ -23,8 +23,8 @@ from audience_behavior_semantic_etl_spark.cdc.apply import (
     apply_batch,
     join_pending_compaction,
 )
-from audience_behavior_semantic_etl_spark.cdc.schema import ENVELOPE_SCHEMA
 from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
+from audience_behavior_semantic_etl_spark.sources.wal import read_wal_stream
 
 
 @dataclass
@@ -61,13 +61,9 @@ def run_wal_stream(
         ):
             raise RuntimeError("injected crash (after table commit, before checkpoint)")
 
-    reader = spark.readStream.schema(ENVELOPE_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(wal_dir)
-
     q = (
-        src.writeStream.foreachBatch(handle)
+        read_wal_stream(spark, wal_dir, max_files_per_trigger)
+        .writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

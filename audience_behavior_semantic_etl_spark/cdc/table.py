@@ -268,13 +268,21 @@ class SnapshotTable:
         m.file_stats = dict(m.file_stats.maps[-1])
         return m
 
-    def _frozen_manifest(self, version: int | None, ref: str) -> Manifest:
-        """``manifest()`` over the cached state without copying it — what
-        ``_commit`` hands ``mutate``: each bucket entry is the state's
-        frozen tuple, so an untouched bucket is recognized by identity,
-        and ``file_stats`` is a write overlay on the state's map (reads
-        fall through; writes stay in the overlay), so a commit copies no
-        O(live-files) map."""
+    def _frozen_manifest(
+        self, version: int | None = None, ref: str = "main", tag: str | None = None
+    ) -> Manifest:
+        """THE resolver: ``version``, else ``tag`` (a named pin), else
+        ``ref``'s head -> that snapshot's manifest over the cached state,
+        uncopied. Every reader and both rewrites resolve once and plan
+        from that one manifest (the Iceberg one-snapshot-id scan rule).
+        ``_commit`` hands the same shape to ``mutate``: each bucket entry
+        is the state's frozen tuple, so an untouched bucket is
+        recognized by identity, and ``file_stats`` is a write overlay on
+        the state's map, so a commit copies no O(live-files) map."""
+        if tag is not None:
+            if version is not None:
+                raise ValueError("pass version or tag, not both")
+            version = self.resolve_tag(tag)
         if version is None:
             version = head_version(self.root, ref)
         d = read_manifest(self.root, version)
@@ -474,11 +482,6 @@ class SnapshotTable:
 
     # ------------------------------------------------------------ schema
 
-    def spark_schema(self, with_lsn: bool = True, with_deleted: bool = False):
-        m = self.manifest()
-        cols = [(n, S.type_from_name(t)) for n, t in m.columns]
-        return S.transcripts_schema(cols, with_lsn=with_lsn, with_deleted=with_deleted)
-
     # -- logical/physical column mapping (name-based field-id analog) --
     #
     # RENAME and DROP evolution need what Iceberg gets from field ids:
@@ -517,11 +520,10 @@ class SnapshotTable:
         m = m or self.manifest()
         return {k: list(v) for k, v in (m.properties.get("rename_history") or {}).items()}
 
-    def to_physical(self, df: DataFrame, m: Manifest | None = None) -> DataFrame:
-        """Project a logical-named frame to stored (physical) column
-        names for a staged write. No-op (no extra Project node) on
-        tables that never renamed/re-added."""
-        m = m or self.manifest()
+    def to_physical(self, df: DataFrame, m: Manifest) -> DataFrame:
+        """Project a logical-named frame to ``m``'s stored (physical)
+        column names for a staged write. No-op (no extra Project node)
+        on tables that never renamed/re-added."""
         pm = self._phys_map(m)
         if all(l == p for l, p in pm.items()):
             return df
@@ -691,6 +693,16 @@ class SnapshotTable:
 
     # ------------------------------------------------------------ read
 
+    def _scan(self, m: Manifest, buckets: list[int] | None = None) -> DataFrame:
+        """Every stored row version of ``m``'s files in ``buckets`` (all
+        when None), delta files unresolved, with the metadata columns."""
+        sel = (
+            m.buckets
+            if buckets is None
+            else {str(b): m.buckets.get(str(b), ()) for b in buckets}
+        )
+        return self._read_rel_files(m, [p for ps in sel.values() for p in ps])
+
     def read_raw(
         self,
         buckets: list[int] | None = None,
@@ -701,20 +713,12 @@ class SnapshotTable:
         metadata columns — maintenance/compaction input. ``version``
         time-travels to an older committed snapshot; ``ref`` reads a
         branch head instead of main."""
-        if version is None:
-            version = head_version(self.root, ref)
-        m = self.manifest(version)
-        sel = (
-            m.buckets
-            if buckets is None
-            else {str(b): m.buckets.get(str(b), []) for b in buckets}
-        )
-        return self._read_rel_files(m, [p for ps in sel.values() for p in ps])
+        return self._scan(self._frozen_manifest(version, ref), buckets)
 
     def _read_rel_files(self, m: Manifest, rels: list[str]) -> DataFrame:
         """Raw scan of an explicit manifest-relative file list under the
-        manifest's (evolved) schema — the shared tail of read_raw and
-        the stats-pruned read_key path."""
+        manifest's (evolved) schema — the shared tail of ``_scan``, the
+        stats-pruned read_key path and read_changes."""
         cols = [(n, S.type_from_name(t)) for n, t in m.columns]
         # _set rides every raw read; files written before the mask
         # existed (or by compaction collapse) simply read it as NULL —
@@ -746,7 +750,6 @@ class SnapshotTable:
     def read(
         self,
         buckets: list[int] | None = None,
-        with_deleted: bool = False,
         version: int | None = None,
         ref: str = "main",
     ) -> DataFrame:
@@ -757,31 +760,25 @@ class SnapshotTable:
         partial update — ``has_partial`` property): fold patch
         set-masks onto the latest full-row base (``_fold_resolve``).
         Both modes collapse to full rows; ``_set`` never leaks out.
-        Tombstones are kept (flag surfaced when ``with_deleted``) so
-        callers see deletions; ``read_final`` filters them."""
-        if version is None:
-            version = head_version(self.root, ref)
-        resolved = self._resolve(
-            self.read_raw(buckets, version=version), self.manifest(version)
-        )
-        if with_deleted:
-            return resolved
-        return resolved.drop(S.DELETED_META_COL)
+        Tombstones are kept with ``_lsn`` and ``_deleted``, so callers
+        see deletions; ``read_final`` filters them."""
+        m = self._frozen_manifest(version, ref)
+        return self._resolve(self._scan(m, buckets), m)
 
     def read_final(
-        self, version: int | None = None, tag: str | None = None, ref: str = "main"
+        self,
+        version: int | None = None,
+        tag: str | None = None,
+        ref: str = "main",
+        buckets: list[int] | None = None,
     ) -> DataFrame:
         """User-facing view: LWW-resolved, tombstones filtered,
         metadata columns dropped. ``version`` time-travels; ``tag``
         resolves a named pin (create_tag) to its version; ``ref``
-        reads a branch head."""
-        if tag is not None:
-            if version is not None:
-                raise ValueError("pass version or tag, not both")
-            version = self.resolve_tag(tag)
-        if version is None:
-            version = head_version(self.root, ref)
-        return self._resolve_final(self.read_raw(version=version), self.manifest(version))
+        reads a branch head; ``buckets`` scopes the scan (the
+        incremental view's changed-group recompute)."""
+        m = self._frozen_manifest(version, ref, tag)
+        return self._resolve_final(self._scan(m, buckets), m)
 
     def read_key(self, conv_id: str, version: int | None = None) -> DataFrame:
         """Point lookup: the live turns of ONE conversation, touching
@@ -802,7 +799,7 @@ class SnapshotTable:
 
         Files with no recorded stats (pre-stats tables, foreign
         writers) are always read — pruning is never unsound."""
-        m = self.manifest(version)
+        m = self._frozen_manifest(version)
         b = (
             self.spark.range(1)
             .select(bucket_expr(F.lit(conv_id), m.n_buckets).alias("b"))
@@ -944,7 +941,7 @@ class SnapshotTable:
         is refused (``commit_kind`` "rewrite") and the caller re-syncs
         with a full read — the standard Iceberg incremental-read
         limitation."""
-        m_to = self.manifest(to_version)
+        m_to = self._frozen_manifest(to_version)
         cur = m_to.version
         new_files: list[str] = []
         for v, d in commits.window(self.root, from_version, cur):
@@ -1236,10 +1233,12 @@ class SnapshotTable:
         self._commit(mutate)
 
     def tags(self) -> dict[str, int]:
-        return dict(self.manifest().properties.get("tags", {}))
+        """Tag name -> pinned version (main's head properties)."""
+        head = read_manifest(self.root, head_version(self.root))
+        return dict(head["properties"].get("tags", {}))
 
     def resolve_tag(self, name: str) -> int:
-        tags = self.manifest().properties.get("tags", {})
+        tags = self.tags()
         if name not in tags:
             raise ValueError(f"no such tag {name!r}")
         return int(tags[name])
@@ -1614,7 +1613,7 @@ class SnapshotTable:
           time); a fresh one otherwise."""
 
         def run() -> str | None:
-            m = self._frozen_manifest(None, ref)
+            m = self._frozen_manifest(ref=ref)
             parent_snapshot = m.snapshot_id
             m.parent, m.version = m.version, self._alloc_version()
             m.snapshot_id = snapshot_id or uuid.uuid4().hex
@@ -1684,12 +1683,12 @@ class SnapshotTable:
         snapshots still see them until a GC pass)."""
         if not buckets:
             return None
-        m = self.manifest()
+        m = self._frozen_manifest()
         # base file set AS READ — commit_merged_buckets retains any file
         # appended to these buckets by a commit that lands while this
         # compaction is running (rewrite-vs-append conflict rule)
-        base = {str(b): list(m.buckets.get(str(b), [])) for b in buckets}
-        resolved = self.read(buckets=buckets, with_deleted=True)
+        base = {str(b): list(m.buckets.get(str(b), ())) for b in buckets}
+        resolved = self._resolve(self._scan(m, buckets), m)
         if purge_tombstones_below_lsn is not None:
             resolved = resolved.filter(
                 ~(
@@ -1743,7 +1742,7 @@ class SnapshotTable:
     def purge_tombstones(self, below_lsn: int, shuffle_partitions: int | None = None) -> str | None:
         """Compact ALL buckets, dropping tombstones below the supplied
         re-delivery horizon (see compact_buckets)."""
-        m = self.manifest()
+        m = self._frozen_manifest()
         buckets = [int(b) for b, fs in m.buckets.items() if fs]
         return self.compact_buckets(
             buckets, purge_tombstones_below_lsn=below_lsn, shuffle_partitions=shuffle_partitions
@@ -1780,10 +1779,10 @@ class SnapshotTable:
         Raises on no-op (same bucket count)."""
         if new_n_buckets < 1:
             raise ValueError(f"rebucket: need >= 1 bucket, got {new_n_buckets}")
-        m0 = self.manifest()
+        m0 = self._frozen_manifest()
         if new_n_buckets == m0.n_buckets:
             raise ValueError(f"rebucket: table already has {new_n_buckets} buckets")
-        resolved = self.read(with_deleted=True, version=m0.version)
+        resolved = self._resolve(self._scan(m0), m0)
         staged = self._stage_rewrite(
             resolved, m0, new_n_buckets, new_n_buckets, shuffle_partitions
         )
@@ -1975,13 +1974,7 @@ class SnapshotTable:
     # ------------------------------------------------------------ metrics
 
     def lineage(self) -> list[dict[str, Any]]:
-        return self.manifest().lineage
-
-    def lineage_df(self) -> DataFrame:
-        rows = self.lineage()
-        if not rows:
-            raise ValueError("no lineage yet")
-        return self.spark.createDataFrame(rows)
+        return self._frozen_manifest().lineage
 
     # ---------------------------------------------- metadata tables
     #
@@ -2035,7 +2028,7 @@ class SnapshotTable:
             T.StructField("key_min", T.StringType()),
             T.StructField("key_max", T.StringType()),
         ])
-        m = self.manifest(version)
+        m = self._frozen_manifest(version)
         stats = m.file_stats
         rows = []
         for b, fs in m.buckets.items():

@@ -173,10 +173,10 @@ def test_purge_tombstones(spark, tmp_path):
     apply_batch(
         _envelope_df(spark, _mk_events([(1, "insert", "A"), (2, "delete", "")])), table, 0
     )
-    stored = table.read(with_deleted=True)
+    stored = table.read()
     assert stored.filter(F.col(DELETED_META_COL)).count() == 1, "tombstone must be retained"
     table.purge_tombstones(below_lsn=3)
-    assert table.read(with_deleted=True).count() == 0, "purge must drop old tombstones"
+    assert table.read().count() == 0, "purge must drop old tombstones"
     # purge is itself a snapshot commit; final view unchanged
     assert table.read_final().count() == 0
 
@@ -410,7 +410,7 @@ def test_compaction_append_conflict_keeps_concurrent_rows(spark, tmp_path):
     # compaction reads its input + base NOW (as compact_buckets does)
     m = table.manifest()
     base = {"0": list(m.buckets["0"])}
-    resolved = table.read(buckets=[0], with_deleted=True)
+    resolved = table.read(buckets=[0])
     staged = table.new_staging_dir()
     from pyspark.sql import functions as F  # noqa: PLC0415
 

@@ -117,6 +117,28 @@ def test_cdf_rebucket_invisible_to_stream(registered, tmp_path):
     assert list(got["_lsn"]) == [1, 2]
 
 
+def test_cdf_refuses_a_rollback_in_the_window(registered, tmp_path):
+    """A rollback drops row versions the stream already delivered;
+    skipping it like a compaction would leave consumers holding them,
+    so the drain fails and names it — the window batch read_changes
+    refuses too."""
+    spark = registered
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    cfg = ApplyConfig(app_id="cdf", auto_compact=False, shuffle_partitions=4)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    apply_batch(_env(spark, [(1, "insert", "a", "A1")]), t, 0, cfg)
+    v0 = t.manifest().version
+    apply_batch(_env(spark, [(2, "insert", "b", "B1")]), t, 1, cfg)
+    _drain(spark, t, out, ckpt, starting=0)
+    drained = t.manifest().version
+    t.rollback(v0)  # drops b, already delivered
+    apply_batch(_env(spark, [(3, "insert", "c", "C1")]), t, 1, cfg)
+    with pytest.raises(ValueError):
+        t.read_changes(drained)
+    with pytest.raises(Exception, match="rollback"):
+        _drain(spark, t, out, ckpt)
+
+
 def test_cdf_schema_evolution_pads_old_files(registered, tmp_path):
     """A stream started after ADD COLUMN reads pre-evolution files
     padded with nulls and post-evolution files with values — the

@@ -16,7 +16,7 @@ from audience_behavior_semantic_etl_spark.cdc.apply import apply_batch
 from audience_behavior_semantic_etl_spark.cdc.gen import GenConfig, generate_change_log
 from audience_behavior_semantic_etl_spark.cdc.incremental import IncrementalView
 from audience_behavior_semantic_etl_spark.cdc.schema import ENVELOPE_SCHEMA
-from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
+from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable, bucket_expr
 
 
 def _envelope_df(spark, pdf: pd.DataFrame):
@@ -249,4 +249,54 @@ def test_stream_refresh_idempotent_redelivery(spark, split_log, tmp_path):
     # lost checkpoint -> full re-delivery from the bootstrap version
     view.stream_refresh(str(tmp_path / "c2")).awaitTermination(180)
     pd.testing.assert_frame_equal(_got(view), before)
+    pd.testing.assert_frame_equal(_got(view), _expect(table))
+
+
+@pytest.mark.parametrize("path", ["stream_refresh", "refresh"])
+def test_view_stays_correct_across_a_rebucket(
+    spark, split_log, tmp_path, monkeypatch, path
+):
+    """A refresh or micro-batch reads ONE snapshot: its bucket ids,
+    recompute scan and partition swap share one layout. Two ways a
+    rebucket(16) of a 4-bucket table meets a view built under 4:
+    - before a stream micro-batch over one conversation whose 4- and
+      16-bucket ids differ (the view must rebuild, not file the group
+      under a second partition);
+    - inside refresh(), after the changelog window was read (the
+      recompute must stay on the window's snapshot, not go stale)."""
+    b0, _ = split_log
+    table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    view = IncrementalView(table, str(tmp_path / "v"), _agg)
+    apply_batch(_envelope_df(spark, b0), table, 0)
+    conv = (
+        table.read_final()
+        .where(bucket_expr(F.col("conv_id"), 4) != bucket_expr(F.col("conv_id"), 16))
+        .orderBy("conv_id", "turn_idx")
+        .first()
+    )
+    update = pd.DataFrame({
+        "lsn": [10**9], "ts": pd.Timestamp("2025-06-01"), "op": "update",
+        "conv_id": conv["conv_id"], "turn_idx": conv["turn_idx"],
+        "payload": '{"role":"user","text":"zzzz","tool":null,'
+                   '"ts":"2025-06-01T00:00:00"}',
+        "schema_ver": 1, "source_part": 0,
+    })
+    if path == "stream_refresh":
+        ckpt = str(tmp_path / "ckpt")
+        view.stream_refresh(ckpt).awaitTermination(180)
+        table.rebucket(16)
+        apply_batch(_envelope_df(spark, update), table, 1)
+        view.stream_refresh(ckpt).awaitTermination(180)
+    else:
+        view.refresh()
+        apply_batch(_envelope_df(spark, update), table, 1)
+        read_changes = table.read_changes
+
+        def racing(*args):
+            changes = read_changes(*args)
+            table.rebucket(16)  # lands after the window was planned
+            return changes
+
+        monkeypatch.setattr(table, "read_changes", racing)
+        assert view.refresh()["mode"] == "incremental"
     pd.testing.assert_frame_equal(_got(view), _expect(table))

@@ -187,7 +187,7 @@ def test_partial_fold_resolve_single_shuffle_no_join(spark, tmp_path):
 
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     t.set_property("has_partial", True)
-    df = t.read(with_deleted=True)
+    df = t.read()
     p = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
