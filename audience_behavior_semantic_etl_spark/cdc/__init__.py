@@ -4,8 +4,10 @@ WAL-style change events (insert/update/update_partial/delete/
 schema_change envelopes keyed by ``(conv_id, turn_idx)``) reach
 ``apply.apply_batch`` through Structured Streaming ``foreachBatch``
 (``stream.run_wal_stream``). A batch is stats-scanned, pre-collapsed
-per key only when churn is high, shuffled by bucket (hot keys salted),
-normalized JVM-side and APPENDED as per-bucket delta files of the
+per key only when churn is high, shuffled into exactly
+``shuffle_partitions`` write slots that its census spreads over the
+buckets (a conversation holding over one slot's share is salted over
+several), normalized JVM-side and APPENDED as per-bucket delta files of the
 snapshot table (``table.SnapshotTable``, merge-on-read); ONE snapshot
 commit carries its DDL, files, exactly-once ledger, LSN watermarks
 and lineage row, so a re-delivered batch no-ops and a full replay

@@ -32,7 +32,10 @@ operator chain (SURVEY.md §7.1):
   Python anywhere.
 - salted repartition ≈ the reference's explicit RepartitionByExpression
   before its stateful op (Sessionize.scala:103), plus the hot-key
-  splitting the north_rule demands (SURVEY.md §4.2).
+  splitting the north_rule demands (SURVEY.md §4.2): the census places
+  every bucket on a contiguous share of exactly shuffle_partitions
+  write slots and salts any conversation that would overfill one slot
+  (``_placement``).
 - exactly-once     : ONE snapshot per micro-batch. The batch's DDL is
   planned in memory and commits WITH its files, its partial-update
   flips, its batch id + per-source-part LSN watermarks and its lineage
@@ -45,8 +48,8 @@ batch scan at 10^10 events):
      touch this job): groupBy(source_part, conv_id) stats, cached small
      (≤ #conversations in the batch, never batch size). ONE driver
      collect over a union of two aggregates of that cache yields
-     per-part lineage stats + watermarks + churn AND the hot-key /
-     affected-bucket census together — per-batch driver jobs are the
+     per-part lineage stats + watermarks + churn AND the per-bucket
+     row / hot-conversation census together — per-batch driver jobs are the
      non-scaling term, so none is spent twice.
   2. (rare) schema_change payload collect                  [tiny]
   3. the append write itself (scan -> [optional dedup shuffle] ->
@@ -64,16 +67,13 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql import types as T
 
 from audience_behavior_semantic_etl_spark.cdc import schema as S
 from audience_behavior_semantic_etl_spark.cdc.normalize import canonical_text_col
 from audience_behavior_semantic_etl_spark.cdc.table import Manifest, SnapshotTable, bucket_expr
 
-
-# hot conversations spread over this many write slots within their bucket
-N_SALTS = 8
 
 # per-write parquet options for the hot-path DELTA write only;
 # compaction keeps the session default — the standard LSM trade:
@@ -92,8 +92,11 @@ DELTA_WRITE_OPTIONS = {"parquet.compression.codec.zstd.level": "1"}
 
 @dataclass
 class ApplyConfig:
+    """Per-stream apply settings. Write placement has no knob of its
+    own: every batch writes with exactly ``shuffle_partitions`` slots,
+    split among buckets and hot conversations by the batch's census."""
+
     app_id: str = "cdc-apply"
-    hot_key_threshold: int = 1000  # events per conv_id per batch
     shuffle_partitions: int | None = None  # default: session setting
     # per-bucket delta SNAPSHOTS (≈ batches) before compaction — batch
     # count, not file count, so the policy is invariant to write
@@ -436,6 +439,34 @@ def _slot_tokens(n: int) -> list[int]:
     return toks
 
 
+def _placement(census, n_slots: int) -> tuple[dict[int, tuple[int, int]], dict[str, int]]:
+    """The batch's write placement, from its census rows (``__b``,
+    bucket rows ``n``, ``hot`` candidates as ``(conv_id, n)``).
+
+    With S = ``n_slots`` and R the census's rows, buckets walk in id
+    order; c_b rows precede bucket b and r_b are its own. Bucket b
+    takes the slots [lo, max(lo+1, ⌊S·(c_b+r_b)/R⌋)) with
+    lo = ⌊S·c_b/R⌋: the ranges cover exactly [0, S), each is at least
+    one slot wide, and buckets smaller than a slot share one. A
+    conversation with n > R/S rows would overfill a slot, so it is hot
+    and salted into ⌈n·S/R⌉ ≤ S values. The census keeps only the
+    conversations with n·S > r_b (at most S−1 per bucket, every hot one
+    among them since r_b ≤ R). Returns ({bucket: (lo, width)},
+    {hot conv_id: salt count})."""
+    total = sum(int(r["n"]) for r in census) or 1
+    ranges: dict[int, tuple[int, int]] = {}
+    acc = 0
+    for r in sorted(census, key=lambda r: int(r["__b"])):
+        lo = n_slots * acc // total
+        acc += int(r["n"])
+        ranges[int(r["__b"])] = (lo, max(lo + 1, n_slots * acc // total) - lo)
+    salts = {
+        c: -(-n * n_slots // total)
+        for r in census for c, n in r["hot"] if n * n_slots > total
+    }
+    return ranges, salts
+
+
 def _needs_spool(df: DataFrame) -> bool:
     """True when the batch is NOT file-backed — i.e. the streaming
     source's row-based ExistingRDD/LogicalRDD, which every job would
@@ -551,25 +582,27 @@ def _apply_batch(
                 F.when(F.col("conv_id").isNull(), F.col("n") - F.col("n_sc")).otherwise(0)
             ).alias("n_nullkey"),
         )
-        # hot keys + affected buckets, derived from the SAME cached
-        # stats: per-bucket row with the bucket's hot conv_ids embedded
-        # (output bounded by n_buckets + #hot keys, never batch size).
-        # n_buckets is immutable after create (rebucket re-creates the
-        # table), so the plan's count holds at commit.
+        # the census, from the SAME cached stats: one row per affected
+        # bucket with its row count and the conversations holding over
+        # 1/S of it (output bounded by n_buckets·S, never batch size) —
+        # the inputs of _placement. n_buckets is immutable after create
+        # (rebucket re-creates the table), so the plan's count holds at
+        # commit.
         n_buckets = plan.n_buckets
+        shuffle_n = cfg.shuffle_partitions or int(
+            spark.conf.get("spark.sql.shuffle.partitions", "32")
+        )
         census_agg = (
             stats.filter(F.col("conv_id").isNotNull())
             .groupBy("conv_id")
             .agg(F.sum("n").alias("n"))
-            .groupBy(bucket_expr(F.col("conv_id"), n_buckets).alias("__b"))
+            .withColumn("__b", bucket_expr(F.col("conv_id"), n_buckets))
+            .withColumn("bn", F.sum("n").over(Window.partitionBy("__b")))
+            .groupBy("__b", "bn")
             .agg(
-                # per-bucket row count rides the same job — it drives the
-                # deterministic write placement below (slots per bucket
-                # proportional to the bucket's share of the batch)
-                F.sum("n").alias("bn"),
                 F.collect_list(
-                    F.when(F.col("n") > cfg.hot_key_threshold, F.col("conv_id"))
-                ).alias("hot"),
+                    F.when(F.col("n") * shuffle_n > F.col("bn"), F.struct("conv_id", "n"))
+                ).alias("hot")
             )
         )
         # ONE driver job for both shapes: the union collects the
@@ -584,7 +617,7 @@ def _apply_batch(
                 "source_part", "n", "lsn_min", "lsn_max", "n_sc", "n_up", "n_keys",
                 "n_nullkey",
                 nulls.cast("int").alias("__b"),
-                nulls.cast("array<string>").alias("hot"),
+                nulls.cast("array<struct<conv_id:string,n:bigint>>").alias("hot"),
             )
             .unionByName(
                 census_agg.select(
@@ -647,13 +680,9 @@ def _apply_batch(
         aliases = table.rename_history(plan)
 
         affected = [int(r["__b"]) for r in census]
-        hot = [c for r in census for c in r["hot"]]
-        bucket_rows = {int(r["__b"]): int(r["n"]) for r in census}
+        ranges, salts = _placement(census, shuffle_n)
         _phase("census")
 
-        shuffle_n = cfg.shuffle_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
         # -- adaptive in-batch pre-collapse (high churn only) -------------
         # Row-level max_by would DISCARD patch content (a patch above a
         # base must overlay, not replace wholesale), so the pre-collapse
@@ -694,59 +723,33 @@ def _apply_batch(
             # -- ONE salted bucket shuffle, THEN Arrow normalize -----------
             # (normalize placed post-shuffle: parallelism = shuffle_n
             # regardless of source layout; its output stays in-partition
-            # for the partitionBy write)
+            # for the partitionBy write).
+            # Census-derived placement (_placement), ONE exchange, ZERO
+            # sampling: the write runs exactly S = shuffle_n tasks. Bucket
+            # b owns the contiguous slots [lo_b, lo_b + w_b), sized by its
+            # share of the batch's rows (a bucket under one slot's worth
+            # shares its slot with neighbours); a row goes to slot
+            # lo_b + pmod(hash(conv_id) + salt, w_b), where salt is 0
+            # unless its conversation is hot (n > R/S rows), then
+            # pmod(lsn, ⌈n·S/R⌉): about R/S rows per salt value, on
+            # consecutive slots of its range (w_b ≥ ⌈n·S/R⌉ − 1, so at
+            # most two values share a slot). Shares come from
+            # pre-collapse counts, so a deduped batch balances by
+            # events, not written rows. Slot s maps to exactly partition
+            # s of the hash partitioner via the precomputed hash-inverse
+            # token _slot_tokens(S)[s].
             data = data.withColumn("__bucket", bucket_expr(F.col("conv_id"), n_buckets))
-            if hot:
-                salt = F.when(
-                    F.col("conv_id").isin(hot), F.pmod(F.col("turn_idx"), F.lit(N_SALTS))
-                ).otherwise(F.lit(0))
-            else:
-                salt = F.lit(0)
-            data = data.withColumn("__salt", salt)
-            # DETERMINISTIC census-driven placement, ONE exchange, ZERO
-            # sampling. History: plain hash(bucket, salt) over only
-            # n_buckets distinct values collides balls-in-bins style
-            # (slowest write task ~3x the average); repartitionByRange
-            # balanced by rows but its sampling pass RE-EXECUTES the
-            # whole plan below the exchange — a full extra pass over
-            # every batch (the double-fire gotcha). The census already
-            # holds per-bucket row counts from the stats job, so the
-            # balance ranges buy is computed driver-side for free: each
-            # bucket gets slots proportional to its share of the batch
-            # (>=1), rows spread within a bucket by hash(conv_id, salt) —
-            # a hot bucket/conversation still splits across tasks, and
-            # each task holds exactly one bucket, so the partitionBy
-            # write's file granularity matches the range layout. Exact
-            # slot->partition placement with the DataFrame-level hash
-            # partitioner via precomputed hash-inverse tokens (no RDD
-            # round-trip, no sampling job). A data row has a non-null
-            # key, so the census here is never empty.
-            total_rows = sum(bucket_rows.values()) or 1
-            bs = sorted(bucket_rows)
-            k_slots: dict[int, int] = {}
-            offs: dict[int, int] = {}
-            acc = 0
-            for b in bs:
-                k_slots[b] = max(1, round(shuffle_n * bucket_rows[b] / total_rows))
-                offs[b] = acc
-                acc += k_slots[b]
-            total_slots = acc
-            tokens = _slot_tokens(total_slots)
-            k_map = F.create_map(*[F.lit(x) for b in bs for x in (b, k_slots[b])])
-            off_map = F.create_map(*[F.lit(x) for b in bs for x in (b, offs[b])])
-            slot = F.element_at(off_map, F.col("__bucket")) + F.pmod(
-                F.hash(F.col("conv_id"), F.col("__salt")),
-                F.element_at(k_map, F.col("__bucket")),
+            salt = F.lit(0)
+            if salts:
+                m = F.create_map(*[F.lit(x) for c, k in salts.items() for x in (c, k)])
+                salt = F.coalesce(F.pmod(F.col("lsn"), F.element_at(m, F.col("conv_id"))), salt)
+            lo = F.create_map(*[F.lit(x) for b, (o, _) in ranges.items() for x in (b, o)])
+            width = F.create_map(*[F.lit(x) for b, (_, w) in ranges.items() for x in (b, w)])
+            slot = F.element_at(lo, F.col("__bucket")) + F.pmod(
+                F.hash(F.col("conv_id")) + salt, F.element_at(width, F.col("__bucket"))
             )
-            # defensive: a bucket somehow absent from the census (cannot
-            # happen for non-null-key data rows) still lands in-range
-            slot = F.coalesce(slot, F.pmod(F.hash(F.col("conv_id")), F.lit(total_slots)))
-            tok = F.element_at(F.array(*[F.lit(t) for t in tokens]), slot + F.lit(1))
-            data = (
-                data.withColumn("__tok", tok)
-                .repartition(total_slots, F.col("__tok"))
-                .drop("__salt", "__tok")
-            )
+            tokens = F.array(*[F.lit(t) for t in _slot_tokens(shuffle_n)])
+            data = data.repartition(shuffle_n, F.element_at(tokens, (slot + 1).cast("int")))
             obs = Observation(f"apply-{batch_id}-{uuid.uuid4().hex[:8]}")
             data = data.observe(obs, *metric_exprs)
 
@@ -843,7 +846,7 @@ def _apply_batch(
                 deletes=int(row_metrics["deletes"] or 0),
                 lsn_min=int(lsn_min),
                 lsn_max=int(lsn_max),
-                hot_keys=len(hot),
+                hot_keys=len(salts),
                 deduped=bool(deduped),
                 malformed=n_malformed,
             )
@@ -889,7 +892,7 @@ def _apply_batch(
             upserts=int(row_metrics["upserts"] or 0),
             deletes=int(row_metrics["deletes"] or 0),
             dedup_dropped=int(n_data - written),
-            hot_keys=len(hot),
+            hot_keys=len(salts),
             seconds=secs,
             lsn_min=int(lsn_min),
             lsn_max=int(lsn_max),

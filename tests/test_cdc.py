@@ -232,8 +232,10 @@ def test_compaction_preserves_replay_correctness(spark, small_log, tmp_path):
 
 
 def test_hot_key_census_and_salting(spark, tmp_path):
-    """A conversation exceeding the per-batch threshold is detected and
-    its rows still apply correctly (salted write path)."""
+    """A conversation holding over 1/S of the batch's rows (S = the
+    session's shuffle partitions) is detected by the census, its rows
+    spread over several write slots (so several files of its bucket),
+    and they still apply correctly."""
     rows = [(i + 1, "insert" if i < 50 else "update", f"T{i}") for i in range(200)]
     pdf = _mk_events(rows)
     pdf["turn_idx"] = [i % 50 for i in range(200)]
@@ -242,9 +244,11 @@ def test_hot_key_census_and_salting(spark, tmp_path):
         for i in range(200)
     ]
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    m = apply_batch(_envelope_df(spark, pdf), table, 0, ApplyConfig(hot_key_threshold=100))
+    m = apply_batch(_envelope_df(spark, pdf), table, 0)
     assert m.hot_keys == 1, "hot conversation not detected"
     assert table.read_final().count() == 50
+    files = [fs for fs in table.manifest().buckets.values() if fs]
+    assert len(files) == 1 and len(files[0]) > 1, "hot conversation written to one file"
 
 
 def test_resume_across_schema_change(spark, small_log, tmp_path):
