@@ -1646,9 +1646,9 @@ def q_cdc_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-batch LINEAGE and per-source-part WATERMARKS as a checked
     contract row (the north_rule's 'per-partition lineage + metrics').
-    Two batches apply through the engine; the output is the manifest's
-    commit-embedded lineage log (batch id -> row/upsert/delete counts
-    and LSN range) unioned with the monotone per-part LSN watermarks —
+    Two batches apply through the engine; the output is the table's
+    lineage, one row per commit read along the head's chain (batch id
+    -> row/upsert/delete counts and LSN range), unioned with the monotone per-part LSN watermarks —
     all recomputed independently by the SQL oracle from the raw log.
     The returned frame is built driver-side from manifest METADATA:
     O(#batches + #source_parts) rows (2 + 4 here), a constant bound —
@@ -1697,7 +1697,7 @@ def q_cdc_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(ln["lsn_min"]),
             int(ln["lsn_max"]),
         )
-        for ln in m.lineage
+        for ln in table.lineage()
     ] + [
         ("watermark", int(part), None, None, None, None, int(lsn))
         for part, lsn in m.properties.get("watermarks", {}).items()

@@ -656,8 +656,12 @@ def _apply_batch(
                     "to apply — set on_malformed='quarantine' to drop+count"
                 )
             n_data -= int(n_nullkey)
-        # approx distinct (conv, turn) keys in the batch (conv lives in
-        # exactly one source_part, so per-conv approx counts sum cleanly)
+        # approx distinct (conv, turn) keys in the batch. The sum over
+        # parts assumes the source routes each key's events to one
+        # source_part (a key-partitioned log). A key spread over k parts
+        # is counted k times, so the churn estimate below falls up to
+        # k-fold and the pre-collapse may not engage; results are
+        # unchanged, since read-side LWW resolves what it leaves.
         n_keys = max(1, sum(r["n_keys"] for r in part_stats))
 
         # -- job 2 (rare): schema_change DDL, PLANNED in memory -----------
@@ -781,7 +785,10 @@ def _apply_batch(
             staged = table.new_staging_dir()
             writer = (
                 table.to_physical(final_rows, plan)
-                .sortWithinPartitions("conv_id", "turn_idx")
+                # __bucket first: the planned write sorts each task by its
+                # partition column, and a sort that does not lead with it
+                # is replaced, leaving files unsorted by key
+                .sortWithinPartitions("__bucket", "conv_id", "turn_idx")
                 .write.mode("overwrite")
             )
             for k, v in DELTA_WRITE_OPTIONS.items():

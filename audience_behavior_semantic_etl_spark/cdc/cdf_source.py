@@ -98,11 +98,8 @@ def _appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
     out: list[tuple[str, int]] = []
     for v, man in window(root, start, end):
         kind, added, _ = commit_kind(man["files"], man["parent"])
-        # the last lineage row is this commit's own when the ids match
-        own = (man.get("lineage") or [{}])[-1]
-        if kind in ("append", "rewrite") and own.get("op") == "rollback" and (
-            own.get("snapshot_id") == man["snapshot_id"]
-        ):
+        rollback = (man.get("summary") or {}).get("op") == "rollback"
+        if kind in ("append", "rewrite") and rollback:
             raise ValueError(
                 f"change feed window ({start}, {end}] crosses a rollback at "
                 f"v{v}; re-sync the consumer with a full read"

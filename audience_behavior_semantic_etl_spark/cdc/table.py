@@ -7,8 +7,8 @@ pointer swap:
 
 - data files:   ``root/data/f-<snapshot>-<n>.parquet`` (immutable)
 - manifests:    ``root/_manifests/v{N}.json`` — schema, properties
-  (committed batch ids, per-source-part LSN watermarks), capped
-  lineage log, parent version, and the commit's FILE DELTA vs its
+  (committed batch ids, per-source-part LSN watermarks), the commit's
+  own lineage row, parent version, and the commit's FILE DELTA vs its
   parent (Iceberg manifest-file analog) with a periodic inline full
   rollup (manifest-list analog) — commit metadata is O(batch), not
   O(live-files); see the notes above ``Manifest``
@@ -160,9 +160,11 @@ def _safe_dirname(s: str) -> str:
 #     O(files). Per-file key ranges are FILE state (``Manifest.file_stats``,
 #     the DataFile lower/upper-bounds analog), not a property: a range
 #     is written by the commit that adds its file and leaves with it;
-#   - the lineage audit log, capped at LINEAGE_CAP most-recent rows
-#     (older rows age out of the carried log; the retained commit chain
-#     itself — snapshots_df/history_df — is the full history surface).
+#   - the commit's OWN lineage row (``summary``), or none: a manifest
+#     carries no other commit's row. ``lineage()`` reads the rows back
+#     along the head's retained chain, so a row leaves with its
+#     snapshot when gc_orphans expires it — lineage agrees with
+#     snapshots_df/history_df (Iceberg snapshot expiry).
 #
 # ``manifest()`` reconstructs the full state by walking parents to the
 # nearest full base and caching the result per (root, version):
@@ -196,6 +198,7 @@ def _cache_put(key: tuple[str, int], val: tuple) -> None:
                 _STATE_CACHE.pop(k, None)
         _STATE_CACHE[key] = val
 ROLLUP_EVERY = 32
+# lineage() returns at most this many rows, the most recent ones
 LINEAGE_CAP = 256
 
 
@@ -211,7 +214,8 @@ class Manifest:
     # without an entry have no usable footer stats and are always read
     file_stats: dict[str, list[str]] = field(default_factory=dict)
     properties: dict[str, Any] = field(default_factory=dict)
-    lineage: list[dict[str, Any]] = field(default_factory=list)
+    # this commit's own lineage row (None: the commit wrote none)
+    summary: dict[str, Any] | None = None
     # this commit's OWN file delta, populated on read from the stored
     # delta section
     files_added: dict[str, list[str]] = field(default_factory=dict)
@@ -297,7 +301,7 @@ class SnapshotTable:
             buckets=dict(buckets),
             file_stats=ChainMap({}, stats),
             properties=dict(d["properties"]),
-            lineage=list(d.get("lineage", [])),
+            summary=d.get("summary"),
             files_added={b: list(fs) for b, fs in files.get("added", {}).items()},
             files_removed=list(files.get("removed", [])),
         )
@@ -421,8 +425,6 @@ class SnapshotTable:
         ROLLUP_EVERY-th chain hop also write an inline full snapshot
         that resets the reconstruction walk."""
         m.properties["committed_at"] = time.time()
-        if len(m.lineage) > LINEAGE_CAP:
-            m.lineage = m.lineage[-LINEAGE_CAP:]
         pbuckets, pstats, pdepth = (
             self._state(m.parent) if m.parent is not None else ({}, {}, -1)
         )
@@ -466,7 +468,7 @@ class SnapshotTable:
             "columns": [list(c) for c in m.columns],
             "n_buckets": m.n_buckets,
             "properties": m.properties,
-            "lineage": m.lineage,
+            "summary": m.summary,
             "files": {
                 "added": added,
                 "removed": removed,
@@ -1178,11 +1180,8 @@ class SnapshotTable:
 
         def mutate(m: Manifest) -> None:
             m.properties[key] = value
-            m.lineage.append(
-                {"op": "set_property", "key": key, "snapshot_id": m.snapshot_id}
-            )
 
-        self._commit(mutate, ref=ref)
+        self._commit(mutate, ref=ref, lineage={"op": "set_property", "key": key})
 
     # ------------------------------------------------------------ tags
 
@@ -1196,10 +1195,9 @@ class SnapshotTable:
         until ``drop_tag``. Tag names are single-assignment (re-tagging
         raises; drop first) because downstream consumers treat a tag as
         an immutable fact. Returns the pinned version."""
-        pinned = version
+        row = {"op": "create_tag", "tag": name}
 
         def mutate(m: Manifest) -> None:
-            nonlocal pinned
             pinned = m.parent if version is None else int(version)
             # the tagged manifest must actually be readable
             self.manifest(pinned)
@@ -1208,14 +1206,10 @@ class SnapshotTable:
                 raise ValueError(
                     f"tag {name!r} already pins v{tags[name]}; drop_tag first"
                 )
-            tags[name] = pinned
-            m.lineage.append(
-                {"op": "create_tag", "tag": name, "pinned_version": pinned,
-                 "snapshot_id": m.snapshot_id}
-            )
+            tags[name] = row["pinned_version"] = pinned
 
-        self._commit(mutate)
-        return pinned
+        self._commit(mutate, lineage=row)
+        return row["pinned_version"]
 
     def drop_tag(self, name: str) -> None:
         """Release a tag; its version re-enters normal retention and the
@@ -1226,11 +1220,8 @@ class SnapshotTable:
             if name not in tags:
                 raise ValueError(f"no such tag {name!r}")
             del tags[name]
-            m.lineage.append(
-                {"op": "drop_tag", "tag": name, "snapshot_id": m.snapshot_id}
-            )
 
-        self._commit(mutate)
+        self._commit(mutate, lineage={"op": "drop_tag", "tag": name})
 
     def tags(self) -> dict[str, int]:
         """Tag name -> pinned version (main's head properties)."""
@@ -1567,7 +1558,7 @@ class SnapshotTable:
             tags = m.properties.get("tags")
             m.columns, m.n_buckets = tgt.columns, tgt.n_buckets
             m.buckets, m.file_stats = tgt.buckets, tgt.file_stats
-            m.properties, m.lineage = tgt.properties, tgt.lineage
+            m.properties = tgt.properties
             if tags:
                 m.properties["tags"] = tags
             else:
@@ -1604,8 +1595,11 @@ class SnapshotTable:
         - ``mutate`` returning False DECLINES (no-op DDL, a batch the
           ledger already holds): nothing is written, no version number
           is used, and None is returned.
-        - ``lineage``: a row appended with the new and parent snapshot
-          ids.
+        - ``lineage``: the commit's own row (``Manifest.summary``),
+          stamped with the new and parent snapshot ids after ``mutate``
+          ran (it may fill in what only the fresh head decides).
+          ``_commit`` is the only row writer; a commit without one
+          stores None.
         - ``ledger``: ``(app_id, batch_id, watermarks)`` of a data
           commit, folded into the exactly-once ledger.
         - ``snapshot_id``: the id to stamp, when the caller chose it
@@ -1629,11 +1623,10 @@ class SnapshotTable:
                 # advanced (batch ids are per-app monotone by contract)
                 cb = m.properties.setdefault("committed_batches", {})
                 cb[app_id] = max(int(batch_id), int(cb.get(app_id, -1)))
-            if lineage is not None:
-                m.lineage.append(
-                    {**lineage, "snapshot_id": m.snapshot_id,
-                     "parent_snapshot": parent_snapshot}
-                )
+            m.summary = None if lineage is None else {
+                **lineage, "snapshot_id": m.snapshot_id,
+                "parent_snapshot": parent_snapshot,
+            }
             self._write_manifest(m, ref=ref)
             return m.snapshot_id
 
@@ -1732,7 +1725,8 @@ class SnapshotTable:
             # range, not hash: few distinct bucket values hash-collide
             # into unbalanced tasks (see apply.py write path)
             .repartitionByRange(min(n, n_tasks), "__bucket", "conv_id")
-            .sortWithinPartitions("conv_id", "turn_idx")
+            # a range can span buckets; see the apply write's sort
+            .sortWithinPartitions("__bucket", "conv_id", "turn_idx")
             .write.mode("overwrite")
             .partitionBy("__bucket")
             .parquet(staged)
@@ -1974,7 +1968,25 @@ class SnapshotTable:
     # ------------------------------------------------------------ metrics
 
     def lineage(self) -> list[dict[str, Any]]:
-        return self._frozen_manifest().lineage
+        """The lineage rows of main's retained chain, oldest first: at
+        most the LINEAGE_CAP most recent. Walks the head's ancestry
+        newest-first, one small manifest read per hop; from a
+        ``rollback`` row it continues at the restored version, so a
+        rolled-back table reports the restored chain plus the rollback.
+        Stops at the create commit or the first expired hop."""
+        rows: list[dict[str, Any]] = []
+        v = head_version(self.root)
+        while v is not None and len(rows) < LINEAGE_CAP:
+            try:
+                d = read_manifest(self.root, v)
+            except FileNotFoundError:
+                break
+            row = d.get("summary")
+            if row:
+                rows.append(row)
+            rollback = row and row.get("op") == "rollback"
+            v = row["restored_version"] if rollback else d["parent"]
+        return rows[::-1]
 
     # ---------------------------------------------- metadata tables
     #

@@ -37,6 +37,13 @@ past ``last_event + horizon`` for every real group, whatever the delay
 and horizon are. The sentinels are written driver-side with pyarrow:
 the work is one row, so a Spark job per sentinel would be pure
 per-drain overhead.
+
+The default watermark. A drained directory arrives over several
+micro-batches in arbitrary event-time order. A delay covering its full
+event-time span (``span_watermark``) means no real row is ever late,
+so the drained result equals the batch computation. Production
+streams set the real disorder bound instead, and state shrinks
+accordingly.
 """
 
 from __future__ import annotations
@@ -46,7 +53,7 @@ import os
 import re
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from audience_behavior_semantic_etl_spark.scratch import scratch_dir
 
@@ -64,6 +71,18 @@ def parse_interval_seconds(spec: str) -> int:
     if not _SPEC_RE.fullmatch(spec):
         raise ValueError(f"unsupported interval spec: {spec!r}")
     return sum(int(n) * _UNIT_S[u.lower()] for n, u in _TERM_RE.findall(spec))
+
+
+def span_watermark(
+    static: DataFrame, ts_col: str, slack_s: int = 0
+) -> tuple[datetime, str]:
+    """One aggregate job over ``static``'s ``ts_col``: its max (where
+    ``stage_source`` places the sentinels) and the default watermark
+    delay, the full event-time span plus one second plus ``slack_s``
+    (see the module docstring)."""
+    ts = F.col(ts_col).cast("timestamp")
+    lo, hi = static.agg(F.min(ts), F.max(ts)).collect()[0]
+    return hi, f"{int((hi - lo).total_seconds()) + 1 + slack_s} seconds"
 
 
 def write_sentinel(

@@ -28,7 +28,7 @@ the real disorder bound instead, shrinking state accordingly.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from audience_behavior_semantic_etl_spark.streaming.drain import run_sink
+from audience_behavior_semantic_etl_spark.streaming.drain import run_sink, span_watermark
 
 
 def stream_stream_interval_join(
@@ -57,14 +57,9 @@ def stream_stream_interval_join(
     """
     static = spark.read.parquet(src_dir)
     if watermark is None:
-        lo, hi = static.agg(
-            F.min(F.col(ts_col).cast("timestamp")),
-            F.max(F.col(ts_col).cast("timestamp")),
-        ).collect()[0]
-        span_s = int((hi - lo).total_seconds()) + 1
         # the right side must also tolerate range_seconds of skew vs
         # the left watermark before its rows can be state-evicted
-        watermark = f"{span_s + range_seconds} seconds"
+        _, watermark = span_watermark(static, ts_col, range_seconds)
 
     def side(prefix: str, cond: str) -> DataFrame:
         s = (

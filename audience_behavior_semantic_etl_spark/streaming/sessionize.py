@@ -42,7 +42,11 @@ from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from audience_behavior_semantic_etl_spark.streaming.drain import run_sink, stage_source
+from audience_behavior_semantic_etl_spark.streaming.drain import (
+    run_sink,
+    span_watermark,
+    stage_source,
+)
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -176,14 +180,8 @@ def streaming_sessionize(
     the sentinel mechanism with a marker column)."""
     gap_s = gap_minutes * 60
     static = spark.read.parquet(src_dir)
-    lo, hi = (
-        static.agg(
-            F.min(F.col(ts_col).cast("timestamp")), F.max(F.col(ts_col).cast("timestamp"))
-        ).collect()[0]
-    )
-    if delay is None:
-        span_s = int((hi - lo).total_seconds()) + 1
-        delay = f"{span_s} seconds"
+    hi, span_delay = span_watermark(static, ts_col)
+    delay = delay or span_delay
 
     srcd, _ = stage_source(
         src_dir, ts_col, hi, delay, f"{gap_s} seconds", {key_col: -1}

@@ -24,7 +24,11 @@ explained there once).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from audience_behavior_semantic_etl_spark.streaming.drain import run_sink, stage_source
+from audience_behavior_semantic_etl_spark.streaming.drain import (
+    run_sink,
+    span_watermark,
+    stage_source,
+)
 
 
 def tumbling_window_counts(
@@ -45,7 +49,7 @@ def tumbling_window_counts(
     so tests can assert eviction actually happened.
     """
     static = spark.read.parquet(src_dir)
-    max_ts = static.agg(F.max(F.col(ts_col).cast("timestamp"))).collect()[0][0]
+    max_ts, _ = span_watermark(static, ts_col)
     srcd, n_files = stage_source(
         src_dir, ts_col, max_ts, watermark, window_len, {key_col: "__flush__"}
     )
@@ -104,11 +108,8 @@ def stream_static_enrich_counts(
     stays NULL and the final filter drops them from the output). The
     dim never enters the state store."""
     static = spark.read.parquet(src_dir)
-    lo, hi = static.agg(
-        F.min(F.col(ts_col).cast("timestamp")), F.max(F.col(ts_col).cast("timestamp"))
-    ).collect()[0]
-    if watermark is None:
-        watermark = f"{int((hi - lo).total_seconds()) + 1} seconds"
+    hi, span_delay = span_watermark(static, ts_col)
+    watermark = watermark or span_delay
     # NULL join key: survives to the watermark tracker, dropped by the
     # label filter below
     srcd, n_files = stage_source(

@@ -7,6 +7,7 @@ independent ways + idempotency/resume tests.)
 from __future__ import annotations
 
 import json
+import os
 
 import pandas as pd
 import pytest
@@ -288,7 +289,7 @@ def test_crash_between_manifest_and_pointer_swap(spark, tmp_path):
         "columns": [list(c) for c in m.columns],
         "n_buckets": m.n_buckets,
         "properties": m.properties,
-        "lineage": [],
+        "summary": None,
         # would-be "emptied" table
         "files": {"added": {}, "removed": [], "stats_added": {}, "stats_removed": [],
                   "full": {"buckets": {}, "stats": {}}},
@@ -471,6 +472,36 @@ def test_read_key_point_lookup_prunes_to_one_bucket(spark, small_log, tmp_path):
     n_total = sum(len(fs) for fs in table.manifest().buckets.values())
     n_scanned = len(table.read_key(conv).inputFiles())
     assert n_scanned < n_total, "point lookup scanned the whole table"
+
+
+def test_delta_and_compacted_files_are_key_sorted(spark, tmp_path):
+    """Every delta file an apply adopts, and every file a compaction
+    rewrites, is sorted by (conv_id, turn_idx) — what read_key's
+    per-file ranges and parquet row-group pruning rely on. 16 buckets
+    over 4 write tasks puts several buckets in each task."""
+    import pyarrow.parquet as pq
+
+    def unsorted_files(t):
+        bad = []
+        for fs in t.manifest().buckets.values():
+            for rel in fs:
+                keys = pq.read_table(
+                    os.path.join(t.root, rel), columns=["conv_id", "turn_idx"]
+                ).to_pylist()
+                ordered = [(r["conv_id"], r["turn_idx"]) for r in keys]
+                if ordered != sorted(ordered):
+                    bad.append(rel)
+        return bad
+
+    log = generate_change_log(GenConfig(seed=5, n_convs=300, mean_turns=4))
+    table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=16)
+    apply_batch(
+        _envelope_df(spark, log), table, 0,
+        ApplyConfig(shuffle_partitions=4, auto_compact=False),
+    )
+    assert unsorted_files(table) == []
+    table.compact_buckets(list(range(16)), shuffle_partitions=4)
+    assert unsorted_files(table) == []
 
 
 def test_read_changes_incremental(spark, tmp_path):

@@ -1,7 +1,8 @@
 """Metadata tables (cdc/table.py snapshots_df / files_df /
 history_df) — the Iceberg SELECT-FROM-t.snapshots analog: commit
 history with structural operation classification, live-file inventory
-with key-range stats, ancestry + tag refs."""
+with key-range stats, ancestry + tag refs — and lineage(), the rows
+read back along the retained commit chain."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import json
 
 import pandas as pd
 
+from audience_behavior_semantic_etl_spark.cdc import commits
 from audience_behavior_semantic_etl_spark.cdc.apply import apply_batch
 from audience_behavior_semantic_etl_spark.cdc.schema import ENVELOPE_SCHEMA
 from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
@@ -85,3 +87,50 @@ def test_snapshots_after_gc_marks_unknown_diff(spark, tmp_path):
     assert snaps[vs[0]]["files_added"] >= 1
     assert snaps[vs[0]]["files_removed"] == 0
     assert snaps[vs[1]]["operation"] == "append"
+
+
+def _own_rows_only(t):
+    """Every stored manifest holds at most its own lineage row."""
+    for v in commits.retained_versions(t.root):
+        d = commits.read_manifest(t.root, v)
+        assert "lineage" not in d
+        assert d["summary"] is None or d["summary"]["snapshot_id"] == d["snapshot_id"]
+
+
+def test_lineage_after_rollback_is_target_rows_plus_rollback(spark, tmp_path):
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    apply_batch(_env(spark, [(1, "insert", 0, "a")]), t, 0)
+    t.set_property("owner", "etl")
+    apply_batch(_env(spark, [(2, "insert", 1, "b")]), t, 1)
+    target, want = t.manifest().version, t.lineage()
+    assert [r.get("op") for r in want] == [None, "set_property", None]
+    apply_batch(_env(spark, [(3, "update", 0, "c")]), t, 2)
+    t.create_tag("before-rollback")
+    t.drop_tag("before-rollback")
+
+    t.rollback(version=target)
+    head = t.manifest()
+    got = t.lineage()
+    assert got[:-1] == want
+    assert got[-1]["op"] == "rollback" and got[-1]["restored_version"] == target
+    assert got[-1]["snapshot_id"] == head.snapshot_id == head.summary["snapshot_id"]
+    # re-delivery after the rollback re-applies the dropped batch
+    apply_batch(_env(spark, [(3, "update", 0, "c")]), t, 2)
+    assert [r.get("batch_id") for r in t.lineage()] == [0, None, 1, None, 2]
+    _own_rows_only(t)
+
+
+def test_lineage_after_gc_is_the_retained_chain(spark, tmp_path):
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    for b in range(5):
+        apply_batch(_env(spark, [(b + 1, "insert", b, f"t{b}")]), t, b)
+    assert [r["batch_id"] for r in t.lineage()] == [0, 1, 2, 3, 4]
+    t.gc_orphans(keep_versions=3, staging_grace_seconds=0)
+    kept = commits.retained_versions(t.root)
+    assert len(kept) == 3
+    got = t.lineage()
+    assert [r["batch_id"] for r in got] == [2, 3, 4]
+    assert [r["snapshot_id"] for r in got] == [
+        commits.read_manifest(t.root, v)["snapshot_id"] for v in kept
+    ]
+    _own_rows_only(t)

@@ -280,7 +280,7 @@ def test_batch_with_ddl_and_patches_is_one_snapshot(spark, tmp_path):
     # masks and patched_columns hold PHYSICAL names: content is stored as text
     assert m.properties["patched_columns"] == ["model", "text"]
     assert any(m.files_added.values())
-    assert not [r for r in m.lineage if r.get("op") == "set_property"]
+    assert not [r for r in t.lineage() if r.get("op") == "set_property"]
     got = _row(t)
     assert (got["role"], got["content"], got["model"]) == ("user", "b", "m1")
 
