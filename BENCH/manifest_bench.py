@@ -7,11 +7,13 @@ deltas + periodic full rollups; this probe measures the pure metadata
 path (no Spark, no data writes — exactly the part that used to scale
 with the table) by committing synthetic file batches through
 the apply commit's manifest machinery at growing live-file
-counts and timing ``_commit`` + a cold ``manifest()`` read.
+counts and timing ``_commit`` + a cold ``manifest()`` read (the
+median of ``--cold-reads`` reads, each after clearing the state cache:
+one sample swings about 2x between runs of the same code).
 
 Pass criterion (VERDICT): 10x more live files -> ~same commit seconds.
 
-Usage: python BENCH/manifest_bench.py [--files-per-commit 8]
+Usage: python BENCH/manifest_bench.py [--files-per-commit 16] [--cold-reads 15]
 Prints one JSON line.
 """
 
@@ -20,6 +22,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -59,6 +62,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--files-per-commit", type=int, default=16)
     ap.add_argument("--levels", type=int, nargs="*", default=[1_000, 10_000, 100_000])
+    ap.add_argument("--cold-reads", type=int, default=15)
     args = ap.parse_args()
 
     out: dict[str, dict] = {}
@@ -80,11 +84,13 @@ def main() -> None:
                 batch += 1
                 live += args.files_per_commit
             times.sort()
-            # cold manifest read: cache cleared, reconstruct from disk
-            table_mod._STATE_CACHE.clear()
-            r0 = time.perf_counter()
-            m = t.manifest()
-            cold_read = time.perf_counter() - r0
+            # cold manifest reads: cache cleared, reconstruct from disk
+            cold = []
+            for _ in range(args.cold_reads):
+                table_mod._STATE_CACHE.clear()
+                r0 = time.perf_counter()
+                m = t.manifest()
+                cold.append(time.perf_counter() - r0)
             r0 = time.perf_counter()
             t.manifest()
             warm_read = time.perf_counter() - r0
@@ -92,7 +98,7 @@ def main() -> None:
                 "live_files": sum(len(fs) for fs in m.buckets.values()),
                 "commit_p50_ms": round(times[len(times) // 2] * 1000, 3),
                 "commit_p95_ms": round(times[int(len(times) * 0.95)] * 1000, 3),
-                "cold_read_ms": round(cold_read * 1000, 3),
+                "cold_read_ms": round(statistics.median(cold) * 1000, 3),
                 "warm_read_ms": round(warm_read * 1000, 3),
             }
         lo, hi = str(min(args.levels)), str(max(args.levels))

@@ -21,20 +21,18 @@ Design (all driver-side logic is manifest-only — no data read):
   so the ``maxVersionsPerTrigger`` cap counts commits along the
   chosen ref's parent chain, never version arithmetic.
 - **A micro-batch (start, end] is the files its commits APPENDED**,
-  read from each commit's stored file delta (``commit_kind``). An
-  append commit's files are new row versions, delivered; a rewrite
-  commit (compaction / tombstone purge / rebucket) carries no new row
-  versions and contributes NOTHING. This is why the stream SURVIVES
-  maintenance where batch ``read_changes`` must refuse the window: a
-  rewritten file would re-deliver already-consumed versions, so it is
-  skipped, while genuine appends before/after the rewrite flow
-  through. Metadata-only commits (schema evolution, set_property)
-  naturally contribute no files.
-- **A rollback fails the stream**, as batch ``read_changes`` refuses
-  it: it drops row versions a consumer (replica, incremental view) may
-  already hold, so skipping it like a compaction would keep them
-  silently. The consumer re-syncs from a full read — Delta's streaming
-  source fails on data-changing removes the same way.
+  decided by ``commits.appended_files`` — the one changelog rule that
+  batch ``read_changes`` and the incremental view share. An append
+  commit's files are new row versions, delivered with their commit
+  version as ``_commit_version`` (the Delta CDF column); a rewrite
+  commit (compaction / tombstone purge / rebucket) re-states versions
+  already delivered and contributes NOTHING, so the stream survives
+  maintenance; a metadata commit adds no file.
+- **A rollback fails the stream**: it drops row versions a consumer
+  (replica, incremental view) may already hold, so skipping it like a
+  compaction would keep them silently. The consumer re-syncs from a
+  full read — Delta's streaming source fails on data-changing removes
+  the same way.
 - **One InputPartition per file**, read EXECUTOR-side with pyarrow
   and yielded as Arrow RecordBatches (the vectorized fast path — no
   per-row Python). Parallelism = files in the window, which at a
@@ -73,10 +71,9 @@ from pyspark.sql import types as T
 
 from audience_behavior_semantic_etl_spark.cdc import schema as S
 from audience_behavior_semantic_etl_spark.cdc.commits import (
-    commit_kind,
+    appended_files,
     head_version,
     read_manifest,
-    window,
 )
 
 
@@ -84,32 +81,6 @@ class _FilePartition(InputPartition):
     def __init__(self, path: str, commit_version: int = -1):
         self.path = path
         self.commit_version = commit_version
-
-
-def _appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
-    """(file, commit version) pairs appended by append-only commits in
-    versions (start, end], newest-first walk over the manifest chain
-    (same traversal as table.read_changes, but maintenance windows are
-    SKIPPED, not refused; a rollback is refused, as read_changes does —
-    see module docstring). The commit version rides into the stream as
-    ``_commit_version`` (the Delta CDF ``_commit_version`` analog) so
-    consumers can order and window by commit without re-deriving it
-    from LSNs."""
-    out: list[tuple[str, int]] = []
-    for v, man in window(root, start, end):
-        kind, added, _ = commit_kind(man["files"], man["parent"])
-        rollback = (man.get("summary") or {}).get("op") == "rollback"
-        if kind in ("append", "rewrite") and rollback:
-            raise ValueError(
-                f"change feed window ({start}, {end}] crosses a rollback at "
-                f"v{v}; re-sync the consumer with a full read"
-            )
-        if kind != "rewrite":
-            out.extend((f, v) for f in added)
-    seen: dict[str, int] = {}
-    for f, v in out:
-        seen.setdefault(f, v)
-    return sorted(seen.items())
 
 
 class TranscriptsCDFReader(DataSourceStreamReader):
@@ -182,7 +153,7 @@ class TranscriptsCDFReader(DataSourceStreamReader):
         return {"version": end}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        rels = _appended_files(self.root, start["version"], end["version"])
+        rels = appended_files(self.root, start["version"], end["version"])
         return [
             _FilePartition(os.path.join(self.root, r), v) for r, v in rels
         ] or [

@@ -14,9 +14,11 @@ mid-write leaves the old content (plus a ``*.tmp.*`` file that
 Every ``v{N}.json`` stores the commit's own ``files`` section
 (``added``: bucket -> paths, ``removed``: paths), so what a commit did
 is decidable from that one record — no parent read, and the answer
-survives parent expiry. Kept free of any Spark or table import: the
-CDF stream reader is pickled to executors and must not drag the table
-class along.
+survives parent expiry. ``appended_files`` is the one changelog rule
+built on it: batch ``read_changes``, the CDF stream and the
+incremental view all read a change window through it. Kept free of
+any Spark or table import: the CDF stream reader is pickled to
+executors and must not drag the table class along.
 """
 
 from __future__ import annotations
@@ -142,8 +144,8 @@ def commit_kind(files: dict, parent: int | None) -> tuple[str, list[str], list[s
 
     - ``create``: the table's first commit (no parent);
     - ``rewrite``: removed files (compaction / purge / rebucket) — its
-      additions re-state existing row versions, so changelog readers
-      refuse or skip it;
+      additions re-state existing row versions, so the changelog skips
+      it (``appended_files``);
     - ``append``: added files only — every file holds new row versions;
     - ``metadata``: touched no file (DDL, tags, properties)."""
     added = [f for fs in files.get("added", {}).values() for f in fs]
@@ -157,3 +159,32 @@ def commit_kind(files: dict, parent: int | None) -> tuple[str, list[str], list[s
     else:
         kind = "metadata"
     return kind, added, removed
+
+
+def appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
+    """The change window ``(start, end]`` along ``end``'s chain as
+    ``(file, commit version)`` pairs, sorted by file: the files its
+    append commits added, each holding new row versions.
+
+    - A rewrite (compaction / purge / rebucket) re-states row versions
+      the window already holds, so it contributes nothing — Iceberg's
+      incremental append scan ignores ``replace`` snapshots, Delta's
+      stream ignores ``dataChange=false`` commits.
+    - A rollback that changed files drops row versions a consumer may
+      already hold: ValueError, and the consumer re-syncs with a full
+      read.
+    - A metadata commit (DDL, tags, properties) adds no file.
+    - A pruned window raises FileNotFoundError (``window``)."""
+    files: dict[str, int] = {}
+    for v, d in window(root, start, end):
+        kind, added, _ = commit_kind(d["files"], d["parent"])
+        rollback = (d.get("summary") or {}).get("op") == "rollback"
+        if rollback and kind in ("append", "rewrite"):
+            raise ValueError(
+                f"change window ({start}, {end}] crosses a rollback at v{v}; "
+                "re-sync the consumer with a full read"
+            )
+        if kind != "rewrite":
+            for f in added:
+                files.setdefault(f, v)
+    return sorted(files.items())

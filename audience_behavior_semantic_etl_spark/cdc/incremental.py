@@ -5,9 +5,11 @@ O(changes-touched work), never O(table).
 This is the consumer side of the CDC contract — the reason a CDC
 engine exists at all is that downstream cubes (the reference's daily
 session/user/conversion cubes, AcmeDailyETL.scala:375-711) should NOT
-rescan 10^10 rows per refresh. ``SnapshotTable.read_changes`` already
-exposes the per-commit changelog (Iceberg incremental reads); this
-module closes the loop by maintaining a grouped aggregate from it.
+rescan 10^10 rows per refresh. ``SnapshotTable.read_changes`` and the
+CDF stream expose the per-commit changelog under one rule
+(``commits.appended_files``: append commits deliver their files,
+rewrite commits contribute nothing); this module closes the loop by
+maintaining a grouped aggregate from it.
 
 Design: RECOMPUTE-BASED IVM (partition-scoped), not delta algebra.
 
@@ -43,9 +45,10 @@ partition-pruned rewrite of the (already aggregated, small) view.
 With n_buckets sized so a bucket fits a task (the table's own sizing
 rule), a batch touching k conversations costs ~k/(table keys) of a
 full refresh. Single-refresher assumption (same as the table's
-single-writer commit rule); crossing a compaction in the incremental
-window falls back to a full refresh, per read_changes' contract, and
-so does a rebucket, by the layout check above.
+single-writer commit rule). A compaction or purge in the window stays
+incremental (the changelog skips rewrites); a full refresh happens
+only when the window crosses a rollback or was pruned by gc_orphans,
+and on a rebucket, by the layout check above.
 """
 
 from __future__ import annotations
@@ -137,8 +140,9 @@ class IncrementalView:
             return {"mode": "noop", "synced_version": synced, "affected_buckets": 0}
         try:
             changes = self.table.read_changes(synced, m.version)
-        except ValueError:
-            # incremental window crosses a compaction/purge — re-sync
+        except (ValueError, FileNotFoundError):
+            # the window crosses a rollback, or gc_orphans expired the
+            # synced version: no changelog reaches back — re-sync
             return self._full(m)
         # changed group keys: bounded by conversations touched since the
         # last sync — the only driver-side list is their BUCKET ids
@@ -228,16 +232,16 @@ class IncrementalView:
         """CONTINUOUS view maintenance off the table's streaming change
         feed (cdc/cdf_source.py) instead of version-window polling.
 
-        Why this beats ``refresh()`` at scale: the CDF source excludes
-        maintenance commits structurally, so the incremental window
-        NEVER crosses a compaction from the view's perspective — the
-        full-rescan fallback (the one O(table) cost in this module)
-        disappears from steady-state operation. Progress is the stream
-        checkpoint (exactly-once microbatches); correctness does not
-        depend on it, because each microbatch RECOMPUTES its changed
-        groups from the current table — re-delivery after a crash
-        re-runs an idempotent recompute, same as ``refresh``'s
-        crash-healing contract.
+        The feed follows ``refresh()``'s changelog rule
+        (``commits.appended_files``): a compaction or purge contributes
+        nothing and never forces the full rescan; a rollback fails the
+        stream (re-sync with ``refresh()``). What the stream adds is
+        the deployment shape: changed keys arrive per micro-batch, and
+        progress is the stream checkpoint (exactly-once microbatches).
+        Correctness does not depend on it, because each microbatch
+        RECOMPUTES its changed groups from the current table —
+        re-delivery after a crash re-runs an idempotent recompute,
+        same as ``refresh``'s crash-healing contract.
 
         Bootstraps with one full materialization if the view never
         refreshed, then streams from that synced version. Returns the

@@ -64,6 +64,7 @@ from audience_behavior_semantic_etl_spark.cdc import commits
 from audience_behavior_semantic_etl_spark.cdc import schema as S
 from audience_behavior_semantic_etl_spark.cdc.commits import (
     ancestry,
+    appended_files,
     commit_kind,
     head_version,
     read_manifest,
@@ -216,8 +217,8 @@ class Manifest:
     properties: dict[str, Any] = field(default_factory=dict)
     # this commit's own lineage row (None: the commit wrote none)
     summary: dict[str, Any] | None = None
-    # this commit's OWN file delta, populated on read from the stored
-    # delta section
+    # this commit's OWN file delta: the stored delta section's lists,
+    # shared with the parsed manifest, not copied
     files_added: dict[str, list[str]] = field(default_factory=dict)
     files_removed: list[str] = field(default_factory=list)
 
@@ -256,33 +257,24 @@ class SnapshotTable:
     def exists(root: str) -> bool:
         return os.path.exists(os.path.join(root, "_current"))
 
-    def manifest(self, version: int | None = None, ref: str = "main") -> Manifest:
-        """Current manifest, or a specific committed version (time
-        travel — Iceberg snapshot-id reads; old data files stay on disk
-        until a GC pass, so every committed version remains readable).
-        ``ref`` selects which head to resolve when ``version`` is None:
-        "main" (the `_current` pointer) or a named branch.
-
-        The returned object carries the RECONSTRUCTED full file state
-        (delta chain folded onto the nearest full base — cached, see
-        module notes) as fresh mutable copies: callers mutate it freely
-        without touching the cache."""
-        m = self._frozen_manifest(version, ref)
-        m.buckets = {b: list(fs) for b, fs in m.buckets.items()}
-        m.file_stats = dict(m.file_stats.maps[-1])
-        return m
-
-    def _frozen_manifest(
+    def manifest(
         self, version: int | None = None, ref: str = "main", tag: str | None = None
     ) -> Manifest:
         """THE resolver: ``version``, else ``tag`` (a named pin), else
-        ``ref``'s head -> that snapshot's manifest over the cached state,
-        uncopied. Every reader and both rewrites resolve once and plan
-        from that one manifest (the Iceberg one-snapshot-id scan rule).
-        ``_commit`` hands the same shape to ``mutate``: each bucket entry
-        is the state's frozen tuple, so an untouched bucket is
-        recognized by identity, and ``file_stats`` is a write overlay on
-        the state's map, so a commit copies no O(live-files) map."""
+        ``ref``'s head ("main" is the ``_current`` pointer, any other
+        name a branch) -> that snapshot's manifest. Every committed
+        version stays readable until a GC pass (time travel — Iceberg
+        snapshot-id reads). Every reader and both rewrites resolve once
+        and plan from that one manifest (the Iceberg one-snapshot-id
+        scan rule).
+
+        The file state is the cached reconstruction (delta chain folded
+        onto the nearest full base), uncopied: each bucket entry is the
+        state's frozen tuple and ``file_stats`` is a write overlay on
+        the state's map, so a resolve copies no O(live-files) structure
+        and an in-place edit of a bucket raises. ``_commit`` hands the
+        same shape to ``mutate``, which REPLACES entries; an untouched
+        bucket is then recognized by identity."""
         if tag is not None:
             if version is not None:
                 raise ValueError("pass version or tag, not both")
@@ -302,8 +294,8 @@ class SnapshotTable:
             file_stats=ChainMap({}, stats),
             properties=dict(d["properties"]),
             summary=d.get("summary"),
-            files_added={b: list(fs) for b, fs in files.get("added", {}).items()},
-            files_removed=list(files.get("removed", [])),
+            files_added=files.get("added", {}),
+            files_removed=files.get("removed", []),
         )
 
     def _state(
@@ -354,17 +346,11 @@ class SnapshotTable:
         else:
             buckets = {b: list(fs) for b, fs in pbuckets.items()}
             stats = dict(pstats)
-            for files in reversed(chain):  # oldest pending first
-                removed = set(files.get("removed", []))
-                if removed:  # defensive: deltas are written append-only
-                    for b in list(buckets):
-                        buckets[b] = [f for f in buckets[b] if f not in removed]
-                    for k in removed:
-                        stats.pop(k, None)
+            # oldest pending first; a delta only adds: a commit that
+            # removes files stores a full base (_write_manifest)
+            for files in reversed(chain):
                 for b, rels in files.get("added", {}).items():
                     buckets.setdefault(b, []).extend(rels)
-                for k in files.get("stats_removed", []):
-                    stats.pop(k, None)
                 stats.update(files.get("stats_added", {}))
             buckets = {b: tuple(fs) for b, fs in buckets.items()}
             depth = pdepth + len(chain)
@@ -715,7 +701,7 @@ class SnapshotTable:
         metadata columns — maintenance/compaction input. ``version``
         time-travels to an older committed snapshot; ``ref`` reads a
         branch head instead of main."""
-        return self._scan(self._frozen_manifest(version, ref), buckets)
+        return self._scan(self.manifest(version, ref), buckets)
 
     def _read_rel_files(self, m: Manifest, rels: list[str]) -> DataFrame:
         """Raw scan of an explicit manifest-relative file list under the
@@ -764,7 +750,7 @@ class SnapshotTable:
         Both modes collapse to full rows; ``_set`` never leaks out.
         Tombstones are kept with ``_lsn`` and ``_deleted``, so callers
         see deletions; ``read_final`` filters them."""
-        m = self._frozen_manifest(version, ref)
+        m = self.manifest(version, ref)
         return self._resolve(self._scan(m, buckets), m)
 
     def read_final(
@@ -779,7 +765,7 @@ class SnapshotTable:
         resolves a named pin (create_tag) to its version; ``ref``
         reads a branch head; ``buckets`` scopes the scan (the
         incremental view's changed-group recompute)."""
-        m = self._frozen_manifest(version, ref, tag)
+        m = self.manifest(version, ref, tag)
         return self._resolve_final(self._scan(m, buckets), m)
 
     def read_key(self, conv_id: str, version: int | None = None) -> DataFrame:
@@ -801,7 +787,7 @@ class SnapshotTable:
 
         Files with no recorded stats (pre-stats tables, foreign
         writers) are always read — pruning is never unsound."""
-        m = self._frozen_manifest(version)
+        m = self.manifest(version)
         b = (
             self.spark.range(1)
             .select(bucket_expr(F.lit(conv_id), m.n_buckets).alias("b"))
@@ -929,37 +915,24 @@ class SnapshotTable:
         )
 
     def read_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
-        """Incremental consumption (CDC-out): every row VERSION written
-        by commits AFTER ``from_version`` up to ``to_version``/current —
-        the files those snapshots appended, nothing else. Downstream
-        consumers chain pipelines without rescanning the table
-        (Iceberg incremental reads / Hudi incremental queries).
-        Tombstones appear with ``_deleted = true`` so deletions
-        propagate; ``_lsn`` orders multiple versions of a key.
+        """Incremental consumption (CDC-out): every row VERSION the
+        append commits after ``from_version`` up to ``to_version``/
+        current wrote — the files ``commits.appended_files`` keeps for
+        that window, nothing else. Downstream consumers chain pipelines
+        without rescanning the table (Iceberg incremental append scans
+        / Hudi incremental queries). Tombstones appear with ``_deleted
+        = true`` so deletions propagate; ``_lsn`` orders multiple
+        versions of a key; ``_set`` carries partial-update masks.
 
-        A commit that REWRITES files (compaction) carries no new row
-        versions, and appends after it are relative to the rewritten
-        base — an incremental window crossing one is ambiguous, so it
-        is refused (``commit_kind`` "rewrite") and the caller re-syncs
-        with a full read — the standard Iceberg incremental-read
-        limitation."""
-        m_to = self._frozen_manifest(to_version)
-        cur = m_to.version
-        new_files: list[str] = []
-        for v, d in commits.window(self.root, from_version, cur):
-            kind, added, _ = commit_kind(d["files"], d["parent"])
-            if kind == "rewrite":
-                raise ValueError(
-                    f"incremental window ({from_version}, {cur}] crosses a "
-                    f"file-rewriting commit (compaction/purge) at v{v}; "
-                    "re-sync with a full read"
-                )
-            new_files.extend(added)
-        # _set rides the changelog too: a downstream incremental
-        # consumer of a partial-update table needs the masks to apply
-        # patches with the same column-fold semantics. _read_rel_files
-        # also handles physical->logical aliasing for renamed columns.
-        return self._read_rel_files(m_to, sorted(set(new_files)))
+        The rule is the CDF stream's: a rewrite commit (compaction /
+        purge / rebucket) re-states versions the window already holds
+        and contributes nothing, so a window across one stays
+        incremental. A rollback that changed files raises ValueError
+        and a window pruned by gc_orphans raises FileNotFoundError; the
+        caller re-syncs with a full read."""
+        m_to = self.manifest(to_version)
+        rels = appended_files(self.root, from_version, m_to.version)
+        return self._read_rel_files(m_to, [f for f, _ in rels])
 
     # ------------------------------------------------------------ write
 
@@ -1455,10 +1428,10 @@ class SnapshotTable:
         ledger's high-water mark is refused rather than silently
         skipped: the ledger cannot distinguish "landed earlier" from
         "never landed", so replay a diverged chain's commits
-        oldest-first. Rewrite commits are refused by ``read_changes``
-        (their row set is relative to a base the target may not
-        share); DDL/metadata commits carry no batch and are refused
-        here. Returns the apply's ``BatchMetrics``."""
+        oldest-first. Maintenance rewrites and DDL/metadata commits
+        land no batch, so ``_single_batch_delta`` refuses them; a
+        rollback is refused by ``read_changes``. Returns the apply's
+        ``BatchMetrics``."""
         import dataclasses
 
         from audience_behavior_semantic_etl_spark.cdc.apply import (
@@ -1607,7 +1580,7 @@ class SnapshotTable:
           time); a fresh one otherwise."""
 
         def run() -> str | None:
-            m = self._frozen_manifest(ref=ref)
+            m = self.manifest(ref=ref)
             parent_snapshot = m.snapshot_id
             m.parent, m.version = m.version, self._alloc_version()
             m.snapshot_id = snapshot_id or uuid.uuid4().hex
@@ -1676,7 +1649,7 @@ class SnapshotTable:
         snapshots still see them until a GC pass)."""
         if not buckets:
             return None
-        m = self._frozen_manifest()
+        m = self.manifest()
         # base file set AS READ — commit_merged_buckets retains any file
         # appended to these buckets by a commit that lands while this
         # compaction is running (rewrite-vs-append conflict rule)
@@ -1736,7 +1709,7 @@ class SnapshotTable:
     def purge_tombstones(self, below_lsn: int, shuffle_partitions: int | None = None) -> str | None:
         """Compact ALL buckets, dropping tombstones below the supplied
         re-delivery horizon (see compact_buckets)."""
-        m = self._frozen_manifest()
+        m = self.manifest()
         buckets = [int(b) for b, fs in m.buckets.items() if fs]
         return self.compact_buckets(
             buckets, purge_tombstones_below_lsn=below_lsn, shuffle_partitions=shuffle_partitions
@@ -1773,7 +1746,7 @@ class SnapshotTable:
         Raises on no-op (same bucket count)."""
         if new_n_buckets < 1:
             raise ValueError(f"rebucket: need >= 1 bucket, got {new_n_buckets}")
-        m0 = self._frozen_manifest()
+        m0 = self.manifest()
         if new_n_buckets == m0.n_buckets:
             raise ValueError(f"rebucket: table already has {new_n_buckets} buckets")
         resolved = self._resolve(self._scan(m0), m0)
@@ -2003,8 +1976,9 @@ class SnapshotTable:
 
     def snapshots_df(self) -> DataFrame:
         """One row per retained committed version: commit kind from the
-        stored file delta (``commit_kind`` — the classification the CDF
-        source, read_changes and cherry_pick share), plus file counts."""
+        stored file delta (``commit_kind`` — the classification the
+        changelog rule ``appended_files`` and cherry_pick read), plus
+        file counts."""
         schema = T.StructType([
             T.StructField("version", T.LongType()),
             T.StructField("snapshot_id", T.StringType()),
@@ -2040,7 +2014,7 @@ class SnapshotTable:
             T.StructField("key_min", T.StringType()),
             T.StructField("key_max", T.StringType()),
         ])
-        m = self._frozen_manifest(version)
+        m = self.manifest(version)
         stats = m.file_stats
         rows = []
         for b, fs in m.buckets.items():

@@ -506,8 +506,9 @@ def test_delta_and_compacted_files_are_key_sorted(spark, tmp_path):
 
 def test_read_changes_incremental(spark, tmp_path):
     """Incremental CDC-out: each window returns exactly the row versions
-    its commits appended (tombstones included); windows crossing a
-    compaction are refused."""
+    its append commits wrote (tombstones included). A compaction in the
+    window contributes nothing, so a window across it stays incremental;
+    a rollback in the window is refused."""
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     v0 = table.manifest().version
     apply_batch(_envelope_df(spark, _mk_events([(1, "insert", "A"), (2, "update", "B")])), table, 0)
@@ -518,14 +519,22 @@ def test_read_changes_incremental(spark, tmp_path):
     v2 = table.manifest().version
     ch2 = table.read_changes(v1, v2).toPandas()
     assert list(ch2["_lsn"]) == [3] and bool(ch2["_deleted"].iloc[0])
-    # full window still fine pre-compaction
     assert sorted(table.read_changes(v0).toPandas()["_lsn"]) == [1, 2, 3]
     table.compact_buckets([int(b) for b in table.manifest().buckets])
     v3 = table.manifest().version
-    with pytest.raises(ValueError, match="re-sync"):
-        table.read_changes(v1)
+    assert table.read_changes(v2, v3).count() == 0, "a rewrite adds no row version"
     apply_batch(_envelope_df(spark, _mk_events([(9, "insert", "C")])), table, 2)
     assert list(table.read_changes(v3).toPandas()["_lsn"]) == [9]
+    # windows spanning the compaction: exactly the appended row versions
+    across = table.read_changes(v1).toPandas().sort_values("_lsn")
+    assert list(across["_lsn"]) == [3, 9]
+    assert list(across["_deleted"].fillna(False)) == [True, False]
+    assert across["text"].iloc[1] == "C"
+    assert sorted(table.read_changes(v0).toPandas()["_lsn"]) == [1, 2, 3, 9]
+    # a rollback drops row versions a consumer may hold: refused
+    table.rollback(v1)
+    with pytest.raises(ValueError, match="rollback"):
+        table.read_changes(v2)
 
 
 def test_watermarks_monotone_per_source_part(spark, small_log, tmp_path):

@@ -84,7 +84,7 @@ def test_cdf_exactly_once_across_restart_and_compaction(registered, tmp_path):
     version exactly once across a stream restart, and a compaction +
     tombstone purge in the window must contribute NOTHING (its files
     are rewrites of already-delivered versions) while the apply after
-    it flows through — the case batch read_changes refuses."""
+    it flows through — the changelog rule batch read_changes shares."""
     spark = registered
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     cfg = ApplyConfig(app_id="cdf", auto_compact=False, shuffle_partitions=4)

@@ -3,7 +3,8 @@ every metadata operation goes through the one commit primitive, so a
 seeded random sequence of them must keep the manifest DAG well formed
 — each commit's parent is its ref's previous head, version numbers
 only grow and are never reused, a declined (no-op) operation uses no
-version, and every retained manifest parses."""
+version, and every retained manifest parses. Also the changelog rule
+(``commits.appended_files``) over hand-written manifests."""
 
 from __future__ import annotations
 
@@ -15,9 +16,11 @@ import pytest
 
 from audience_behavior_semantic_etl_spark.cdc.commits import (
     ancestry,
+    appended_files,
     commit_kind,
     head_version,
     read_manifest,
+    write_manifest,
 )
 from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
@@ -156,7 +159,7 @@ def test_data_commits_store_exactly_their_file_delta(tmp_path):
     def check_all() -> None:
         for v, (buckets, stats) in model.items():
             m = t.manifest(v)
-            assert m.buckets == buckets, v
+            assert {b: list(fs) for b, fs in m.buckets.items()} == buckets, v
             assert m.file_stats == stats, v
 
     def step(kind: str, commit, added: list[str], removed: list[str],
@@ -210,6 +213,10 @@ def test_data_commits_store_exactly_their_file_delta(tmp_path):
     )
     b0 = files(1)
     append({"0": b0}, {b0[0]: ["g", "k"]}, 1)
+    # a resolved manifest is the cached state, uncopied: an in-place
+    # edit of a bucket raises instead of corrupting the cache
+    with pytest.raises(AttributeError):
+        t.manifest().buckets["0"].append("data/f-stray.parquet")
 
     # bucket rewrite: bucket 0's three files fold into one
     c0 = files(1)
@@ -241,3 +248,66 @@ def test_data_commits_store_exactly_their_file_delta(tmp_path):
     # a rollback restates every bucket from its target
     step("rewrite", rollback, a0, c0, shares=False)
     assert t.manifest().properties["committed_batches"] == {"app": 0}
+
+
+# ------------------------------------------------ the changelog rule
+
+
+def _write_chain(root, commits: list[tuple[dict, list, str | None]]) -> None:
+    """Hand-written manifests v0..vN, each ``(added, removed, op)``: the
+    fields ``appended_files`` reads (file delta, parent, lineage row)."""
+    os.makedirs(os.path.join(root, "_manifests"))
+    for v, (added, removed, op) in enumerate(commits):
+        write_manifest(root, v, {
+            "version": v,
+            "parent": v - 1 if v else None,
+            "summary": {"op": op} if op else None,
+            "files": {"added": added, "removed": removed},
+        })
+
+
+@pytest.fixture
+def chain(tmp_path):
+    root = str(tmp_path / "t")
+    _write_chain(root, [
+        ({}, [], None),                                # v0 create
+        ({"0": ["d/a"]}, [], "apply"),                 # v1 append
+        ({"0": ["d/b"], "1": ["d/c"]}, [], "apply"),   # v2 append
+        ({"0": ["d/ab"]}, ["d/a", "d/b"], "compact"),  # v3 rewrite
+        ({}, [], "set_property"),                      # v4 metadata
+        ({"1": ["d/e"]}, [], "apply"),                 # v5 append
+        ({"0": ["d/a", "d/b"]}, ["d/ab", "d/e"], "rollback"),  # v6 -> v2
+        ({}, [], "rollback"),                          # v7 touches no file
+        ({"1": ["d/f"]}, [], "apply"),                 # v8 append
+    ])
+    return root
+
+
+def test_changelog_delivers_appends_with_their_version(chain):
+    assert appended_files(chain, 0, 2) == [("d/a", 1), ("d/b", 2), ("d/c", 2)]
+    assert appended_files(chain, 1, 2) == [("d/b", 2), ("d/c", 2)]
+    assert appended_files(chain, 2, 2) == []
+
+
+def test_changelog_skips_rewrites_and_metadata(chain):
+    # the compaction re-states a and b: it contributes nothing, and the
+    # appends on either side of it flow through
+    assert appended_files(chain, 2, 3) == []
+    assert appended_files(chain, 1, 5) == [("d/b", 2), ("d/c", 2), ("d/e", 5)]
+    assert appended_files(chain, 3, 4) == []
+    # a rollback that touched no file is a metadata commit
+    assert appended_files(chain, 6, 8) == [("d/f", 8)]
+
+
+def test_changelog_refuses_a_rollback_that_changed_files(chain):
+    for start in (0, 3, 5):
+        with pytest.raises(ValueError, match="rollback at v6"):
+            appended_files(chain, start, 8)
+
+
+def test_changelog_over_a_pruned_window_raises(chain):
+    os.remove(os.path.join(chain, "_manifests", "v2.json"))
+    with pytest.raises(FileNotFoundError, match="v2.json"):
+        appended_files(chain, 1, 5)
+    # the window's own commits all retained: the pruned start is fine
+    assert appended_files(chain, 2, 5) == [("d/e", 5)]

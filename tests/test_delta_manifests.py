@@ -76,7 +76,7 @@ def test_appends_store_deltas_with_periodic_rollup(spark, tmp_path):
         for b, fs in d["files"]["added"].items():
             expect.setdefault(b, []).extend(fs)
         m = t.manifest(v)
-        assert {b: fs for b, fs in m.buckets.items() if fs} == {
+        assert {b: list(fs) for b, fs in m.buckets.items() if fs} == {
             b: fs for b, fs in expect.items() if fs
         }
     # delta manifests carry no live-file map: their size must not grow
@@ -329,9 +329,8 @@ def test_replay_commit_lands_schema_diverged_batch(spark, tmp_path):
 
 
 def test_replay_commit_refuses_ddl_and_rewrite_commits(spark, tmp_path):
-    """A metadata-only commit carries no batch (refused here); a
-    rewrite commit's row set is relative to a base the target may not
-    share (refused by read_changes)."""
+    """A metadata-only commit and a rewrite commit land no batch, so
+    both are refused as not single-batch."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     apply_batch(_env(spark, [(1, "insert", 0, "x")]), t, batch_id=0,
                 cfg=ApplyConfig(auto_compact=False))

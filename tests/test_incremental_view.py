@@ -158,18 +158,56 @@ def test_fully_deleted_group_leaves_the_view(spark, split_log, tmp_path):
     pd.testing.assert_frame_equal(got, _expect(table))
 
 
-def test_compaction_in_window_falls_back_to_full(spark, split_log, tmp_path):
+def _forbid_full(view, monkeypatch):
+    def _no_full(m):
+        raise AssertionError("full rescan must not happen on the incremental path")
+
+    monkeypatch.setattr(view, "_full", _no_full)
+
+
+def test_compaction_in_window_stays_incremental(spark, split_log, tmp_path, monkeypatch):
+    """A file-rewriting commit inside refresh()'s window contributes
+    nothing to the changelog, so the refresh stays incremental (no
+    O(table) rebuild) and still matches the full recompute."""
     b0, b1 = split_log
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     view = IncrementalView(table, str(tmp_path / "v"), _agg)
     apply_batch(_envelope_df(spark, b0), table, 0)
     view.refresh()
-    # a file-rewriting commit inside the incremental window
     buckets = [int(b) for b, fs in table.manifest().buckets.items() if fs]
     table.compact_buckets(buckets)
     apply_batch(_envelope_df(spark, b1), table, 1)
+    _forbid_full(view, monkeypatch)
+    r = view.refresh()
+    assert r["mode"] == "incremental"
+    assert r["synced_version"] == table.manifest().version
+    pd.testing.assert_frame_equal(_got(view), _expect(table))
+
+
+@pytest.mark.parametrize("cut", ["gc", "rollback"])
+def test_refresh_falls_back_to_full_when_the_changelog_breaks(
+    spark, split_log, tmp_path, cut
+):
+    """refresh() rebuilds in full exactly when no changelog reaches back
+    to its synced version: gc_orphans expired the window's commits, or
+    a rollback in the window dropped row versions the view holds."""
+    b0, b1 = split_log
+    table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    view = IncrementalView(table, str(tmp_path / "v"), _agg)
+    apply_batch(_envelope_df(spark, b0), table, 0)
+    view.refresh()
+    synced = view.synced_version()
+    third = len(b1) // 3  # contiguous slices keep DDL before its data
+    for i, part in enumerate([b1.iloc[:third], b1.iloc[third:2 * third], b1.iloc[2 * third:]]):
+        apply_batch(_envelope_df(spark, part), table, 1 + i)
+    if cut == "gc":
+        table.gc_orphans(keep_versions=1, staging_grace_seconds=3600.0)
+    else:
+        assert view.refresh()["mode"] == "incremental"
+        table.rollback(synced)
     r = view.refresh()
     assert r["mode"] == "full"
+    assert r["synced_version"] == table.manifest().version
     pd.testing.assert_frame_equal(_got(view), _expect(table))
 
 
@@ -221,10 +259,7 @@ def test_stream_refresh_survives_compaction_without_full_rescan(
     pd.testing.assert_frame_equal(_got(view), _expect(table))
 
     # forbid the fallback from here on: stream refresh must never full
-    def _no_full(cur):
-        raise AssertionError("full rescan must not happen on the stream path")
-
-    monkeypatch.setattr(view, "_full", _no_full)
+    _forbid_full(view, monkeypatch)
     buckets = [int(b) for b, fs in table.manifest().buckets.items() if fs]
     table.compact_buckets(buckets)
     apply_batch(_envelope_df(spark, b1), table, 1)
