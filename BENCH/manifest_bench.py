@@ -8,12 +8,12 @@ path (no Spark, no data writes — exactly the part that used to scale
 with the table) by committing synthetic file batches through
 the apply commit's manifest machinery at growing live-file
 counts and timing ``_commit`` + a cold ``manifest()`` read (the
-median of ``--cold-reads`` reads, each after clearing the state cache:
+median of ``COLD_READS`` reads, each after clearing the state cache:
 one sample swings about 2x between runs of the same code).
 
 Pass criterion (VERDICT): 10x more live files -> ~same commit seconds.
 
-Usage: python BENCH/manifest_bench.py [--files-per-commit 16] [--cold-reads 15]
+Usage: python BENCH/manifest_bench.py [--files-per-commit 16]
 Prints one JSON line.
 """
 
@@ -32,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from audience_behavior_semantic_etl_spark.cdc import table as table_mod
 from audience_behavior_semantic_etl_spark.cdc.table import Manifest, SnapshotTable
+
+COLD_READS = 15
 
 
 def _commit_synthetic(t: SnapshotTable, n_files: int, batch_id: int) -> float:
@@ -62,7 +64,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--files-per-commit", type=int, default=16)
     ap.add_argument("--levels", type=int, nargs="*", default=[1_000, 10_000, 100_000])
-    ap.add_argument("--cold-reads", type=int, default=15)
     args = ap.parse_args()
 
     out: dict[str, dict] = {}
@@ -86,7 +87,7 @@ def main() -> None:
             times.sort()
             # cold manifest reads: cache cleared, reconstruct from disk
             cold = []
-            for _ in range(args.cold_reads):
+            for _ in range(COLD_READS):
                 table_mod._STATE_CACHE.clear()
                 r0 = time.perf_counter()
                 m = t.manifest()

@@ -32,7 +32,8 @@ Design (all driver-side logic is manifest-only — no data read):
   (replica, incremental view) may already hold, so skipping it like a
   compaction would keep them silently. The consumer re-syncs from a
   full read — Delta's streaming source fails on data-changing removes
-  the same way.
+  the same way. A rewrite whose manifest stores no lineage row cannot
+  be told from a rollback, so it fails the stream too.
 - **One InputPartition per file**, read EXECUTOR-side with pyarrow
   and yielded as Arrow RecordBatches (the vectorized fast path — no
   per-row Python). Parallelism = files in the window, which at a

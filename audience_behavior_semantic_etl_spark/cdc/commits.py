@@ -172,14 +172,22 @@ def appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
       stream ignores ``dataChange=false`` commits.
     - A rollback that changed files drops row versions a consumer may
       already hold: ValueError, and the consumer re-syncs with a full
-      read.
+      read. So does a rewrite that stores no lineage row (a manifest
+      written before commits kept their own ``summary``): it cannot be
+      told from a rollback.
     - A metadata commit (DDL, tags, properties) adds no file.
     - A pruned window raises FileNotFoundError (``window``)."""
     files: dict[str, int] = {}
     for v, d in window(root, start, end):
         kind, added, _ = commit_kind(d["files"], d["parent"])
-        rollback = (d.get("summary") or {}).get("op") == "rollback"
-        if rollback and kind in ("append", "rewrite"):
+        summary = d.get("summary")
+        if kind == "rewrite" and not summary:
+            raise ValueError(
+                f"change window ({start}, {end}] crosses a rewrite at v{v} "
+                "that records no lineage row, so a rollback cannot be ruled "
+                "out; re-sync the consumer with a full read"
+            )
+        if kind in ("append", "rewrite") and (summary or {}).get("op") == "rollback":
             raise ValueError(
                 f"change window ({start}, {end}] crosses a rollback at v{v}; "
                 "re-sync the consumer with a full read"

@@ -217,8 +217,10 @@ class Manifest:
     properties: dict[str, Any] = field(default_factory=dict)
     # this commit's own lineage row (None: the commit wrote none)
     summary: dict[str, Any] | None = None
-    # this commit's OWN file delta: the stored delta section's lists,
-    # shared with the parsed manifest, not copied
+    # this commit's OWN file delta, as stored (a fresh parse per
+    # resolve, not copied). The engine classifies a commit from the
+    # stored dict with ``commit_kind``; these two fields stay for the
+    # perfbench CDC workload, which reads them.
     files_added: dict[str, list[str]] = field(default_factory=dict)
     files_removed: list[str] = field(default_factory=list)
 
@@ -1335,9 +1337,8 @@ class SnapshotTable:
         otherwise the target would read the picked patch rows as
         full-row bases."""
         src = self.manifest(version)
-        kind, added, _ = commit_kind(
-            {"added": src.files_added, "removed": src.files_removed}, src.parent
-        )
+        files = read_manifest(self.root, version)["files"]
+        kind, added, _ = commit_kind(files, src.parent)
         if kind == "create":
             raise ValueError("cherry_pick: the create commit cannot be picked")
         if kind == "rewrite":
@@ -1346,7 +1347,7 @@ class SnapshotTable:
                 "(compaction/purge/rebucket); only append commits can be picked"
             )
         par = self.manifest(src.parent)
-        added_by_b = {b: list(fs) for b, fs in src.files_added.items() if fs}
+        added_by_b = {b: list(fs) for b, fs in files.get("added", {}).items() if fs}
         app_id, batch_id = self._single_batch_delta("cherry_pick", version, src, par)
         if self.is_batch_committed(app_id, int(batch_id), ref=ref):
             return None  # already on the target chain — fast-path no-op

@@ -255,15 +255,19 @@ def test_data_commits_store_exactly_their_file_delta(tmp_path):
 
 def _write_chain(root, commits: list[tuple[dict, list, str | None]]) -> None:
     """Hand-written manifests v0..vN, each ``(added, removed, op)``: the
-    fields ``appended_files`` reads (file delta, parent, lineage row)."""
+    fields ``appended_files`` reads (file delta, parent, lineage row).
+    ``op`` None stores no ``summary`` key, as a manifest written before
+    commits kept their own lineage row."""
     os.makedirs(os.path.join(root, "_manifests"))
     for v, (added, removed, op) in enumerate(commits):
-        write_manifest(root, v, {
+        d = {
             "version": v,
             "parent": v - 1 if v else None,
-            "summary": {"op": op} if op else None,
             "files": {"added": added, "removed": removed},
-        })
+        }
+        if op:
+            d["summary"] = {"op": op}
+        write_manifest(root, v, d)
 
 
 @pytest.fixture
@@ -279,6 +283,8 @@ def chain(tmp_path):
         ({"0": ["d/a", "d/b"]}, ["d/ab", "d/e"], "rollback"),  # v6 -> v2
         ({}, [], "rollback"),                          # v7 touches no file
         ({"1": ["d/f"]}, [], "apply"),                 # v8 append
+        ({"1": ["d/cf"]}, ["d/c", "d/f"], None),       # v9 rewrite, no row
+        ({"0": ["d/g"]}, [], "apply"),                 # v10 append
     ])
     return root
 
@@ -303,6 +309,15 @@ def test_changelog_refuses_a_rollback_that_changed_files(chain):
     for start in (0, 3, 5):
         with pytest.raises(ValueError, match="rollback at v6"):
             appended_files(chain, start, 8)
+
+
+def test_changelog_refuses_a_rewrite_without_a_lineage_row(chain):
+    # no summary: a compaction and a rollback look alike, so the
+    # consumer must re-sync rather than skip what may be a rollback
+    for start in (6, 8):
+        with pytest.raises(ValueError, match="rewrite at v9"):
+            appended_files(chain, start, 10)
+    assert appended_files(chain, 9, 10) == [("d/g", 10)]
 
 
 def test_changelog_over_a_pruned_window_raises(chain):

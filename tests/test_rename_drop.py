@@ -24,6 +24,7 @@ import pytest
 
 from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
 from audience_behavior_semantic_etl_spark.cdc.schema import ENVELOPE_SCHEMA
+from audience_behavior_semantic_etl_spark.cdc.commits import commit_kind, read_manifest
 from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
 
@@ -279,7 +280,8 @@ def test_batch_with_ddl_and_patches_is_one_snapshot(spark, tmp_path):
     assert m.properties["has_partial"] is True
     # masks and patched_columns hold PHYSICAL names: content is stored as text
     assert m.properties["patched_columns"] == ["model", "text"]
-    assert any(m.files_added.values())
+    kind, added, _ = commit_kind(read_manifest(t.root, m.version)["files"], m.parent)
+    assert kind == "append" and added
     assert not [r for r in t.lineage() if r.get("op") == "set_property"]
     got = _row(t)
     assert (got["role"], got["content"], got["model"]) == ("user", "b", "m1")
