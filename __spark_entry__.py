@@ -639,9 +639,6 @@ def q_cdc_incremental_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     (read_changes -> changed-group recompute -> affected-bucket
     partition swap). Oracle: the from-scratch SQL aggregate over the
     LWW-resolved log — incremental must equal recompute exactly."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.incremental import IncrementalView
@@ -663,7 +660,6 @@ def q_cdc_incremental_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is returned as a DISTRIBUTED frame — no O(keys) driver round-trip
     # (round-3 verdict "what's wrong" #1).
     tmp = _scratch("ivm-cube-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     # compaction disabled: a compaction between refreshes would stay
     # incremental (the changelog skips rewrites) but only add its own
     # work to this row, the INCREMENTAL path's correctness proof.
@@ -692,9 +688,6 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolved columns back to NULL. Oracle: LWW by lsn over the whole log
     via row_number (NOT arg_max — DuckDB's arg_max skips NULL values
     and would wrongly resurrect an overwritten tool_name)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
@@ -758,7 +751,6 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("int").alias("source_part"),
     )
     tmp = _scratch("cdc-evo-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-evo", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     apply_batch(v1, table, 0, cfg)
@@ -783,9 +775,6 @@ def q_cdc_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-collapse never engages and the quarantine selection is the
     EXACT poison set (the superset contract under pre-collapse is
     documented in cdc/apply.py and tested separately)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
@@ -820,7 +809,6 @@ def q_cdc_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source_part",
     )
     tmp = _scratch("cdc-quar-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(
         app_id="cdc-quar",
         on_malformed="quarantine",
@@ -857,27 +845,15 @@ def q_cdc_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exactly-once), apply the remainder, and converge to the identical
     final table. Oracle: full-log LWW SQL — so kill/resume/replay
     correctness is part of the hard driver contract, not just pytest."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig
     from audience_behavior_semantic_etl_spark.cdc.stream import run_wal_stream
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-replay-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-    wal = f"{tmp}/wal"
-    # stage the WAL distributed (no driver round-trip of the log); each
-    # part file = one chunk, mtimes stamped increasing because the file
-    # stream source orders arrivals by modification time
-    env.repartition(4).write.parquet(wal)
-    parts = sorted(p for p in os.listdir(wal) if p.endswith(".parquet"))
-    base = max(os.path.getmtime(os.path.join(wal, p)) for p in parts)
-    for i, p in enumerate(parts):
-        os.utime(os.path.join(wal, p), (base + i, base + i))
+    # the WAL, staged distributed (no driver round-trip of the log):
+    # each part file is one chunk, a later arrival than the one before
+    wal = _stage_arrivals(env)
 
     cfg = ApplyConfig(app_id="cdc-replay", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
@@ -904,16 +880,12 @@ def q_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a dropped live row, a resurrected delete, a duplicated key —
     hash-fails the row. Pins the MoR read-amplification fix (compaction)
     as semantics-preserving, not just tested in pytest."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-maint-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-maint", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     apply_batch(env.filter(F.pmod(F.col("lsn"), F.lit(5)) != 0), table, 0, cfg)
@@ -936,16 +908,12 @@ def q_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletions propagate to downstream incremental consumers, ``_lsn``
     ordering multiple versions of a key. Oracle: the batch-1 slice of
     the envelope recomputed directly from the log."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-chg-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(
         app_id="cdc-chg",
         auto_compact=False,
@@ -977,11 +945,8 @@ def q_cdc_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten files are structurally excluded (a rewriting commit
     contributes nothing), so the sink holds EXACTLY one row per logged
     event — the oracle is the whole normalized envelope. The sink is
-    session-scoped (atexit), and the returned frame is the distributed
+    process-scoped scratch, and the returned frame is the distributed
     sink read — no driver collect."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.cdf_source import TranscriptsCDF
@@ -989,7 +954,6 @@ def q_cdc_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-cdf-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(
         app_id="cdc-cdf",
         auto_compact=False,
@@ -1038,9 +1002,6 @@ def q_cdc_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FULL log, with the final per-row lsn pinned to
     max(winner_lsn, snap_lsn) — snapshot-loaded rows carry the
     snapshot LSN, tail-won rows their true LSN."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import (
         ApplyConfig,
@@ -1077,7 +1038,6 @@ def q_cdc_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     env = _cdc_envelope_v1(spark, sf_dir)
     tail = env.filter(F.col("lsn") > snap_lsn // 2)
     tmp = _scratch("cdc-boot-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-boot", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     assert not bootstrap_snapshot(snapshot, table, snap_lsn, cfg).skipped
@@ -1109,9 +1069,6 @@ def q_cdc_partial_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch/file boundary. Oracle: per-column row_number over the
     candidate sets (NOT arg_max — DuckDB arg_max skips NULLs, which
     would silently resurrect older values over explicit-null patches)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
@@ -1157,7 +1114,6 @@ def q_cdc_partial_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("event_id"), F.lit(4)).cast("int").alias("source_part"),
     )
     tmp = _scratch("cdc-part-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-part", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     apply_batch(env.filter(F.pmod(F.col("lsn"), F.lit(5)) != 0), table, 0, cfg)
@@ -1178,16 +1134,12 @@ def q_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the rebucket no-ops. A point lookup after evolution prunes
     with the new transform + per-file key-range stats (file count
     touched < live file count)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-rbk-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-rbk", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     apply_batch(env.filter(F.pmod(F.col("lsn"), F.lit(5)) != 0), table, 0, cfg)
@@ -1218,16 +1170,13 @@ def q_cdc_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger-advancing, and the rejected batch left zero rows behind. An
     audit assertion inside the query pins the branch read's preview
     semantics (would-be state ⊇ published state)."""
-    import atexit
     import dataclasses
-    import shutil
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-wap-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-wap", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     five = F.pmod(F.col("lsn"), F.lit(5)) == 0
@@ -1265,9 +1214,6 @@ def q_cdc_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns), with values bit-equal to plain LWW over the whole log —
     i.e. the oracle cannot tell the rename ever happened, which is
     exactly the metadata-only contract."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
@@ -1321,7 +1267,6 @@ def q_cdc_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("int").alias("source_part"),
     )
     tmp = _scratch("cdc-ren-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-ren", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     apply_batch(pre, table, 0, cfg)
@@ -1346,9 +1291,6 @@ def q_cdc_replicate_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh add — and converge. The oracle is plain full-log LWW under
     the final name: it cannot tell that a rename, a CDF hop, or an
     envelope re-translation ever happened."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.replicate import replicate_stream
@@ -1386,7 +1328,6 @@ def q_cdc_replicate_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     tmp = _scratch("cdc-repl-ren-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="rr-src", auto_compact=False, shuffle_partitions=8)
     rcfg = ApplyConfig(auto_compact=False, shuffle_partitions=8)
     src = SnapshotTable.create(spark, f"{tmp}/src", n_buckets=8)
@@ -1433,16 +1374,12 @@ def q_cdc_replay_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is plain full-log LWW under main's name — it cannot tell
     that a rename, a refused pick, or an envelope re-translation ever
     happened."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-replay-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-rp", auto_compact=False, shuffle_partitions=8)
     bcfg = ApplyConfig(
         app_id="cdc-rp-br", auto_compact=False, shuffle_partitions=8, branch="hotfix"
@@ -1484,16 +1421,12 @@ def q_cdc_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     count are untouched while the branch absorbs two batches, and the
     branch's exactly-once ledger rides the pointer swing (re-delivery
     of batch 2 no-ops on main after publish)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-branch-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-br", auto_compact=False, shuffle_partitions=8)
     bcfg = ApplyConfig(
         app_id="cdc-br", auto_compact=False, shuffle_partitions=8, branch="audit"
@@ -1527,16 +1460,12 @@ def q_cdc_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact final state. In-query assertions pin the intermediate
     states (post-rollback row count equals the tagged state; the
     abandoned commit stays readable by explicit version)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-rollback-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-rb", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     third = F.pmod(F.col("lsn"), F.lit(3))
@@ -1567,16 +1496,12 @@ def q_cdc_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply. In-query assertions pin the refused fast-forward, the
     ledger carry (re-delivery of the picked batch no-ops on main), and
     pick idempotence (a duplicate pick returns None, no double-append)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-cherry-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-cp", auto_compact=False, shuffle_partitions=8)
     bcfg = ApplyConfig(
         app_id="cdc-cp-br", auto_compact=False, shuffle_partitions=8, branch="audit"
@@ -1614,9 +1539,6 @@ def q_cdc_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables. Output: union of both finals labeled by route. Oracle:
     full-log LWW with the same route predicate — per-slice LWW equals
     global LWW restricted to the slice because routing is by key."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig
     from audience_behavior_semantic_etl_spark.cdc.fanout import apply_batch_fanout
@@ -1626,7 +1548,6 @@ def q_cdc_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     even = F.pmod(F.col("conv_id").cast("long"), F.lit(2)) == 0
     odd = ~even
     tmp = _scratch("cdc-fan-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = lambda app: ApplyConfig(app_id=app, auto_compact=False, shuffle_partitions=8)  # noqa: E731
     ta = SnapshotTable.create(spark, f"{tmp}/even", n_buckets=8)
     tb = SnapshotTable.create(spark, f"{tmp}/odd", n_buckets=8)
@@ -1654,9 +1575,6 @@ def q_cdc_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(#batches + #source_parts) rows (2 + 4 here), a constant bound —
     not O(keys) table state. ``dedup_churn_threshold`` is pinned high
     so lineage counts are raw envelope counts, not post-collapse."""
-    import atexit
-    import shutil
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -1665,7 +1583,6 @@ def q_cdc_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-lin-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(
         app_id="cdc-lin",
         auto_compact=False,
@@ -2235,7 +2152,6 @@ def q_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     gzip JSON-lines deterministically, read back through the ingest
     path, and aggregated — equal to aggregating the original table,
     which is the oracle."""
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -2514,16 +2430,12 @@ def q_cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreter exit (like the other queries' scratch dirs), so the
     returned frame stays DISTRIBUTED — no driver round-trip of table
     state (round-2 verdict "what's wrong" #1)."""
-    import atexit
-    import shutil
-    import tempfile
 
     from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     env = _cdc_envelope_v1(spark, sf_dir)
     tmp = _scratch("cdc-tt-")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     cfg = ApplyConfig(app_id="cdc-tt", auto_compact=False, shuffle_partitions=8)
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     apply_batch(env.filter(F.pmod(F.col("lsn"), F.lit(5)) != 0), table, 0, cfg)

@@ -5,7 +5,11 @@ Layout under a table root:
 
 - ``_manifests/v{N}.json`` — one write-once manifest per commit;
 - ``_current`` — main's head version;
-- ``_refs.json`` — branch name -> head version.
+- ``_refs.json`` — branch name -> head version;
+- ``_tags.json`` — tag name -> pinned version. A tag is a pointer,
+  not a commit: creating or dropping one writes no manifest (the
+  Iceberg ``refs`` map). A ``tags`` property in an older manifest is
+  ignored.
 
 Every file here is written tmp + fsync + ``os.replace``, so a crash
 mid-write leaves the old content (plus a ``*.tmp.*`` file that
@@ -77,9 +81,13 @@ def drop_manifests(root: str, keep: set[int]) -> None:
             os.remove(os.path.join(man_dir, fn))
 
 
-def read_refs(root: str) -> dict[str, int]:
+_REF_FILES = {"branch": "_refs.json", "tag": "_tags.json"}
+
+
+def read_refs(root: str, kind: str = "branch") -> dict[str, int]:
+    """Branch (or tag) name -> version."""
     try:
-        with open(os.path.join(root, "_refs.json")) as f:
+        with open(os.path.join(root, _REF_FILES[kind])) as f:
             return {k: int(v) for k, v in json.load(f).items()}
     except FileNotFoundError:
         return {}
@@ -106,8 +114,8 @@ def set_head(root: str, ref: str, v: int) -> None:
     write_refs(root, refs)
 
 
-def write_refs(root: str, refs: dict[str, int]) -> None:
-    atomic_write(os.path.join(root, "_refs.json"), json.dumps(refs))
+def write_refs(root: str, refs: dict[str, int], kind: str = "branch") -> None:
+    atomic_write(os.path.join(root, _REF_FILES[kind]), json.dumps(refs))
 
 
 def ancestry(root: str, v: int | None) -> Iterator[tuple[int, dict]]:
@@ -147,7 +155,7 @@ def commit_kind(files: dict, parent: int | None) -> tuple[str, list[str], list[s
       additions re-state existing row versions, so the changelog skips
       it (``appended_files``);
     - ``append``: added files only — every file holds new row versions;
-    - ``metadata``: touched no file (DDL, tags, properties)."""
+    - ``metadata``: touched no file (DDL, properties)."""
     added = [f for fs in files.get("added", {}).values() for f in fs]
     removed = list(files.get("removed", []))
     if parent is None:
@@ -175,7 +183,7 @@ def appended_files(root: str, start: int, end: int) -> list[tuple[str, int]]:
       read. So does a rewrite that stores no lineage row (a manifest
       written before commits kept their own ``summary``): it cannot be
       told from a rollback.
-    - A metadata commit (DDL, tags, properties) adds no file.
+    - A metadata commit (DDL, properties) adds no file.
     - A pruned window raises FileNotFoundError (``window``)."""
     files: dict[str, int] = {}
     for v, d in window(root, start, end):

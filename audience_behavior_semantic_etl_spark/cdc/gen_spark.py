@@ -293,7 +293,6 @@ def write_wal_chunks_spark(log: DataFrame, wal_dir: str, n_chunks: int) -> None:
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     staged = scratch_dir("walgen-")

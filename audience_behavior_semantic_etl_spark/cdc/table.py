@@ -156,8 +156,8 @@ def _safe_dirname(s: str) -> str:
 #     rebucket, whose data cost is O(live) anyway) an inline FULL
 #     snapshot (``files.full``) — the manifest-list rollup that bounds
 #     reconstruction walks to ROLLUP_EVERY hops;
-#   - schema + properties (watermarks, exactly-once ledger, tags,
-#     physical-name maps) in full — all O(apps + parts + refs), never
+#   - schema + properties (watermarks, exactly-once ledger,
+#     physical-name maps) in full — all O(apps + parts), never
 #     O(files). Per-file key ranges are FILE state (``Manifest.file_stats``,
 #     the DataFile lower/upper-bounds analog), not a property: a range
 #     is written by the commit that adds its file and leaves with it;
@@ -364,8 +364,9 @@ class SnapshotTable:
     #
     # Branch refs (the Iceberg branch analog): named MUTABLE pointers
     # into the manifest DAG. "main" is the `_current` pointer; branches
-    # live in `_refs.json`, mutated atomically (write-tmp + rename)
-    # under the same commit lock as every other head mutation. Each
+    # live in `_refs.json` and tags (immutable pins) in `_tags.json`,
+    # mutated atomically (write-tmp + rename) under the same commit
+    # lock as every other head mutation. Each
     # branch commit chain carries its OWN properties (exactly-once
     # ledger, watermarks, schema) forward from its fork point, so a
     # stream applying onto a branch is isolated from main until
@@ -1161,53 +1162,69 @@ class SnapshotTable:
     # ------------------------------------------------------------ tags
 
     def create_tag(self, name: str, version: int | None = None) -> int:
-        """Pin a committed version under an immutable NAME (the Iceberg
-        snapshot-tag analog): audit pins, reproducibility pins ("the
-        table as training run X saw it"), rollback anchors. A tagged
-        version is PROTECTED from retention — ``gc_orphans`` /
+        """Pin a committed version (default: main's head) under an
+        immutable NAME (the Iceberg snapshot-tag analog): audit pins,
+        reproducibility pins ("the table as training run X saw it"),
+        rollback anchors. A tag is a ref, not a commit: it lives in the
+        ref store beside the branches, so creating or dropping one
+        writes no manifest, moves no head and adds no lineage row. A
+        tagged version is PROTECTED from retention — ``gc_orphans`` /
         ``startup_maintenance`` keep its manifest and data files alive
         regardless of ``keep_versions`` — so time travel to it works
         until ``drop_tag``. Tag names are single-assignment (re-tagging
         raises; drop first) because downstream consumers treat a tag as
         an immutable fact. Returns the pinned version."""
-        row = {"op": "create_tag", "tag": name}
-
-        def mutate(m: Manifest) -> None:
-            pinned = m.parent if version is None else int(version)
-            # the tagged manifest must actually be readable
-            self.manifest(pinned)
-            tags = m.properties.setdefault("tags", {})
-            if name in tags:
-                raise ValueError(
-                    f"tag {name!r} already pins v{tags[name]}; drop_tag first"
-                )
-            tags[name] = row["pinned_version"] = pinned
-
-        self._commit(mutate, lineage=row)
-        return row["pinned_version"]
+        return self._create_ref(
+            "tag", name, version, f"tag {name!r} already pins v{{v}}; drop_tag first"
+        )
 
     def drop_tag(self, name: str) -> None:
         """Release a tag; its version re-enters normal retention and the
         next GC pass may expire it."""
-
-        def mutate(m: Manifest) -> None:
-            tags = m.properties.get("tags", {})
-            if name not in tags:
-                raise ValueError(f"no such tag {name!r}")
-            del tags[name]
-
-        self._commit(mutate, lineage={"op": "drop_tag", "tag": name})
+        self._drop_ref("tag", name)
 
     def tags(self) -> dict[str, int]:
-        """Tag name -> pinned version (main's head properties)."""
-        head = read_manifest(self.root, head_version(self.root))
-        return dict(head["properties"].get("tags", {}))
+        """Tag name -> pinned version."""
+        return commits.read_refs(self.root, "tag")
 
     def resolve_tag(self, name: str) -> int:
         tags = self.tags()
         if name not in tags:
             raise ValueError(f"no such tag {name!r}")
-        return int(tags[name])
+        return tags[name]
+
+    def _create_ref(self, kind: str, name: str, version: int | None, taken: str) -> int:
+        """Point a new ``kind`` ref at ``version`` (default: main's
+        head), which must be readable: one ref-store write under the
+        commit lock. ``taken`` is the refusal when ``name`` exists
+        (``{v}``: the version it points at)."""
+
+        def run() -> int:
+            refs = commits.read_refs(self.root, kind)
+            if name in refs:
+                raise ValueError(taken.format(v=refs[name]))
+            v = head_version(self.root) if version is None else int(version)
+            self.manifest(v)  # must be readable
+            refs[name] = v
+            commits.write_refs(self.root, refs, kind)
+            return v
+
+        return self._with_commit_lock(run)
+
+    def _drop_ref(self, kind: str, name: str, check=None) -> None:
+        """Delete a ``kind`` ref under the commit lock, after
+        ``check(version)`` (which raises to refuse)."""
+
+        def run() -> None:
+            refs = commits.read_refs(self.root, kind)
+            if name not in refs:
+                raise ValueError(f"no such {kind} {name!r}")
+            if check is not None:
+                check(refs[name])
+            del refs[name]
+            commits.write_refs(self.root, refs, kind)
+
+        self._with_commit_lock(run)
 
     # ------------------------------------------------------------ branches
 
@@ -1219,20 +1236,11 @@ class SnapshotTable:
         and the exactly-once ledger — so a re-delivered batch that
         already landed on main no-ops on the branch too. Returns the
         fork version."""
-
-        def run() -> int:
-            if name == "main" or not name:
-                raise ValueError(f"invalid branch name {name!r}")
-            refs = commits.read_refs(self.root)
-            if name in refs:
-                raise ValueError(f"branch {name!r} already exists at v{refs[name]}")
-            v = head_version(self.root) if version is None else int(version)
-            self.manifest(v)  # must be readable
-            refs[name] = v
-            commits.write_refs(self.root, refs)
-            return v
-
-        return self._with_commit_lock(run)
+        if name == "main" or not name:
+            raise ValueError(f"invalid branch name {name!r}")
+        return self._create_ref(
+            "branch", name, version, f"branch {name!r} already exists at v{{v}}"
+        )
 
     def drop_branch(self, name: str, force: bool = False) -> None:
         """Delete a branch ref; its commits become GC-able once they
@@ -1241,23 +1249,15 @@ class SnapshotTable:
         of main — dropping would silently discard applied batches; the
         git ``-d`` vs ``-D`` distinction) unless ``force=True``."""
 
-        def run() -> None:
-            refs = commits.read_refs(self.root)
-            if name not in refs:
-                raise ValueError(f"no such branch {name!r}")
-            if not force:
-                head = refs[name]
-                main = head_version(self.root)
-                if not self._is_ancestor(head, main):
-                    raise ValueError(
-                        f"branch {name!r} (v{head}) has unpublished commits; "
-                        "fast_forward/cherry_pick first, or drop_branch(..., "
-                        "force=True) to discard them"
-                    )
-            del refs[name]
-            commits.write_refs(self.root, refs)
+        def published(head: int) -> None:
+            if not force and not self._is_ancestor(head, head_version(self.root)):
+                raise ValueError(
+                    f"branch {name!r} (v{head}) has unpublished commits; "
+                    "fast_forward/cherry_pick first, or drop_branch(..., "
+                    "force=True) to discard them"
+                )
 
-        self._with_commit_lock(run)
+        self._drop_ref("branch", name, published)
 
     def branches(self) -> dict[str, int]:
         return commits.read_refs(self.root)
@@ -1491,8 +1491,8 @@ class SnapshotTable:
     def rollback(self, version: int | None = None, tag: str | None = None,
                  ref: str = "main") -> int:
         """Roll ``ref`` back to an OLDER version of its own chain (the
-        Iceberg rollback-to-snapshot analog): pure pointer swing to an
-        ancestor — no data file is touched, the abandoned commits stay
+        Iceberg rollback-to-snapshot analog): restores an ancestor's
+        state — no data file is touched, the abandoned commits stay
         readable by explicit version until GC ages them out of every
         ref's retention. ``tag`` resolves a named pin. The target must
         be an ancestor of the current head (cross-chain or forward
@@ -1503,13 +1503,13 @@ class SnapshotTable:
         replay re-applies them and the table converges again — exactly
         the recover-by-replay contract the north rule requires.
 
-        Like Iceberg's rollback, this COMMITS A NEW manifest whose
-        data state (columns, buckets, ledger, watermarks) is the
-        target's, rather than swinging the pointer to the old file: the
-        tag registry must outlive any rollback (create_tag's "protected
-        until drop_tag" contract), so it is carried over from the
-        abandoned head. A bare pointer swing would silently revert it
-        to its state at the target commit."""
+        This COMMITS A NEW manifest whose data state (columns, buckets,
+        ledger, watermarks) is the target's, rather than swinging the
+        pointer to the old file: the commit's own lineage row records
+        the rollback, so ``lineage()`` shows it and the changelog
+        (``commits.appended_files``) refuses a change window across it
+        — a window the restored state dropped row versions from. Tags
+        are refs, so a rollback leaves them where they are."""
         v = version
         if tag is not None:
             if v is not None:
@@ -1529,14 +1529,9 @@ class SnapshotTable:
                     f"the current head v{cur}"
                 )
             tgt = self.manifest(v)
-            tags = m.properties.get("tags")
             m.columns, m.n_buckets = tgt.columns, tgt.n_buckets
             m.buckets, m.file_stats = tgt.buckets, tgt.file_stats
             m.properties = tgt.properties
-            if tags:
-                m.properties["tags"] = tags
-            else:
-                m.properties.pop("tags", None)
 
         self._commit(
             mutate, ref=ref, lineage={"op": "rollback", "restored_version": v}
@@ -1869,11 +1864,7 @@ class SnapshotTable:
                     if v in keep_set:
                         break
                     keep_set.add(v)
-            tag_versions = {
-                int(t)
-                for hv in heads
-                for t in read_manifest(self.root, hv)["properties"].get("tags", {}).values()
-            }
+            tag_versions = set(commits.read_refs(self.root, "tag").values())
             keep_set.update(tag_versions)
             # tagged versions keep not just their own manifest but the
             # PARENT-LINK PATH from each ref head down to them: rollback
@@ -2039,11 +2030,10 @@ class SnapshotTable:
             T.StructField("is_current_ancestor", T.BooleanType()),
             T.StructField("tags", T.ArrayType(T.StringType())),
         ])
-        head = self.manifest()
         tags_by_v: dict[int, list[str]] = {}
-        for name, v in (head.properties.get("tags") or {}).items():
-            tags_by_v.setdefault(int(v), []).append(name)
-        chain = {v for v, _ in ancestry(self.root, head.version)}
+        for name, v in self.tags().items():
+            tags_by_v.setdefault(v, []).append(name)
+        chain = {v for v, _ in ancestry(self.root, head_version(self.root))}
         rows = [
             (v, read_manifest(self.root, v)["snapshot_id"], v in chain,
              sorted(tags_by_v.get(v, [])))
@@ -2061,10 +2051,11 @@ class SnapshotTable:
             T.StructField("version", T.LongType()),
             T.StructField("snapshot_id", T.StringType()),
         ])
-        rows = [("main", "branch", head_version(self.root),
-                 self.manifest().snapshot_id)]
-        for name, v in sorted(commits.read_refs(self.root).items()):
-            rows.append((name, "branch", v, self.manifest(v).snapshot_id))
-        for name, v in sorted(self.manifest().properties.get("tags", {}).items()):
-            rows.append((name, "tag", int(v), self.manifest(int(v)).snapshot_id))
+        refs = [("main", "branch", head_version(self.root))]
+        for kind in ("branch", "tag"):
+            named = commits.read_refs(self.root, kind)
+            refs += [(n, kind, named[n]) for n in sorted(named)]
+        rows = [
+            (n, kind, v, read_manifest(self.root, v)["snapshot_id"]) for n, kind, v in refs
+        ]
         return self.spark.createDataFrame(rows, schema)

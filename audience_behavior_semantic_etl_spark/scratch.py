@@ -18,12 +18,12 @@ scratch on the fastest writable medium:
 - else ``/dev/shm`` (tmpfs) when present, writable and holding at
   least ``SHM_FLOOR_BYTES`` free — fsync is free and writeback never
   throttles;
-- else the system default tempdir (exactly the old behavior).
+- else ``spark-graft-scratch`` under the system default tempdir.
 
 Directories are created under a per-PID subtree removed at interpreter
-exit, so concurrent sessions never collide and nothing outlives the
-process — scratch holds no results, every bench/oracle run recomputes
-from the parquet inputs.
+exit — on every medium, the tempdir fallback too — so concurrent
+sessions never collide and nothing outlives the process: scratch holds
+no results, every bench/oracle run recomputes from the parquet inputs.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ import os
 import shutil
 import tempfile
 
-_proc_root: str | None = None
+_proc_roots: dict[str, str] = {}  # base -> this process's subtree
 
 # tmpfs pages are host RAM: scratch there competes with the JVM heaps
 # and Python workers for memory, and a full tmpfs fails writes instead
@@ -53,23 +53,26 @@ def _base_root() -> str | None:
     return None
 
 
+def _proc_root(base: str) -> str:
+    """``base``'s per-PID subtree, created lazily and removed at
+    interpreter exit."""
+    if base not in _proc_roots:
+        root = _proc_roots[base] = os.path.join(base, f"pid-{os.getpid()}")
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return _proc_roots[base]
+
+
 def scratch_root() -> str | None:
-    """This process's scratch root (created lazily), or None when the
-    system tempdir should be used. Removed at interpreter exit."""
-    global _proc_root
-    if _proc_root is None:
-        base = _base_root()
-        if base is None:
-            return None
-        _proc_root = os.path.join(base, f"pid-{os.getpid()}")
-        os.makedirs(_proc_root, exist_ok=True)
-        atexit.register(shutil.rmtree, _proc_root, ignore_errors=True)
-    return _proc_root
+    """This process's scratch root on the fast medium, or None when
+    that is the system tempdir (``spark.local.dir`` then keeps Spark's
+    default). Removed at interpreter exit."""
+    base = _base_root()
+    return None if base is None else _proc_root(base)
 
 
 def scratch_dir(prefix: str) -> str:
-    """``tempfile.mkdtemp`` on the fastest writable medium."""
-    root = scratch_root()
-    if root is not None:
-        return tempfile.mkdtemp(prefix=prefix, dir=root)
-    return tempfile.mkdtemp(prefix=prefix)
+    """``tempfile.mkdtemp`` on the fastest writable medium, removed at
+    interpreter exit."""
+    base = _base_root() or os.path.join(tempfile.gettempdir(), "spark-graft-scratch")
+    return tempfile.mkdtemp(prefix=prefix, dir=_proc_root(base))

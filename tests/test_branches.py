@@ -311,9 +311,9 @@ def test_concurrent_main_and_branch_writers(spark, log3, tmp_path):
 
 
 def test_tags_survive_rollback_and_stay_gc_protected(spark, log3, tmp_path):
-    """Rollback commits a NEW manifest carrying the tag registry
-    forward — a tag created AFTER the rollback target must stay
-    resolvable and its pinned version must stay GC-protected
+    """Tags live in the ref store, not in manifests, so a rollback
+    leaves them alone — a tag created AFTER the rollback target must
+    stay resolvable and its pinned version must stay GC-protected
     (create_tag's 'protected until drop_tag' contract)."""
     batches, _ = log3
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=4)

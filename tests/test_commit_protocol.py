@@ -3,8 +3,9 @@ every metadata operation goes through the one commit primitive, so a
 seeded random sequence of them must keep the manifest DAG well formed
 — each commit's parent is its ref's previous head, version numbers
 only grow and are never reused, a declined (no-op) operation uses no
-version, and every retained manifest parses. Also the changelog rule
-(``commits.appended_files``) over hand-written manifests."""
+version, and every retained manifest parses. Tags are ref writes, not
+commits. Also the changelog rule (``commits.appended_files``) over
+hand-written manifests."""
 
 from __future__ import annotations
 
@@ -37,6 +38,7 @@ def test_random_metadata_commits_keep_the_dag_well_formed(tmp_path, seed):
     t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=4)
     used = {0}
     dropped: list[str] = []
+    registry: dict[str, int] = {}  # the model's tags
     fresh = itertools.count()
 
     for step in range(40):
@@ -47,10 +49,9 @@ def test_random_metadata_commits_keep_the_dag_well_formed(tmp_path, seed):
         data = [c for c in cols if c not in KEYS]
         ints = [c for c in data if cols[c] == "int"]
         readd = [c for c in dropped if c not in cols]
-        tags = sorted(t.tags())  # main's registry: rollbacks and fast-forwards move it
         ops = ["prop", "tag", "add", "add_noop", "widen_noop", "rename",
                "branch", "publish", "rollback"]
-        ops += ["untag"] * bool(tags) + ["readd"] * bool(readd)
+        ops += ["untag"] * bool(registry) + ["readd"] * bool(readd)
         ops += ["widen"] * bool(ints) + ["drop"] * (len(data) > 1)
         ops += ["ff"] * (len(before) > 1)
         op = rng.choice(ops)
@@ -59,12 +60,16 @@ def test_random_metadata_commits_keep_the_dag_well_formed(tmp_path, seed):
 
         if op == "prop":
             t.set_property(f"k{step}", step, ref=ref)
-        elif op == "tag":
-            assert t.create_tag(f"tag{step}") == before["main"]
-            commits_on = "main"
+        elif op == "tag":  # a ref write: no head moves
+            pin = None if ref == "main" else before[ref]
+            registry[f"tag{step}"] = t.create_tag(f"tag{step}", pin)
+            assert registry[f"tag{step}"] == before[ref]
+            commits_on = None
         elif op == "untag":
-            t.drop_tag(rng.choice(tags))
-            commits_on = "main"
+            name = rng.choice(sorted(registry))
+            t.drop_tag(name)
+            del registry[name]
+            commits_on = None
         elif op == "add":
             t.add_columns({f"c{next(fresh)}": "int"}, ref=ref)
         elif op == "readd":
@@ -132,6 +137,8 @@ def test_random_metadata_commits_keep_the_dag_well_formed(tmp_path, seed):
                 expected["main"] = new
             assert after == expected, op
         assert t._retained_versions() == sorted(used), op
+        # rollback and fast-forward move heads, never tags
+        assert t.tags() == registry, op
         for v in used:
             read_manifest(t.root, v)
         assert all(
@@ -248,6 +255,67 @@ def test_data_commits_store_exactly_their_file_delta(tmp_path):
     # a rollback restates every bucket from its target
     step("rewrite", rollback, a0, c0, shares=False)
     assert t.manifest().properties["committed_batches"] == {"app": 0}
+
+
+# ------------------------------------------------ tags are refs
+
+
+def test_a_tag_on_main_does_not_block_fast_forward(tmp_path):
+    t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=2)
+    t.set_property("k", 1)
+    t.create_branch("audit")
+    t.set_property("audited", True, ref="audit")
+    pinned = head_version(t.root)
+    assert t.create_tag("pin") == pinned
+    head = head_version(t.root, "audit")
+    assert t.fast_forward("main", "audit") == head
+    assert t.tags() == {"pin": pinned}
+
+
+def test_gc_expires_a_dropped_tag_that_a_branch_saw(tmp_path):
+    t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=2)
+    t.set_property("k", 0)
+    old = t.create_tag("old")
+    for i in range(5):
+        t.set_property("k", i + 1)
+    t.create_branch("b")  # forks while the tag exists
+    t.drop_tag("old")
+    t.gc_orphans(keep_versions=3, staging_grace_seconds=0)
+    assert t.tags() == {}
+    kept = t._retained_versions()
+    assert old not in kept
+    assert kept == sorted(v for v, _ in ancestry(t.root, head_version(t.root)))
+    assert len(kept) == 3
+
+
+def test_tag_writes_leave_heads_and_manifests_unchanged(tmp_path):
+    t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=2)
+    t.set_property("k", 1)
+    first = head_version(t.root)
+    t.create_branch("b")
+    t.set_property("k", 2, ref="b")
+    t.set_property("k", 3)
+
+    def state():
+        return _heads(t), t._retained_versions()
+
+    before = state()
+    assert t.create_tag("head") == before[0]["main"]
+    assert t.create_tag("branch", before[0]["b"]) == before[0]["b"]
+    assert t.create_tag("old", first) == first
+    with pytest.raises(ValueError, match="already pins"):
+        t.create_tag("old")
+    with pytest.raises(FileNotFoundError):
+        t.create_tag("nope", version=99)
+    assert state() == before
+    assert t.resolve_tag("branch") == before[0]["b"]
+    t.drop_tag("old")
+    with pytest.raises(ValueError, match="no such tag"):
+        t.drop_tag("old")
+    assert state() == before
+    assert t.tags() == {"head": before[0]["main"], "branch": before[0]["b"]}
+    for v in before[1]:
+        assert "tags" not in read_manifest(t.root, v)["properties"]
 
 
 # ------------------------------------------------ the changelog rule

@@ -50,8 +50,9 @@ def test_snapshots_files_history(spark, tmp_path):
     appends = [v for v, r in snaps.items() if r["operation"] == "append"]
     assert len(appends) == 2
     assert snaps[head]["operation"] == "rewrite"
-    # the tag commit (compaction's parent) touched no file
-    assert snaps[snaps[head]["parent"]]["operation"] == "metadata"
+    # create_tag added no version: the compaction's parent is the
+    # second append
+    assert snaps[head]["parent"] == max(appends)
     assert snaps[head]["is_current"] and not snaps[0]["is_current"]
     assert snaps[head]["files_removed"] > 0
 
@@ -69,7 +70,12 @@ def test_snapshots_files_history(spark, tmp_path):
     hist = {r["version"]: r.asDict() for r in t.history_df().collect()}
     assert all(r["is_current_ancestor"] for r in hist.values()), "linear history"
     tagged = [v for v, r in hist.items() if r["tags"]]
-    assert tagged and hist[tagged[0]]["tags"] == ["audit-1"]
+    assert tagged == [max(appends)] and hist[tagged[0]]["tags"] == ["audit-1"]
+    refs = {r["name"]: r.asDict() for r in t.refs_df().collect()}
+    assert refs["main"]["version"] == head
+    assert refs["main"]["snapshot_id"] == snaps[head]["snapshot_id"]
+    assert (refs["audit-1"]["type"], refs["audit-1"]["version"]) == ("tag", max(appends))
+    assert refs["audit-1"]["snapshot_id"] == snaps[max(appends)]["snapshot_id"]
 
 
 def test_snapshots_after_gc_marks_unknown_diff(spark, tmp_path):

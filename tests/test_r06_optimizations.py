@@ -133,3 +133,25 @@ def test_tmpfs_scratch_needs_free_space(monkeypatch):
     assert scratch._base_root() == "/dev/shm/spark-graft-scratch"
     monkeypatch.setattr(scratch.os, "statvfs", free(64 << 20))
     assert scratch._base_root() is None
+
+
+def test_tempdir_scratch_is_removed_at_exit(monkeypatch, tmp_path):
+    """Without a fast medium, scratch dirs still land under a per-process
+    root (here in the system tempdir) that interpreter exit removes."""
+    from audience_behavior_semantic_etl_spark import scratch
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", "")
+    monkeypatch.setattr(scratch.tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(scratch, "_proc_roots", {})
+    at_exit = []
+    monkeypatch.setattr(scratch.atexit, "register", lambda fn, *a, **kw: at_exit.append(
+        lambda: fn(*a, **kw)))
+
+    d = scratch.scratch_dir("x-")
+    root = os.path.join(str(tmp_path), "spark-graft-scratch", f"pid-{os.getpid()}")
+    assert os.path.dirname(d) == root and os.path.isdir(d)
+    assert scratch.scratch_root() is None  # spark.local.dir keeps Spark's default
+    assert os.path.dirname(scratch.scratch_dir("y-")) == root
+    assert len(at_exit) == 1
+    at_exit[0]()
+    assert not os.path.exists(root)
