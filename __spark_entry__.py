@@ -2369,8 +2369,8 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast nation dimension (user_id % 25 -> nationkey), then counts
     per (tumbling hour, nation name) in append mode with
     watermark-evicted state. The dim never enters the state store; the
-    flush sentinels carry a NULL join key so the inner join drops them
-    after they advance the watermark. Oracle: the batch join+GROUP BY."""
+    flush sentinel carries a NULL join key so the label filter drops it
+    after it advances the watermark. Oracle: the batch join+GROUP BY."""
     from audience_behavior_semantic_etl_spark.streaming.windowed import (
         stream_static_enrich_counts,
     )

@@ -50,6 +50,7 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import struct
 import threading
 import time
 import uuid
@@ -74,6 +75,71 @@ from audience_behavior_semantic_etl_spark.cdc.commits import (
 def bucket_expr(conv_col, n_buckets: int):
     """Iceberg-style bucket transform: pmod(xxhash64(key), N)."""
     return F.pmod(F.xxhash64(conv_col), F.lit(n_buckets)).cast("int")
+
+
+_M64 = (1 << 64) - 1
+_XXP1 = 0x9E3779B185EBCA87
+_XXP2 = 0xC2B2AE3D27D4EB4F
+_XXP3 = 0x165667B19E3779F9
+_XXP4 = 0x85EBCA77C2B2AE63
+_XXP5 = 0x27D4EB2F165667C5
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return (_rotl64((acc + lane * _XXP2) & _M64, 31) * _XXP1) & _M64
+
+
+def _xxhash64(data: bytes, seed: int = 42) -> int:
+    """Spark's ``XxHash64`` of one byte string (``XXH64.hashUnsafeBytes``,
+    little-endian lanes, default seed 42) as a signed long — the
+    function behind ``F.xxhash64(string_col)`` over the UTF-8 bytes.
+    Mirrored driver-side so a point lookup finds its bucket with zero
+    Spark jobs; parity is pinned by ``test_xxhash64_parity_with_spark``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [
+            (seed + _XXP1 + _XXP2) & _M64,
+            (seed + _XXP2) & _M64,
+            seed & _M64,
+            (seed - _XXP1) & _M64,
+        ]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_xxh64_round(a, lane) for a, lane in zip(v, lanes)]
+            i += 32
+        h = (
+            _rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12) + _rotl64(v[3], 18)
+        ) & _M64
+        for a in v:
+            h = ((h ^ _xxh64_round(0, a)) * _XXP1 + _XXP4) & _M64
+    else:
+        h = (seed + _XXP5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        (k,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl64(h ^ _xxh64_round(0, k), 27) * _XXP1 + _XXP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        (k,) = struct.unpack_from("<I", data, i)
+        h = (_rotl64(h ^ ((k * _XXP1) & _M64), 23) * _XXP2 + _XXP3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = (_rotl64(h ^ ((b * _XXP5) & _M64), 11) * _XXP1) & _M64
+    h ^= h >> 33
+    h = (h * _XXP2) & _M64
+    h ^= h >> 29
+    h = (h * _XXP3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def bucket_of(conv_id: str, n_buckets: int) -> int:
+    """``bucket_expr`` of one literal key, computed driver-side."""
+    return _xxhash64(conv_id.encode("utf-8")) % n_buckets  # Python % == Spark pmod
 
 
 # File-level key-range statistics (Iceberg DataFile lower_bounds /
@@ -789,21 +855,23 @@ class SnapshotTable:
            actually holding the key).
 
         Files with no recorded stats (pre-stats tables, foreign
-        writers) are always read — pruning is never unsound."""
+        writers) are always read — pruning is never unsound.
+
+        The lookup costs one Spark job: the bucket comes from the
+        driver-side XXH64 mirror (``bucket_of``), and the scan is
+        coalesced to one partition, which satisfies the resolve's
+        per-key distribution — one conversation resolves in one task
+        with no exchange."""
         m = self.manifest(version)
-        b = (
-            self.spark.range(1)
-            .select(bucket_expr(F.lit(conv_id), m.n_buckets).alias("b"))
-            .collect()[0]["b"]
-        )
+        b = bucket_of(conv_id, m.n_buckets)
         stats = m.file_stats
         rels = [
             r
-            for r in m.buckets.get(str(int(b)), [])
+            for r in m.buckets.get(str(b), [])
             if _stats_admit(stats.get(r), conv_id)
         ]
         raw = self._read_rel_files(m, rels).where(F.col("conv_id") == conv_id)
-        return self._resolve_final(raw, m)
+        return self._resolve_final(raw.coalesce(1), m)
 
     def _resolve(self, raw: DataFrame, m: Manifest) -> DataFrame:
         """Row-LWW or column-fold (per ``m``'s ``has_partial``) over an

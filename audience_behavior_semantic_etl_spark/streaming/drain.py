@@ -7,36 +7,50 @@ trigger, writes to a parquet file sink in append mode, and the caller
 gets the typed read of that sink. The operator itself states only its
 query; this module owns the rest.
 
-Why sentinels. In append mode a watermarked window (or a session)
+Why a sentinel. In append mode a watermarked window (or a session)
 emits only once the event-time watermark passes its end, and the
 watermark only advances when a LATER event arrives. A drained
 directory has no later event for its final windows, so without help
 they would stay in state and the drain would return nothing for them.
-``stage_source`` therefore plants two one-row "flush" files far past
-the real data. Sentinel #1 advances the watermark past every real
-window/session end; the micro-batch that reads sentinel #2 runs with
-that advanced watermark and emits and evicts them all. Each operator
-gives its sentinels a marker value (a reserved key, or a NULL join
-key) and filters it out of the result. On a true unbounded stream no
-sentinel is needed: arriving data advances the watermark.
+``stage_source`` therefore plants one one-row "flush" file far past
+the real data. The micro-batch that reads it ends with the watermark
+past every real window/session end. Spark then runs one no-data
+micro-batch, because the watermark moved
+(``spark.sql.streaming.noDataMicroBatches.enabled``, on by default),
+and that batch emits and evicts them all. ``run_sink`` refuses to
+drain with the conf off: the final windows would silently never
+emit. Each operator gives its sentinel a marker value (a reserved
+key, or a NULL join key) and filters it out of the result. On a true
+unbounded stream no sentinel is needed: arriving data advances the
+watermark.
 
-Why later mtimes. The file source orders files by modification time,
+Why a later mtime. The file source orders files by modification time,
 not by name. Data files are symlinked into the staged directory (no
-copy); the sentinels are written after them with mtimes strictly later
-than every data file, so they land in the last micro-batches.
+copy); the sentinel is written after them with an mtime strictly later
+than every data file's, so it lands in the last micro-batch.
 
 The placement rule. With watermark delay ``delay`` and horizon
 ``horizon`` — the window length for windows, the gap for sessions,
-i.e. how far past its last event a group can still be open — sentinel
-``i`` sits at::
+i.e. how far past its last event a group can still be open — the
+sentinel sits at::
 
-    max_ts + delay + horizon + (i + 1) hours
+    max_ts + delay + horizon + 1 hour
 
-After sentinel #1 the watermark is ``max_ts + horizon + 1 h``, strictly
+After its batch the watermark is ``max_ts + horizon + 1 h``, strictly
 past ``last_event + horizon`` for every real group, whatever the delay
-and horizon are. The sentinels are written driver-side with pyarrow:
-the work is one row, so a Spark job per sentinel would be pure
+and horizon are. The watermark a batch filters late rows by is the one
+the PREVIOUS batch ended with, so a sentinel sharing a batch with data
+makes none of that data late. The sentinel is written driver-side with
+pyarrow: the work is one row, so a Spark job for it would be pure
 per-drain overhead.
+
+The trigger count. Every micro-batch pays a fixed floor (state-store
+commits, offset and commit log writes) whatever its row count, so the
+sentinel rides the last data micro-batch instead of taking one of its
+own. An operator that wants ``B`` data micro-batches over ``n`` data
+files reads ``files_per_trigger(n, B) = ceil((n + 1) / B)`` files per
+trigger: the drain then runs at most ``B`` micro-batches holding data
+and the sentinel, plus the no-data one.
 
 The default watermark. A drained directory arrives over several
 micro-batches in arbitrary event-time order. A delay covering its full
@@ -61,6 +75,8 @@ _TERM = r"(\d+)\s+(second|minute|hour|day|week)s?"
 _TERM_RE = re.compile(_TERM, re.IGNORECASE)
 _SPEC_RE = re.compile(rf"\s*{_TERM}(?:\s+{_TERM})*\s*", re.IGNORECASE)
 
+_NO_DATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+
 _UNIT_S = {"second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800}
 
 
@@ -73,11 +89,18 @@ def parse_interval_seconds(spec: str) -> int:
     return sum(int(n) * _UNIT_S[u.lower()] for n, u in _TERM_RE.findall(spec))
 
 
+def files_per_trigger(n_files: int, data_batches: int) -> int:
+    """``maxFilesPerTrigger`` that drains ``n_files`` data files plus
+    the flush sentinel in at most ``data_batches`` micro-batches, the
+    sentinel riding the last one (see the module docstring)."""
+    return -(-(n_files + 1) // data_batches)
+
+
 def span_watermark(
     static: DataFrame, ts_col: str, slack_s: int = 0
 ) -> tuple[datetime, str]:
     """One aggregate job over ``static``'s ``ts_col``: its max (where
-    ``stage_source`` places the sentinels) and the default watermark
+    ``stage_source`` places the sentinel) and the default watermark
     delay, the full event-time span plus one second plus ``slack_s``
     (see the module docstring)."""
     ts = F.col(ts_col).cast("timestamp")
@@ -127,8 +150,8 @@ def stage_source(
 ) -> tuple[str, int]:
     """Stage ``src`` (a parquet file or a directory of them) for a
     bounded drain: symlink its data files in name order into a scratch
-    directory, then write the two flush sentinels with strictly later
-    mtimes, ``ts_col`` placed by the rule in the module docstring and
+    directory, then write the flush sentinel with a strictly later
+    mtime, ``ts_col`` placed by the rule in the module docstring and
     ``flush`` ({column: marker}) applied. Returns the staged directory
     and the number of data files."""
     src = os.path.abspath(src)
@@ -144,14 +167,12 @@ def stage_source(
     staged = scratch_dir("stream-src-")
     for i, f in enumerate(data_files):
         os.symlink(f, os.path.join(staged, f"data-{i}.parquet"))
-    base_mtime = max(os.path.getmtime(f) for f in data_files)
     lag_s = parse_interval_seconds(delay) + parse_interval_seconds(horizon)
-    for i in range(2):
-        dst = os.path.join(staged, f"zz-sentinel-{i}.parquet")
-        at = max_ts + timedelta(seconds=lag_s + 3600 * (i + 1))
-        write_sentinel(data_files, dst, {ts_col: at, **flush})
-        t = base_mtime + 10 + i * 10
-        os.utime(dst, (t, t))
+    dst = os.path.join(staged, "zz-sentinel.parquet")
+    at = max_ts + timedelta(seconds=lag_s + 3600)
+    write_sentinel(data_files, dst, {ts_col: at, **flush})
+    t = max(os.path.getmtime(f) for f in data_files) + 10
+    os.utime(dst, (t, t))
     return staged, len(data_files)
 
 
@@ -160,7 +181,18 @@ def run_sink(df: DataFrame, progress: list | None = None) -> DataFrame:
     on a scratch checkpoint with an ``availableNow`` trigger and wait
     for it. ``progress``, if given, receives the query's progress dicts
     (state-store metrics, per-trigger durations). Returns the typed
-    read of the sink — distributed, no driver collect."""
+    read of the sink — distributed, no driver collect.
+
+    Raises ``ValueError`` when the session disables
+    ``spark.sql.streaming.noDataMicroBatches.enabled``: the final
+    windows and sessions of a drain emit in the no-data micro-batch
+    (module docstring)."""
+    spark = df.sparkSession
+    if spark.conf.get(_NO_DATA_CONF, "true").strip().lower() == "false":
+        raise ValueError(
+            f"{_NO_DATA_CONF}=false: a bounded drain emits its final "
+            "windows in the no-data micro-batch; enable the conf"
+        )
     out_dir = scratch_dir("stream-sink-")
     q = (
         df.writeStream.format("parquet")
@@ -173,4 +205,4 @@ def run_sink(df: DataFrame, progress: list | None = None) -> DataFrame:
     q.awaitTermination()
     if progress is not None:
         progress.extend(json.loads(p.json) for p in q.recentProgress)
-    return df.sparkSession.read.schema(df.schema).parquet(out_dir)
+    return spark.read.schema(df.schema).parquet(out_dir)

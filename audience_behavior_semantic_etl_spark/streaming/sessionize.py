@@ -31,9 +31,11 @@ every evaluation, so arrival order never changes the result — the
 drained output is bit-equal to the batch operator on the same data
 (pinned by test and by the driver-contract oracle).
 
-Bounded-drain flush: two sentinels staged by ``streaming/drain.py``
-advance the watermark past every real session's ``last + gap`` so the
-final open sessions time out and emit (explained there once).
+Bounded-drain flush: one sentinel staged by ``streaming/drain.py``
+advances the watermark past every real session's ``last + gap``; in
+Spark's no-data micro-batch that follows, the final open sessions time
+out and emit (explained there once). The sentinel file counts toward
+``files_per_trigger``.
 """
 
 from __future__ import annotations
@@ -174,8 +176,8 @@ def streaming_sessionize(
     real disorder bound instead (state shrinks accordingly).
 
     CONSTRAINT: ``key_col`` values must be NON-NEGATIVE. The bounded-
-    drain flush injects sentinel rows under key ``-1`` and the final
-    read filters ``key >= 0`` to strip them; a deployment whose key
+    drain flush injects a sentinel row under key ``-1`` and the final
+    read filters ``key >= 0`` to strip it; a deployment whose key
     domain includes negative values must remap keys first (or replace
     the sentinel mechanism with a marker column)."""
     gap_s = gap_minutes * 60

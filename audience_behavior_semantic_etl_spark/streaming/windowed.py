@@ -16,15 +16,17 @@ deterministic and oracle-checkable (the finished result equals the
 batch GROUP BY).
 
 Bounded-drain flush: the drained directory has no event after its
-final windows, so ``streaming/drain.py`` stages two flush sentinels
-that advance the watermark past them (why, and where they go, is
-explained there once).
+final windows, so ``streaming/drain.py`` stages one flush sentinel
+that rides the last data micro-batch and advances the watermark past
+them; Spark's no-data micro-batch then emits them (why, and where the
+sentinel goes, is explained there once).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from audience_behavior_semantic_etl_spark.streaming.drain import (
+    files_per_trigger,
     run_sink,
     span_watermark,
     stage_source,
@@ -55,7 +57,7 @@ def tumbling_window_counts(
     )
     src = (
         spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max(1, n_files))
+        .option("maxFilesPerTrigger", files_per_trigger(n_files, 1))
         .parquet(srcd)
     )
     # Watermarks need an instant; testdata timestamps are NTZ (session
@@ -102,10 +104,10 @@ def stream_static_enrich_counts(
     final label-not-null filter (== inner-join semantics): an INNER
     join would let Catalyst push its join-key IS NOT NULL filter below
     the EventTimeWatermark node to the scan, killing the NULL-key flush
-    sentinels BEFORE they can advance event time — the windows would
+    sentinel BEFORE it can advance event time — the windows would
     then never close and the drain would emit nothing. With the outer
-    join the sentinels survive to the watermark tracker (their label
-    stays NULL and the final filter drops them from the output). The
+    join the sentinel survives to the watermark tracker (its label
+    stays NULL and the final filter drops it from the output). The
     dim never enters the state store."""
     static = spark.read.parquet(src_dir)
     hi, span_delay = span_watermark(static, ts_col)
@@ -117,7 +119,7 @@ def stream_static_enrich_counts(
     )
     src = (
         spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max(1, n_files // 2))
+        .option("maxFilesPerTrigger", files_per_trigger(n_files, 2))
         .parquet(srcd)
         .withColumn("__evt", F.col(ts_col).cast("timestamp"))
         .withWatermark("__evt", watermark)
@@ -134,6 +136,6 @@ def stream_static_enrich_counts(
             F.col("n_events"),
         )
     )
-    # label NULL = sentinel rows (and any unmatched stream key) — the
+    # label NULL = the sentinel row (and any unmatched stream key) — the
     # filter restores inner-join semantics
     return run_sink(agg, progress).filter(F.col(label_col).isNotNull())

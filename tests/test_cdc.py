@@ -1578,6 +1578,44 @@ def test_murmur3_parity_with_spark_hash(spark):
     assert all(r["h"] == _murmur3_hash_int(r["t"]) for r in rows)
 
 
+def test_xxhash64_parity_with_spark(spark):
+    """The driver-side XXH64 mirror must equal F.xxhash64 (seed 42) on
+    strings, and ``bucket_of`` must equal ``bucket_expr`` — read_key
+    finds its bucket with no Spark job on the strength of this. The
+    sample covers every path of the hash: 0-80 characters (empty,
+    under and over one 32-byte stripe, every 8/4/1-byte tail) and
+    multi-byte UTF-8."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from audience_behavior_semantic_etl_spark.cdc.table import (
+        _xxhash64,
+        bucket_expr,
+        bucket_of,
+    )
+
+    rng = random.Random(11)
+    alphabet = "abcXYZ019-_ é€𝄞"
+    keys = ["", "conv-000001", "é", "€€", "𝄞"]
+    keys += ["".join(rng.choice(alphabet) for _ in range(n)) for n in range(81)]
+    keys += ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 80))) for _ in range(300)]
+    rows = (
+        spark.createDataFrame([(k,) for k in keys], "k string")
+        .select(
+            "k",
+            F.xxhash64("k").alias("h"),
+            bucket_expr(F.col("k"), 16).alias("b16"),
+            bucket_expr(F.col("k"), 7).alias("b7"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(keys)
+    assert all(r["h"] == _xxhash64(r["k"].encode("utf-8")) for r in rows)
+    assert all(r["b16"] == bucket_of(r["k"], 16) for r in rows)
+    assert all(r["b7"] == bucket_of(r["k"], 7) for r in rows)
+
+
 def test_slot_tokens_exact_placement(spark):
     """Each slot token must land in exactly its own partition under the
     DataFrame hash partitioner — zero collisions, zero empty slots —

@@ -94,6 +94,101 @@ def test_tumbling_window_state_is_evicted(spark, tmp_path):
     assert max(state_rows) >= 20, "windows never entered state (wrong source?)"
 
 
+def _events(spark, path, n_files: int):
+    """Write 600 seeded events (``user_id``, ``ts``, ``event_type``)
+    over two days, with gaps both under and over 30 minutes, as
+    ``n_files`` parquet files with increasing mtimes (the file source
+    orders arrivals by mtime). Returns the directory and the frame."""
+    import os
+    import random
+    from datetime import datetime, timedelta
+
+    rng = random.Random(5)
+    t0 = datetime(2025, 1, 1)
+    rows = [
+        (rng.randrange(20), t0 + timedelta(seconds=rng.randrange(2 * 86400)), rng.choice("abc"))
+        for _ in range(600)
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp_ntz, event_type string")
+    df.repartition(n_files).write.parquet(path)
+    parts = sorted(p for p in os.listdir(path) if p.endswith(".parquet"))
+    assert len(parts) == n_files
+    for i, p in enumerate(parts):
+        os.utime(os.path.join(path, p), (1_700_000_000 + i,) * 2)
+    return path, spark.read.parquet(path)
+
+
+def _window_rows(df, key_col: str) -> set:
+    return {
+        (r["window_start"], r[key_col], r["n_events"])
+        for r in df.select("window_start", key_col, "n_events").collect()
+    }
+
+
+def _batch_windows(df, key_col: str):
+    return df.groupBy(
+        F.window(F.col("ts").cast("timestamp"), "1 hour").alias("w"), key_col
+    ).agg(
+        F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        F.count(F.lit(1)).alias("n_events"),
+    )
+
+
+def test_tumbling_drain_of_one_file_takes_two_triggers(spark, tmp_path):
+    """The flush sentinel rides the data micro-batch and Spark's no-data
+    micro-batch emits the final windows: a one-file tumbling drain
+    takes exactly 2 triggers, and its result equals the batch windows."""
+    from audience_behavior_semantic_etl_spark.streaming.windowed import (
+        tumbling_window_counts,
+    )
+
+    src, ev = _events(spark, str(tmp_path / "src"), 1)
+    prog: list = []
+    out = tumbling_window_counts(spark, src, progress=prog)
+    want = _batch_windows(ev, "event_type")
+    assert _window_rows(out, "event_type") == _window_rows(want, "event_type")
+    assert len(prog) == 2, [p["numInputRows"] for p in prog]
+
+
+def test_enrich_drain_of_four_arrivals_takes_three_triggers(spark, tmp_path):
+    """Four arrival files drain in two data micro-batches, the sentinel
+    riding the second, plus the no-data one: exactly 3 triggers, and
+    the result equals the batch join + windows."""
+    from audience_behavior_semantic_etl_spark.streaming.windowed import (
+        stream_static_enrich_counts,
+    )
+
+    srcd, ev = _events(spark, str(tmp_path / "src"), 4)
+    # keys 0-19 against a 15-row dim: unmatched keys drop, as in an inner join
+    dim = spark.createDataFrame(
+        [(i, f"label-{i % 7}") for i in range(15)], "dk long, label string"
+    )
+
+    prog: list = []
+    out = stream_static_enrich_counts(
+        spark, srcd, dim, key_col="user_id", dim_key_col="dk", label_col="label",
+        progress=prog,
+    )
+    want = _batch_windows(ev.join(dim, ev["user_id"] == dim["dk"]), "label")
+    assert _window_rows(out, "label") == _window_rows(want, "label")
+    assert len(prog) == 3, [p["numInputRows"] for p in prog]
+
+
+def test_drain_refuses_disabled_no_data_batches(spark):
+    """A bounded drain emits its final windows in Spark's no-data
+    micro-batch; with that batch disabled it would silently return
+    none, so the drain refuses to start."""
+    from audience_behavior_semantic_etl_spark.streaming.drain import run_sink
+
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(conf, "false")
+    try:
+        with pytest.raises(ValueError, match=conf):
+            run_sink(spark.readStream.format("rate").load())
+    finally:
+        spark.conf.unset(conf)
+
+
 def test_wal_source_roundtrip(spark, tmp_path):
     from audience_behavior_semantic_etl_spark.cdc.gen import GenConfig, generate_change_log, write_wal_chunks
     from audience_behavior_semantic_etl_spark.sources import read_wal
@@ -300,36 +395,15 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert evicted > 0, "watermark must evict dedup state"
 
 
-def test_streaming_sessionize_equals_batch_gap_rule(spark, tmp_path):
-    """applyInPandasWithState sessionization drained over a multi-file
-    arrival order must be BIT-EQUAL to the batch gap rule on the same
-    events (same sessions, same bounds, same counts) — out-of-order
-    arrival across micro-batches included, since events buffer in state
-    and sessionize on the sorted buffer."""
+def _assert_batch_sessions(out, ev_pdf) -> None:
+    """``out`` (pandas) equals the batch 30-minute gap rule over the
+    events of ``ev_pdf`` (``user_id``, ``ts``): same sessions, bounds
+    and counts."""
     import pandas as pd
 
-    from audience_behavior_semantic_etl_spark.streaming.sessionize import (
-        streaming_sessionize,
-    )
-
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .select("user_id", "ts")
-    )
-    srcd = str(tmp_path / "src")
-    # repartition WITHOUT ordering: files interleave times, so
-    # micro-batches genuinely arrive out of event-time order
-    ev.repartition(6).write.parquet(srcd)
-
-    out = streaming_sessionize(
-        spark, srcd, key_col="user_id", ts_col="ts", gap_minutes=30,
-        files_per_trigger=2,
-    ).toPandas()
-
-    pdf = ev.toPandas()
-    pdf["t"] = pdf["ts"].astype("datetime64[s]").astype("int64")
+    ev_pdf = ev_pdf.assign(t=ev_pdf["ts"].astype("datetime64[s]").astype("int64"))
     expected = []
-    for uid, g in pdf.groupby("user_id"):
+    for uid, g in ev_pdf.groupby("user_id"):
         ts = sorted(g["t"])
         start = prev = ts[0]
         n = 1
@@ -350,6 +424,51 @@ def test_streaming_sessionize_equals_batch_gap_rule(spark, tmp_path):
     pd.testing.assert_frame_equal(
         got[want.columns].astype("int64"), want.astype("int64")
     )
+
+
+def test_streaming_sessionize_equals_batch_gap_rule(spark, tmp_path):
+    """applyInPandasWithState sessionization drained over a multi-file
+    arrival order must be BIT-EQUAL to the batch gap rule on the same
+    events (same sessions, same bounds, same counts) — out-of-order
+    arrival across micro-batches included, since events buffer in state
+    and sessionize on the sorted buffer."""
+    from audience_behavior_semantic_etl_spark.streaming.sessionize import (
+        streaming_sessionize,
+    )
+
+    ev = (
+        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+        .select("user_id", "ts")
+    )
+    srcd = str(tmp_path / "src")
+    # repartition WITHOUT ordering: files interleave times, so
+    # micro-batches genuinely arrive out of event-time order
+    ev.repartition(6).write.parquet(srcd)
+
+    out = streaming_sessionize(
+        spark, srcd, key_col="user_id", ts_col="ts", gap_minutes=30,
+        files_per_trigger=2,
+    ).toPandas()
+
+    _assert_batch_sessions(out, ev.toPandas())
+
+
+def test_sessionize_drain_of_one_file_takes_three_triggers(spark, tmp_path):
+    """With ``files_per_trigger=1`` the sentinel counts toward the cap
+    and takes its own micro-batch: data, sentinel, no-data — exactly 3
+    triggers, the result equal to the batch gap rule."""
+    from audience_behavior_semantic_etl_spark.streaming.sessionize import (
+        streaming_sessionize,
+    )
+
+    src, ev = _events(spark, str(tmp_path / "src"), 1)
+    prog: list = []
+    out = streaming_sessionize(
+        spark, src, key_col="user_id", ts_col="ts", gap_minutes=30,
+        files_per_trigger=1, progress=prog,
+    ).toPandas()
+    _assert_batch_sessions(out, ev.select("user_id", "ts").toPandas())
+    assert len(prog) == 3, [p["numInputRows"] for p in prog]
 
 
 def test_streaming_sessionize_state_is_bounded(spark, tmp_path):
