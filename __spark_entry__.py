@@ -1118,7 +1118,7 @@ def q_cdc_partial_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = SnapshotTable.create(spark, f"{tmp}/t", n_buckets=8)
     apply_batch(env.filter(F.pmod(F.col("lsn"), F.lit(5)) != 0), table, 0, cfg)
     apply_batch(env.filter(F.pmod(F.col("lsn"), F.lit(5)) == 0), table, 1, cfg)
-    assert table.manifest().properties.get("has_partial") is True
+    assert "patched_columns" in table.manifest().properties
     return table.read_final().select("conv_id", "turn_idx", "role", "text", "tool")
 
 

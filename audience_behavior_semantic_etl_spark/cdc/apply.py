@@ -857,9 +857,9 @@ def _apply_batch(
                 deduped=bool(deduped),
                 malformed=n_malformed,
             )
-        # ONE snapshot for the whole batch: DDL, the has_partial /
-        # patched_columns flips (patches switch the table into
-        # column-resolution mode, durably), files, ledger and lineage
+        # ONE snapshot for the whole batch: DDL, the patched_columns
+        # union (patches switch the table into column-resolution mode,
+        # durably), files, ledger and lineage
         snapshot = table._commit_batch(
             staged,
             affected,

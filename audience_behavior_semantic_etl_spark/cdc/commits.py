@@ -9,7 +9,15 @@ Layout under a table root:
 - ``_tags.json`` — tag name -> pinned version. A tag is a pointer,
   not a commit: creating or dropping one writes no manifest (the
   Iceberg ``refs`` map). A ``tags`` property in an older manifest is
-  ignored.
+  ignored;
+- ``_commit.lock`` — the commit critical section, held with
+  ``flock(LOCK_EX)`` by ``locked``. The file stays on disk and means
+  nothing while no one holds it: the kernel drops the lock when its
+  holder exits, however it dies, so a killed committer blocks no one;
+- ``_version_seq`` — GC's high-water mark: the newest version number
+  ever written, recorded by ``drop_manifests`` only before it deletes
+  the newest manifest. ``next_version`` never issues a number at or
+  below it.
 
 Every file here is written tmp + fsync + ``os.replace``, so a crash
 mid-write leaves the old content (plus a ``*.tmp.*`` file that
@@ -27,6 +35,8 @@ executors and must not drag the table class along.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 import re
@@ -68,12 +78,53 @@ def retained_versions(root: str) -> list[int]:
     )
 
 
+@contextlib.contextmanager
+def locked(root: str) -> Iterator[None]:
+    """The commit critical section of the table at ``root``, exclusive
+    across threads and processes — the local-FS analog of the catalog
+    compare-and-swap Iceberg commits ride. flock, not ``fcntl.lockf``:
+    POSIX record locks belong to the process, so they would not exclude
+    a background compaction thread from the apply thread. Each entry
+    opens its own descriptor, so two threads contend as two holders.
+    Not reentrant. Only read-head -> mutate -> write-manifest -> swing
+    the head runs inside; staging writes stay outside."""
+    fd = os.open(os.path.join(root, "_commit.lock"), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        fcntl.flock(fd, fcntl.LOCK_UN)
+        os.close(fd)
+
+
+def next_version(root: str) -> int:
+    """The next version number, unique table-wide: every ref chain
+    shares one ``_manifests/`` namespace. A number once written is
+    never reissued, even after rollback + GC deletes the newest
+    manifests — checkpointed consumers (CDF streams, incremental views)
+    key progress on version numbers and would skip a reused one. Reads
+    only, so a commit that declines uses no number. Call under
+    ``locked``."""
+    vs = retained_versions(root)
+    try:
+        with open(os.path.join(root, "_version_seq")) as f:
+            seq = int(f.read().strip())
+    except (FileNotFoundError, ValueError):
+        seq = -1
+    return max(vs[-1] if vs else -1, seq) + 1
+
+
 def drop_manifests(root: str, keep: set[int]) -> None:
     """Delete every manifest outside ``keep`` and every tmp file a
-    cut-short write left behind. Call under the commit lock: a live
-    writer's tmp file exists only while it holds the lock."""
+    cut-short write left behind. Before deleting the newest manifest
+    it records the high-water mark in ``_version_seq``, so that number
+    is never reissued. Call under the commit lock: a live writer's tmp
+    file exists only while it holds the lock."""
     man_dir = os.path.join(root, "_manifests")
-    for v in retained_versions(root):
+    vs = retained_versions(root)
+    if vs and vs[-1] not in keep:
+        atomic_write(os.path.join(root, "_version_seq"), str(next_version(root) - 1))
+    for v in vs:
         if v not in keep:
             os.remove(_manifest_path(root, v))
     for fn in os.listdir(man_dir):

@@ -172,13 +172,11 @@ def _put_nonempty(props: dict[str, Any], key: str, value) -> None:
 
 
 def _mark_partial(m: "Manifest", patched) -> None:
-    """Sticky column-fold mode for ``m``, plus the PHYSICAL columns some
-    patch set unioned into ``patched_columns`` (written only when it
-    grows, so a table without the property keeps the all-columns fold)."""
-    m.properties["has_partial"] = True
-    prev = set(m.properties.get("patched_columns") or [])
-    if not set(patched) <= prev:
-        m.properties["patched_columns"] = sorted(prev | set(patched))
+    """Sticky column-fold mode for ``m``: the PHYSICAL columns some
+    patch set, unioned into ``patched_columns``. The property's presence
+    (even as an empty list) is what switches reads to the fold."""
+    prev = m.properties.get("patched_columns", ())
+    m.properties["patched_columns"] = sorted(set(prev) | set(patched))
 
 
 def _era(m: "Manifest") -> tuple:
@@ -213,9 +211,10 @@ def _safe_dirname(s: str) -> str:
 # files + a manifest list. v{N}.json now stores:
 #
 #   - the commit's own file DELTA vs its parent (``files.added`` /
-#     ``files.removed`` / ``files.stats_added`` / ``files.stats_removed``)
-#     — O(batch), which is what an append costs in data too. No caller
-#     states it: ``_write_manifest`` derives it from the mutated
+#     ``files.removed`` / ``files.stats_added``: the key ranges of the
+#     added files; a removed file's range leaves with it, and a commit
+#     that removes files stores a full base) — O(batch), which is what
+#     an append costs in data too. No caller states it: ``_write_manifest`` derives it from the mutated
 #     manifest and the parent state, the way Iceberg derives a
 #     snapshot's added/removed files from its operation;
 #   - every ROLLUP_EVERY commits (and on every create / rewrite /
@@ -236,7 +235,7 @@ def _safe_dirname(s: str) -> str:
 # ``manifest()`` reconstructs the full state by walking parents to the
 # nearest full base and caching the result per (root, version):
 # manifests are write-once and version numbers never reused
-# (_alloc_version), so the cache can never serve stale content.
+# (``commits.next_version``), so the cache can never serve stale content.
 # gc_orphans rewrites any KEPT delta manifest whose reconstruction
 # parent is being dropped in place as FULL (same version/snapshot_id/
 # delta summary — see the boundary-materialization block there) so
@@ -439,27 +438,6 @@ class SnapshotTable:
     # `fast_forward` (or `cherry_pick`) publishes it — the Iceberg
     # audit-branch (write-audit-publish) pattern.
 
-    def _alloc_version(self) -> int:
-        """Next GLOBALLY unique version number: manifests from every
-        ref chain share one `_manifests/` namespace, so version numbers
-        are allocated table-wide, not per-chain — two branches can
-        never write the same `v{N}.json`. A persisted high-water mark
-        (`_version_seq`, advanced by _write_manifest) keeps allocation
-        MONOTONE even when rollback + GC deletes the highest-numbered
-        manifests: a version number, once written, is never reissued —
-        checkpointed consumers (CDF streams, incremental views) key
-        progress on version numbers and silently skip a reused one.
-        Reads only, so a commit that declines uses no number. Call
-        under the commit lock."""
-        vs = self._retained_versions()
-        hwm = -1
-        try:
-            with open(os.path.join(self.root, "_version_seq")) as f:
-                hwm = int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            pass
-        return max(vs[-1] if vs else -1, hwm) + 1
-
     def _write_manifest(self, m: Manifest, ref: str = "main") -> None:
         """Write-manifest-last atomic commit; advances ``ref``'s head.
         Called by ``_commit`` only (and by ``create`` for v0).
@@ -508,11 +486,10 @@ class SnapshotTable:
             f: list(m.file_stats[f])
             for fs in added.values() for f in fs if f in m.file_stats
         }
-        stats_removed = [f for f in removed if f in pstats]
         stats = pstats
-        if stats_added or stats_removed:
+        if stats_added or removed:
             stats = dict(pstats)
-            for f in stats_removed:
+            for f in removed:
                 stats.pop(f, None)
             stats.update(stats_added)
         full = m.parent is None or bool(removed) or pdepth + 1 >= ROLLUP_EVERY
@@ -528,11 +505,9 @@ class SnapshotTable:
                 "added": added,
                 "removed": removed,
                 "stats_added": stats_added,
-                "stats_removed": stats_removed,
                 "full": {"buckets": buckets, "stats": stats} if full else None,
             },
         }
-        commits.atomic_write(os.path.join(self.root, "_version_seq"), str(m.version))
         commits.write_manifest(self.root, m.version, d)
         _cache_put((self.root, m.version), (buckets, stats, 0 if full else pdepth + 1))
         commits.set_head(self.root, ref, m.version)
@@ -814,8 +789,9 @@ class SnapshotTable:
         Row mode (default): the max-``_lsn`` version across all delta
         files (ties are re-delivered identical rows; any survivor is
         the same row). Column mode (sticky, once the table has seen a
-        partial update — ``has_partial`` property): fold patch
-        set-masks onto the latest full-row base (``_fold_resolve``).
+        partial update — the ``patched_columns`` property is present):
+        fold patch set-masks onto the latest full-row base
+        (``_fold_resolve``).
         Both modes collapse to full rows; ``_set`` never leaks out.
         Tombstones are kept with ``_lsn`` and ``_deleted``, so callers
         see deletions; ``read_final`` filters them."""
@@ -874,9 +850,9 @@ class SnapshotTable:
         return self._resolve_final(raw.coalesce(1), m)
 
     def _resolve(self, raw: DataFrame, m: Manifest) -> DataFrame:
-        """Row-LWW or column-fold (per ``m``'s ``has_partial``) over an
-        already-scoped raw frame; keeps ``_lsn`` and ``_deleted``."""
-        if m.properties.get("has_partial"):
+        """Row-LWW, or column-fold when ``m`` has ``patched_columns``,
+        over an already-scoped raw frame; keeps ``_lsn`` and ``_deleted``."""
+        if "patched_columns" in m.properties:
             return self._fold_resolve(raw, m)
         w = Window.partitionBy("conv_id", "turn_idx").orderBy(
             F.col(S.LSN_META_COL).desc()
@@ -928,19 +904,15 @@ class SnapshotTable:
         column rides the single winning-base struct for free (its
         winner is by definition the latest base). On the bench table
         (8 columns, patches touching 3) this cut the fold read from
-        ~1.9x to near the row-LWW path. Falls back to all-columns if
-        the property is absent (pre-tracking tables)."""
+        ~1.9x to near the row-LWW path. An empty patched set folds every
+        column through the winning base."""
         data_cols = [n for n, _ in m.columns if n not in ("conv_id", "turn_idx")]
         # masks and patched_columns store PHYSICAL names (stable across
         # renames, era-unique across drop/re-add) — translate per the
         # current manifest; identity on never-renamed tables
         pm = self._phys_map(m)
-        patched_prop = m.properties.get("patched_columns")
-        if patched_prop is None:
-            patched = set(data_cols)
-        else:
-            pp = set(patched_prop)
-            patched = {c for c in data_cols if pm[c] in pp}
+        pp = set(m.properties["patched_columns"])
+        patched = {c for c in data_cols if pm[c] in pp}
         base_cols = [c for c in data_cols if c not in patched]
         is_base = F.col(S.SETMASK_META_COL).isNull()
         lsn = F.col(S.LSN_META_COL)
@@ -1081,10 +1053,8 @@ class SnapshotTable:
         (possible writer-side truncation, which would make range
         pruning unsound) are omitted — readers treat a missing entry as
         "may contain anything"."""
-        try:
-            import pyarrow.parquet as pq
-        except Exception:  # pragma: no cover - pyarrow ships in-sandbox
-            return {}
+        import pyarrow.parquet as pq
+
         out: dict[str, list[str]] = {}
         for rel in rels:
             try:
@@ -1112,29 +1082,6 @@ class SnapshotTable:
             except Exception:
                 continue
         return out
-
-    def _with_commit_lock(self, fn, timeout: float = 120.0):
-        """Serialize the commit critical section across THREADS AND
-        PROCESSES with an O_EXCL lockfile — the local-FS analog of the
-        catalog's atomic compare-and-swap that Iceberg commits ride.
-        Everything expensive (staging writes, file adoption moves) stays
-        OUTSIDE the lock; only read-manifest → mutate → write-pointer is
-        inside, so the lock is held for milliseconds."""
-        lock = os.path.join(self.root, "_commit.lock")
-        t0 = time.time()
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                if time.time() - t0 > timeout:
-                    raise TimeoutError(f"commit lock {lock} held > {timeout}s")
-                time.sleep(0.02)
-        try:
-            return fn()
-        finally:
-            os.close(fd)
-            os.remove(lock)
 
     def _commit_batch(
         self,
@@ -1266,8 +1213,7 @@ class SnapshotTable:
         head), which must be readable: one ref-store write under the
         commit lock. ``taken`` is the refusal when ``name`` exists
         (``{v}``: the version it points at)."""
-
-        def run() -> int:
+        with commits.locked(self.root):
             refs = commits.read_refs(self.root, kind)
             if name in refs:
                 raise ValueError(taken.format(v=refs[name]))
@@ -1277,13 +1223,10 @@ class SnapshotTable:
             commits.write_refs(self.root, refs, kind)
             return v
 
-        return self._with_commit_lock(run)
-
     def _drop_ref(self, kind: str, name: str, check=None) -> None:
         """Delete a ``kind`` ref under the commit lock, after
         ``check(version)`` (which raises to refuse)."""
-
-        def run() -> None:
+        with commits.locked(self.root):
             refs = commits.read_refs(self.root, kind)
             if name not in refs:
                 raise ValueError(f"no such {kind} {name!r}")
@@ -1291,8 +1234,6 @@ class SnapshotTable:
                 check(refs[name])
             del refs[name]
             commits.write_refs(self.root, refs, kind)
-
-        self._with_commit_lock(run)
 
     # ------------------------------------------------------------ branches
 
@@ -1348,8 +1289,7 @@ class SnapshotTable:
         branch's batches, which the per-app ledger makes idempotent).
         Pure pointer swing: no data file is touched, the branch's
         ledger/watermarks/schema become ``ref``'s atomically."""
-
-        def run() -> int:
+        with commits.locked(self.root):
             target = head_version(self.root, from_branch)
             cur = head_version(self.root, ref)
             if cur == target:
@@ -1361,8 +1301,6 @@ class SnapshotTable:
                 )
             commits.set_head(self.root, ref, target)
             return target
-
-        return self._with_commit_lock(run)
 
     @staticmethod
     def _single_batch_delta(
@@ -1400,8 +1338,8 @@ class SnapshotTable:
         target ledger already holds returns None without committing.
 
         Partial-update read semantics travel with the files: when the
-        source chain reads by column fold (``has_partial``), the target
-        turns it on too and unions the source's ``patched_columns`` —
+        source chain reads by column fold (it has ``patched_columns``),
+        the target turns it on too and unions the source's set —
         otherwise the target would read the picked patch rows as
         full-row bases."""
         src = self.manifest(version)
@@ -1423,8 +1361,7 @@ class SnapshotTable:
         par_wm = par.properties.get("watermarks", {})
         wm_delta = {p: int(l) for p, l in src_wm.items() if par_wm.get(p) != l}
         stats = {f: src.file_stats[f] for f in added if f in src.file_stats}
-        src_partial = bool(src.properties.get("has_partial"))
-        src_patched = set(src.properties.get("patched_columns") or [])
+        src_patched = src.properties.get("patched_columns")
         # schema-era facts of the SOURCE commit, compared against the
         # target head INSIDE the lock: a branch data commit written
         # after branch-side DDL carries columns / physical-name eras the
@@ -1454,7 +1391,7 @@ class SnapshotTable:
                     r for r in rels if r not in have
                 ]
             m.file_stats.update(stats)
-            if src_partial:
+            if src_patched is not None:
                 # physical names match: the schema-era guard above
                 _mark_partial(m, src_patched)
 
@@ -1642,11 +1579,10 @@ class SnapshotTable:
         - ``snapshot_id``: the id to stamp, when the caller chose it
           before the commit (``_commit_batch``: names minted at plan
           time); a fresh one otherwise."""
-
-        def run() -> str | None:
+        with commits.locked(self.root):
             m = self.manifest(ref=ref)
             parent_snapshot = m.snapshot_id
-            m.parent, m.version = m.version, self._alloc_version()
+            m.parent, m.version = m.version, commits.next_version(self.root)
             m.snapshot_id = snapshot_id or uuid.uuid4().hex
             if mutate(m) is False:
                 return None
@@ -1666,8 +1602,6 @@ class SnapshotTable:
             }
             self._write_manifest(m, ref=ref)
             return m.snapshot_id
-
-        return self._with_commit_lock(run)
 
     # ------------------------------------------------------------ maintenance
 
@@ -1850,7 +1784,9 @@ class SnapshotTable:
         fresh staging dirs are untouchable by construction), then
         report the table state the resumed stream starts from. The
         per-app exactly-once ledger makes re-delivered batches no-op,
-        so callers just run this and restart the stream."""
+        so callers just run this and restart the stream. A committer
+        killed inside the commit lock does not block it: the kernel
+        releases the lock with the dead process (``commits.locked``)."""
         deleted = self.gc_orphans(
             keep_versions=keep_versions,
             staging_grace_seconds=staging_grace_seconds,
@@ -1908,8 +1844,7 @@ class SnapshotTable:
         land between the plan and the delete and lose its just-written
         manifest (deletion is metadata-scale: a few listdir + unlink)."""
         cutoff = None if max_age_seconds is None else time.time() - max_age_seconds
-
-        def run() -> list[str]:
+        with commits.locked(self.root):
             refs = commits.read_refs(self.root)
             keep_set: set[int] = set()
             referenced: set[str] = set()
@@ -1921,11 +1856,10 @@ class SnapshotTable:
             # follow a parent pointer.
             heads = [head_version(self.root), *refs.values()]
             for hops, (v, d) in enumerate(ancestry(self.root, heads[0])):
-                if hops >= keep_versions:
-                    ts = d["properties"].get("committed_at")
-                    # pre-stamp manifests (no committed_at) count as old
-                    if cutoff is None or ts is None or float(ts) < cutoff:
-                        break
+                if hops >= keep_versions and (
+                    cutoff is None or d["properties"]["committed_at"] < cutoff
+                ):
+                    break
                 keep_set.add(v)
             for hv in refs.values():
                 for v, _ in ancestry(self.root, hv):
@@ -1981,9 +1915,6 @@ class SnapshotTable:
                     os.remove(os.path.join(data_dir, fn))
                     deleted.append(rel)
             commits.drop_manifests(self.root, keep_set)
-            return deleted
-
-        deleted = self._with_commit_lock(run)
         # clear abandoned staging dirs (crashed writes) — but only past
         # the grace window, never an in-flight writer's dir (see docstring)
         staging = os.path.join(self.root, "_staging")

@@ -269,8 +269,8 @@ def test_concurrent_main_and_branch_writers(spark, log3, tmp_path):
     """Two writers committing concurrently — one onto main, one onto a
     branch — through the shared commit lock: no version collision, no
     lost commit, both chains independently correct. (On a real
-    deployment the lock is the catalog CAS; here it is the O_EXCL
-    lockfile both threads contend on.)"""
+    deployment the lock is the catalog CAS; here it is the flock on
+    _commit.lock both threads contend on.)"""
     import threading
 
     batches, _ = log3
@@ -426,8 +426,8 @@ def test_cherry_pick_refuses_rewrite_commits(spark, log3, tmp_path):
 
 def test_cherry_pick_carries_partial_update_semantics(spark, tmp_path):
     """A picked patch commit reads on the target exactly as on its
-    branch: the pick turns on the column fold (has_partial) and unions
-    the patched columns, so untouched columns keep their base values
+    branch: the pick turns on the column fold by unioning the patched
+    columns, so untouched columns keep their base values
     instead of reading the patch row as an all-NULL full-row base."""
     import json as _json
 
@@ -452,7 +452,6 @@ def test_cherry_pick_carries_partial_update_semantics(spark, tmp_path):
     assert (want[0]["role"], want[0]["text"]) == ("user", "B")
     assert table.read_final().select(*cols).collect() == want
     props = table.manifest().properties
-    assert props.get("has_partial") is True
     assert "text" in props["patched_columns"]
 
 

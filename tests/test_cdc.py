@@ -291,7 +291,7 @@ def test_crash_between_manifest_and_pointer_swap(spark, tmp_path):
         "properties": m.properties,
         "summary": None,
         # would-be "emptied" table
-        "files": {"added": {}, "removed": [], "stats_added": {}, "stats_removed": [],
+        "files": {"added": {}, "removed": [], "stats_added": {},
                   "full": {"buckets": {}, "stats": {}}},
     }
     with open(os.path.join(table.root, "_manifests", f"v{m.version + 1}.json"), "w") as f:
@@ -935,7 +935,7 @@ def test_partial_update_chain(spark, tmp_path):
     got = _final_row(t)
     assert (got["role"], got["text"]) == ("asst", "B")
     assert got["ts"] is not None and got["tool"] is None
-    assert t.manifest().properties.get("has_partial") is True
+    assert "patched_columns" in t.manifest().properties
 
 
 def test_partial_explicit_null_beats_older_value(spark, tmp_path):
@@ -1018,7 +1018,7 @@ def test_partial_survives_compaction(spark, tmp_path):
 
 def test_partial_read_key_and_row_tables_unaffected(spark, tmp_path):
     """read_key folds on partial tables; a table that never saw a
-    patch keeps the row-LWW fast path (no has_partial property)."""
+    patch keeps the row-LWW fast path (no patched_columns property)."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     apply_batch(
         _envelope_df(spark, _mk_sparse([
@@ -1029,7 +1029,7 @@ def test_partial_read_key_and_row_tables_unaffected(spark, tmp_path):
     assert [r.text for r in t.read_key("conv-p").collect()] == ["B"]
     t2 = SnapshotTable.create(spark, str(tmp_path / "plain"), n_buckets=2)
     apply_batch(_envelope_df(spark, _mk_events([(1, "insert", "X")])), t2, 0)
-    assert t2.manifest().properties.get("has_partial") is None
+    assert "patched_columns" not in t2.manifest().properties
 
 
 def test_partial_with_schema_evolution(spark, tmp_path):
@@ -1094,7 +1094,7 @@ def test_partial_through_wal_stream(spark, tmp_path):
     assert len([m for m in run.metrics if not m.skipped]) == 3, "one batch per chunk"
     got = _final_row(table)
     assert (got["role"], got["text"], got["tool"]) == (None, "B", "w")
-    assert table.manifest().properties.get("has_partial") is True
+    assert "patched_columns" in table.manifest().properties
 
 
 def test_incremental_view_over_partial_table(spark, tmp_path):
@@ -1151,7 +1151,7 @@ def test_spark_generator_partial_replay_matches_oracle(spark, tmp_path):
     table = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=8)
     run = run_wal_stream(spark, wal, table, str(tmp_path / "ckpt"), max_files_per_trigger=2)
     assert run.error is None
-    assert table.manifest().properties.get("has_partial") is True
+    assert "patched_columns" in table.manifest().properties
     check_equal(table_to_pandas(table), oracle)
 
 

@@ -4,7 +4,8 @@ seeded random sequence of them must keep the manifest DAG well formed
 — each commit's parent is its ref's previous head, version numbers
 only grow and are never reused, a declined (no-op) operation uses no
 version, and every retained manifest parses. Tags are ref writes, not
-commits. Also the changelog rule (``commits.appended_files``) over
+commits. The commit lock excludes threads and processes and dies with
+its holder. Also the changelog rule (``commits.appended_files``) over
 hand-written manifests."""
 
 from __future__ import annotations
@@ -12,9 +13,15 @@ from __future__ import annotations
 import itertools
 import os
 import random
+import signal
+import subprocess
+import sys
+import threading
+import time
 
 import pytest
 
+from audience_behavior_semantic_etl_spark.cdc import commits
 from audience_behavior_semantic_etl_spark.cdc.commits import (
     ancestry,
     appended_files,
@@ -184,9 +191,6 @@ def test_data_commits_store_exactly_their_file_delta(tmp_path):
             kind, sorted(added), sorted(removed)
         )
         assert d["files"]["stats_added"] == {f: stats[f] for f in added if f in stats}
-        assert sorted(d["files"]["stats_removed"]) == sorted(
-            f for f in removed if f in pstats
-        )
         # a bucket the commit did not touch stays SHARED with the
         # parent's cached state: the commit diffed only what changed
         for b in pbuckets.keys() & buckets.keys() if shares else ():
@@ -316,6 +320,107 @@ def test_tag_writes_leave_heads_and_manifests_unchanged(tmp_path):
     assert t.tags() == {"head": before[0]["main"], "branch": before[0]["b"]}
     for v in before[1]:
         assert "tags" not in read_manifest(t.root, v)["properties"]
+
+
+# ------------------------------------------------ the commit lock
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_a_committer_killed_inside_the_lock_blocks_no_one(tmp_path):
+    """A writer SIGKILLed mid-commit leaves ``_commit.lock`` on disk
+    but holds nothing: the kernel released its flock, so the next
+    commit goes straight through."""
+    t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=2)
+    child = subprocess.run(
+        [sys.executable, "-c",
+         "import os, signal, sys\n"
+         "from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable\n"
+         "SnapshotTable(None, sys.argv[1])._commit(\n"
+         "    lambda m: os.kill(os.getpid(), signal.SIGKILL))\n",
+         t.root],
+        cwd=_REPO, capture_output=True, text=True, timeout=120,
+    )
+    assert child.returncode == -signal.SIGKILL, child.stderr
+    assert os.path.exists(os.path.join(t.root, "_commit.lock"))
+    assert head_version(t.root) == 0  # the killed commit wrote nothing
+    t0 = time.monotonic()
+    t.set_property("after", True)
+    assert time.monotonic() - t0 < 1.0
+    assert head_version(t.root) == 1
+    assert t.manifest().properties["after"] is True
+
+
+def test_threads_of_one_process_exclude_each_other(tmp_path):
+    """Background compaction commits from a thread beside the apply
+    thread, so the lock must exclude threads of one process (flock on a
+    per-entry descriptor does; a POSIX record lock would not): no two
+    commits may share a version, and none may be lost."""
+    t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=2)
+    errors: list[BaseException] = []
+
+    def writer(w: int) -> None:
+        try:
+            for i in range(25):
+                t.set_property(f"w{w}-{i}", i)
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in range(4)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert not errors, errors
+    chain = [v for v, _ in ancestry(t.root, head_version(t.root))]
+    assert sorted(chain) == list(range(101))  # 100 distinct versions + create
+    assert t._retained_versions() == list(range(101))
+    props = t.manifest().properties
+    assert all(props[f"w{w}-{i}"] == i for w in range(4) for i in range(25))
+
+
+def test_gc_of_the_newest_version_never_reissues_its_number(tmp_path):
+    t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=2)
+    seq = os.path.join(t.root, "_version_seq")
+    for i in range(3):
+        t.set_property("k", i)
+    t.create_branch("b")
+    t.set_property("k", "branch", ref="b")
+    dropped = head_version(t.root, "b")
+    assert dropped == max(t._retained_versions())
+    assert not os.path.exists(seq)  # plain commits never write the mark
+    t.drop_branch("b", force=True)
+    t.gc_orphans(keep_versions=1, staging_grace_seconds=0)
+    assert dropped not in t._retained_versions()
+    with open(seq) as f:
+        assert int(f.read()) == dropped
+    t.set_property("k", "next")
+    assert head_version(t.root) > dropped
+
+
+def test_a_data_commit_writes_its_manifest_and_its_head_only(tmp_path, monkeypatch):
+    t = SnapshotTable.create(None, str(tmp_path / "t"), n_buckets=2)
+    t.create_branch("b")
+    written: list[str] = []
+    real = commits.atomic_write
+
+    def spy(path: str, text: str) -> None:
+        written.append(os.path.relpath(path, t.root))
+        real(path, text)
+
+    monkeypatch.setattr(commits, "atomic_write", spy)
+
+    def add(rel: str):
+        def mutate(m):
+            m.buckets["0"] = list(m.buckets.get("0", [])) + [rel]
+        return mutate
+
+    for ref, head_file in (("main", "_current"), ("b", "_refs.json")):
+        written.clear()
+        t._commit(add(f"data/f-{ref}.parquet"), ref=ref, lineage={"op": "append"})
+        v = head_version(t.root, ref)
+        assert written == [os.path.join("_manifests", f"v{v}.json"), head_file]
 
 
 # ------------------------------------------------ the changelog rule

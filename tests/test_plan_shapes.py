@@ -186,7 +186,10 @@ def test_partial_fold_resolve_single_shuffle_no_join(spark, tmp_path):
     from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
 
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    t.set_property("has_partial", True)
+    # every data column patched: the widest fold plan
+    t.set_property("patched_columns", [
+        n for n, _ in t.manifest().columns if n not in ("conv_id", "turn_idx")
+    ])
     df = t.read()
     p = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

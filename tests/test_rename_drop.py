@@ -259,7 +259,7 @@ def _versions(t):
 def test_batch_with_ddl_and_patches_is_one_snapshot(spark, tmp_path):
     """A batch carrying a schema_change (add + rename) and partial
     updates adds exactly ONE version, holding the new columns, the
-    has_partial / patched_columns flips and the batch's files."""
+    patched_columns union and the batch's files."""
     t = SnapshotTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     apply_batch(_env(spark, [(1, "insert", {"role": "user", "text": "a"})]), t, 0)
     before = _versions(t)
@@ -277,7 +277,6 @@ def test_batch_with_ddl_and_patches_is_one_snapshot(spark, tmp_path):
     assert m.version == after[-1]
     cols = [n for n, _ in m.columns]
     assert "model" in cols and "content" in cols and "text" not in cols
-    assert m.properties["has_partial"] is True
     # masks and patched_columns hold PHYSICAL names: content is stored as text
     assert m.properties["patched_columns"] == ["model", "text"]
     kind, added, _ = commit_kind(read_manifest(t.root, m.version)["files"], m.parent)
